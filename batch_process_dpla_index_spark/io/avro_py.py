@@ -1,10 +1,10 @@
 """Pure-Python Avro Object Container File codec + distributed plumbing.
 
-Un-gates S1/K2 (the reference's primary I/O format —
-ParquetDump.scala:116 ``spark.read.format("avro")``,
-SchemaRepair.scala:33 avro write) in environments without the
-spark-avro JVM datasource: this module implements the Avro 1.11 OCF
-wire format (magic ``Obj\\x01``, metadata map, sync-marked blocks,
+The engine's one Avro path for S1/K2 (the reference's primary I/O
+format — ParquetDump.scala:116 Avro scan, SchemaRepair.scala:33 Avro
+write); ``io.sinks.read_avro``/``write_avro`` are these functions.
+It needs no spark-avro JVM package: this module implements the Avro
+1.11 OCF wire format (magic ``Obj\\x01``, metadata map, sync-marked blocks,
 binary record encoding with zigzag varints) from the public
 specification, so the files it writes are readable by any Avro
 implementation and it reads files any Avro implementation writes
@@ -571,25 +571,32 @@ def write_container(records, avro_schema, fh, codec: str = "deflate",
     return n_total
 
 
-def read_container(raw: bytes):
-    """Parse an OCF byte string → (avro_schema, iterator of records)."""
-    buf = io.BytesIO(raw)
-    if buf.read(4) != MAGIC:
+def read_header(fh) -> tuple[object, str, bytes]:
+    """Parse an OCF header (magic, metadata map, sync marker) from any
+    binary file object → (avro_schema, codec, sync). Reads only the
+    header bytes: ``fh`` is left at the first data block."""
+    if fh.read(4) != MAGIC:
         raise ValueError("not an Avro object container file")
     meta: dict[str, bytes] = {}
     while True:
-        n = _read_zigzag(buf)
+        n = _read_zigzag(fh)
         if n == 0:
             break
         if n < 0:
             n = -n
-            _read_zigzag(buf)
+            _read_zigzag(fh)
         for _ in range(n):
-            k = _decode(buf, "string")
-            meta[k] = _decode(buf, "bytes")
+            k = _decode(fh, "string")
+            meta[k] = _decode(fh, "bytes")
     schema = json.loads(meta["avro.schema"].decode("utf-8"))
     codec = meta.get("avro.codec", b"null").decode("utf-8")
-    sync = buf.read(16)
+    return schema, codec, fh.read(16)
+
+
+def read_container(raw: bytes):
+    """Parse an OCF byte string → (avro_schema, iterator of records)."""
+    buf = io.BytesIO(raw)
+    schema, codec, sync = read_header(buf)
     decode = _compile_decoder(schema)
 
     def records():
@@ -621,7 +628,7 @@ def read_container(raw: bytes):
 
 def write_avro_py(df: DataFrame, path: str, overwrite: bool = True,
                   codec: str = "deflate") -> None:
-    """K2 fallback: one OCF part file per DataFrame partition, written
+    """K2: one OCF part file per DataFrame partition, written
     from the executors (TaskContext partition id names the part — the
     same unit-of-output contract as the committer path).
 
@@ -642,8 +649,7 @@ def write_avro_py(df: DataFrame, path: str, overwrite: bool = True,
     # job/attempt-tagged tmp names: two attempts of the same partition
     # (speculation, stage retry) must write DISJOINT tmp files or they
     # interleave into one truncated stream and the replace commits a
-    # corrupt container — the exact hazard the avro_py datasource
-    # writer documents; leftovers are swept after the action
+    # corrupt container; leftovers are swept after the action
     job_tag = _uuid.uuid4().hex[:12]
 
     def _write(batches):
@@ -686,8 +692,7 @@ def write_avro_py(df: DataFrame, path: str, overwrite: bool = True,
     if not any(r["n"] for r in committed):
         # every partition was empty: emit one schema-only container so
         # the round trip is symmetric — without it read_avro_py raises
-        # FileNotFoundError where the JVM datasource and the avro_py
-        # DataSource (AvroPyWriter.commit) both return an empty frame
+        # FileNotFoundError instead of returning an empty frame
         empty = os.path.join(path, "part-00000.avro")
         with open(empty, "wb") as fh:
             write_container(iter(()), avro_schema, fh, codec=codec)
@@ -696,7 +701,7 @@ def write_avro_py(df: DataFrame, path: str, overwrite: bool = True,
 
 
 def read_avro_py(spark: SparkSession, *paths: str) -> DataFrame:
-    """S1 fallback: distributed OCF scan. ``binaryFile`` ships each
+    """S1: distributed OCF scan. ``binaryFile`` ships each
     container to an executor; records decode there (schema-compiled
     closures) and re-enter Spark as Arrow RecordBatches built directly
     against the target schema — no JSON detour, so the only text pass
@@ -711,9 +716,6 @@ def read_avro_py(spark: SparkSession, *paths: str) -> DataFrame:
                 _glob.glob(os.path.join(_glob.escape(p), "*.avro"))
             )
         elif any(ch in p for ch in "*?["):
-            # accept the same glob-pattern grammar as the avro_py
-            # DataSource's _expand — the two read entry points to one
-            # codec must not disagree on path syntax
             hits = sorted(_glob.glob(p))
         else:
             hits = [p]
@@ -721,7 +723,7 @@ def read_avro_py(spark: SparkSession, *paths: str) -> DataFrame:
     if not expanded:
         raise FileNotFoundError(f"no .avro containers under {paths}")
     with open(expanded[0], "rb") as fh:
-        avro_schema, _ = read_container(fh.read())
+        avro_schema, _, _ = read_header(fh)
     spark_schema = avro_to_spark_schema(avro_schema)
     if not isinstance(spark_schema, T.StructType):
         raise ValueError("top-level Avro schema must be a record")

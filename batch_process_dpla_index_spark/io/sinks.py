@@ -8,10 +8,8 @@ only the sitemap product keeps a per-partition write (see
 products/sitemap.py) because its unit of output is one XML document
 per partition.
 
-Avro is format-gated: the spark-avro datasource jar is not bundled
-with this pyspark build, so `write_avro`/`read_avro` probe once and
-raise a clear error if absent (SchemaRepair.scala:31-33 parity is
-structural, exercised via parquet in tests).
+Avro goes through the bundled OCF codec (io/avro_py.py): `read_avro`
+and `write_avro` are its `read_avro_py`/`write_avro_py`.
 """
 
 from __future__ import annotations
@@ -19,54 +17,17 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-_AVRO_OK: bool | None = None
-
-
-def avro_available(spark: SparkSession) -> bool:
-    global _AVRO_OK
-    if _AVRO_OK is None:
-        try:
-            # The real registration check: Catalyst's own provider lookup
-            # (class presence alone is not enough — sql/core ships some
-            # avro classes without registering the datasource).
-            spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-                "avro", spark._jsparkSession.sessionState().conf()
-            )
-            _AVRO_OK = True
-        except Exception:
-            _AVRO_OK = False
-    return _AVRO_OK
+from batch_process_dpla_index_spark.io.avro_py import (
+    read_avro_py as read_avro,
+    write_avro_py as write_avro,
+)
 
 
 def write_parquet(df: DataFrame, path: str, overwrite: bool = True) -> None:
     """K1 (ParquetDump.scala:118); idempotent via overwrite mode (K8)."""
     df.write.mode("overwrite" if overwrite else "error").parquet(path)
-
-
-def write_avro(df: DataFrame, path: str, overwrite: bool = True) -> None:
-    """K2 (SchemaRepair.scala:33). Uses the JVM spark-avro datasource
-    when it is on the classpath; otherwise the bundled pure-Python OCF
-    codec (io/avro_py.py) — same wire format, per-partition executor
-    writes, readable by any Avro implementation."""
-    if avro_available(df.sparkSession):
-        df.write.mode("overwrite" if overwrite else "error").format("avro").save(path)
-        return
-    from batch_process_dpla_index_spark.io.avro_py import write_avro_py
-
-    write_avro_py(df, path, overwrite=overwrite)
-
-
-def read_avro(spark: SparkSession, *paths: str) -> DataFrame:
-    """S1 (ParquetDump.scala:116) — multi-path Avro scan; JVM
-    datasource when present, else the distributed pure-Python OCF
-    reader (binaryFile scan + executor-side decode)."""
-    if avro_available(spark):
-        return spark.read.format("avro").load(list(paths))
-    from batch_process_dpla_index_spark.io.avro_py import read_avro_py
-
-    return read_avro_py(spark, *paths)
 
 
 def write_csv_single(df: DataFrame, path: str, overwrite: bool = True) -> None:

@@ -321,10 +321,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"bpdi-{args.job}")
     try:
         if args.job == "parquet-dump":
-            out = __import__(
-                "batch_process_dpla_index_spark.products.parquet_dump",
-                fromlist=["execute"],
-            ).execute(spark, args.in_root, args.out_base)
+            from batch_process_dpla_index_spark.products import parquet_dump
+
+            out = parquet_dump.execute(spark, args.in_root, args.out_base)
             print(f"Parquet saved to {out}")
         elif args.job == "jsonl-dump":
             from batch_process_dpla_index_spark.io.paths import date_path, latest_dataset_paths
@@ -350,15 +349,10 @@ def main(argv: list[str] | None = None) -> int:
             out = sitemap.execute(spark, ids, args.out_dir, args.url_prefix)
             print(f"Sitemap saved to {out}")
         elif args.job == "schema-repair":
-            from batch_process_dpla_index_spark.io.sinks import avro_available, read_avro, write_avro
+            from batch_process_dpla_index_spark.io.sinks import read_avro, write_avro
             from batch_process_dpla_index_spark.model.repair import fix_schema
 
-            if avro_available(spark):
-                df = read_avro(spark, args.in_path)
-                write_avro(fix_schema(df), args.out_path)
-            else:
-                df = spark.read.parquet(args.in_path)
-                fix_schema(df).write.mode("overwrite").parquet(args.out_path)
+            write_avro(fix_schema(read_avro(spark, args.in_path)), args.out_path)
             print(f"Repaired schema written to {args.out_path}")
         elif args.job == "schema-test":
             from batch_process_dpla_index_spark.products import schema_test

@@ -1,12 +1,12 @@
 """Parquet dump product (ParquetDump.scala:115-126 semantics).
 
 Catalog-discover the latest enrichment snapshot per provider hub,
-multi-path scan, flatten via the D2 macros, write parquet to the
-dated path. The scan format is avro when the spark-avro datasource is
-present (the reference's S1), else parquet (structurally identical
-DataFrames; nested-schema pruning even works *better* on parquet —
-SURVEY.md §4 notes Avro scans don't nested-prune, which is partly why
-the reference converts formats first).
+multi-path Avro scan (the reference's S1, through io/avro_py.py),
+flatten via the D2 macros, write parquet to the dated path.
+``fmt="parquet"`` scans parquet snapshots instead (structurally
+identical DataFrames; nested-schema pruning even works *better* on
+parquet — SURVEY.md §4 notes Avro scans don't nested-prune, which is
+partly why the reference converts formats first).
 
 Single stage: scan → Project(flatten) → parquet write. No shuffle.
 """
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from batch_process_dpla_index_spark.io.paths import latest_dataset_paths, parquet_path
-from batch_process_dpla_index_spark.io.sinks import avro_available, read_avro
+from batch_process_dpla_index_spark.io.sinks import read_avro
 from batch_process_dpla_index_spark.model.flatten import modify_columns
 
 
@@ -24,11 +24,12 @@ def dump(
     spark: SparkSession,
     in_paths: list[str],
     out_path: str,
-    fmt: str | None = None,
+    fmt: str = "avro",
     output_partitions: int | None = None,
     partition_key: str = "id",
 ) -> DataFrame:
-    """ParquetDump.dump (ParquetDump.scala:115-119): multi-path scan →
+    """ParquetDump.dump (ParquetDump.scala:115-119): multi-path scan of
+    ``fmt`` ("avro", the reference's input, or "parquet") →
     modify_columns → parquet write. Returns the flattened frame.
 
     ``output_partitions`` hash-repartitions on ``partition_key`` before
@@ -36,8 +37,6 @@ def dump(
     output file count/size — without it the write inherits input-split
     parallelism (no shuffle).
     """
-    if fmt is None:
-        fmt = "avro" if avro_available(spark) else "parquet"
     if fmt == "avro":
         df = read_avro(spark, *in_paths)
     else:
@@ -51,7 +50,7 @@ def dump(
 
 
 def execute(
-    spark: SparkSession, in_root: str, out_base: str, fmt: str | None = None, now=None
+    spark: SparkSession, in_root: str, out_base: str, fmt: str = "avro", now=None
 ) -> str:
     """ParquetDump.execute (ParquetDump.scala:121-126): discover latest
     per-hub enrichment snapshots, dump to <out>/yyyy/MM/all.parquet/."""

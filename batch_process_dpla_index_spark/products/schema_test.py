@@ -13,7 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 from batch_process_dpla_index_spark.io.paths import latest_dataset_paths
-from batch_process_dpla_index_spark.io.sinks import avro_available, read_avro
+from batch_process_dpla_index_spark.io.sinks import read_avro
 from batch_process_dpla_index_spark.model.schema import schema_ddl
 
 
@@ -22,13 +22,12 @@ def execute(
     in_root: str,
     out_dir: str,
     data_type: str = "enrichment",
-    fmt: str | None = None,
+    fmt: str = "avro",
 ) -> dict[str, str]:
     """Dump one ``<provider>.schema`` DDL file per hub. Returns
-    {provider → ddl}. Schema inference reads only parquet/avro footers
-    — no data scan."""
-    if fmt is None:
-        fmt = "avro" if avro_available(spark) else "parquet"
+    {provider → ddl}. ``fmt`` is "avro" (the reference's snapshots) or
+    "parquet". Schema inference reads only the Avro header or the
+    parquet footers — no data scan."""
     os.makedirs(out_dir, exist_ok=True)
     out: dict[str, str] = {}
     for provider, path in latest_dataset_paths(in_root, data_type).items():

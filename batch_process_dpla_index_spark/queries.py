@@ -703,13 +703,13 @@ def q_flatten_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_avro_flatten_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ACTUAL input path, end to end: enriched items →
     Avro containers on disk → multi-path Avro scan → flatten → leaf
-    projection (ParquetDump.scala:116 ``spark.read.format("avro")``
-    then the :10-52 reshape). The Avro leg runs for real — JVM
-    spark-avro when on the classpath, else the bundled pure-Python OCF
-    codec (io/avro_py.py): per-partition executor writes, binaryFile +
-    executor-side decode reads. Output is identical to
-    ``flatten_items``, which is exactly the point: the oracle proves
-    the Avro round trip is lossless on the full nested EDM model."""
+    projection (ParquetDump.scala:116 Avro scan then the :10-52
+    reshape). The Avro leg runs for real through the bundled
+    pure-Python OCF codec (io/avro_py.py): per-partition executor
+    writes, binaryFile + executor-side decode reads. Output is
+    identical to ``flatten_items``, which is exactly the point: the
+    oracle proves the Avro round trip is lossless on the full nested
+    EDM model."""
     import hashlib as _hl
     import tempfile as _tf
 

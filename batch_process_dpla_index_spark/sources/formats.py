@@ -5,8 +5,8 @@ Parquet out — :118; gzipped text/JSONL — JsonlDump.scala:24,76; CSV —
 MqReports.scala:136). A user switching from the reference should be able
 to point the same engine at any of the common lake formats, so this
 module exposes one read/write pair covering parquet, orc, csv, json
-(JSONL), text, and avro (JVM datasource or the bundled pure-Python OCF
-codec — io/avro_py.py) with identical call shapes.
+(JSONL), text, and avro (the bundled pure-Python OCF codec —
+io/avro_py.py) with identical call shapes.
 
 Format notes that matter at scale:
 - parquet/orc are the columnar tiers: predicate pushdown + column

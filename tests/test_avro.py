@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import zlib
 
 from pyspark.sql import functions as F
@@ -172,118 +173,57 @@ def test_overwrite_is_idempotent(spark, tmp_path):
     assert read_avro(spark, path).count() == 7
 
 
-# ---- Python DataSource surface (format("avro_py")) ----
+def test_schema_inference_reads_only_the_header(spark, tmp_path, monkeypatch):
+    """read_avro_py infers the schema from the first container's header
+    alone: a container whose records dwarf its header still yields the
+    right schema without decoding (or loading) the data blocks."""
+    from batch_process_dpla_index_spark.io import avro_py
+
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": "long"}, {"name": "blob", "type": "bytes"}]}
+    out = tmp_path / "big"
+    out.mkdir()
+    part = out / "part-00000.avro"
+    with open(part, "wb") as fh:
+        # incompressible payload: ~4 MiB of records behind a <1 KiB header
+        rows = ({"id": i, "blob": os.urandom(4096)} for i in range(1024))
+        write_container(rows, schema, fh, codec="null")
+    with open(part, "rb") as fh:
+        got, codec, sync = avro_py.read_header(fh)
+        header_len = fh.tell()
+    assert (got, codec, sync) == (schema, "null", DEFAULT_SYNC)
+    assert header_len * 1000 < os.path.getsize(part)
+
+    def no_full_read(raw):
+        raise AssertionError("schema inference decoded a whole container")
+
+    with monkeypatch.context() as m:
+        m.setattr(avro_py, "read_container", no_full_read)
+        inferred = avro_py.read_avro_py(spark, str(out)).schema
+    assert inferred.simpleString() == "struct<id:bigint,blob:binary>"
+    # the scan itself (executor-side read_container) is unchanged
+    assert avro_py.read_avro_py(spark, str(out)).count() == 1024
 
 
-def test_avro_datasource_roundtrip(spark, tmp_path):
-    """df.write.format('avro_py') → spark.read.format('avro_py') must
-    round-trip the nested model exactly, one container per task, with
-    the standard-API surface (no helper functions)."""
-    from batch_process_dpla_index_spark.io.avro_datasource import register
-
-    register(spark)
-    import datetime
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", [1, 2], {"k": 1.5}, (7, "x"), datetime.datetime(2024, 1, 2, 3, 4, 5)),
-            (2, None, [], {}, (8, None), None),
-        ],
-        "id long, s string, arr array<int>, m map<string,double>, "
-        "st struct<a:int,b:string>, ts timestamp",
-    )
-    out = str(tmp_path / "ds_avro")
-    df.repartition(3).write.format("avro_py").mode("overwrite").save(out)
+def test_write_sweeps_orphan_tmp(spark, tmp_path, monkeypatch):
+    """A failed or retried attempt's leftover ``._tmp`` for this job's
+    tag is swept after the write: a green job leaves no tmp debris."""
     import glob
+    import uuid
 
-    parts = glob.glob(out + "/part-*.avro")
-    assert 1 <= len(parts) <= 3 and not glob.glob(out + "/*._tmp")
-    got = spark.read.format("avro_py").load(out)
-    assert got.schema.fieldNames() == df.schema.fieldNames()
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_avro_datasource_interops_with_codec_helpers(spark, tmp_path):
-    """Files written by the helper tier read back through the
-    datasource and vice versa — one wire format, two API surfaces."""
-    from batch_process_dpla_index_spark.io.avro_datasource import register
     from batch_process_dpla_index_spark.io.avro_py import read_avro_py, write_avro_py
 
-    register(spark)
-    df = spark.range(100).withColumnRenamed("id", "n")
-    a = str(tmp_path / "helper_written")
-    write_avro_py(df, a)
-    via_ds = spark.read.format("avro_py").load(a)
-    assert sorted(r.n for r in via_ds.collect()) == list(range(100))
-
-    b = str(tmp_path / "ds_written")
-    df.write.format("avro_py").mode("overwrite").save(b)
-    via_helper = read_avro_py(spark, b)
-    assert sorted(r.n for r in via_helper.collect()) == list(range(100))
-
-
-def test_avro_datasource_overwrite_mode(spark, tmp_path):
-    from batch_process_dpla_index_spark.io.avro_datasource import register
-
-    register(spark)
-    out = str(tmp_path / "ow")
-    spark.range(10).write.format("avro_py").mode("append").save(out)
-    spark.range(5).write.format("avro_py").mode("overwrite").save(out)
-    assert spark.read.format("avro_py").load(out).count() == 5
-
-
-def test_avro_datasource_empty_write_round_trips(spark, tmp_path):
-    """Writing an empty DataFrame must still produce a readable path:
-    commit() emits one schema-only container, so the read returns an
-    empty frame with the written schema (symmetric round trip)."""
-    from batch_process_dpla_index_spark.io.avro_datasource import register
-
-    register(spark)
-    out = str(tmp_path / "empty")
-    empty = spark.range(10).filter("id < 0").withColumnRenamed("id", "n")
-    empty.write.format("avro_py").mode("overwrite").save(out)
-    got = spark.read.format("avro_py").load(out)
-    assert got.schema.fieldNames() == ["n"]
-    assert got.count() == 0
-
-
-def test_avro_datasource_commit_sweeps_orphan_tmp(spark, tmp_path):
-    """A zombie/retried attempt's leftover ._tmp must be swept by the
-    next successful commit of the same job tag — a green job leaves no
-    tmp debris behind."""
-    import glob
-
-    from batch_process_dpla_index_spark.io.avro_datasource import (
-        AvroPyWriter,
-        _Committed,
-        register,
-    )
-
-    register(spark)
-    out = str(tmp_path / "sweep")
-    df = spark.range(3).withColumnRenamed("id", "n")
-    writer = AvroPyWriter(df.schema, out, overwrite=True)
-    import os
-
-    os.makedirs(out, exist_ok=True)
-    # simulate a zombie attempt's orphan tmp for this job tag
-    orphan = os.path.join(out, f"part-00001-{writer.job_tag}-a0.avro._tmp")
-    with open(orphan, "wb") as fh:
-        fh.write(b"partial")
-    # and a real committed part from attempt 1 of the same partition
-    from batch_process_dpla_index_spark.io.avro_py import (
-        spark_to_avro_schema,
-        write_container,
-    )
-
-    final = os.path.join(out, f"part-00001-{writer.job_tag}-a1.avro")
-    tmp = final + "._tmp"
-    with open(tmp, "wb") as fh:
-        n = write_container(iter([{"n": 1}]), spark_to_avro_schema(df.schema), fh)
-    writer.commit([_Committed(tmp, final, n)])
-    assert os.path.exists(final)
-    assert not glob.glob(out + "/*._tmp")
-    assert spark.read.format("avro_py").load(out).count() == 1
+    pinned = uuid.UUID(int=0xABCDEF)
+    monkeypatch.setattr(uuid, "uuid4", lambda: pinned)
+    tag = pinned.hex[:12]
+    out = tmp_path / "sweep"
+    out.mkdir()
+    # one-partition frame: no live task ever writes part-00001
+    orphan = out / f"part-00001.avro.{tag}-a0._tmp"
+    orphan.write_bytes(b"partial")
+    write_avro_py(spark.range(5, numPartitions=1), str(out), overwrite=False)
+    assert not glob.glob(str(out / "*._tmp"))
+    assert read_avro_py(spark, str(out)).count() == 5
 
 
 def test_compiled_encoder_matches_reference_bytes(spark):
@@ -382,10 +322,9 @@ def test_timestamp_micros_exact_far_future():
 
 
 def test_empty_write_read_roundtrip_helper_path(spark, tmp_path):
-    """K2 symmetry (round-6 review): an all-empty-partitions write must
-    leave a schema-only container so the read returns an empty frame
-    with the written schema — the same contract the JVM datasource and
-    AvroPyWriter.commit keep — instead of FileNotFoundError."""
+    """K2 symmetry: an all-empty-partitions write must leave a
+    schema-only container so the read returns an empty frame with the
+    written schema instead of FileNotFoundError."""
     from batch_process_dpla_index_spark.io.avro_py import read_avro_py, write_avro_py
 
     out = str(tmp_path / "empty_avro")
@@ -412,9 +351,7 @@ def test_write_container_rejects_unknown_codec(spark, tmp_path):
 
 
 def test_read_avro_py_accepts_glob_pattern(spark, tmp_path):
-    """Both read entry points to the codec accept the same path
-    grammar: a part-file glob works in the helper path, not just in
-    format('avro_py')."""
+    """A part-file glob selects containers, like a directory path."""
     from batch_process_dpla_index_spark.io.avro_py import read_avro_py, write_avro_py
 
     out = str(tmp_path / "g")

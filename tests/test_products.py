@@ -21,7 +21,9 @@ from batch_process_dpla_index_spark.io.paths import (
 from batch_process_dpla_index_spark.io.sinks import (
     delete_existing,
     purge_keys,
+    read_avro,
     read_csv_single,
+    write_avro,
     write_csv_single,
     write_local,
 )
@@ -160,11 +162,7 @@ def test_delete_existing_and_purge(tmp_path):
 
 def test_avro_missing_path(spark):
     """Reading a path with no containers fails loudly, not with an
-    empty frame (the JVM datasource errors the same way)."""
-    from batch_process_dpla_index_spark.io.sinks import avro_available, read_avro
-
-    if avro_available(spark):  # pragma: no cover - jar present elsewhere
-        pytest.skip("avro datasource present")
+    empty frame."""
     with pytest.raises(FileNotFoundError):
         read_avro(spark, "/tmp/nope")
 
@@ -239,6 +237,23 @@ def test_schema_test_product(spark, docs_small, tmp_path):
     assert "sourceResource" in a and "doc_id" in b and a != b
 
 
+def test_schema_repair_job_reads_and_writes_avro(spark, docs_small, tmp_path):
+    """``jobs schema-repair`` takes raw provider Avro and writes Avro in
+    the canonical shape (SchemaRepair.scala:31-33)."""
+    from batch_process_dpla_index_spark import jobs
+    from batch_process_dpla_index_spark.model.fixtures import synthesize_raw
+    from batch_process_dpla_index_spark.model.schema import item_schema
+
+    src, dst = str(tmp_path / "raw"), str(tmp_path / "repaired")
+    write_avro(synthesize_raw(docs_small), src)
+    assert jobs.main(["schema-repair", src, dst]) == 0
+    assert glob.glob(f"{dst}/part-*.avro")
+    back = read_avro(spark, dst)
+    canonical = item_schema()["sourceResource"].dataType
+    assert back.schema["sourceResource"].dataType.simpleString() == canonical.simpleString()
+    assert back.count() == docs_small.count()
+
+
 def test_approx_distinct_bound(spark):
     from batch_process_dpla_index_spark.sources.tables import load_table
     from pyspark.sql import functions as F
@@ -265,7 +280,7 @@ def test_monthly_batch_sequencing(spark, docs_small, tmp_path):
     from batch_process_dpla_index_spark.products import monthly_batch
 
     root = str(tmp_path / "master")
-    synthesize_enriched(docs_small).write.parquet(f"{root}/hubA/enrichment/2026-05")
+    write_avro(synthesize_enriched(docs_small), f"{root}/hubA/enrichment/2026-05")
     docs_small.select(
         F.concat(F.lit('{"id":'), "doc_id", F.lit("}")).alias("value")
     ).write.text(f"{root}/hubA/jsonl/2026-05")

@@ -251,9 +251,7 @@ def cosine_topk_pandas(
         # np.array([]) is 1-D and the axis-1 reductions below would
         # raise; the expression tier returns an empty frame for an
         # empty query side, so this tier must too (same contract)
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, score double, rank int"
-        )
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r[0] for r in q_rows], dtype="int64")
     q_mat = np.array([r[1] for r in q_rows], dtype="float64")
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
@@ -289,9 +287,23 @@ def cosine_topk_pandas(
             )
 
     cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _score, "query_id bigint, neighbor_id bigint, raw_score double"
+        _score, _CAND_SCHEMA
     )
-    # NaN marks zero-norm pairs; surface them as NULL (try_divide parity).
+    return _rank_candidates(cand, k)
+
+
+#: (query_id, neighbor_id, raw_score): what every BLAS scoring pass
+#: emits before the per-query merge (:func:`_rank_candidates`).
+_CAND_SCHEMA = "query_id bigint, neighbor_id bigint, raw_score double"
+#: the output contract of every similarity tier
+_TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, score double, rank int"
+
+
+def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
+    """Shared final merge of the BLAS tiers: candidate rows
+    (:data:`_CAND_SCHEMA`) → global per-query top-k by (score DESC
+    NULLS LAST, neighbor_id ASC) in one window on ``query_id``. NaN
+    marks a zero-norm pair and surfaces as NULL (try_divide parity)."""
     scored = cand.withColumn(
         "score", F.when(F.isnan("raw_score"), F.lit(None)).otherwise(F.col("raw_score"))
     )
@@ -492,10 +504,11 @@ def _imi_probe_split(
 def _two_level_probe_blocks(
     mat, model, k_f: int, p_c: int, n_probe_fine: int, metric: str
 ):
-    """Shared probe kernel of :func:`_imi_probe_cells` and
-    :func:`two_level_cells_pandas`: rank the trained coarse centroids
-    per row (keep ``p_c``), then rank only those cells' fine codebooks
-    (keep ``n_probe_fine`` each, capped by ragged codebook width), and
+    """Shared probe kernel of :func:`_imi_probe_cells`,
+    :func:`_imi_query_topk` and :func:`two_level_cells_pandas`: rank
+    the trained coarse centroids per row (keep ``p_c``), then rank
+    only those cells' fine codebooks (keep ``n_probe_fine`` each,
+    capped by ragged codebook width), and
     yield one ``(slot, rows, gcells)`` block per (probe slot, unique
     coarse cell) — ``slot`` the 0-based coarse probe rank (lets a
     uniform-width consumer scatter the block straight into column
@@ -629,6 +642,18 @@ def _cell_order(dots):
     return np.lexsort((-np.tile(cell_ids, (dots.shape[0], 1)), -dots), axis=1)
 
 
+def _coarse_matrix(dim: int, n_cells: int, centroids=None):
+    """dim × cells matrix of the flat IVF quantizer: the learned
+    ``centroids`` (k×dim) when given, else the deterministic
+    pseudo-random grid. Rows rank their cells by ``_cell_order(mat @
+    this)``."""
+    import numpy as np
+
+    if centroids is not None:
+        return np.asarray(centroids, dtype="float64").T
+    return _centroid_matrix(dim, n_cells).T
+
+
 def ivf_cells_pandas(
     df: DataFrame, id_col: str, vec_col: str, dim: int, n_cells: int, n_probe: int,
     centroids=None,
@@ -651,10 +676,7 @@ def ivf_cells_pandas(
     import numpy as np
     import pandas as pd
 
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype="float64").T  # dim × cells
-    else:
-        cents = _centroid_matrix(dim, n_cells).T  # dim × cells
+    cents = _coarse_matrix(dim, n_cells, centroids)
     id_name, vec_name = id_col, vec_col
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -775,70 +797,174 @@ def ivf_topk(
     return _with_cached_deps(_ivf_score_and_rank(stored, probing, k), [assigned])
 
 
+def _topk_block(q_ids, q_mat, c_ids, c_mat, k: int):
+    """Score one (queries × stored) block with ONE BLAS matmul and keep
+    each query row's local top-k — the kernel of both IVF scoring
+    shapes (the cell-grouped `_ivf_score_and_rank` and the
+    broadcast-probe `_probe_serve`). Cosine with NaN for a zero-norm
+    pair (surfaced as NULL by `_rank_candidates`); a stored row never
+    scores against its own id; order (score DESC, NaN last, id ASC).
+    Returns the (query_id, neighbor_id, raw_score) columns as lists."""
+    import numpy as np
+
+    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
+    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+    denom = np.outer(q_norm, c_norm)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        scores = np.where(denom == 0, np.nan, (q_mat @ c_mat.T) / denom)
+    out_q, out_n, out_s = [], [], []
+    for i, qid in enumerate(q_ids):
+        col = scores[i]
+        mask = c_ids != qid
+        ids_i, col = c_ids[mask], col[mask]
+        if not ids_i.size:
+            continue
+        order = np.lexsort((ids_i, -col))[:k]
+        out_q.extend([qid] * len(order))
+        out_n.extend(ids_i[order])
+        out_s.extend(col[order])
+    return out_q, out_n, out_s
+
+
+def _cand_frame(out_q, out_n, out_s):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"query_id": pd.Series(out_q, dtype="int64"),
+         "neighbor_id": pd.Series(out_n, dtype="int64"),
+         "raw_score": pd.Series(out_s, dtype="float64")}
+    )
+
+
 def _ivf_score_and_rank(stored: DataFrame, probing: DataFrame, k: int) -> DataFrame:
     """Shared IVF scoring tail: union the (cell, role, id, vec) sides,
     one applyInPandas BLAS matmul per cell, global per-query top-k.
     ``stored`` rows carry role=0, ``probing`` rows role=1; a stored row
-    never scores against itself (neighbor_id == query_id is masked)."""
+    never scores against itself (neighbor_id == query_id is masked).
+    The all-pairs operators (:func:`ivf_topk`, :func:`imi_topk`) and
+    the over-cap query serve (:func:`_probe_serve`) run it."""
     import numpy as np
-    import pandas as pd
 
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_cell(pdf):
         st = pdf[pdf["role"] == 0]
         pr = pdf[pdf["role"] == 1]
         if not len(st) or not len(pr):
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "raw_score": pd.Series(dtype="float64")}
-            )
-        c_ids = st["id"].to_numpy(dtype="int64")
-        q_ids = pr["id"].to_numpy(dtype="int64")
-        c_mat = np.array(list(st["vec"]), dtype="float64")
-        q_mat = np.array(list(pr["vec"]), dtype="float64")
-        c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-        q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-        denom = np.outer(q_norm, c_norm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0, np.nan, (q_mat @ c_mat.T) / denom)
-        out_q, out_n, out_s = [], [], []
-        for i, qid in enumerate(q_ids):
-            col = scores[i]
-            mask = c_ids != qid
-            ids_i, col = c_ids[mask], col[mask]
-            if not ids_i.size:
-                continue
-            order = np.lexsort((ids_i, -col))[:k]
-            out_q.extend([qid] * len(order))
-            out_n.extend(ids_i[order])
-            out_s.extend(col[order])
-        return pd.DataFrame(
-            {"query_id": pd.Series(out_q, dtype="int64"),
-             "neighbor_id": pd.Series(out_n, dtype="int64"),
-             "raw_score": pd.Series(out_s, dtype="float64")}
-        )
+            return _cand_frame([], [], [])
+        return _cand_frame(*_topk_block(
+            pr["id"].to_numpy(dtype="int64"),
+            np.array(list(pr["vec"]), dtype="float64"),
+            st["id"].to_numpy(dtype="int64"),
+            np.array(list(st["vec"]), dtype="float64"),
+            k,
+        ))
 
     cand = (
         stored.unionByName(probing)
         .groupBy("cell")
-        .applyInPandas(score_cell, "query_id bigint, neighbor_id bigint, raw_score double")
+        .applyInPandas(score_cell, _CAND_SCHEMA)
     )
-    scored = cand.withColumn(
-        "score", F.when(F.isnan("raw_score"), F.lit(None)).otherwise(F.col("raw_score"))
+    return _rank_candidates(cand, k)
+
+
+#: Most query-vector bytes (8·dim float64 bytes per query) the
+#: broadcast-probe serve collects to the driver and ships in its
+#: closure: 1,024 queries at dim 64. A larger batch takes the cell
+#: shuffle. Set below the measured crossover (4 cores, local[4], k 5,
+#: 4 probes): the Arrow pass scores on as many cores as the probed
+#: cells have files, so a small index scores on one and the shuffle
+#: overtakes it at ~1-2k queries (two-level, 8k vectors), ~2-3k
+#: (flat, 8k) and past 4k (flat, 50k vectors in 4 files).
+_QUERY_BATCH_CAP_BYTES = 512 << 10
+
+
+def _probe_serve(
+    stored: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    k: int,
+    probe_blocks,
+    probing,
+) -> DataFrame:
+    """Serve a query batch against PRE-ASSIGNED stored cells — the one
+    serve of :func:`ivf_query_topk` (flat) and :func:`_imi_query_topk`
+    (two-level), which differ only in how a query ranks its cells.
+
+    Broadcast-probe plan (Odyssey's choice: leave the stored data in
+    place and send the small query set to it):
+
+    1. collect the batch with a LIMIT cap+1 probe, cap =
+       :data:`_QUERY_BATCH_CAP_BYTES` over 8·dim bytes per query;
+    2. rank each query's probe cells on the driver —
+       ``probe_blocks(q_mat)`` yields `_two_level_probe_blocks`-shaped
+       ``(slot, rows, gcells)`` blocks (batch row indices × their
+       probed cell ids) from the shared numpy kernels;
+    3. filter the stored cells to the probed set (``cell IN (...)``,
+       pushed into the scan);
+    4. ONE mapInPandas pass: per cell an Arrow batch holds, one BLAS
+       matmul against the queries probing it and a local top-k per
+       query (:func:`_topk_block`);
+    5. the per-query window merges the candidates
+       (:func:`_rank_candidates`).
+
+    Stored vectors never cross an exchange; only the per-batch
+    candidates shuffle on ``query_id``. Over the cap the batch takes
+    the distributed plan instead:
+    ``probing()`` assigns it in an Arrow pass and
+    :func:`_ivf_score_and_rank` shuffles stored and probe rows on the
+    cell id. Same rows either way (pinned in tests)."""
+    import numpy as np
+
+    cap = _QUERY_BATCH_CAP_BYTES // (8 * dim)
+    rows = (
+        queries.select(F.col(id_col), F.col(vec_col)).limit(cap + 1).collect()
+        if cap
+        else []
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
+    if not cap or len(rows) > cap:
+        stored_side = stored.select(
+            F.col("cell").cast("int").alias("cell"),
+            F.lit(0).alias("role"),
+            F.col("id"),
+            F.col("vec"),
         )
+        return _ivf_score_and_rank(stored_side, probing(), k)
+    if not rows:
+        return stored.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    q_ids = np.array([r[0] for r in rows], dtype="int64")
+    q_mat = np.array([r[1] for r in rows], dtype="float64")
+    blocks = list(probe_blocks(q_mat))
+    q_rows = np.concatenate([np.repeat(r, g.shape[1]) for _s, r, g in blocks])
+    q_cells = np.concatenate([g.reshape(-1) for _s, _r, g in blocks])
+    by_cell = np.argsort(q_cells, kind="stable")
+    cells, starts = np.unique(q_cells[by_cell], return_index=True)
+    # cell → the query rows probing it: the closure the scan side needs
+    probers = dict(zip(cells.tolist(), np.split(q_rows[by_cell], starts[1:])))
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cell = pdf["cell"].to_numpy(dtype="int64")
+            ids = pdf["id"].to_numpy(dtype="int64")
+            mat = np.array(list(pdf["vec"]), dtype="float64")
+            out_q, out_n, out_s = [], [], []
+            for c in np.unique(cell):
+                qi = probers[int(c)]
+                sel = cell == c
+                bq, bn, bs = _topk_block(q_ids[qi], q_mat[qi], ids[sel], mat[sel], k)
+                out_q += bq
+                out_n += bn
+                out_s += bs
+            yield _cand_frame(out_q, out_n, out_s)
+
+    cand = (
+        stored.where(F.col("cell").isin(cells.tolist()))
+        .select(F.col("cell").cast("int").alias("cell"), F.col("id"), F.col("vec"))
+        .mapInPandas(score, _CAND_SCHEMA)
     )
+    return _rank_candidates(cand, k)
 
 
 def ivf_query_topk(
@@ -856,28 +982,73 @@ def ivf_query_topk(
 
     ``stored`` is (cell int, id, vec) — e.g. read back from the
     persisted ANN index (``products.ann_index``) so the corpus is never
-    re-assigned per query batch. Only the query side pays the
-    centroid matmul (bands of ~|Q| rows); the join work is the same
-    one cell-grouped applyInPandas as :func:`ivf_topk`. With
-    ``queries == corpus`` and the same quantizer this reproduces
-    ``ivf_topk`` exactly (pinned in tests).
+    re-assigned per query batch. A batch of up to
+    :data:`_QUERY_BATCH_CAP_BYTES` of query vectors is collected and
+    each query ranks its ``n_probe`` cells on the driver (the
+    `_cell_order` convention); the stored side is read only in the
+    probed cells and scored in ONE Arrow pass, with no exchange of
+    stored vectors (:func:`_probe_serve`). A larger batch takes the
+    cell-grouped shuffle of :func:`ivf_topk` instead. With ``queries == corpus`` and the
+    same quantizer this reproduces ``ivf_topk`` exactly (pinned in
+    tests).
     """
-    q_assigned = ivf_cells_pandas(
-        queries, id_col, vec_col, dim, n_cells, n_probe, centroids
+    import numpy as np
+
+    def probe_blocks(mat):
+        order = _cell_order(mat @ _coarse_matrix(dim, n_cells, centroids))
+        return [(0, np.arange(len(mat)), order[:, :n_probe])]
+
+    def probing():
+        return ivf_cells_pandas(
+            queries, id_col, vec_col, dim, n_cells, n_probe, centroids
+        ).select(
+            F.explode("cells").alias("cell"),
+            F.lit(1).alias("role"),
+            F.col("id"),
+            F.col("vec"),
+        )
+
+    return _probe_serve(
+        stored, queries, id_col, vec_col, dim, k, probe_blocks, probing
     )
-    probing = q_assigned.select(
-        F.explode("cells").alias("cell"),
-        F.lit(1).alias("role"),
-        F.col("id"),
-        F.col("vec"),
+
+
+def _imi_query_topk(
+    stored: DataFrame,
+    queries: DataFrame,
+    coarse,
+    fine: dict[int, list[list[float]]],
+    k_f: int,
+    n_probe_coarse: int,
+    n_probe_fine: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    k: int,
+) -> DataFrame:
+    """:func:`ivf_query_topk` for a two-level (IMI) index: each query's
+    p_c·p_f probed global cells come from `_two_level_probe_blocks`
+    (l2, the storage-assignment ranking); the fallback probe side is
+    :func:`_imi_probe_cells`. Same serve, same rows either way."""
+    from batch_process_dpla_index_spark.operators.clustering import (
+        _two_level_model_arrays,
     )
-    stored_side = stored.select(
-        F.col("cell").cast("int").alias("cell"),
-        F.lit(0).alias("role"),
-        F.col("id"),
-        F.col("vec"),
+
+    model = _two_level_model_arrays(coarse, fine, k_f)
+    p_c = min(n_probe_coarse, len(model[0]))
+
+    def probe_blocks(mat):
+        return _two_level_probe_blocks(mat, model, k_f, p_c, n_probe_fine, "l2")
+
+    def probing():
+        return _imi_probe_cells(
+            queries, coarse, fine, k_f, n_probe_coarse, n_probe_fine,
+            id_col, vec_col,
+        )
+
+    return _probe_serve(
+        stored, queries, id_col, vec_col, dim, k, probe_blocks, probing
     )
-    return _ivf_score_and_rank(stored_side, probing, k)
 
 
 def _imi_probe_cells(

@@ -14,15 +14,17 @@ index once per corpus version and amortizes it over every query batch:
   dataset is repartitioned on ``cell`` so query-time cell groups read
   co-located.
 - :func:`ann_query_indexed`: read the manifest + centroids (k×dim
-  floats — the whole model fits on the driver), assign ONLY the query
-  batch to its ``n_probe`` nearest cells, and score against the stored
-  cells through the shared cell-grouped BLAS path
-  (``operators.similarity.ivf_query_topk``). The corpus is never
-  re-assigned.
+  floats — the whole model fits on the driver), collect the query
+  batch (up to 1,024 queries at dim 64), rank each query's
+  ``n_probe`` cells on the driver, and score ONLY the probed stored
+  cells in one Arrow pass (``operators.similarity.ivf_query_topk``).
+  The corpus is never re-assigned and never shuffled.
 
 Scale: index build is one corpus pass + k-means (bounded driver state:
-k×dim). Query cost is |Q|×n_probe explode + one shuffle join into the
-cell layout — independent of corpus re-processing. n_cells ~ √N keeps
+k×dim). Query cost is a scan of the probed cells plus a shuffle of the
+|Q|·k-per-batch candidates into the per-query merge — the stored
+vectors stay in place. A larger batch falls back to one shuffle join
+into the cell layout. n_cells ~ √N keeps
 cells bounded; growing the corpus = :func:`append_to_ann_index` (new
 assignments under the same manifest-pinned codebook, one batch-sized
 Arrow pass, per-batch ``ingest_batch`` partitions with idempotent
@@ -166,7 +168,7 @@ def build_ann_index(
     fit-owned stride ``k_f`` in the manifest — and stores every
     vector under its global two-level cell id
     (``coarse_cell * k_f + fine_idx``), so serving routes through the
-    IMI probe (`similarity._imi_probe_cells`): a query ranks k_c
+    IMI probe (`similarity._imi_query_topk`): a query ranks k_c
     coarse centroids then only the probed cells' fine codebooks —
     O(√k·dim) per query where the flat layout pays O(k·dim) just to
     rank cells. NOTE the trained cell count can differ from the
@@ -356,12 +358,16 @@ def build_ann_index(
 
 
 def load_centroids(spark: SparkSession, index_dir: str) -> list[list[float]]:
+    """The flat centroids in cell order. Like every model read here it
+    passes the schema its writer uses and sorts on the driver: one
+    Spark job (the collect), where an inferred schema and a distributed
+    orderBy would cost two more."""
     rows = (
-        spark.read.parquet(os.path.join(index_dir, "centroids"))
-        .orderBy("cell")
+        spark.read.schema("cell int, centroid array<double>")
+        .parquet(os.path.join(index_dir, "centroids"))
         .collect()
     )
-    return [list(r["centroid"]) for r in rows]
+    return [list(r["centroid"]) for r in sorted(rows, key=lambda r: r["cell"])]
 
 
 def load_two_level_model(
@@ -374,26 +380,28 @@ def load_two_level_model(
     manifest = read_manifest(index_dir)
     k_f = int(manifest["k_f"])
     coarse_rows = (
-        spark.read.parquet(os.path.join(index_dir, "coarse_centroids"))
-        .orderBy("ccell")
+        spark.read.schema("ccell int, centroid array<double>")
+        .parquet(os.path.join(index_dir, "coarse_centroids"))
         .collect()
     )
-    coarse = [list(r["centroid"]) for r in coarse_rows]
+    coarse = [
+        list(r["centroid"]) for r in sorted(coarse_rows, key=lambda r: r["ccell"])
+    ]
     fine_rows = (
-        spark.read.parquet(os.path.join(index_dir, "fine_centroids"))
-        .orderBy("ccell", "fine")
+        spark.read.schema("ccell int, fine int, centroid array<double>")
+        .parquet(os.path.join(index_dir, "fine_centroids"))
         .collect()
     )
     fine: dict[int, list[list[float]]] = {}
-    for r in fine_rows:
+    for r in sorted(fine_rows, key=lambda r: (r["ccell"], r["fine"])):
         fine.setdefault(int(r["ccell"]), []).append(list(r["centroid"]))
     return coarse, fine, k_f
 
 
 def load_pq_codebooks(spark: SparkSession, index_dir: str) -> list[list[list[float]]]:
     rows = (
-        spark.read.parquet(os.path.join(index_dir, "pq_codebooks"))
-        .orderBy("j", "code")
+        spark.read.schema("j int, code int, centroid array<double>")
+        .parquet(os.path.join(index_dir, "pq_codebooks"))
         .collect()
     )
     m = max(r["j"] for r in rows) + 1
@@ -858,15 +866,24 @@ def ann_query_indexed(
     against the stored index — quantizer parameters come from the
     manifest, never the caller.
 
-    A two-level-built index serves through the IMI probe
-    (`similarity._imi_probe_cells`): rank k_c coarse centroids, keep
-    ``probe_coarse``, rank only those cells' fine codebooks, keep
+    Both layouts serve by broadcast probe
+    (`similarity._probe_serve`): a query batch of up to
+    `similarity._QUERY_BATCH_CAP_BYTES` (8·dim bytes per query, so
+    1,024 queries at dim 64) is collected, each query's probe cells
+    are ranked on the driver, and only the probed stored cells are
+    read and scored, in one Arrow pass — the stored vectors are never
+    shuffled. A larger batch (e.g. the ``ann-index query`` CLI over a
+    whole parquet file) takes the cell-grouped shuffle of
+    `_ivf_score_and_rank` instead; the rows are the same.
+
+    A two-level-built index ranks cells through the IMI probe
+    (`similarity._two_level_probe_blocks`): rank k_c coarse centroids,
+    keep ``probe_coarse``, rank only those cells' fine codebooks, keep
     ``probe_fine`` each — per-query probe cost (k_c + p_c·k_f)·dim ≈
     O(√k·dim), vs the flat layout's O(k·dim) cell ranking. When the
     caller passes only the flat ``n_probe`` budget,
     :func:`_imi_probe_split` factors it (full budget ⇒ exact search,
-    same calibration contract as the flat path). Scoring tail is the
-    shared `_ivf_score_and_rank` either way."""
+    same calibration contract as the flat path)."""
     manifest = read_manifest(index_dir)
     stored = _live_cells(spark, index_dir)
     # "k_f" gates the IMI route: indexes built by the pre-round-12
@@ -877,8 +894,7 @@ def ann_query_indexed(
     # artifacts they never wrote
     if manifest["quantizer"] == "kmeans-two-level" and "k_f" in manifest:
         from batch_process_dpla_index_spark.operators.similarity import (
-            _imi_probe_cells,
-            _ivf_score_and_rank,
+            _imi_query_topk,
         )
 
         coarse, fine, k_f = load_two_level_model(spark, index_dir)
@@ -886,16 +902,10 @@ def ann_query_indexed(
             n_probe, int(manifest["n_cells"]), k_f, len(fine),
             probe_coarse, probe_fine,
         )
-        probing = _imi_probe_cells(
-            queries, coarse, fine, k_f, p_c, p_f, id_col, vec_col
+        return _imi_query_topk(
+            stored, queries, coarse, fine, k_f, p_c, p_f, id_col, vec_col,
+            dim=int(manifest["dim"]), k=k,
         )
-        stored_side = stored.select(
-            F.col("cell").cast("int").alias("cell"),
-            F.lit(0).alias("role"),
-            "id",
-            "vec",
-        )
-        return _ivf_score_and_rank(stored_side, probing, k)
     if probe_coarse is not None or probe_fine is not None:
         # silently ignoring the IMI widths on a flat-served index would
         # hand back n_probe behavior under an IMI-budget label

@@ -107,11 +107,14 @@ def clear_tombstones(index_dir: str) -> None:
 def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """(t_id, t_max_batch) — one row per deleted id, collapsed to the
     MAX watermark (each delete event covers batches <= its own
-    watermark, so the union of events per id is exactly the max)."""
+    watermark, so the union of events per id is exactly the max).
+    Read with the schema `delete_from_index` writes: no
+    schema-inference job on any serve, append, delete or compact."""
     if not has_tombstones(index_dir):
         return None
     return (
-        spark.read.parquet(_tombstones_dir(index_dir))
+        spark.read.schema("t_id bigint, t_max_batch int")
+        .parquet(_tombstones_dir(index_dir))
         .groupBy("t_id")
         .agg(F.max("t_max_batch").alias("t_max_batch"))
     )
@@ -220,13 +223,21 @@ def delete_from_index(
         # ingest_batch is a Hive PARTITION column on every write path,
         # so its max is the max over the partition directory names — a
         # driver-side listing, not an aggregate job (r18, guide §1.2).
+        # A directory with no part file (an aborted write) holds no
+        # rows, so it must not raise the watermark: a later append of
+        # a deleted id into a batch below it would stay hidden.
         # Any surprise in the layout falls back to the old aggregate.
+        primary = os.path.join(index_dir, primary_dir)
         try:
             wm = max(
                 (
                     int(d.split("=", 1)[1])
-                    for d in os.listdir(os.path.join(index_dir, primary_dir))
+                    for d in os.listdir(primary)
                     if d.startswith("ingest_batch=")
+                    and any(
+                        f.endswith(".parquet")
+                        for f in os.listdir(os.path.join(primary, d))
+                    )
                 ),
                 default=0,
             )

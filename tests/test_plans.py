@@ -12,6 +12,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.queries import QUERIES
 from tests.conftest import SF_DIR
@@ -573,6 +574,69 @@ def test_ivf_pq_topk_plan_two_arrow_passes_one_shuffle(spark):
     assert plan.count("MapInPandas") == 2, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+@pytest.fixture(scope="module")
+def ann_serve_plan(spark, tmp_path_factory):
+    """Executed-plan text of one ANN serve (5 queries, 4 probes)
+    against a small persisted index — ``serve_plan()`` plans it under
+    the current query-batch cap."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        build_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path_factory.mktemp("ann_plan") / "ann")
+    build_ann_index(emb.orderBy("vec_id").limit(80), "vec_id", "embedding",
+                    idx, dim=64, n_cells=8, learned=False)
+    queries = emb.orderBy(F.desc("vec_id")).limit(5)
+
+    def serve_plan() -> str:
+        df = ann_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
+        )
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    return serve_plan
+
+
+def test_ann_serve_broadcast_probe_plan(ann_serve_plan):
+    """The ANN serve ships the query batch to the stored side: ONE
+    Arrow pass over a scan filtered to the probed cells (``In(cell``
+    pushed into the scan), no cell-grouped Python stage (the stored
+    vectors never shuffle), and the only exchange on query_id is the
+    per-query merge window."""
+    plan = ann_serve_plan()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert any("In(cell" in p for p in pushed), plan
+
+
+def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
+    """Tier-off pin: a batch over the query-batch cap (here a cap of
+    0) takes the distributed plan — stored and probe rows grouped on
+    the cell id (FlatMapGroupsInPandas)."""
+    from batch_process_dpla_index_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 0)
+    assert "FlatMapGroupsInPandas" in ann_serve_plan()
+
+
+def test_ann_serve_cap_counts_query_vectors(ann_serve_plan, monkeypatch):
+    """The query-batch cap is in bytes of 8·dim per query: the
+    5-query batch at dim 64 (2,560 bytes) still broadcasts at a cap
+    of exactly 2,560 and falls back to the cell shuffle one byte
+    under it."""
+    from batch_process_dpla_index_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 5 * 8 * 64)
+    assert "FlatMapGroupsInPandas" not in ann_serve_plan()
+    monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 5 * 8 * 64 - 1)
+    assert "FlatMapGroupsInPandas" in ann_serve_plan()
 
 
 def test_overlap_index_artifact_write_repartition_not_coalesce(spark):

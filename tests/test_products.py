@@ -731,6 +731,124 @@ def test_ann_index_pre_stride_two_level_format_serves_flat(spark, tmp_path):
     assert got_rows == baseline_rows and len(got_rows) == 30
 
 
+def _serve_rows(df):
+    # (query_id, rank) is unique per served row; scores may be NULL
+    return sorted(map(tuple, df.collect()), key=lambda r: (r[0], r[3]))
+
+
+@pytest.mark.parametrize(
+    "learned", [True, False, "two-level"],
+    ids=["kmeans", "pseudo-random", "two-level"],
+)
+def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
+    """Tier equivalence of the ANN serve: the broadcast-probe plan
+    (query batch collected, probed cells scored in one Arrow pass) and
+    the fallback an over-cap batch takes (the cell-grouped shuffle)
+    return identical rows on every quantizer, through the
+    lifecycle edge cases — an id stored in two ingest batches, a
+    tombstoned id, a query id that is also stored (self-masked), a
+    zero-norm query (NULL scores) and an empty query batch."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.operators import similarity
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") % 7 != 3)
+    idx = str(tmp_path / "ann")
+    build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=16,
+                    learned=learned, kmeans_iters=2)
+    head = corpus.orderBy("vec_id").limit(4).collect()
+    dup_ids = [r["vec_id"] for r in head[:3]]
+    doomed = head[3]["vec_id"]
+    # the same ids and vectors again, in ingest batch 1
+    append_to_ann_index(
+        spark, corpus.filter(F.col("vec_id").isin(dup_ids)),
+        "vec_id", "embedding", idx, ingest_batch=1,
+    )
+    delete_from_ann_index(spark, idx, [doomed], compact_threshold=2.0)
+
+    twins = corpus.filter(F.col("vec_id").isin(dup_ids + [doomed])).select(
+        (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
+    )
+    zero = spark.createDataFrame(
+        [(999999, [0.0] * 64)], "vec_id bigint, embedding array<float>"
+    )
+    queries = (
+        emb.filter(F.col("vec_id") % 7 == 3).limit(10)
+        .unionByName(corpus.filter(F.col("vec_id").isin(dup_ids)))
+        .unionByName(twins)
+        .unionByName(zero)
+    )
+
+    def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES):
+        # cap 0 puts every batch over the cap: the fallback plan
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", cap)
+            return ann_query_indexed(
+                spark, q, "vec_id", "embedding", idx, k=5, n_probe=4
+            )
+
+    got = _serve_rows(serve(queries))
+    assert _serve_rows(serve(queries, cap=0)) == got
+    assert len(got) == 5 * 18
+
+    by_q: dict = {}
+    for r in got:
+        by_q.setdefault(r[0], []).append(r)
+    for i in dup_ids:
+        # self-masked: neither stored copy answers its own id
+        assert all(r[1] != i for r in by_q[i])
+        # both copies serve its exact twin, at score 1.0
+        assert [(r[1], r[2]) for r in by_q[i + 900000][:2]] == [(i, 1.0)] * 2
+    assert all(r[1] != doomed for r in got)
+    assert all(r[2] is None for r in by_q[999999])
+
+    empty = serve(emb.limit(0))
+    empty_off = serve(emb.limit(0), cap=0)
+    schema = "struct<query_id:bigint,neighbor_id:bigint,score:double,rank:int>"
+    for df in (empty, empty_off):
+        assert df.schema.simpleString() == schema and df.count() == 0
+
+
+def test_delete_watermark_skips_empty_batch_dir(spark, tmp_path):
+    """An ``ingest_batch=N`` directory with no part file (an aborted
+    write) holds no rows, so it must not raise the delete watermark:
+    with watermark 99 the tombstone would also cover a later append of
+    the deleted id in batch 5, and the re-ingested id would never
+    serve again."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    corpus = emb.orderBy("vec_id").limit(40)
+    idx = str(tmp_path / "ann_wm")
+    build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=4,
+                    learned=False)
+    os.makedirs(os.path.join(idx, "cells", "ingest_batch=99"))
+    victim = corpus.orderBy("vec_id").limit(1)
+    vid = victim.first()["vec_id"]
+    delete_from_ann_index(spark, idx, [vid], compact_threshold=2.0)
+    append_to_ann_index(spark, victim, "vec_id", "embedding", idx,
+                        ingest_batch=5)
+    twin = victim.select((F.col("vec_id") + 900000).alias("vec_id"), "embedding")
+    hit = ann_query_indexed(
+        spark, twin, "vec_id", "embedding", idx, k=1, n_probe=4
+    ).collect()
+    assert [r["neighbor_id"] for r in hit] == [vid]
+
+
 def test_embedding_index_rebuild_lifecycle(spark, tmp_path, capsys):
     """The rebuild path the build-time n_cells pin defers to
     (embedding_index.py module docstring): build undersized → ingest

@@ -1,19 +1,26 @@
 """EDM/DPLA value-class reshape macros (SURVEY.md §1, D2).
 
-Plain ``Column -> Column`` expression combinators — never UDFs — so
-Catalyst keeps constant-folding, nested-schema pruning, and
-whole-stage codegen through every reshape (the reference's own D2
-style: ParquetDump.scala:54-113).
+Expression combinators, never UDFs, so Catalyst keeps constant-folding,
+nested-schema pruning, and whole-stage codegen through every reshape
+(the reference's own D2 style: ParquetDump.scala:54-113).
 
 Two families:
 
 - flatten-side (``edm_agent`` etc.): unwrap ``{value: string}``
   wrappers into plain strings while renaming web-resource fields —
   the ParquetDump direction (nested enriched → analyst-friendly).
+  These are pure-Python SQL-text builders: each takes the SQL path of
+  the value to reshape (a backtick-quoted column, field or lambda
+  variable) and returns a SQL expression string. ``model/flatten``
+  joins them into one ``selectExpr`` that the JVM parses in a single
+  call; built as ``Column`` objects, every ``struct``, ``getItem``,
+  ``alias`` and ``transform`` lambda was its own py4j round trip
+  (about 6,200 per flatten).
 - repair-side (``wrap_*``): the inverse direction used by SchemaRepair
   (SchemaRepair.scala:37-86): wrap plain strings back into
   ``{value}`` structs and inject typed-null placeholders for fields
-  a provider never shipped.
+  a provider never shipped. These stay ``Column -> Column``:
+  ``repair_place`` needs ``withField``, which has no SQL spelling.
 """
 
 from __future__ import annotations
@@ -31,73 +38,90 @@ WEB_RESOURCE_DDL = (
 VALUE_DDL = "struct<value:string>"
 
 
-def _passthrough(col: Column, name: str) -> Column:
-    """ParquetDump.scala:55-56."""
-    return col.getItem(name).alias(name)
+def sql_field(path: str, name: str) -> str:
+    """SQL path of field ``name`` under ``path`` (ParquetDump.scala:55-56)."""
+    return f"{path}.`{name}`"
 
 
-def _de_value(col: Column, name: str) -> Column:
+def sql_struct(**fields: str) -> str:
+    """``named_struct`` of ``name=sql`` pairs, in argument order."""
+    return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
+
+
+def sql_transform(path: str, builder, var: str = "x") -> str:
+    """``transform`` over the array at ``path``, reshaping each element
+    with ``builder`` (element SQL path → SQL). ``var`` names the lambda
+    variable; a transform nested inside another takes a different one."""
+    return f"transform({path}, {var} -> {builder(var)})"
+
+
+def _de_value(path: str, name: str) -> str:
     """Unwrap a {value} wrapper field (ParquetDump.scala:58-59)."""
-    return col.getItem(name).getItem("value").alias(name)
+    return sql_field(sql_field(path, name), "value")
 
 
-def edm_web_resource(col: Column) -> Column:
+def de_value_array(path: str) -> str:
+    """Unwrap every {value} element of the array at ``path``."""
+    return sql_transform(path, lambda e: sql_field(e, "value"), var="v")
+
+
+def edm_web_resource(path: str) -> str:
     """Flatten-side edmWebResource (ParquetDump.scala:106-113):
     uri unwrapped, fileFormat→format, dcRights→rights."""
-    return F.struct(
-        col.getItem("uri").getItem("value").alias("uri"),
-        col.getItem("fileFormat").alias("format"),
-        col.getItem("dcRights").alias("rights"),
-        col.getItem("edmRights").alias("edmRights"),
-        col.getItem("isReferencedBy").getItem("value").alias("isReferencedBy"),
+    return sql_struct(
+        uri=_de_value(path, "uri"),
+        format=sql_field(path, "fileFormat"),
+        rights=sql_field(path, "dcRights"),
+        edmRights=sql_field(path, "edmRights"),
+        isReferencedBy=_de_value(path, "isReferencedBy"),
     )
 
 
-def edm_agent(col: Column) -> Column:
+def edm_agent(path: str) -> str:
     """Flatten-side edmAgent (ParquetDump.scala:89-104)."""
-    return F.struct(
-        _de_value(col, "uri"),
-        _passthrough(col, "name"),
-        _passthrough(col, "providedLabel"),
-        _passthrough(col, "note"),
-        _de_value(col, "scheme"),
-        F.transform(col.getItem("exactMatch"), lambda e: e.getItem("value")).alias("exactMatch"),
-        F.transform(col.getItem("closeMatch"), lambda e: e.getItem("value")).alias("closeMatch"),
+    return sql_struct(
+        uri=_de_value(path, "uri"),
+        name=sql_field(path, "name"),
+        providedLabel=sql_field(path, "providedLabel"),
+        note=sql_field(path, "note"),
+        scheme=_de_value(path, "scheme"),
+        exactMatch=de_value_array(sql_field(path, "exactMatch")),
+        closeMatch=de_value_array(sql_field(path, "closeMatch")),
     )
 
 
-def skos_concept(col: Column) -> Column:
+def skos_concept(path: str) -> str:
     """Flatten-side skosConcept (ParquetDump.scala:79-87)."""
-    return F.struct(
-        _passthrough(col, "concept"),
-        _passthrough(col, "providedLabel"),
-        _passthrough(col, "note"),
-        _de_value(col, "scheme"),
-        F.transform(col.getItem("exactMatch"), lambda e: e.getItem("value")).alias("exactMatch"),
-        F.transform(col.getItem("closeMatch"), lambda e: e.getItem("value")).alias("closeMatch"),
+    return sql_struct(
+        concept=sql_field(path, "concept"),
+        providedLabel=sql_field(path, "providedLabel"),
+        note=sql_field(path, "note"),
+        scheme=_de_value(path, "scheme"),
+        exactMatch=de_value_array(sql_field(path, "exactMatch")),
+        closeMatch=de_value_array(sql_field(path, "closeMatch")),
     )
 
 
-def dpla_place(col: Column) -> Column:
+def dpla_place(path: str) -> str:
     """Flatten-side dplaPlace (ParquetDump.scala:60-70)."""
-    return F.struct(
-        _passthrough(col, "name"),
-        _passthrough(col, "city"),
-        _passthrough(col, "county"),
-        _passthrough(col, "state"),
-        _passthrough(col, "country"),
-        _passthrough(col, "region"),
-        _passthrough(col, "coordinates"),
-        _de_value(col, "exactMatch"),
+    return sql_struct(
+        name=sql_field(path, "name"),
+        city=sql_field(path, "city"),
+        county=sql_field(path, "county"),
+        state=sql_field(path, "state"),
+        country=sql_field(path, "country"),
+        region=sql_field(path, "region"),
+        coordinates=sql_field(path, "coordinates"),
+        exactMatch=_de_value(path, "exactMatch"),
     )
 
 
-def dcmi_type_collection(col: Column) -> Column:
+def dcmi_type_collection(path: str) -> str:
     """Flatten-side dcmiTypeCollection (ParquetDump.scala:72-77)."""
-    return F.struct(
-        _passthrough(col, "title"),
-        _passthrough(col, "description"),
-        edm_web_resource(col.getItem("isShownAt")).alias("isShownAt"),
+    return sql_struct(
+        title=sql_field(path, "title"),
+        description=sql_field(path, "description"),
+        isShownAt=edm_web_resource(sql_field(path, "isShownAt")),
     )
 
 

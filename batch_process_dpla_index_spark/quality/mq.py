@@ -10,16 +10,16 @@ the monthly batch sequences it (monthly_batch_emr.sh:84).
 Scale: flags are a narrow projection (pushes into the parquet scan,
 ~20 nested leaves of a very wide schema); each score branch is one
 partial+final hash aggregate over |providers| (or |dataProviders|)
-tiny rows — a single shuffle at any input size. The two score frames
-are persisted before use because the reference recomputes both
-aggregations for its manifest counts (MqReports.scala:152-153) — a
-known inefficiency SURVEY.md §4 flags; persisting fixes it without
-changing semantics.
+tiny rows — a single shuffle at any input size. The reference
+recomputes both aggregations for its manifest counts
+(MqReports.scala:152-153), a known inefficiency SURVEY.md §4 flags;
+here each count is an ``Observation`` (``count(1)``) on its CSV write,
+so the counts cost no extra job and no persisted score frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: The 16 flag columns of the itemdata projection, in reference order.
@@ -106,18 +106,16 @@ def write_mq_reports(
 
     delete_existing(out_dir)
     itemdata = item_data(spark, items)
-    providers = provider_scores(itemdata).persist()
-    contributors = contributor_scores(itemdata).persist()
-    try:
-        write_csv_single(providers, f"{out_dir}/provider.csv")
-        write_csv_single(contributors, f"{out_dir}/contributor.csv")
-        opts = {
-            "Source": "items",
-            "Provider count": str(providers.count()),
-            "Contributor count": str(contributors.count()),
-        }
-        write_manifest(opts, out_dir)
-    finally:
-        providers.unpersist()
-        contributors.unpersist()
+    n_providers, n_contributors = Observation(), Observation()
+    n = F.count(F.lit(1)).alias("n")
+    write_csv_single(provider_scores(itemdata).observe(n_providers, n), f"{out_dir}/provider.csv")
+    write_csv_single(
+        contributor_scores(itemdata).observe(n_contributors, n), f"{out_dir}/contributor.csv"
+    )
+    opts = {
+        "Source": "items",
+        "Provider count": str(n_providers.get["n"]),
+        "Contributor count": str(n_contributors.get["n"]),
+    }
+    write_manifest(opts, out_dir)
     return opts

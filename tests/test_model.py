@@ -7,6 +7,9 @@ style), plus the divergent-provider alignment path.
 
 from __future__ import annotations
 
+import gc
+
+import py4j.clientserver
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.model.fixtures import (
@@ -55,6 +58,78 @@ def test_flatten_golden_row(spark, docs_small):
         assert gone not in row
     # struct-over-null quirk: object is a non-null struct of nulls
     assert row["object"] is not None and row["object"]["uri"] == "http://example.org/item/1"
+
+
+_WEB = (
+    "struct<uri:string,format:array<string>,rights:array<string>,"
+    "edmRights:string,isReferencedBy:string>"
+)
+_AGENT = (
+    "struct<uri:string,name:string,providedLabel:string,note:string,"
+    "scheme:string,exactMatch:array<string>,closeMatch:array<string>>"
+)
+_SKOS = (
+    "struct<concept:string,providedLabel:string,note:string,scheme:string,"
+    "exactMatch:array<string>,closeMatch:array<string>>"
+)
+_PLACE = (
+    "struct<name:string,city:string,county:string,state:string,"
+    "country:string,region:string,coordinates:string,exactMatch:array<string>>"
+)
+_DATE = "struct<originalSourceDate:string,begin:string,end:string>"
+_SOURCE_RESOURCE = (
+    "struct<alternateTitle:array<string>,"
+    "collection:array<struct<title:string,description:string,isShownAt:" + _WEB + ">>,"
+    "contributor:array<" + _AGENT + ">,creator:array<" + _AGENT + ">,"
+    "date:array<" + _DATE + ">,description:array<string>,extent:array<string>,"
+    "format:array<string>,identifier:array<string>,language:array<" + _SKOS + ">,"
+    "place:array<" + _PLACE + ">,publisher:array<" + _AGENT + ">,"
+    "relation:array<string>,replacedBy:array<string>,replaces:array<string>,"
+    "rights:array<string>,rightsHolder:array<" + _AGENT + ">,"
+    "subject:array<" + _SKOS + ">,temporal:array<" + _DATE + ">,"
+    "title:array<string>,type:array<string>>"
+)
+#: The flattened item schema, field for field as the withColumn-chain
+#: flatten produced it: kept columns in input order, reshaped ones in
+#: place, uri/id/rights appended.
+FLAT_SCHEMA = (
+    "struct<sourceResource:" + _SOURCE_RESOURCE + ",dataProvider:" + _AGENT + ","
+    "hasView:array<" + _WEB + ">,intermediateProvider:" + _AGENT + ","
+    "isShownAt:" + _WEB + ",object:" + _WEB + ",preview:" + _WEB + ","
+    "provider:" + _AGENT + ",originalId:string,iiifManifest:string,"
+    "mediaMaster:array<" + _WEB + ">,uri:string,id:string,rights:string>"
+)
+
+
+def test_flatten_schema_pinned(docs_small):
+    """Field order and types of the flattened record cannot drift."""
+    flat = modify_columns(synthesize_enriched(docs_small))
+    assert flat.schema.simpleString() == FLAT_SCHEMA
+
+
+def test_flatten_builds_in_few_jvm_calls(docs_small, monkeypatch):
+    """The flatten is one SQL projection: building it costs a handful of
+    py4j round trips, not one per Column macro node (~6,200 when the
+    EDM macros were Column DSL)."""
+    enriched = synthesize_enriched(docs_small)
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    # free the fixture's Column objects first: their py4j finalizers
+    # would otherwise run (and be counted) inside the window
+    gc.collect()
+    gc.disable()
+    try:
+        monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+        modify_columns(enriched)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert len(calls) <= 50, len(calls)
 
 
 def test_repair_equals_enriched(docs_small):

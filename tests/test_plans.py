@@ -663,6 +663,66 @@ def test_overlap_index_artifact_write_repartition_not_coalesce(spark):
     assert "Coalesce" not in plan, plan
 
 
+def _load_plan_audit():
+    """tools/plan_audit.py as a module (tools/ is not a package)."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
+    )
+    plan_audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_audit)
+    return plan_audit
+
+
+def test_plan_audit_reprint_cover_needs_deeper_relation_and_header():
+    """Hand-built plans pinning filescans_outside_cache's reprint rule:
+    a FileScan outside every InMemoryRelation subtree counts as a
+    re-scan unless the nearest preceding relation sits deeper than it
+    AND a reprint section header lies between them."""
+    plan_audit = _load_plan_audit()
+    # a materialized cache reprinted as a flat AQE dump: the scan sits
+    # shallower than the relation, below its section header -> covered
+    reprint = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=true",
+        "+- == Final Plan ==",
+        "   *(1) Project [a]",
+        "   +- InMemoryTableScan [a]",
+        "         +- InMemoryRelation [a], StorageLevel(disk, 1 replicas)",
+        "               +- AdaptiveSparkPlan isFinalPlan=true",
+        "+- == Final Plan ==",
+        "   ResultQueryStage 0",
+        "   +- *(1) FileScan parquet [a]",
+    ])
+    assert plan_audit.filescans_outside_cache(reprint) == 0
+    # false positive 1: a sibling re-scan after a cached subtree, with
+    # nothing printed between them
+    sibling = "\n".join([
+        "*(2) Project [a]",
+        "+- Union",
+        "   :- InMemoryTableScan [a]",
+        "   :     +- InMemoryRelation [a], StorageLevel(disk, 1 replicas)",
+        "   :           +- *(1) FileScan parquet [a]",
+        "   +- *(1) FileScan parquet [a]",
+    ])
+    assert plan_audit.filescans_outside_cache(sibling) == 1
+    # false positive 2: a re-scan under a shuffle stage beside the
+    # cached subtree; a query stage is no reprint header
+    stage_sibling = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=true",
+        "+- == Final Plan ==",
+        "   Union",
+        "   :- InMemoryTableScan [a]",
+        "   :     +- InMemoryRelation [a], StorageLevel(disk, 1 replicas)",
+        "   :           +- LocalTableScan [a]",
+        "   +- ShuffleQueryStage 0",
+        "      +- *(1) FileScan parquet [a]",
+    ])
+    assert plan_audit.filescans_outside_cache(stage_sibling) == 1
+
+
 def test_drift_monitors_scan_corpus_once(spark):
     """The r15 drift monitors reuse their persisted first aggregate:
     source_drift_ks feeds FOUR consumers (group totals, value grid,
@@ -673,15 +733,7 @@ def test_drift_monitors_scan_corpus_once(spark):
     else reads the InMemoryRelation."""
     from batch_process_dpla_index_spark.operators.dedup import unpersist_deps
 
-    import importlib.util as _ilu
-    import os as _os
-
-    spec = _ilu.spec_from_file_location(
-        "plan_audit",
-        _os.path.join(_os.path.dirname(__file__), "..", "tools", "plan_audit.py"),
-    )
-    plan_audit = _ilu.module_from_spec(spec)
-    spec.loader.exec_module(plan_audit)
+    plan_audit = _load_plan_audit()
 
     for name, n_inmem in (
         ("source_drift_ks", 4),

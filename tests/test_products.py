@@ -51,20 +51,39 @@ def test_mq_csv_product(spark, docs_small, tmp_path):
     assert len(glob.glob(f"{out}/provider.csv/part-*.csv")) == 1
 
 
-def test_jsonl_dump_invariants(spark, tmp_path):
-    # two fake providers' jsonl inputs
-    in_a, in_b = str(tmp_path / "in/a"), str(tmp_path / "in/b")
+def _jsonl_inputs(spark, tmp_path) -> dict[str, str]:
+    """Three fake providers' jsonl inputs: 40 lines, 25 lines, none."""
+    in_a, in_b, in_c = (str(tmp_path / f"in/{x}") for x in "abc")
     spark.range(0, 40).select(F.concat(F.lit('{"id":'), "id", F.lit("}")).alias("value")).write.text(in_a)
     spark.range(100, 125).select(F.concat(F.lit('{"id":'), "id", F.lit("}")).alias("value")).write.text(in_b)
+    spark.createDataFrame([], "value string").write.text(in_c)
+    return {"hubA": in_a, "hubB": in_b, "hubC": in_c}
+
+
+def test_jsonl_dump_invariants(spark, tmp_path):
+    inputs = _jsonl_inputs(spark, tmp_path)
     out = str(tmp_path / "out")
-    counts = jsonl_dump.execute(spark, {"hubA": in_a, "hubB": in_b}, out)
-    assert counts == {"hubA": 40, "hubB": 25, "__all__": 65}
+    sc = spark.sparkContext
+    sc.setJobGroup("test-jsonl-dump", "jsonl dump job count")
+    try:
+        counts = jsonl_dump.execute(spark, inputs, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"hubA": 40, "hubB": 25, "hubC": 0, "__all__": 65}
+    # counts come from the writes: no count-only job, at most one job
+    # per provider export plus the union export (the export threads
+    # inherit the caller's job group, so their jobs are all counted)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("test-jsonl-dump"))
+    assert 3 <= n_jobs <= len(inputs) + 1, n_jobs
     # per-provider + union manifests agree with data
     man_a = read_manifest(f"{out}/hubA.jsonl")
     assert man_a["Record count"] == "40"
+    assert read_manifest(f"{out}/hubC.jsonl")["Record count"] == "0"
     man_all = read_manifest(f"{out}/all.jsonl")
     assert man_all["Total record count"] == "65"
     assert man_all["hubB record count"] == "25"
+    assert man_all["hubC record count"] == "0"
     # gzip parts decode back to exactly the inputs
     lines = []
     for part in glob.glob(f"{out}/all.jsonl/part-*.gz"):
@@ -73,8 +92,27 @@ def test_jsonl_dump_invariants(spark, tmp_path):
     assert len(lines) == 65
     assert '{"id":0}' in lines and '{"id":124}' in lines
     # idempotent overwrite: run again, same result
-    counts2 = jsonl_dump.execute(spark, {"hubA": in_a, "hubB": in_b}, out)
+    counts2 = jsonl_dump.execute(spark, inputs, out)
     assert counts2 == counts
+
+
+def test_jsonl_dump_provider_failure_propagates(spark, tmp_path, monkeypatch):
+    """A failing provider export is re-raised from execute, and every
+    persisted input is released once the other exports have stopped."""
+    inputs = _jsonl_inputs(spark, tmp_path)
+    write = jsonl_dump.write_text_gzip
+
+    def failing_write(df, path, *args, **kwargs):
+        if path.endswith("/hubB.jsonl"):
+            raise RuntimeError("hubB export failed")
+        return write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(jsonl_dump, "write_text_gzip", failing_write)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="hubB export failed"):
+        jsonl_dump.execute(spark, inputs, str(tmp_path / "out"))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert not os.path.exists(tmp_path / "out/all.jsonl")
 
 
 @pytest.mark.parametrize("exact", [False, True])

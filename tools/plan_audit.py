@@ -85,14 +85,9 @@ def filescans_outside_cache(plan: str) -> int:
                     break
         return False
 
-    _MARKERS = (
-        "== Final Plan ==",
-        "== Initial Plan ==",
-        "ResultQueryStage",
-        "ShuffleQueryStage",
-        "BroadcastQueryStage",
-        "TableCacheQueryStage",
-    )
+    # section headers an AdaptiveSparkPlan prints; query stages alone
+    # do not mark a reprint, since every final AQE plan has them
+    _REPRINT_HEADERS = ("== Final Plan ==", "== Initial Plan ==")
 
     def _covered_by_materialized_reprint(i: int) -> bool:
         # An InMemoryRelation that was MATERIALIZED before the print
@@ -101,20 +96,14 @@ def filescans_outside_cache(plan: str) -> int:
         # headers and query stages at SHALLOWER indent than the
         # relation line itself, which defeats the ancestor walk. Such
         # a FileScan is covered when the nearest preceding
-        # InMemoryRelation sits DEEPER than it, nothing between
-        # returns above that relation's depth, and the block carries
-        # the AQE reprint markers.
-        saw_marker = False
+        # InMemoryRelation sits DEEPER than it and a reprint section
+        # header (at any depth) lies between the two.
+        saw_header = False
         for j in range(i - 1, -1, -1):
-            if indents[j] > indents[i] and any(
-                m in lines[j] for m in _MARKERS
-            ):
-                # markers may themselves sit deeper than the scan line
-                saw_marker = True
-            elif any(m in lines[j] for m in _MARKERS):
-                saw_marker = True
+            if any(h in lines[j] for h in _REPRINT_HEADERS):
+                saw_header = True
             if "InMemoryRelation" in lines[j]:
-                return indents[j] > indents[i] and saw_marker
+                return indents[j] > indents[i] and saw_header
             if indents[j] > indents[i] + 60:
                 # far outside any plausible reprint block
                 return False

@@ -46,7 +46,10 @@ from pyspark.sql import functions as F
 from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
 from batch_process_dpla_index_spark.products.index_tombstones import (
     clear_tombstones,
+    dataset_ddl,
     keyed_repartition,
+    read_dataset,
+    schema_key,
 )
 from batch_process_dpla_index_spark.operators.similarity import (
     _imi_probe_split,
@@ -55,17 +58,20 @@ from batch_process_dpla_index_spark.operators.similarity import (
 )
 
 
-def _live_cells(spark: SparkSession, index_dir: str) -> DataFrame:
+def _live_cells(
+    spark: SparkSession, index_dir: str, manifest: dict[str, str]
+) -> DataFrame:
     """Stored cell rows minus the tombstone set — THE read every serve
     path (query/recall/PQ/occupancy) and every recount goes through,
     so a takedown (`delete_from_ann_index`) is invisible to no
     consumer. An index that never saw a delete passes through with
-    zero plan overhead (no tombstones dir → plain scan)."""
+    zero plan overhead (no tombstones dir → plain scan). The cells are
+    read with the manifest's ``cells_schema``: no schema-inference job."""
     from batch_process_dpla_index_spark.products.index_tombstones import (
         apply_tombstones,
     )
 
-    stored = spark.read.parquet(os.path.join(index_dir, "cells"))
+    stored = read_dataset(spark, index_dir, "cells", manifest)
     return apply_tombstones(spark, index_dir, stored, "id")
 
 
@@ -251,10 +257,9 @@ def build_ann_index(
     # partitions a checkpoint replay can overwrite idempotently, and
     # serving reads are unchanged (every read path selects its
     # columns explicitly)
+    stored = stored.withColumn("ingest_batch", F.lit(0))
     (
-        keyed_repartition(
-            stored.withColumn("ingest_batch", F.lit(0)), cell_partitions, "cell"
-        )
+        keyed_repartition(stored, cell_partitions, "cell")
         .write.mode("overwrite")
         .partitionBy("ingest_batch")
         .parquet(os.path.join(index_dir, "cells"))
@@ -342,6 +347,7 @@ def build_ann_index(
         ),
         "metric": "cosine",
         "Record count": str(n_vecs),
+        schema_key("cells"): dataset_ddl(stored),
     }
     if two_level_model is not None:
         # the stride is FIT-OWNED model state (not derivable from the
@@ -481,7 +487,7 @@ def pq_query_indexed(
             F.col("vec").alias("qvec"),
         ).withColumn("cell", F.col("cell").cast("int"))
     stored_side = (
-        _live_cells(spark, index_dir)
+        _live_cells(spark, index_dir, manifest)
         .select(
             "cell",
             F.lit(0).alias("role"),
@@ -563,7 +569,7 @@ def append_to_ann_index(
         )
     manifest = read_manifest(index_dir)
     cells_path = os.path.join(index_dir, "cells")
-    stored_schema = spark.read.parquet(cells_path).schema
+    stored_schema = read_dataset(spark, index_dir, "cells", manifest).schema
     if "ingest_batch" not in stored_schema.names:
         raise ValueError(
             f"ANN index at {index_dir!r} predates the batch-partitioned "
@@ -592,8 +598,9 @@ def append_to_ann_index(
         books = load_pq_codebooks(spark, index_dir)
         codes = pq_encode(new_vecs, books, id_col, vec_col)
         batch = batch.join(codes, "id")
+    batch = batch.withColumn("ingest_batch", F.lit(int(ingest_batch)))
     writer = keyed_repartition(
-        batch.withColumn("ingest_batch", F.lit(int(ingest_batch))),
+        batch,
         cell_partitions if cell_partitions is None else min(n_cells, cell_partitions),
         "cell",
     ).write
@@ -604,10 +611,11 @@ def append_to_ann_index(
     else:
         writer = writer.mode("append")
     writer.partitionBy("ingest_batch").parquet(cells_path)
+    manifest[schema_key("cells")] = dataset_ddl(batch)
     # live count: tombstoned rows don't serve, so they don't count —
     # and an appended id that was deleted under an EARLIER watermark
     # counts again (append-after-delete resurrects by design)
-    manifest["Record count"] = str(_live_cells(spark, index_dir).count())
+    manifest["Record count"] = str(_live_cells(spark, index_dir, manifest).count())
     write_manifest(manifest, index_dir)
     return manifest
 
@@ -627,7 +635,7 @@ def ann_index_occupancy(
     manifest = read_manifest(index_dir)
     n_cells = int(manifest["n_cells"])
     per_cell = (
-        _live_cells(spark, index_dir)
+        _live_cells(spark, index_dir, manifest)
         .groupBy("cell")
         .count()
         .agg(
@@ -696,7 +704,7 @@ def rebuild_ann_index(
     dim = int(manifest["dim"])
     quantizer = manifest["quantizer"]
     cells_dir = os.path.join(index_dir, "cells")
-    live = _live_cells(spark, index_dir)
+    live = _live_cells(spark, index_dir, manifest)
     if "ingest_batch" not in live.columns:
         live = live.withColumn("ingest_batch", F.lit(0))
     # __rk minted once on a persisted frame (monotonically_increasing_id
@@ -827,6 +835,7 @@ def rebuild_ann_index(
     manifest["n_cells"] = str(new_cells)
     manifest["Record count"] = str(n_vecs)
     manifest["Tombstone count"] = "0"
+    manifest[schema_key("cells")] = dataset_ddl(reassigned)
     if two_level_model is not None:
         manifest["k_f"] = str(two_level_model[2])
         manifest["coarse_k"] = str(len(two_level_model[0]))
@@ -885,7 +894,7 @@ def ann_query_indexed(
     :func:`_imi_probe_split` factors it (full budget ⇒ exact search,
     same calibration contract as the flat path)."""
     manifest = read_manifest(index_dir)
-    stored = _live_cells(spark, index_dir)
+    stored = _live_cells(spark, index_dir, manifest)
     # "k_f" gates the IMI route: indexes built by the pre-round-12
     # two-level format flattened the model to the FLAT layout (flat
     # centroids dataset + flat cell assignments, no persisted stride),
@@ -966,7 +975,7 @@ def ann_recall_indexed(
         spark, queries, id_col, vec_col, index_dir, k=k, n_probe=n_probe,
         probe_coarse=probe_coarse, probe_fine=probe_fine,
     )
-    stored = _live_cells(spark, index_dir).select(
+    stored = _live_cells(spark, index_dir, read_manifest(index_dir)).select(
         F.col("id").alias(id_col), F.col("vec").alias(vec_col)
     )
     truth = cosine_topk(stored, queries, id_col, vec_col, k=k)

@@ -85,6 +85,40 @@ def parquet_rowcount(path: str) -> int:
     )
 
 
+def schema_key(subdir: str) -> str:
+    """Manifest key under which an index records the DDL schema of its
+    ``subdir`` dataset (``cells_schema`` for the ANN index's cells)."""
+    return f"{subdir}_schema"
+
+
+def dataset_ddl(df: DataFrame) -> str:
+    """DDL of the dataset a ``partitionBy("ingest_batch")`` write of
+    ``df`` lands: the data columns in order, the partition column last
+    (where a parquet read puts it)."""
+    fields = sorted(df.schema.fields, key=lambda f: f.name == "ingest_batch")
+    return ", ".join(
+        f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}"
+        for f in fields
+    )
+
+
+def read_dataset(
+    spark: SparkSession, index_dir: str, subdir: str, manifest: dict[str, str]
+) -> DataFrame:
+    """Read a stored index dataset with the schema its manifest records
+    (:func:`schema_key`), so the read runs no schema-inference job (a
+    footer-merge job of ~90 ms per read at bench scale). An index whose
+    manifest lacks the key (one written before its writers recorded it,
+    or whose writers never do) infers as before. The schema cannot be
+    derived from the other manifest keys: the vector element type, the
+    PQ code columns and the ``ingest_batch`` layout all vary."""
+    reader = spark.read
+    ddl = manifest.get(schema_key(subdir))
+    if ddl:
+        reader = reader.schema(ddl)
+    return reader.parquet(os.path.join(index_dir, subdir))
+
+
 def _tombstones_dir(index_dir: str) -> str:
     return os.path.join(index_dir, "tombstones")
 
@@ -217,7 +251,8 @@ def delete_from_index(
     specs = _dataset_specs(id_field, datasets)
     primary_dir, primary_id, _ = specs[0]
     id_field = primary_id
-    stored = spark.read.parquet(os.path.join(index_dir, primary_dir))
+    manifest = read_manifest(index_dir)
+    stored = read_dataset(spark, index_dir, primary_dir, manifest)
     wm = 0
     if "ingest_batch" in stored.columns:
         # ingest_batch is a Hive PARTITION column on every write path,
@@ -254,7 +289,6 @@ def delete_from_index(
         .parquet(_tombstones_dir(index_dir))
     )
 
-    manifest = read_manifest(index_dir)
     if not recount:
         manifest["Tombstone count"] = "stale"
         # 'Record count' keeps its pre-delete value (we skipped the
@@ -322,14 +356,19 @@ def compact_index_tombstones(
     import shutil
 
     specs = _dataset_specs(id_field, datasets)
+    manifest = read_manifest(index_dir)
     n_live = 0
     staged: list[tuple[str, str, str]] = []  # (live, tmp, old)
     for i, (subdir, ds_id, part_cols) in enumerate(specs):
         live_dir = os.path.join(index_dir, subdir)
         tmp_dir = os.path.join(index_dir, subdir + "__compact")
         old_dir = os.path.join(index_dir, subdir + "__old")
-        stored = spark.read.parquet(live_dir)
+        stored = read_dataset(spark, index_dir, subdir, manifest)
         live = apply_tombstones(spark, index_dir, stored, ds_id)
+        if schema_key(subdir) in manifest:
+            # keep the recorded schema with the data it describes; an
+            # index whose writers never record it stays unrecorded
+            manifest[schema_key(subdir)] = dataset_ddl(live)
         shutil.rmtree(tmp_dir, ignore_errors=True)
         if part_cols is None:
             part_cols = ["cell"] if "cell" in stored.columns else []
@@ -374,7 +413,6 @@ def compact_index_tombstones(
     for live_dir, _tmp, old_dir in staged:
         shutil.rmtree(old_dir, ignore_errors=True)
         os.rename(live_dir, old_dir)
-    manifest = read_manifest(index_dir)
     manifest["Record count"] = str(n_live)
     manifest["Tombstone count"] = "0"
     manifest.pop("Record count stale", None)

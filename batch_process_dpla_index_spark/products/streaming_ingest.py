@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from batch_process_dpla_index_spark.io.fs import get_fs
 from batch_process_dpla_index_spark.io.manifest import write_manifest
 from batch_process_dpla_index_spark.io.paths import iso_timestamp
 
@@ -91,6 +92,12 @@ def _dedup_ingest_available(
         survivors = batch_df.join(
             F.broadcast(dup_ids), id_col, "left_anti"
         ).persist()
+        # a dynamic overwrite that lands zero rows leaves the partition
+        # in place, so a ``batch=<id>`` dir from an earlier run into the
+        # same out_path (e.g. under a fresh checkpoint) would survive
+        # and be counted as kept: clear it first
+        batch_dir = os.path.join(out_path, f"batch={int(batch_id)}")
+        get_fs(batch_dir).delete_prefix(batch_dir)
         (
             survivors.withColumn("batch", F.lit(int(batch_id)))
             .write.mode("overwrite")
@@ -102,19 +109,13 @@ def _dedup_ingest_available(
         # metadata, driver-side — r18): the write IS the survivor
         # materialization, so a count job over the persisted frame
         # only re-reads what the footers already record. Zero
-        # survivors → no partition dir → 0, same as the old count().
-        # (A dynamic overwrite with zero rows would leave a previous
-        # attempt's partition in place, but a replay recomputes the
-        # SAME survivor set by construction — max_ingest_batch pins
-        # the probe to pre-attempt state — so the footer count always
-        # equals the frame count.)
+        # survivors → no partition dir (cleared above) → 0, same as
+        # the old count().
         from batch_process_dpla_index_spark.products.index_tombstones import (
             parquet_rowcount,
         )
 
-        n_kept = parquet_rowcount(
-            os.path.join(out_path, f"batch={int(batch_id)}")
-        )
+        n_kept = parquet_rowcount(batch_dir)
         append_fn(survivors, int(batch_id), matches)
         unpersist_deps(matches)
         survivors.unpersist()

@@ -887,6 +887,105 @@ def test_delete_watermark_skips_empty_batch_dir(spark, tmp_path):
     assert [r["neighbor_id"] for r in hit] == [vid]
 
 
+def test_ann_serve_job_count(spark, tmp_path):
+    """A warm serve of a client-built query batch runs at most three
+    jobs: the centroid read and the scoring pass's two waves. The cells
+    read takes the manifest's schema, so no schema-inference job."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        build_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "ann_jobs")
+    build_ann_index(emb, "vec_id", "embedding", idx, dim=64, n_cells=16,
+                    kmeans_iters=2)
+    # a local (Arrow) frame, as a serving client builds its batch
+    queries = spark.createDataFrame(emb.orderBy("vec_id").limit(25).toPandas())
+
+    def serve():
+        return ann_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=5, n_probe=4
+        ).collect()
+
+    assert len(serve()) == 25 * 5  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("test-ann-serve", "ann serve job count")
+    try:
+        serve()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("test-ann-serve"))
+    assert n_jobs <= 3, n_jobs
+
+
+def test_ann_cells_schema_tracks_every_write(spark, tmp_path):
+    """Build, append, compaction and rebuild record the cells dataset's
+    schema in the manifest (``cells_schema``), equal to what a read
+    would infer; the vector type and the PQ codes make it differ
+    between indexes with the same other keys. An index whose manifest
+    lacks the key (written before it existed) still serves the same
+    rows by inferring, and its next append records the key."""
+    from batch_process_dpla_index_spark.io.manifest import write_manifest
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+        rebuild_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") % 5 != 0)
+
+    def assert_recorded(idx):
+        ddl = read_manifest(idx)["cells_schema"]
+        cells = os.path.join(idx, "cells")
+        inferred = spark.read.parquet(cells).schema.simpleString()
+        assert spark.read.schema(ddl).parquet(cells).schema.simpleString() == inferred
+        return ddl
+
+    flat = str(tmp_path / "flat")
+    build_ann_index(corpus, "vec_id", "embedding", flat, dim=64, n_cells=8,
+                    learned=False)
+    flat_ddl = assert_recorded(flat)
+    pq = str(tmp_path / "pq")
+    build_ann_index(
+        corpus.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
+        "vec_id", "embedding", pq, dim=64, n_cells=8, learned=False,
+        pq_m=4, pq_k=4, pq_iters=1,
+    )
+    assert assert_recorded(pq) != flat_ddl
+
+    append_to_ann_index(spark, emb.filter(F.col("vec_id") % 5 == 0),
+                        "vec_id", "embedding", flat, ingest_batch=1)
+    assert assert_recorded(flat) == flat_ddl
+    delete_from_ann_index(spark, flat, [1, 2, 3], compact_threshold=0.0)
+    assert read_manifest(flat)["Tombstone count"] == "0"  # compacted
+    assert assert_recorded(flat) == flat_ddl
+    rebuild_ann_index(spark, flat, n_cells=4, kmeans_iters=1)
+    assert assert_recorded(flat) == flat_ddl
+
+    queries = emb.orderBy("vec_id").limit(8)
+    keyed = _serve_rows(ann_query_indexed(
+        spark, queries, "vec_id", "embedding", flat, k=3, n_probe=2
+    ))
+    manifest = read_manifest(flat)
+    del manifest["cells_schema"]
+    write_manifest(manifest, flat)
+    assert _serve_rows(ann_query_indexed(
+        spark, queries, "vec_id", "embedding", flat, k=3, n_probe=2
+    )) == keyed and len(keyed) == 8 * 3
+    append_to_ann_index(spark, emb.filter(F.col("vec_id") == 5),
+                        "vec_id", "embedding", flat, ingest_batch=2)
+    assert assert_recorded(flat) == flat_ddl
+
+
 def test_embedding_index_rebuild_lifecycle(spark, tmp_path, capsys):
     """The rebuild path the build-time n_cells pin defers to
     (embedding_index.py module docstring): build undersized → ingest

@@ -5,6 +5,7 @@ and the applyInPandasWithState stateful operator."""
 
 from __future__ import annotations
 
+import glob
 import uuid
 
 import pytest
@@ -325,6 +326,34 @@ def test_streaming_dedup_ingest(spark, tmp_path):
     )
     assert stats2 == {}
     assert spark.read.parquet(out).count() == kept
+
+
+def test_dedup_ingest_clears_stale_batch_partition(spark, tmp_path):
+    """An all-duplicate micro-batch keeps zero rows. A ``batch=0``
+    directory left in ``out`` by an earlier run (here: under another
+    checkpoint) must not survive that batch's landing and be counted
+    as kept."""
+    from batch_process_dpla_index_spark.products import dedup_index, streaming_ingest
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    corpus = docs.filter(F.col("doc_id") < 200)
+    copies = corpus.orderBy("doc_id").limit(20).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+    )
+    idx = str(tmp_path / "idx")
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "landed")
+    dedup_index.build_dedup_index(corpus, "text", "doc_id", idx)
+    copies.coalesce(1).write.parquet(src)
+    docs.filter(F.col("doc_id") >= 200).limit(7).coalesce(1).write.parquet(
+        f"{out}/batch=0"
+    )
+
+    stats = streaming_ingest.ingest_dedup_available(
+        spark, src, docs.schema, out, str(tmp_path / "ckpt"), idx
+    )
+    assert stats == {0: (20, 0)}
+    assert not glob.glob(f"{out}/batch=0/*.parquet")
 
 
 def test_streaming_embedding_dedup_ingest(spark, tmp_path):

@@ -7,9 +7,10 @@ double with a strict left-to-right fold, which makes results
 bit-reproducible across engines (the DuckDB oracle's list functions
 fold the same way).
 
-At 100 TB these expressions vectorize per-row inside codegen; for
-very wide vectors a pandas_udf (BLAS) variant can win — provided in
-``operators/similarity.py`` as the opt-in fast path.
+At 100 TB these expressions vectorize per-row inside codegen. The
+top-k and LSH scans of ``operators/similarity.py`` score whole Arrow
+batches with BLAS instead; these expressions remain for per-pair
+verification and the DuckDB-replayable paths.
 """
 
 from __future__ import annotations

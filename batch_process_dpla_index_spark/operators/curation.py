@@ -108,7 +108,6 @@ def fuzzy_decontaminate(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """(doc id, bench_id, jaccard): corpus documents whose TRUE n-gram
     Jaccard against some benchmark item is ``>= threshold`` — the FUZZY
@@ -143,13 +142,11 @@ def fuzzy_decontaminate(
     # shared all-NULL-signature key (0/0 Jaccard under ANSI) — drop
     # them on BOTH sides, the dedup tier's NULL-signature contract
     bench_sets = (
-        shingle_sets(benchmark, text_col, id_col, n, use_pandas=use_pandas)
+        shingle_sets(benchmark, text_col, id_col, n)
         .where(F.size("shingles") > 0)
         .withColumnRenamed(id_col, "id")
     )
-    bench_sig = with_minhash_signature(
-        bench_sets, num_perm, use_pandas
-    ).persist()
+    bench_sig = with_minhash_signature(bench_sets, num_perm).persist()
     out = _fuzzy_screen(
         docs,
         bench_sig,
@@ -160,7 +157,6 @@ def fuzzy_decontaminate(
         num_perm=num_perm,
         bands=bands,
         max_bucket=max_bucket,
-        use_pandas=use_pandas,
     )
     out._cached_deps = list(out._cached_deps) + [bench_sig]
     return out
@@ -176,7 +172,6 @@ def _fuzzy_screen(
     num_perm: int,
     bands: int,
     max_bucket: int,
-    use_pandas: bool,
 ) -> DataFrame:
     """The corpus-vs-PRECOMPUTED-benchmark banded screen — the ONE
     code path shared by :func:`fuzzy_decontaminate` (benchmark
@@ -196,11 +191,11 @@ def _fuzzy_screen(
 
     rows = _band_rows(num_perm, bands)
     doc_sets = (
-        shingle_sets(docs, text_col, id_col, n, use_pandas=use_pandas)
+        shingle_sets(docs, text_col, id_col, n)
         .where(F.size("shingles") > 0)
         .withColumnRenamed(id_col, "id")
     )
-    doc_sig = with_minhash_signature(doc_sets, num_perm, use_pandas).persist()
+    doc_sig = with_minhash_signature(doc_sets, num_perm).persist()
     db = _band_buckets(doc_sig, bands, rows)
     bb = _band_buckets(bench_sig, bands, rows).withColumnRenamed("id", "bid")
     oversized = (
@@ -1025,7 +1020,6 @@ def contamination_matrix(
     n: int = 3,
     est_threshold: float = 0.0625,
     num_perm: int = 64,
-    use_pandas: bool = True,
     exact_all_pairs: bool = False,
 ) -> DataFrame:
     """(source_a, source_b, n_shared, containment): pairwise
@@ -1064,7 +1058,6 @@ def contamination_matrix(
             n,
             est_threshold=est_threshold,
             num_perm=num_perm,
-            use_pandas=use_pandas,
         )
         out = scr.select(
             "source_a", "source_b", "n_shared", "containment"
@@ -1099,7 +1092,7 @@ def contamination_matrix_exact(
     )
 
     posts = (
-        shingle_sets(df, text_col, source_col, n, use_pandas=True)
+        shingle_sets(df, text_col, source_col, n)
         .select(
             F.col(source_col).alias("src"),
             F.explode("shingles").alias("shingle"),
@@ -1145,7 +1138,6 @@ def contamination_screened(
     n: int = 3,
     est_threshold: float = 0.0625,
     num_perm: int = 64,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Two-tier contamination matrix (r16; the scale answer to
     :func:`contamination_matrix`'s hot-shingle watch item, VERDICT r15
@@ -1182,8 +1174,8 @@ def contamination_screened(
     signatures from it with ONE partial fold instead of a second
     MinHash pass over every per-doc shingle array. That also deletes
     the ``num_perm``-min-column aggregate and the ``num_perm``-term
-    comparison chain from the plan (replaced by
-    :func:`dedup.overlap_from_sig_arrays`'s array zip_with): the old
+    comparison chain from the plan (replaced by the driver pair screen
+    :func:`dedup.signature_pairs`): the old
     sketch tier codegen'd into 4.1 MiB task binaries whose first-run
     JIT dominated the bench cold time (23.6 s cold vs 4.7 s warm,
     sf0.1). Values are unchanged on both tiers; the pair tier reuses
@@ -1194,13 +1186,14 @@ def contamination_screened(
     from batch_process_dpla_index_spark.operators.dedup import (
         _with_cached_deps,
         shingle_sets,
+        signature_pairs,
         source_sig_from_postings,
     )
 
     base = df.where(F.col(source_col).isNotNull()).select(
         F.col(source_col).alias("source"), F.col(text_col).alias("__text")
     )
-    sets = shingle_sets(base, "__text", "source", n, use_pandas=use_pandas)
+    sets = shingle_sets(base, "__text", "source", n)
     ex = (
         sets.select(
             F.col("source").alias("src"),
@@ -1217,11 +1210,9 @@ def contamination_screened(
     # self-join + zip_with + union + two persists' worth of codegen
     # stages (this query sits at the bench head and paid first-run JIT
     # for every one of them). Values are bit-identical: n_eq is an
-    # integer, est = round(n_eq/num_perm, 6) replayed with the exact
-    # HALF_UP-over-shortest-repr arithmetic Spark's round(double)
-    # performs (identity anyway for power-of-two num_perm).
-    from decimal import ROUND_HALF_UP, Decimal
-
+    # integer, est = round(n_eq/num_perm, 6) replayed exactly by
+    # dedup.signature_pairs (the driver pair-count kernel
+    # overlap_from_signatures uses too).
     from batch_process_dpla_index_spark.operators.relational import (
         _arrow_local_frame,
     )
@@ -1230,19 +1221,10 @@ def contamination_screened(
         (r["source"], r["sig"])
         for r in source_sig_from_postings(ex, num_perm).collect()
     )
-    flagged_ab: list[tuple[str, str, float]] = []
-    for i in range(len(sig_rows)):
-        sa, va = sig_rows[i]
-        for j in range(i + 1, len(sig_rows)):
-            sb, vb = sig_rows[j]
-            n_eq = sum(1 for x, y in zip(va, vb) if x == y)
-            est = float(
-                Decimal(repr(n_eq / float(num_perm))).quantize(
-                    Decimal("0.000001"), ROUND_HALF_UP
-                )
-            )
-            if est >= est_threshold:
-                flagged_ab.append((sa, sb, est))
+    flagged_ab = [
+        (a, b, est)
+        for a, b, _, est in signature_pairs(sig_rows, num_perm, est_threshold)
+    ]
     flagged_sources = sorted(
         {s for a, b, _ in flagged_ab for s in (a, b)}
     )

@@ -20,21 +20,21 @@ from 500 docs to 100 TB:
                      Hamming distance over band-equality prefilter.
 
 MinHash/SimHash hashing uses the engine-portable ``h60`` digest
-(functions/text.h60) so every step is reproducible in the ANSI-SQL
-oracle; at production scale swap H for xxhash64 via the ``hash_fn``
-parameter (same plan, cheaper hash).
+(functions/text.h60; its Python twin ``_h60_base_py`` in the Arrow
+MinHash kernels) so every step is reproducible in the ANSI-SQL oracle.
+Shingling and MinHash have one kernel each, an Arrow batch kernel over
+the JVM-tokenized array (:func:`shingle_sets`,
+:func:`with_minhash_signature`).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Callable
-
 import pandas as pd  # noqa: F401 — needed at module scope so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from batch_process_dpla_index_spark.functions.text import h60, tokens, word_shingles
+from batch_process_dpla_index_spark.functions.text import h60, tokens
 
 # 2^31-1, Mersenne prime: keeps a*h+b < 2^62 (int64-safe with headroom;
 # ANSI mode never overflows).
@@ -168,13 +168,14 @@ def _doc_shingle_mins(shingles, a_vec, b_vec):
 
 
 def _word_shingles_pandas(n: int):
-    """Arrow twin of ``array_distinct(word_shingles(tok, n))`` —
-    identical values AND order (dict.fromkeys keeps first occurrence,
-    exactly array_distinct's contract; <=n tokens → one whole-text
-    shingle; empty → empty set). The expression form interprets a
-    sequence→slice→concat lambda per shingle (HOFs never enter
-    whole-stage codegen); this path is one Python loop per doc over
-    the JVM-tokenized array."""
+    """Arrow shingle kernel: the values AND order of
+    ``array_distinct(word_shingles(tok, n))`` (dict.fromkeys keeps first
+    occurrence, exactly array_distinct's contract; <=n tokens → one
+    whole-text shingle; empty → empty set) — the form the SQL oracles
+    replay. One Python loop per doc over the JVM-tokenized array; the
+    interpreted-HOF Column form evaluates a sequence→slice→concat lambda
+    per shingle (HOFs never enter whole-stage codegen) and was slower
+    on every bench target (ROADMAP item 6)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -183,9 +184,8 @@ def _word_shingles_pandas(n: int):
         for t in tok:
             if t is None:
                 # NULL token array (NULL text) → NULL shingles, exactly
-                # what array_distinct(word_shingles(NULL)) yields — the
-                # twins must agree on NULL rows or set_size diverges
-                # (NULL vs 0) between the two modes
+                # what array_distinct(word_shingles(NULL)) yields in the
+                # oracles — set_size must read NULL here, not 0
                 out.append(None)
             elif len(t) == 0:
                 out.append([])
@@ -196,27 +196,16 @@ def _word_shingles_pandas(n: int):
     return sh
 
 
-def shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, use_pandas: bool = False
-) -> DataFrame:
+def shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """(id, shingles: array<string> distinct) per document.
 
-    Two projections on purpose: ``word_shingles`` references its token
-    array four times (size guards + the shingle generator), and tokens
-    are a regex-normalize + split of the whole text — materializing the
-    token array first makes those references column reads instead of
-    four regex re-evaluations (HOF lambdas are interpreted, not
-    codegen'd, so Catalyst won't CSE them; measured 4× on sf0.1).
-    ``use_pandas=True`` swaps the interpreted shingle HOF for the Arrow
-    twin (same values/order; tokenization stays JVM-side)."""
+    Tokenizing (a regex-normalize + split of the whole text) stays in
+    the JVM; the shingles come from the Arrow kernel
+    :func:`_word_shingles_pandas`, whose values and order are those of
+    ``array_distinct(word_shingles(tokens(text), n))``."""
     toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__tok"))
-    if use_pandas:
-        return toks.select(
-            F.col(id_col), _word_shingles_pandas(n)(F.col("__tok")).alias("shingles")
-        )
     return toks.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(F.col("__tok"), n)).alias("shingles"),
+        F.col(id_col), _word_shingles_pandas(n)(F.col("__tok")).alias("shingles")
     )
 
 
@@ -241,7 +230,8 @@ def _pair_intersections(
     frame — a consumer that already shingled the same corpus (the LSH
     quality report runs truth and candidates over one corpus) passes
     it so the tokenize+shingle pass runs once per QUERY, not once per
-    operator; the tiers are bit-identical so values are unchanged.
+    operator; both frames come from :func:`shingle_sets`, so values
+    are unchanged.
     When provided, this function does not persist (the caller owns the
     cache; the returned handle's unpersist is then a no-op).
 
@@ -384,36 +374,16 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(
-    shingles: Column, num_perm: int = 64, hash_fn: Callable[[Column], Column] = h60
-) -> Column:
-    """array<bigint> MinHash signature of a distinct-shingle array.
-
-    One base hash per shingle, then ``num_perm`` affine rehashes with
-    array_min — all inside codegen, no UDF. NOTE: embeds the base-hash
-    expression ``num_perm`` times; prefer :func:`with_minhash_signature`,
-    which materializes the base array once (the md5 per shingle is the
-    expensive part and Spark does not common-subexpression-eliminate
-    inside higher-order-function lambdas — measured 2.5× on sf0.1).
-    """
-    base = F.transform(shingles, lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)))
-    mins = [
-        F.array_min(F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE))
-        for a, b in _perm_params(num_perm)
-    ]
-    return F.array(*mins)
-
-
 def _minhash_sig_pandas(num_perm: int):
-    """Vectorized Arrow twin of :func:`minhash_signature` — identical
-    values (same md5-derived h60 base hash, same affine params; empty
-    sets yield the all-NULL signature array_min produces). The
-    expression form interprets ``num_perm × |shingles|`` lambda evals
-    per row (HOFs don't enter whole-stage codegen); this path does one
-    hashlib pass plus a single numpy broadcast. Measured 5× faster on
-    the sf0.1 signature stage (0.3 s vs 1.6 s) and ~2× on the full LSH
-    pair pipeline — the registered queries use it; the expression form
-    remains the zero-Python reference tier."""
+    """Arrow MinHash kernel: per-doc ``array<bigint>`` signature
+    sig[p] = min over shingles of (a_p·h + b_p) mod 2^31-1, with h the
+    md5-derived h60 base hash (:func:`_h60_base_py`) and (a_p, b_p) from
+    :func:`_perm_params` — the values the SQL oracles replay with
+    ``array_min(transform(...))``. Empty and NULL sets yield the
+    all-NULL signature array_min produces. One hashlib pass per unique
+    shingle plus one numpy broadcast per batch, where an interpreted-HOF
+    Column form pays ``num_perm × |shingles|`` lambda evaluations per
+    row."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -476,25 +446,10 @@ def _minhash_sig_pandas(num_perm: int):
     return sig
 
 
-def with_minhash_signature(
-    sets: DataFrame,
-    num_perm: int = 64,
-    use_pandas: bool = False,
-    hash_fn: Callable[[Column], Column] = h60,
-) -> DataFrame:
-    """(id, shingles) → (id, shingles, sig). ``use_pandas=True`` picks
-    the Arrow fast path; the default keeps the pure-expression plan
-    (same values) with the base-hash array materialized once."""
-    if use_pandas and hash_fn is h60:
-        return sets.withColumn("sig", _minhash_sig_pandas(num_perm)(F.col("shingles")))
-    base = sets.withColumn(
-        "__base", F.transform("shingles", lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)))
-    )
-    mins = [
-        F.array_min(F.transform("__base", lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE))
-        for a, b in _perm_params(num_perm)
-    ]
-    return base.withColumn("sig", F.array(*mins)).drop("__base")
+def with_minhash_signature(sets: DataFrame, num_perm: int = 64) -> DataFrame:
+    """(id, shingles) → (id, shingles, sig) through the Arrow MinHash
+    kernel :func:`_minhash_sig_pandas`."""
+    return sets.withColumn("sig", _minhash_sig_pandas(num_perm)(F.col("shingles")))
 
 
 def source_sig_from_postings(ex: DataFrame, num_perm: int = 64) -> DataFrame:
@@ -650,7 +605,6 @@ def incremental_dedup(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Dedupe an incoming batch against the existing corpus: the op an
     ingest pipeline actually runs — no O(corpus²) re-clustering, just
@@ -671,14 +625,14 @@ def incremental_dedup(
     are bucket-bounded, never all-pairs.
     """
     rows = _band_rows(num_perm, bands)
-    new_sets = shingle_sets(
-        new_docs, text_col, id_col, n, use_pandas=use_pandas
-    ).withColumnRenamed(id_col, "id")
-    corp_sets = shingle_sets(
-        corpus_docs, text_col, id_col, n, use_pandas=use_pandas
-    ).withColumnRenamed(id_col, "id")
-    new_sig = with_minhash_signature(new_sets, num_perm, use_pandas).persist()
-    corp_sig = with_minhash_signature(corp_sets, num_perm, use_pandas).persist()
+    new_sets = shingle_sets(new_docs, text_col, id_col, n).withColumnRenamed(
+        id_col, "id"
+    )
+    corp_sets = shingle_sets(corpus_docs, text_col, id_col, n).withColumnRenamed(
+        id_col, "id"
+    )
+    new_sig = with_minhash_signature(new_sets, num_perm).persist()
+    corp_sig = with_minhash_signature(corp_sets, num_perm).persist()
     nb = _band_buckets(new_sig, bands, rows)
     cb = _band_buckets(corp_sig, bands, rows)
     oversized = (
@@ -736,8 +690,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    hash_fn: Callable[[Column], Column] = h60,
-    use_pandas: bool = False,
     precomputed_sets: "DataFrame | None" = None,
 ) -> DataFrame:
     """MinHash + banded-LSH near-dup pairs, verified with exact Jaccard.
@@ -759,9 +711,9 @@ def minhash_lsh_pairs(
         # one tokenize+shingle pass per query instead of per operator
         precomputed_sets
         if precomputed_sets is not None
-        else shingle_sets(df, text_col, id_col, n, use_pandas=use_pandas)
+        else shingle_sets(df, text_col, id_col, n)
     ).withColumnRenamed(id_col, "id")
-    sig = with_minhash_signature(sets, num_perm, use_pandas, hash_fn).persist()
+    sig = with_minhash_signature(sets, num_perm).persist()
 
     buckets = _band_buckets(sig, bands, rows)
     # Defuse pathological buckets before the self-join.
@@ -794,9 +746,7 @@ def minhash_lsh_pairs(
     return _with_cached_deps(verified, [sig])
 
 
-def simhash(
-    tok: Column, bits: int = 60, hash_fn: Callable[[Column], Column] = h60
-) -> Column:
+def simhash(tok: Column, bits: int = 60) -> Column:
     """SimHash over a token array: bit j is 1 when the sum over tokens of
     ±1 (sign of token-hash bit j) is >= 0. Returned as a positive bigint.
 
@@ -818,7 +768,7 @@ def simhash(
             f"bits={bits}: simhash supports 1..60 bits (h60 token hashes "
             "carry 60 bits; higher bit positions would never be set)"
         )
-    hashed = F.transform(tok, hash_fn)
+    hashed = F.transform(tok, h60)
     # Literal per-bit masks: bitwiseAND takes Column operands, unlike
     # shiftright/shiftleft whose numBits must be a Python int (the round-1
     # crash: a lambda-bound bit index arrives as a Column).
@@ -1665,67 +1615,38 @@ def source_signatures(
     source_col: str = "source",
     n: int = 3,
     num_perm: int = 64,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Per-source union-MinHash signatures: sig(source)[p] = the
     per-perm MIN over every shingle any of the source's documents
-    contains (min is idempotent over duplicates, so the shingle stream
-    needs NO distinct). All-integer arithmetic (same h60 base and
-    affine params as :func:`minhash_lsh_pairs`) — bit-exact across
-    engines AND across both execution tiers here.
+    contains. All-integer arithmetic (same h60 base and affine params
+    as :func:`minhash_lsh_pairs`) — bit-exact across engines.
 
-    Two tiers, identical values (min over per-doc mins == min over the
-    flat shingle stream; the per-doc distinct shingle_sets applies is
-    absorbed by min's idempotence):
-
-    - default: ONE map (shingle explode → base hash) + ONE hash
-      aggregate keyed by source with ``num_perm`` min columns
-      (map-side partials) — the zero-Python reference tier.
-    - ``use_pandas=True``: per-DOC signatures through the Arrow
-      fast path (:func:`with_minhash_signature` — one hashlib pass +
-      one numpy broadcast per batch), then the same per-source min
-      aggregate over the signature elements. The interpreted
-      word_shingles HOF + explode dominated the default tier's cost
-      (~6 s of the 7.5 s warm figure at sf0.1; the registry query
-      measured 7.5 → ~1.5 s switching tiers), the same trade
-      minhash_lsh_pairs documents. Docs with an empty shingle set are
-      filtered before the aggregate, matching the explode tier where
-      they contribute no rows.
+    Per-DOC signatures come from the Arrow kernels
+    (:func:`shingle_sets` → :func:`with_minhash_signature`), then one
+    per-source min aggregate over the signature elements: min over
+    per-doc mins == min over the source's flat shingle stream (min is
+    associative and idempotent). Docs with an empty shingle set are
+    filtered before the aggregate; they contribute no shingle.
 
     Returns (source, __p0..__p{num_perm-1}) — 64 ints/source by
     default, small enough to persist in a snapshot log and merge
     against ingest deltas (:func:`merge_source_signatures`).
     """
-    if use_pandas:
-        base = docs.where(F.col(source_col).isNotNull()).select(
-            F.col(source_col).alias("source"), F.col(text_col).alias("__text")
-        )
-        sets = shingle_sets(base, "__text", "source", n, use_pandas=True)
-        sigs = with_minhash_signature(sets, num_perm, use_pandas=True)
-        return (
-            sigs.where(F.size("shingles") > 0)
-            .groupBy("source")
-            .agg(
-                *[
-                    F.min(F.element_at("sig", i + 1)).alias(f"__p{i}")
-                    for i in range(num_perm)
-                ]
-            )
-        )
-    sh = docs.where(F.col(source_col).isNotNull()).select(
-        F.col(source_col).alias("source"),
-        F.explode(word_shingles(tokens(F.col(text_col)), n)).alias("__sh"),
+    base = docs.where(F.col(source_col).isNotNull()).select(
+        F.col(source_col).alias("source"), F.col(text_col).alias("__text")
     )
-    base = sh.select(
-        "source", F.pmod(h60(F.col("__sh")), F.lit(_MERSENNE)).alias("__base")
+    sigs = with_minhash_signature(
+        shingle_sets(base, "__text", "source", n), num_perm
     )
-    return base.groupBy("source").agg(
-        *[
-            F.min((F.lit(a) * F.col("__base") + F.lit(b)) % _MERSENNE).alias(
-                f"__p{i}"
-            )
-            for i, (a, b) in enumerate(_perm_params(num_perm))
-        ]
+    return (
+        sigs.where(F.size("shingles") > 0)
+        .groupBy("source")
+        .agg(
+            *[
+                F.min(F.element_at("sig", i + 1)).alias(f"__p{i}")
+                for i in range(num_perm)
+            ]
+        )
     )
 
 
@@ -1771,6 +1692,47 @@ def spark_round6(x: float) -> float:
     )
 
 
+def signature_pairs(
+    rows: list, num_perm: int, est_threshold: float = 0.0
+) -> list[tuple[str, str, int, float]]:
+    """Driver pair screen over collected signature rows ``[(source,
+    sig)]``: (source_a, source_b, n_equal, est_jaccard) for every pair
+    i < j in row order whose est_jaccard >= ``est_threshold`` (the
+    default keeps every pair), est_jaccard = round(n_equal/num_perm, 6)
+    as Spark rounds it. The one driver pair-count kernel behind
+    :func:`overlap_from_signatures` and
+    ``curation.contamination_screened``.
+
+    Blockwise numpy equality counts (256 rows against every later row,
+    one comparison per perm) replace an O(|rows|²·num_perm)
+    Python loop. n_equal takes only num_perm + 1 values, so the
+    estimate is a lookup in a :func:`spark_round6` table (exact, no
+    per-pair Decimal), and the threshold becomes a minimum n_equal."""
+    import numpy as np
+
+    names = [r[0] for r in rows]
+    # perm-major, so each perm's comparison reads one contiguous row
+    by_perm = np.asarray([r[1] for r in rows], dtype=np.int64).reshape(
+        len(rows), num_perm
+    ).T.copy()
+    est_of = [spark_round6(k / float(num_perm)) for k in range(num_perm + 1)]
+    # est_of is non-decreasing in k: est >= t  <=>  n_equal >= k_min
+    k_min = int(np.searchsorted(est_of, est_threshold, side="left"))
+    count_type = np.min_scalar_type(num_perm)  # uint8 up to 255 perms
+    block = 256
+    out = []
+    for s in range(0, len(rows), block):
+        a, b = by_perm[:, s : s + block], by_perm[:, s:]
+        n_eq = np.zeros((a.shape[1], b.shape[1]), dtype=count_type)
+        for p in range(num_perm):
+            n_eq += a[p, :, None] == b[p]
+        later = np.arange(b.shape[1])[None, :] > np.arange(a.shape[1])[:, None]
+        ii, jj = np.nonzero(later & (n_eq >= k_min))  # row-major: (i, j) order
+        for i, j, k in zip(ii.tolist(), jj.tolist(), n_eq[ii, jj].tolist()):
+            out.append((names[s + i], names[s + j], k, est_of[k]))
+    return out
+
+
 _SIG_DRIVER_SOURCES_ENV = "SPARK_GRAFT_SIG_DRIVER_SOURCES"
 
 
@@ -1794,14 +1756,15 @@ def overlap_from_signatures(sig: DataFrame, num_perm: int = 64) -> DataFrame:
     products/overlap_index.py collects it on every refresh — so when
     it fits ``$SPARK_GRAFT_SIG_DRIVER_SOURCES`` (default 65536, 0
     disables) it is collected ONCE and the pair counts are integer
-    equality sums on the driver (bit-exact; the estimate replays
+    equality counts on the driver (bit-exact; the estimate replays
     Spark's round via :func:`spark_round6`). This also halves the
     upstream work: the distributed self-join's two legs each re-ran
     the whole signature pipeline (the legs sit behind different
     exchange types, so exchange reuse never fires — and persisting the
     65-column frame measured SLOWER than the recompute in r17).
     A NULL source or NULL perm value, or an over-cap frame, falls back
-    to the distributed join unchanged."""
+    to the distributed join unchanged. The driver pair counts are
+    :func:`signature_pairs`."""
     cap = _sig_driver_cap()
     if cap:
         probe = sig.limit(cap + 1).collect()
@@ -1818,18 +1781,9 @@ def overlap_from_signatures(sig: DataFrame, num_perm: int = 64) -> DataFrame:
                 (r["source"], tuple(r[f"__p{i}"] for i in range(num_perm)))
                 for r in probe
             )
-            out = []
-            for i in range(len(rows)):
-                sa, va = rows[i]
-                for j in range(i + 1, len(rows)):
-                    sb, vb = rows[j]
-                    n_eq = sum(1 for x, y in zip(va, vb) if x == y)
-                    out.append(
-                        (sa, sb, n_eq, spark_round6(n_eq / float(num_perm)))
-                    )
             return _arrow_local_frame(
                 sig.sparkSession,
-                out,
+                signature_pairs(rows, num_perm),
                 "source_a string, source_b string, n_equal bigint, "
                 "est_jaccard double",
             )
@@ -1862,7 +1816,6 @@ def source_minhash_overlap(
     source_col: str = "source",
     n: int = 3,
     num_perm: int = 64,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Estimated Jaccard overlap between SOURCES (datasets) via
     per-source union-MinHash sketches — the dataset-level dedup
@@ -1877,9 +1830,7 @@ def source_minhash_overlap(
     Returns (source_a, source_b, n_equal, est_jaccard) for every
     unordered source pair, est_jaccard = matching perms / num_perm.
     """
-    sig = source_signatures(
-        docs, text_col, source_col, n, num_perm, use_pandas=use_pandas
-    )
+    sig = source_signatures(docs, text_col, source_col, n, num_perm)
     return overlap_from_signatures(sig, num_perm)
 
 
@@ -1890,7 +1841,6 @@ def source_overlap_incremental(
     source_col: str = "source",
     n: int = 3,
     num_perm: int = 64,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """The mixing diagnostic on INGEST DELTAS without re-scanning the
     corpus: compute :func:`source_signatures` over the incoming batch
@@ -1925,8 +1875,6 @@ def source_overlap_incremental(
     Returns (source_a, source_b, n_equal, est_jaccard) over the merged
     source set.
     """
-    delta_sig = source_signatures(
-        delta_docs, text_col, source_col, n, num_perm, use_pandas=use_pandas
-    )
+    delta_sig = source_signatures(delta_docs, text_col, source_col, n, num_perm)
     merged = merge_source_signatures(corpus_signatures, delta_sig, num_perm)
     return overlap_from_signatures(merged, num_perm)

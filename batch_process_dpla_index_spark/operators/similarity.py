@@ -1,16 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Four tiers, one output contract (query_id, neighbor_id, score, rank):
+Three tiers, one output contract (query_id, neighbor_id, score, rank),
+each with one Arrow kernel:
 
-- cosine_topk:        exact brute-force top-k. Default physical plan is
-                      the Arrow/BLAS mapInPandas path (per-batch matmul
-                      + local top-k — never materializes |Q|×|C|);
-                      ``use_pandas=False`` keeps the pure-expression
-                      reference tier.
-- cosine_topk_pandas: the Arrow/BLAS plan itself (what the default
-                      routes to).
-- lsh_ann_topk:       random-hyperplane LSH (sign sketch) bucketing;
-                      only bucket-sharing pairs are scored. Recall
+- cosine_topk:        exact brute-force top-k: the Arrow/BLAS
+                      mapInPandas path (per-batch matmul + local top-k —
+                      never materializes |Q|×|C|).
+- lsh_ann_topk:       random-hyperplane LSH (sign sketch) bucketing
+                      (:func:`lsh_buckets_pandas`); only bucket-sharing
+                      pairs are scored, one matmul per bucket. Recall
                       tunable via (n_planes, n_tables); shuffle on
                       bucket keys only.
 - ivf_topk:           inverted-file coarse quantization: single-cell
@@ -51,195 +49,19 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Output: (query_id, neighbor_id, score, rank). Self-matches excluded.
 
-    Physical strategy: the default routes through the Arrow/BLAS
-    ``mapInPandas`` plan (:func:`cosine_topk_pandas`) — per-batch
-    matmul with immediate local top-k, so only ``batches × |Q| × k``
-    candidate rows ever reach a shuffle. ``use_pandas=False`` keeps the
-    pure-expression plan (broadcast join + per-query window), which
-    materializes |Q|×|C| scored rows into the window shuffle — exact
-    and oracle-identical, but scale-capped; it stays as the reference
-    tier for tests.
-    """
-    if use_pandas:
-        return cosine_topk_pandas(corpus, queries, id_col, vec_col, k)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def _h60_py(s: str) -> int:
-    """Driver-side twin of functions.text.h60 (first 15 md5 hex chars)."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def _h60_unit(s: str) -> float:
-    """h60 scaled to [-1, 1) — THE pseudo-random float generator behind
-    every deterministic hyperplane/centroid/codebook component. One
-    definition on purpose: the expression tiers, their numpy twins,
-    and the SQL oracles must all regenerate bit-identical doubles, so
-    the scaling constants live in exactly one place."""
-    return (_h60_py(s) % 2_000_003) / 1_000_001.5 - 1.0
-
-
-def _hyperplane(table: int, plane: int, dim: int):
-    """Deterministic pseudo-random unit-free hyperplane: component d is
-    h60('t|p|d') scaled to [-1, 1). Computed driver-side with hashlib
-    (identical value to the in-plan h60) and embedded as plain float
-    literals — ``dim × planes × tables`` md5 *expression nodes* in every
-    plan was a round-1 compile hazard; literals are free."""
-    return F.array(
-        *[F.lit(_h60_unit(f"hp:{table}:{plane}:{d}")) for d in range(dim)]
-    )
-
-
-def lsh_buckets(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_planes: int = 8,
-    n_tables: int = 4,
-) -> DataFrame:
-    """(id, table, bucket) sign-sketch buckets: bucket bit j = sign(v·p_j)."""
-    out_rows = []
-    for t in range(n_tables):
-        bucket = F.lit(0).cast("bigint")
-        for j in range(n_planes):
-            proj = dot(F.col(vec_col), _hyperplane(t, j, dim))
-            bucket = bucket + F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        out_rows.append(F.struct(F.lit(t).alias("table"), bucket.alias("bucket")))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.explode(F.array(*out_rows)).alias("tb"),
-    ).select("id", "vec", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    use_pandas: bool = False,
-) -> DataFrame:
-    """Approximate all-pairs top-k: score only bucket-sharing candidates.
-
-    Output: (query_id, neighbor_id, score, rank) — a subset of the exact
-    result with tunable recall. Shuffles on (table, bucket) then on
-    query_id for the top-k window; never materializes all pairs.
-
-    Physical strategy: ``use_pandas=True`` (what the registered query
-    uses) does vectorized bucket assignment + sharded per-bucket
-    matmul scoring with lossless group-local top-k — measured ~4× the
-    expression plan at sf0.1 (1.3 s vs 5.1 s warm) and the gap widens
-    with per-bucket candidate volume. The default expression plan
-    stays as the zero-Python reference tier (same values, oracle-
-    verified equal).
-    """
-    if use_pandas:
-        b = lsh_buckets_pandas(corpus, id_col, vec_col, dim, n_planes, n_tables)
-        pairs = _scored_bucket_pairs(b, ordered=False, k=k).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-        scored = pairs.select(
-            F.col("id_a").alias("query_id"),
-            F.col("id_b").alias("neighbor_id"),
-            F.when(F.isnan("raw_score"), F.lit(None))
-            .otherwise(F.col("raw_score"))
-            .alias("score"),
-        )
-    else:
-        # the self-join consumes the bucket frame twice; without the
-        # persist the tables×planes interpreted dot-fold bucketing of
-        # the whole corpus executes once per side (persist discipline:
-        # any frame consumed twice is cached and released by the
-        # caller's unpersist_deps)
-        b = lsh_buckets(corpus, id_col, vec_col, dim, n_planes, n_tables).persist()
-        cand = (
-            b.alias("x")
-            .join(b.alias("y"), ["table", "bucket"])
-            .filter(F.col("x.id") != F.col("y.id"))
-            .select(
-                F.col("x.id").alias("query_id"),
-                F.col("x.vec").alias("q_vec"),
-                F.col("y.id").alias("neighbor_id"),
-                F.col("y.vec").alias("c_vec"),
-            )
-            .distinct()
-        )
-        scored = cand.withColumn("score", cosine(F.col("q_vec"), F.col("c_vec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-    if not use_pandas:
-        # local import: dedup imports _h60_py from this module
-        from batch_process_dpla_index_spark.operators.dedup import (
-            _with_cached_deps,
-        )
-
-        ranked = _with_cached_deps(ranked, [b])
-    return ranked
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k cosine — the Arrow/BLAS fast path for the brute tier.
-
-    Same contract and results as :func:`cosine_topk`, different physical
-    plan: the (small, broadcastable-by-contract) query side is collected
-    to a dense float64 matrix and shipped in the UDF closure; the corpus
-    streams through ``mapInPandas`` where each Arrow batch is scored
-    against ALL queries with one BLAS matmul and immediately reduced to
-    a per-batch top-k per query. Only ``batches × |Q| × k`` candidate
-    rows reach the final window — never the |Q|×|C| materialization the
-    expression form pays (the round-1 scale hazard). No shuffle until
-    the tiny candidate set.
+    Physical plan: the (small, broadcastable-by-contract) query side is
+    collected to a dense float64 matrix and shipped in the UDF closure;
+    the corpus streams through ``mapInPandas`` where each Arrow batch is
+    scored against ALL queries with one BLAS matmul and immediately
+    reduced to a per-batch top-k per query. Only ``batches × |Q| × k``
+    candidate rows reach the final window — never the |Q|×|C| scored
+    rows a broadcast join + window would shuffle. No shuffle until the
+    tiny candidate set.
     """
     from collections.abc import Iterator
 
@@ -249,8 +71,7 @@ def cosine_topk_pandas(
     q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
     if not q_rows:
         # np.array([]) is 1-D and the axis-1 reductions below would
-        # raise; the expression tier returns an empty frame for an
-        # empty query side, so this tier must too (same contract)
+        # raise; an empty query side is an empty result
         return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r[0] for r in q_rows], dtype="int64")
     q_mat = np.array([r[1] for r in q_rows], dtype="float64")
@@ -292,6 +113,56 @@ def cosine_topk_pandas(
     return _rank_candidates(cand, k)
 
 
+def _h60_py(s: str) -> int:
+    """Driver-side twin of functions.text.h60 (first 15 md5 hex chars)."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _h60_unit(s: str) -> float:
+    """h60 scaled to [-1, 1) — THE pseudo-random float generator behind
+    every deterministic hyperplane/centroid/codebook component. One
+    definition on purpose: the expression tiers, their numpy twins,
+    and the SQL oracles must all regenerate bit-identical doubles, so
+    the scaling constants live in exactly one place."""
+    return (_h60_py(s) % 2_000_003) / 1_000_001.5 - 1.0
+
+
+def lsh_ann_topk(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
+    k: int = 5,
+    n_planes: int = 8,
+    n_tables: int = 4,
+) -> DataFrame:
+    """Approximate all-pairs top-k: score only bucket-sharing candidates.
+
+    Output: (query_id, neighbor_id, score, rank) — a subset of the exact
+    result with tunable recall. Shuffles on (table, bucket) then on
+    query_id for the top-k window; never materializes all pairs.
+
+    Physical plan: vectorized bucket assignment
+    (:func:`lsh_buckets_pandas`) + sharded per-bucket matmul scoring
+    with lossless group-local top-k (:func:`_scored_bucket_pairs`),
+    then the shared per-query merge (:func:`_rank_candidates`).
+    """
+    b = lsh_buckets_pandas(corpus, id_col, vec_col, dim, n_planes, n_tables)
+    pairs = _scored_bucket_pairs(b, ordered=False, k=k).dropDuplicates(
+        ["id_a", "id_b"]
+    )
+    return _rank_candidates(
+        pairs.select(
+            F.col("id_a").alias("query_id"),
+            F.col("id_b").alias("neighbor_id"),
+            "raw_score",
+        ),
+        k,
+    )
+
+
 #: (query_id, neighbor_id, raw_score): what every BLAS scoring pass
 #: emits before the per-query merge (:func:`_rank_candidates`).
 _CAND_SCHEMA = "query_id bigint, neighbor_id bigint, raw_score double"
@@ -330,7 +201,6 @@ def embedding_near_dup(
     threshold: float = 0.3,
     n_planes: int = 8,
     n_tables: int = 4,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space member
     of the dedup family: (id_a < id_b, score) for pairs sharing an LSH
@@ -338,42 +208,15 @@ def embedding_near_dup(
 
     Same 100 TB shape as :func:`lsh_ann_topk`: shuffle on bucket keys,
     candidate verification only — never all pairs. Recall is the LSH
-    S-curve; the verification join makes precision exact. Default
-    physical strategy is the per-bucket Arrow matmul (see
-    lsh_ann_topk); ``use_pandas=False`` keeps the zero-Python
-    expression plan.
+    S-curve; the verification makes precision exact. Physical plan:
+    the same Arrow bucket assignment and per-bucket matmul as
+    lsh_ann_topk, with sub-threshold pairs dropped inside the bucket.
     """
-    if use_pandas:
-        b = lsh_buckets_pandas(corpus, id_col, vec_col, dim, n_planes, n_tables)
-        pairs = _scored_bucket_pairs(
-            b, ordered=True, threshold=threshold
-        ).dropDuplicates(["id_a", "id_b"])
-        return pairs.select(
-            "id_a", "id_b", F.round("raw_score", 6).alias("score")
-        )
-    from batch_process_dpla_index_spark.operators.dedup import _with_cached_deps
-
-    # persist: the self-join reads the bucket frame twice (discipline:
-    # caller releases via unpersist_deps)
-    b = lsh_buckets(corpus, id_col, vec_col, dim, n_planes, n_tables).persist()
-    cand = (
-        b.alias("x")
-        .join(b.alias("y"), ["table", "bucket"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("x.vec").alias("vec_a"),
-            F.col("y.id").alias("id_b"),
-            F.col("y.vec").alias("vec_b"),
-        )
-        .distinct()
-    )
-    return _with_cached_deps(
-        cand.withColumn("score", cosine(F.col("vec_a"), F.col("vec_b")))
-        .filter(F.col("score") >= threshold)
-        .select("id_a", "id_b", F.round("score", 6).alias("score")),
-        [b],
-    )
+    b = lsh_buckets_pandas(corpus, id_col, vec_col, dim, n_planes, n_tables)
+    pairs = _scored_bucket_pairs(
+        b, ordered=True, threshold=threshold
+    ).dropDuplicates(["id_a", "id_b"])
+    return pairs.select("id_a", "id_b", F.round("raw_score", 6).alias("score"))
 
 
 def _centroid(cell: int, dim: int):
@@ -1176,7 +1019,9 @@ def imi_topk(
 
 
 def _hyperplane_matrix(dim: int, n_planes: int, n_tables: int):
-    """numpy twin of :func:`_hyperplane` — identical float values.
+    """Deterministic pseudo-random hyperplanes: component d of plane j
+    in table t is h60('hp:t:j:d') scaled to [-1, 1) (:func:`_h60_unit`),
+    the values the SQL oracles regenerate.
     Shape: (n_tables, dim, n_planes)."""
     import numpy as np
 
@@ -1203,11 +1048,10 @@ def lsh_buckets_pandas(
     n_planes: int = 8,
     n_tables: int = 4,
 ) -> DataFrame:
-    """(id, vec, table, bucket) via one Arrow pass: a single
-    N×dim @ dim×(tables·planes) matmul replaces tables×planes
-    interpreted dot folds per row (vectorized twin of
-    :func:`lsh_buckets`, same sign convention: bit j set when
-    v·p_j ≥ 0)."""
+    """(id, vec, table, bucket) sign-sketch buckets via one Arrow pass:
+    bucket bit j = sign(v·p_j), set when v·p_j ≥ 0. One
+    N×dim @ dim×planes matmul per table replaces tables×planes
+    interpreted dot folds per row."""
     from collections.abc import Iterator
 
     import numpy as np

@@ -55,7 +55,6 @@ def _bench_sig_frame(
     text_col: str,
     n: int,
     num_perm: int,
-    use_pandas: bool,
 ) -> DataFrame:
     """(id, shingles, sig) for the benchmark side — the same
     empty-set-dropping convention as fuzzy_decontaminate."""
@@ -65,11 +64,11 @@ def _bench_sig_frame(
     )
 
     sets = (
-        shingle_sets(benchmark, text_col, id_col, n, use_pandas=use_pandas)
+        shingle_sets(benchmark, text_col, id_col, n)
         .where(F.size("shingles") > 0)
         .withColumnRenamed(id_col, "id")
     )
-    return with_minhash_signature(sets, num_perm, use_pandas).select(
+    return with_minhash_signature(sets, num_perm).select(
         "id", "shingles", "sig"
     )
 
@@ -82,16 +81,13 @@ def build_decon_index(
     n: int = 3,
     num_perm: int = 64,
     bands: int = 16,
-    use_pandas: bool = True,
 ) -> dict[str, str]:
     """One benchmark pass → signature parquet + manifest.
 
     Returns the manifest dict (also written to ``index_dir/_MANIFEST``).
     Refuses an empty benchmark (a zero-row parquet dataset is
     unreadable on the next query — the dedup_index convention)."""
-    sig = _bench_sig_frame(
-        benchmark, id_col, text_col, n, num_perm, use_pandas
-    )
+    sig = _bench_sig_frame(benchmark, id_col, text_col, n, num_perm)
     # repartition(1), not coalesce(1): coalesce folds the single-task
     # constraint into the signature stage (the overlap_index artifact
     # lesson); the artifact is |benchmark| rows — one part file keeps
@@ -122,7 +118,6 @@ def build_decon_index(
 def append_to_decon_index(
     new_items: DataFrame,
     index_dir: str,
-    use_pandas: bool = True,
 ) -> dict[str, str]:
     """Fold a NEW eval suite into the stored index at delta cost.
 
@@ -157,7 +152,6 @@ def append_to_decon_index(
         mf["Text col"],
         int(mf["Shingle n"]),
         int(mf["Num perm"]),
-        use_pandas,
     ).persist()
     try:
         n_delta = delta.count()
@@ -218,7 +212,6 @@ def screen_batch(
     index_dir: str,
     threshold: float = 0.5,
     max_bucket: int = 1000,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """(id col, bench_id, jaccard) for every batch doc matching a
     stored benchmark item at TRUE Jaccard >= ``threshold`` — the exact
@@ -241,5 +234,4 @@ def screen_batch(
         num_perm=int(mf["Num perm"]),
         bands=int(mf["Bands"]),
         max_bucket=max_bucket,
-        use_pandas=use_pandas,
     )

@@ -61,7 +61,6 @@ def build_dedup_index(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    use_pandas: bool = True,
     bucket_partitions: int | None = None,
 ) -> dict[str, str]:
     """One corpus pass → signatures + capped band buckets + manifest.
@@ -70,10 +69,8 @@ def build_dedup_index(
     """
     rows = num_perm // bands
     sig = with_minhash_signature(
-        shingle_sets(docs, text_col, id_col, n, use_pandas=use_pandas)
-        .withColumnRenamed(id_col, "id"),
+        shingle_sets(docs, text_col, id_col, n).withColumnRenamed(id_col, "id"),
         num_perm,
-        use_pandas,
     ).persist()
     n_docs = sig.count()
     if n_docs == 0:
@@ -177,7 +174,6 @@ def incremental_dedup_indexed(
     id_col: str,
     index_dir: str,
     threshold: float = 0.5,
-    use_pandas: bool = True,
     max_ingest_batch: int | None = None,
 ) -> DataFrame:
     """Dedupe a batch against a stored index — no corpus re-shingle.
@@ -200,10 +196,8 @@ def incremental_dedup_indexed(
     rows = num_perm // bands
 
     new_sig = with_minhash_signature(
-        shingle_sets(new_docs, text_col, id_col, n, use_pandas=use_pandas)
-        .withColumnRenamed(id_col, "id"),
+        shingle_sets(new_docs, text_col, id_col, n).withColumnRenamed(id_col, "id"),
         num_perm,
-        use_pandas,
     ).persist()
     corp_buckets = spark.read.parquet(os.path.join(index_dir, "buckets"))
     corp_sig = spark.read.parquet(os.path.join(index_dir, "signatures"))
@@ -276,7 +270,6 @@ def append_to_dedup_index(
     text_col: str,
     id_col: str,
     index_dir: str,
-    use_pandas: bool = True,
     ingest_batch: int = 1,
     idempotent: bool = False,
 ) -> None:
@@ -310,10 +303,8 @@ def append_to_dedup_index(
     # checkpoint rebases the frame on materialized partitions. See
     # phash_index.append_to_phash_index for the full rationale.
     sig = with_minhash_signature(
-        shingle_sets(batch_docs, text_col, id_col, n, use_pandas=use_pandas)
-        .withColumnRenamed(id_col, "id"),
+        shingle_sets(batch_docs, text_col, id_col, n).withColumnRenamed(id_col, "id"),
         num_perm,
-        use_pandas,
     ).localCheckpoint(eager=True)
 
     def _write(df: DataFrame, name: str) -> None:

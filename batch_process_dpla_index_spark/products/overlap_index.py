@@ -73,15 +73,12 @@ def build_overlap_index(
     source_col: str = "source",
     n: int = 3,
     num_perm: int = 64,
-    use_pandas: bool = True,
 ) -> dict[str, str]:
     """One corpus pass → per-source signature parquet + manifest.
 
     Returns the manifest dict (also written to ``index_dir/_MANIFEST``).
     """
-    sig = source_signatures(
-        docs, text_col, source_col, n, num_perm, use_pandas=use_pandas
-    )
+    sig = source_signatures(docs, text_col, source_col, n, num_perm)
     _artifact_frame(sig).write.mode("overwrite").parquet(_sig_path(index_dir))
     # rebuild convention (clear-last, like the other index products):
     # a rebuild overwrites the corpus so the old delete set is spent —
@@ -119,7 +116,6 @@ def refresh_overlap_index(
     index_dir: str,
     text_col: str | None = None,
     source_col: str | None = None,
-    use_pandas: bool = True,
 ) -> dict[str, str]:
     """Fold an ingest delta into the stored signatures — the scan is
     DELTA-proportional; the corpus is never re-read.
@@ -169,7 +165,7 @@ def refresh_overlap_index(
     # one-sided source keeps its own mins verbatim.
     stored_rows = _live_signatures(spark, index_dir).collect()
     delta_rows = source_signatures(
-        delta_docs, text_col, source_col, n, num_perm, use_pandas=use_pandas
+        delta_docs, text_col, source_col, n, num_perm
     ).collect()
     acc: dict[str, list] = {
         r["source"]: [r[f"__p{i}"] for i in range(num_perm)]

@@ -59,7 +59,6 @@ from batch_process_dpla_index_spark.operators.relational import (
 from batch_process_dpla_index_spark.operators.similarity import (
     cell_occupancy,
     cosine_topk,
-    cosine_topk_pandas,
     embedding_near_dup,
     ivf_topk,
     lsh_ann_topk,
@@ -582,8 +581,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero false positives)."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, num_perm=64, bands=16,
-        use_pandas=True,
+        docs, "text", "doc_id", n=3, threshold=0.5, num_perm=64, bands=16
     )
 
 
@@ -612,8 +610,7 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — never all pairs)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return lsh_ann_topk(
-        emb, "vec_id", "embedding", dim=64, k=5, n_planes=8, n_tables=4,
-        use_pandas=True,
+        emb, "vec_id", "embedding", dim=64, k=5, n_planes=8, n_tables=4
     )
 
 
@@ -1152,14 +1149,6 @@ def _audio_survivors_from(corpus: DataFrame) -> DataFrame:
         audio_near_dup(corpus, "blob", "doc_id", bits=60, max_hamming=3),
     )
 
-def q_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/BLAS exact top-k (same results as cosine_topk, the
-    100 TB-safe physical plan: per-batch matmul + local top-k)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 25)
-    return cosine_topk_pandas(emb, queries, "vec_id", "embedding", k=5)
-
-
 def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF via LATERAL (the Spark 4 table-function surface):
     per-doc row expansion, oracle-checked against a SQL unnest."""
@@ -1626,7 +1615,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_dpla_index_spark.operators.dedup import unpersist_deps
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n=3, threshold=0.5, use_pandas=True)
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
     # CC materializes eagerly (checkpointed fixpoint), so the pair
     # operator's cached signature frame can be released right after;
     # the labels frame still carries ITS final-checkpoint handle,
@@ -2212,7 +2201,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 7)
     corpus = docs.where(F.col("doc_id") % 10 != 7)
-    return incremental_dedup(new, corpus, "text", "doc_id", use_pandas=True)
+    return incremental_dedup(new, corpus, "text", "doc_id")
 
 
 def q_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2365,7 +2354,7 @@ def q_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
-    out = fuzzy_decontaminate(corpus, bench, threshold=0.5, use_pandas=True)
+    out = fuzzy_decontaminate(corpus, bench, threshold=0.5)
     # carry_deps: .orderBy() returns a NEW frame and would drop the two
     # persisted signature frames, leaking them past unpersist_deps
     return carry_deps(out.orderBy("doc_id", "bench_id"), out)
@@ -2457,7 +2446,7 @@ def q_contamination_screened(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return contamination_screened(
-        docs, "text", "source", n=3, est_threshold=0.0625, use_pandas=True
+        docs, "text", "source", n=3, est_threshold=0.0625
     )
 
 
@@ -2976,7 +2965,7 @@ def q_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+shingle runs ONCE through a shared persisted frame (the
     # shingle tiers are bit-identical, pinned by test) instead of once
     # inside each operator.
-    sets = shingle_sets(docs, "text", "doc_id", 3, use_pandas=True).persist()
+    sets = shingle_sets(docs, "text", "doc_id", 3).persist()
     # Capture the RAW operator results before any .select()/.withColumn()
     # — DataFrame methods return new objects without _cached_deps, so
     # deps must be collected from these frames (the carry_deps trap).
@@ -2984,8 +2973,7 @@ def q_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", n=3, threshold=0.5, precomputed_sets=sets
     )
     cand_raw = minhash_lsh_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, use_pandas=True,
-        precomputed_sets=sets,
+        docs, "text", "doc_id", n=3, threshold=0.5, precomputed_sets=sets,
     )
     truth = truth_raw.select("id_a", "id_b").withColumn("__t", F.lit(1))
     cand = cand_raw.select("id_a", "id_b").withColumn("__c", F.lit(1))
@@ -3396,9 +3384,7 @@ def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, use_pandas=True
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
     labels = connected_components(pairs)
     unpersist_deps(pairs)
     members = (
@@ -3453,9 +3439,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_process_dpla_index_spark.operators.dedup import carry_deps
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, use_pandas=True
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
     out = leakage_safe_split(docs, pairs, "doc_id", val_fraction=0.2)
     return carry_deps(out.orderBy("doc_id"), out)
 
@@ -3531,7 +3515,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return source_minhash_overlap(
-        docs, n=3, num_perm=64, use_pandas=True
+        docs, n=3, num_perm=64
     ).orderBy("source_a", "source_b")
 
 
@@ -3613,9 +3597,9 @@ def q_source_overlap_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 10 != 7)
     delta = docs.where(F.col("doc_id") % 10 == 7)
-    corpus_sigs = source_signatures(corpus, n=3, num_perm=64, use_pandas=True)
+    corpus_sigs = source_signatures(corpus, n=3, num_perm=64)
     return source_overlap_incremental(
-        delta, corpus_sigs, n=3, num_perm=64, use_pandas=True
+        delta, corpus_sigs, n=3, num_perm=64
     ).orderBy("source_a", "source_b")
 
 
@@ -3904,7 +3888,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "event_calendar": q_event_calendar,
     "value_percentiles": q_value_percentiles,
     "price_histogram": q_price_histogram,
-    "cosine_topk_pandas": q_cosine_topk_pandas,
+    # the name of the former Arrow twin; cosine_topk has one kernel now
+    "cosine_topk_pandas": q_cosine_topk,
     "sitemap_urls": q_sitemap_urls,
     "multimodal_decode": q_multimodal_decode,
     "multimodal_frames": q_multimodal_frames,

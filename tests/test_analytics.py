@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.functions.classifier import classifier_score
@@ -1025,7 +1026,7 @@ def test_source_sig_from_postings_matches_per_doc_tier(spark, docs):
         F.col("source").alias("source"), F.col("text").alias("__text")
     )
     ex = (
-        shingle_sets(base, "__text", "source", 3, use_pandas=True)
+        shingle_sets(base, "__text", "source", 3)
         .select(
             F.col("source").alias("src"),
             F.explode("shingles").alias("shingle"),
@@ -1036,7 +1037,7 @@ def test_source_sig_from_postings_matches_per_doc_tier(spark, docs):
         r["source"]: r["sig"]
         for r in source_sig_from_postings(ex, 64).collect()
     }
-    ref = source_signatures(d, use_pandas=True)
+    ref = source_signatures(d)
     want = {
         r["source"]: [r[f"__p{i}"] for i in range(64)]
         for r in ref.collect()
@@ -1084,7 +1085,7 @@ def test_overlap_driver_tier_matches_distributed(spark, docs, monkeypatch):
     import batch_process_dpla_index_spark.operators.dedup as dd
 
     d = docs.limit(150).cache()
-    sig = dd.source_signatures(d, use_pandas=True)
+    sig = dd.source_signatures(d)
     key = lambda r: (r["source_a"], r["source_b"])  # noqa: E731
     tier = {
         key(r): (r["n_equal"], r["est_jaccard"])
@@ -1098,6 +1099,65 @@ def test_overlap_driver_tier_matches_distributed(spark, docs, monkeypatch):
     assert tier == dist
     assert tier, "fixture must produce at least one source pair"
     d.unpersist()
+
+
+def _pair_loop(rows, num_perm, est_threshold):
+    """The pure-Python pair screen signature_pairs replaced: every
+    i < j, integer perm-match count, Spark's HALF_UP round replayed per
+    pair through Decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    out = []
+    for i in range(len(rows)):
+        sa, va = rows[i]
+        for j in range(i + 1, len(rows)):
+            sb, vb = rows[j]
+            n_eq = sum(1 for x, y in zip(va, vb) if x == y)
+            est = float(
+                Decimal(repr(n_eq / float(num_perm))).quantize(
+                    Decimal("0.000001"), ROUND_HALF_UP
+                )
+            )
+            if est >= est_threshold:
+                out.append((sa, sb, n_eq, est))
+    return out
+
+
+@pytest.mark.parametrize("num_perm", [64, 48])
+def test_signature_pairs_matches_python_loop(num_perm):
+    """The numpy blockwise pair screen returns exactly the pure-Python
+    loop's rows, in the same order, for a power-of-two and a
+    non-power-of-two num_perm (k/48 needs real rounding: 5/48 →
+    0.104167), at threshold 0 (every pair) and at a threshold some
+    pair's estimate hits exactly (>= keeps it). 300 rows span two
+    256-row blocks."""
+    import random
+
+    from batch_process_dpla_index_spark.operators.dedup import signature_pairs
+
+    rng = random.Random(11)
+    base = [rng.randrange(1 << 31) for _ in range(num_perm)]
+    rows = []
+    for i in range(300):
+        sig = list(base)
+        # overwrite a random share of perms with row-unique values, so
+        # pair match counts spread over the whole 0..num_perm range
+        for p in rng.sample(range(num_perm), rng.randrange(num_perm + 1)):
+            sig[p] = -(i * num_perm + p) - 1
+        rows.append((f"src{i:03d}", sig))
+    rows.sort()
+
+    every = _pair_loop(rows, num_perm, 0.0)
+    assert signature_pairs(rows, num_perm) == every
+    k = 5
+    at = next(est for _, _, n_eq, est in every if n_eq == k)
+    want = [r for r in every if r[3] >= at]
+    got = signature_pairs(rows, num_perm, est_threshold=at)
+    assert got == want
+    assert any(est == at for _, _, _, est in got)
+    assert min(n_eq for _, _, n_eq, _ in got) == k
+    assert signature_pairs(rows[:1], num_perm) == []
+    assert signature_pairs([], num_perm) == []
 
 
 def test_rank_candidates_rounded_score_then_id_ties(spark):
@@ -1153,22 +1213,6 @@ def test_rrf_fuse_tie_breaks_by_id_and_limit(spark):
     # symmetric ranks -> equal scores; limit=1 must keep the SMALLER id
     got = rrf_fuse([l1, l2], limit=1).collect()
     assert len(got) == 1 and got[0]["id"] == 5
-
-
-def test_source_signatures_pandas_tier_bit_exact(spark, docs):
-    """The Arrow fast path (per-doc numpy signatures → per-source min)
-    must match the zero-Python explode tier bit-for-bit — the identity
-    min(per-doc mins) == min(flat shingle stream), plus the empty-set
-    filter matching the explode tier's no-rows behavior."""
-    from batch_process_dpla_index_spark.operators.dedup import source_signatures
-
-    d = docs.limit(150)
-    expr = {r["source"]: r.asDict() for r in source_signatures(d).collect()}
-    fast = {
-        r["source"]: r.asDict()
-        for r in source_signatures(d, use_pandas=True).collect()
-    }
-    assert expr == fast and len(expr) > 0
 
 
 def test_attribution_time_decay_conserves_credit(spark):

@@ -1,6 +1,6 @@
 """Operator property tests: dedup idempotence, LSH recall bound,
-shingle edge cases, multimodal digests, pandas-vs-expression cosine
-agreement."""
+shingle edge cases, multimodal digests, cosine top-k against its
+DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -22,10 +22,7 @@ from batch_process_dpla_index_spark.operators.multimodal import (
     decode_images,
     sample_frames,
 )
-from batch_process_dpla_index_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_pandas,
-)
+from batch_process_dpla_index_spark.operators.similarity import cosine_topk
 from batch_process_dpla_index_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -79,12 +76,27 @@ def test_lsh_recall_vs_exact(docs):
         assert len(approx_pairs) / len(exact_pairs) >= 0.9
 
 
-def test_cosine_pandas_matches_expression(spark):
+def test_cosine_topk_matches_duckdb_oracle(spark):
+    """cosine_topk's BLAS kernel against ORACLE_COSINE_TOPK (queries
+    vec_id < 25, k=5) replayed in DuckDB over the same parquet: exact
+    tuple equality, 6-place rounded scores on both sides."""
+    import duckdb
+
+    from batch_process_dpla_index_spark.oracles import ORACLE_COSINE_TOPK
+
     emb = load_table(spark, SF_DIR, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    a = cosine_topk(emb, q, "vec_id", "embedding", k=3, use_pandas=False)
-    b = cosine_topk_pandas(emb, q, "vec_id", "embedding", k=3)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    got_df = cosine_topk(
+        emb, emb.filter(F.col("vec_id") < 25), "vec_id", "embedding", k=5
+    )
+    got = sorted(map(tuple, got_df.collect()))
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    )
+    want = sorted(map(tuple, con.execute(ORACLE_COSINE_TOPK).fetchall()))
+    assert got == want and len(got) > 0
 
 
 def test_binary_digest_matches_hashlib(spark):
@@ -768,8 +780,7 @@ def test_semantic_dedup_fixture_invariants(spark):
 
 def test_dedup_parameter_guards(spark):
     """Round-6 review guards: silently-degrading parameter combos now
-    fail loudly; the pandas shingle twin agrees with the expression
-    twin on NULL text."""
+    fail loudly; NULL text shingles to NULL (not [])."""
     import pytest as _pytest
 
     from batch_process_dpla_index_spark.operators.dedup import (
@@ -790,14 +801,11 @@ def test_dedup_parameter_guards(spark):
     # simhash is 60-bit (h60 width); 64 would silently zero bits 61-63
     with _pytest.raises(ValueError, match="bits"):
         simhash(F.col("text"), bits=64)
-    # NULL text: both shingle tiers must yield NULL (not [] vs NULL)
-    expr = {r.id: r.shingles for r in shingle_sets(docs, "text", "id").collect()}
-    pand = {
-        r.id: r.shingles
-        for r in shingle_sets(docs, "text", "id", use_pandas=True).collect()
-    }
-    assert expr[2] is None and pand[2] is None
-    assert expr[1] == pand[1] and expr[1]
+    # NULL text → NULL shingles (what the oracles' array_distinct(
+    # word_shingles(NULL)) yields), non-empty text → its shingles
+    got = {r.id: r.shingles for r in shingle_sets(docs, "text", "id").collect()}
+    assert got[2] is None
+    assert got[1] == ["alpha beta gamma", "beta gamma delta"]
 
 
 def test_quality_gate_rejects_unknown_stopword_lang(spark):

@@ -654,7 +654,7 @@ def test_overlap_index_artifact_write_repartition_not_coalesce(spark):
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, SF_DIR, "documents")
-    frame = _artifact_frame(source_signatures(docs, use_pandas=True))
+    frame = _artifact_frame(source_signatures(docs))
     plan = frame._jdf.queryExecution().executedPlan().toString()
     # repartition(1) plans as a REPARTITION_BY_NUM single-partition
     # exchange ABOVE the signature aggregate; coalesce(1) would plan

@@ -487,7 +487,7 @@ def test_dedup_index_round_trip(spark, tmp_path):
     assert int(manifest["Record count"]) == corpus.count()
 
     got = incremental_dedup_indexed(spark, new, "text", "doc_id", idx)
-    want = incremental_dedup(new, corpus, "text", "doc_id", use_pandas=True)
+    want = incremental_dedup(new, corpus, "text", "doc_id")
     got_rows = sorted(map(tuple, got.collect()))
     want_rows = sorted(map(tuple, want.collect()))
     unpersist_deps(got)
@@ -1749,7 +1749,7 @@ def test_overlap_index_lifecycle_and_idempotent_refresh(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            source_minhash_overlap(docs, use_pandas=True)
+            source_minhash_overlap(docs)
             .orderBy("source_a", "source_b")
             .collect(),
         )
@@ -2697,8 +2697,7 @@ def test_decon_index_lifecycle(spark, tmp_path):
     got_df = screen_batch(spark, corpus, idx, threshold=0.5)
     got = sorted(map(tuple, got_df.collect()))
     unpersist_deps(got_df)
-    want_df = fuzzy_decontaminate(corpus, bench, threshold=0.5,
-                                  use_pandas=True)
+    want_df = fuzzy_decontaminate(corpus, bench, threshold=0.5)
     want = sorted(map(tuple, want_df.collect()))
     unpersist_deps(want_df)
     assert got == want and len(got) > 0

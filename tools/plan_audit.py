@@ -205,7 +205,7 @@ def main() -> int:
         from batch_process_dpla_index_spark.sources.tables import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        frame = _artifact_frame(source_signatures(docs, use_pandas=True))
+        frame = _artifact_frame(source_signatures(docs))
         plan = frame._jdf.queryExecution().executedPlan().toString()
         fp = fingerprint(plan)
         n_repart1 = len(

@@ -535,38 +535,6 @@ def source_sig_from_postings(ex: DataFrame, num_perm: int = 64) -> DataFrame:
     )
 
 
-def overlap_from_sig_arrays(sig_arr: DataFrame, num_perm: int = 64) -> DataFrame:
-    """Array-signature twin of :func:`overlap_from_signatures` — same
-    |sources|² broadcast self-join, same (source_a, source_b, n_equal,
-    est_jaccard) values, but the per-pair match count is one
-    interpreted zip_with/aggregate over the sig arrays instead of a
-    ``num_perm``-term codegen'd comparison chain. HOF interpretation
-    costs nothing here (the frame is |sources| rows); what it buys is
-    a plan whose generated code size is independent of num_perm.
-    Callers persist ``sig_arr`` first — the two legs sit behind
-    different exchange types, so exchange reuse never fires."""
-    left = sig_arr.select(
-        F.col("source").alias("source_a"), F.col("sig").alias("__sa")
-    )
-    right = sig_arr.select(
-        F.col("source").alias("source_b"), F.col("sig").alias("__sb")
-    )
-    pairs = left.join(F.broadcast(right), F.col("source_a") < F.col("source_b"))
-    n_eq = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return pairs.select(
-        "source_a",
-        "source_b",
-        n_eq.cast("bigint").alias("n_equal"),
-        F.round(n_eq.cast("double") / F.lit(float(num_perm)), 6).alias(
-            "est_jaccard"
-        ),
-    )
-
-
 def _band_rows(num_perm: int, bands: int) -> int:
     """Validated rows-per-band. Integer division would otherwise fail
     SILENTLY: bands > num_perm gives rows=0, so every band key hashes

@@ -174,23 +174,47 @@ def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
     """Shared final merge of the BLAS tiers: candidate rows
     (:data:`_CAND_SCHEMA`) → global per-query top-k by (score DESC
     NULLS LAST, neighbor_id ASC) in one window on ``query_id``. NaN
-    marks a zero-norm pair and surfaces as NULL (try_divide parity)."""
-    scored = cand.withColumn(
-        "score", F.when(F.isnan("raw_score"), F.lit(None)).otherwise(F.col("raw_score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc_nulls_last(), F.col("neighbor_id").asc()
-    )
+    marks a zero-norm pair and surfaces as NULL (try_divide parity).
+    Written as SQL text: a few py4j calls to plan, where the Column
+    form paid one per expression node."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
+        cand.selectExpr(
             "query_id",
             "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
+            "CASE WHEN isnan(raw_score) THEN NULL ELSE raw_score END AS score",
+        )
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            "score",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY score DESC NULLS LAST, neighbor_id ASC) AS rank",
+        )
+        .where(f"rank <= {int(k)}")
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            "round(score, 6) AS score",
+            "CAST(rank AS INT) AS rank",
         )
     )
+
+
+def _merge_topk(q_ids, n_ids, scores, k: int):
+    """numpy twin of :func:`_rank_candidates`' window over candidate
+    arrays: keep each query's k best by (score DESC, NaN last,
+    neighbor_id ASC), the order of :func:`_topk_block`. Returns
+    ``(query_id, neighbor_id, raw_score, rank)`` arrays ordered by
+    query, then rank."""
+    import numpy as np
+
+    order = np.lexsort((n_ids, -scores, q_ids))  # NaN sorts last
+    q_ids, n_ids, scores = q_ids[order], n_ids[order], scores[order]
+    starts = np.flatnonzero(np.r_[True, q_ids[1:] != q_ids[:-1]])
+    group_start = np.repeat(starts, np.diff(np.r_[starts, len(q_ids)]))
+    rank = np.arange(len(q_ids)) - group_start + 1
+    keep = rank <= k
+    return q_ids[keep], n_ids[keep], scores[keep], rank[keep]
 
 
 def embedding_near_dup(
@@ -645,7 +669,7 @@ def _topk_block(q_ids, q_mat, c_ids, c_mat, k: int):
     each query row's local top-k — the kernel of both IVF scoring
     shapes (the cell-grouped `_ivf_score_and_rank` and the
     broadcast-probe `_probe_serve`). Cosine with NaN for a zero-norm
-    pair (surfaced as NULL by `_rank_candidates`); a stored row never
+    pair (surfaced as NULL by the per-query merge); a stored row never
     scores against its own id; order (score DESC, NaN last, id ASC).
     Returns the (query_id, neighbor_id, raw_score) columns as lists."""
     import numpy as np
@@ -709,14 +733,17 @@ def _ivf_score_and_rank(stored: DataFrame, probing: DataFrame, k: int) -> DataFr
     return _rank_candidates(cand, k)
 
 
-#: Most query-vector bytes (8·dim float64 bytes per query) the
-#: broadcast-probe serve collects to the driver and ships in its
-#: closure: 1,024 queries at dim 64. A larger batch takes the cell
-#: shuffle. Set below the measured crossover (4 cores, local[4], k 5,
-#: 4 probes): the Arrow pass scores on as many cores as the probed
-#: cells have files, so a small index scores on one and the shuffle
-#: overtakes it at ~1-2k queries (two-level, 8k vectors), ~2-3k
-#: (flat, 8k) and past 4k (flat, 50k vectors in 4 files).
+#: Most bytes the broadcast-probe serve moves through the driver, per
+#: side: the query vectors it collects and ships in its closure (8·dim
+#: float64 bytes per query: 1,024 queries at dim 64), and the
+#: candidates it collects back to merge (24 bytes per (query_id,
+#: neighbor_id, raw_score) row, probes·k rows per query). A batch over
+#: either bound takes the cell shuffle. Set below the measured
+#: crossover (4 cores, local[4], k 5, 4 probes): the Arrow pass scores
+#: on as many cores as the probed cells have files, so a small index
+#: scores on one and the shuffle overtakes it at ~1-2k queries
+#: (two-level, 8k vectors), ~2-3k (flat, 8k) and past 4k (flat, 50k
+#: vectors in 4 files).
 _QUERY_BATCH_CAP_BYTES = 512 << 10
 
 
@@ -727,39 +754,51 @@ def _probe_serve(
     vec_col: str,
     dim: int,
     k: int,
+    probes: int,
     probe_blocks,
     probing,
 ) -> DataFrame:
     """Serve a query batch against PRE-ASSIGNED stored cells — the one
     serve of :func:`ivf_query_topk` (flat) and :func:`_imi_query_topk`
-    (two-level), which differ only in how a query ranks its cells.
+    (two-level), which differ only in how a query ranks its cells
+    (``probes`` is the most cells one query probes).
 
     Broadcast-probe plan (Odyssey's choice: leave the stored data in
-    place and send the small query set to it):
+    place, send the small query set to it and merge the results on the
+    coordinator):
 
-    1. collect the batch with a LIMIT cap+1 probe, cap =
-       :data:`_QUERY_BATCH_CAP_BYTES` over 8·dim bytes per query;
+    1. collect the batch with a LIMIT cap+1 probe; cap = the most
+       queries whose vectors (8·dim bytes each) and candidates
+       (probes·k rows of 24 bytes each) both fit in
+       :data:`_QUERY_BATCH_CAP_BYTES`;
     2. rank each query's probe cells on the driver —
        ``probe_blocks(q_mat)`` yields `_two_level_probe_blocks`-shaped
        ``(slot, rows, gcells)`` blocks (batch row indices × their
        probed cell ids) from the shared numpy kernels;
     3. filter the stored cells to the probed set (``cell IN (...)``,
        pushed into the scan);
-    4. ONE mapInPandas pass: per cell an Arrow batch holds, one BLAS
-       matmul against the queries probing it and a local top-k per
-       query (:func:`_topk_block`);
-    5. the per-query window merges the candidates
-       (:func:`_rank_candidates`).
+    4. ONE mapInArrow pass: per cell an Arrow batch holds, one BLAS
+       matmul against the queries probing it (:func:`_topk_block`),
+       and one per-query top-k over everything the task read
+       (:func:`_merge_topk`);
+    5. collect those candidates (the serve's one Spark job, plus the
+       tombstone broadcast when the index has deletes) and merge them
+       per query on the driver (:func:`_merge_topk` again).
 
-    Stored vectors never cross an exchange; only the per-batch
-    candidates shuffle on ``query_id``. Over the cap the batch takes
-    the distributed plan instead:
-    ``probing()`` assigns it in an Arrow pass and
-    :func:`_ivf_score_and_rank` shuffles stored and probe rows on the
-    cell id. Same rows either way (pinned in tests)."""
+    The result is a local frame whose ``round(score, 6)`` Spark folds
+    on the driver, so a consumer's action runs no further job. Stored
+    vectors never cross an exchange, and nothing shuffles. Over the
+    cap the batch takes the distributed plan instead: ``probing()``
+    assigns it in an Arrow pass and :func:`_ivf_score_and_rank`
+    shuffles stored and probe rows on the cell id. Same rows either
+    way (pinned in tests)."""
     import numpy as np
+    import pyarrow as pa
 
-    cap = _QUERY_BATCH_CAP_BYTES // (8 * dim)
+    cap = min(
+        _QUERY_BATCH_CAP_BYTES // (8 * dim),
+        _QUERY_BATCH_CAP_BYTES // (24 * max(1, probes) * max(1, k)),
+    )
     rows = (
         queries.select(F.col(id_col), F.col(vec_col)).limit(cap + 1).collect()
         if cap
@@ -786,13 +825,16 @@ def _probe_serve(
     probers = dict(zip(cells.tolist(), np.split(q_rows[by_cell], starts[1:])))
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
+        out_q, out_n, out_s = [], [], []
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            cell = pdf["cell"].to_numpy(dtype="int64")
-            ids = pdf["id"].to_numpy(dtype="int64")
-            mat = np.array(list(pdf["vec"]), dtype="float64")
-            out_q, out_n, out_s = [], [], []
+            cell = rb.column("cell").to_numpy()
+            ids = rb.column("id").to_numpy()
+            mat = (
+                rb.column("vec").flatten().to_numpy(zero_copy_only=False)
+                .astype("float64").reshape(rb.num_rows, -1)
+            )
             for c in np.unique(cell):
                 qi = probers[int(c)]
                 sel = cell == c
@@ -800,14 +842,43 @@ def _probe_serve(
                 out_q += bq
                 out_n += bn
                 out_s += bs
-            yield _cand_frame(out_q, out_n, out_s)
+        if out_q:
+            tq, tn, ts, _rank = _merge_topk(
+                np.asarray(out_q, dtype="int64"),
+                np.asarray(out_n, dtype="int64"),
+                np.asarray(out_s, dtype="float64"),
+                k,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(tq), pa.array(tn), pa.array(ts)],
+                ["query_id", "neighbor_id", "raw_score"],
+            )
 
+    probed = ", ".join(map(str, cells.tolist()))
     cand = (
-        stored.where(F.col("cell").isin(cells.tolist()))
-        .select(F.col("cell").cast("int").alias("cell"), F.col("id"), F.col("vec"))
-        .mapInPandas(score, _CAND_SCHEMA)
+        stored.where(f"cell IN ({probed})")
+        .selectExpr("CAST(cell AS INT) AS cell", "id", "vec")
+        .mapInArrow(score, _CAND_SCHEMA)
+        .toArrow()
     )
-    return _rank_candidates(cand, k)
+    tq, tn, ts, rank = _merge_topk(
+        cand.column("query_id").to_numpy(),
+        cand.column("neighbor_id").to_numpy(),
+        cand.column("raw_score").to_numpy(),
+        k,
+    )
+    # NaN (a zero-norm pair) becomes NULL, as _rank_candidates does
+    merged = pa.table(
+        {
+            "query_id": pa.array(tq, pa.int64()),
+            "neighbor_id": pa.array(tn, pa.int64()),
+            "score": pa.array(ts, pa.float64(), from_pandas=True),
+            "rank": pa.array(rank, pa.int32()),
+        }
+    )
+    return stored.sparkSession.createDataFrame(merged, _TOPK_SCHEMA).selectExpr(
+        "query_id", "neighbor_id", "round(score, 6) AS score", "rank"
+    )
 
 
 def ivf_query_topk(
@@ -825,14 +896,15 @@ def ivf_query_topk(
 
     ``stored`` is (cell int, id, vec) — e.g. read back from the
     persisted ANN index (``products.ann_index``) so the corpus is never
-    re-assigned per query batch. A batch of up to
-    :data:`_QUERY_BATCH_CAP_BYTES` of query vectors is collected and
-    each query ranks its ``n_probe`` cells on the driver (the
-    `_cell_order` convention); the stored side is read only in the
-    probed cells and scored in ONE Arrow pass, with no exchange of
-    stored vectors (:func:`_probe_serve`). A larger batch takes the
-    cell-grouped shuffle of :func:`ivf_topk` instead. With ``queries == corpus`` and the
-    same quantizer this reproduces ``ivf_topk`` exactly (pinned in
+    re-assigned per query batch. A batch whose query vectors and
+    candidates fit :data:`_QUERY_BATCH_CAP_BYTES` is collected and each
+    query ranks its ``n_probe`` cells on the driver (the `_cell_order`
+    convention); the stored side is read only in the probed cells and
+    scored in ONE Arrow pass, and the candidates merge on the driver
+    into a local frame: one Spark job, with no exchange
+    (:func:`_probe_serve`). A larger batch takes the cell-grouped
+    shuffle of :func:`ivf_topk` instead. With ``queries == corpus`` and
+    the same quantizer this reproduces ``ivf_topk`` exactly (pinned in
     tests).
     """
     import numpy as np
@@ -852,7 +924,8 @@ def ivf_query_topk(
         )
 
     return _probe_serve(
-        stored, queries, id_col, vec_col, dim, k, probe_blocks, probing
+        stored, queries, id_col, vec_col, dim, k, min(n_probe, n_cells),
+        probe_blocks, probing,
     )
 
 
@@ -890,7 +963,8 @@ def _imi_query_topk(
         )
 
     return _probe_serve(
-        stored, queries, id_col, vec_col, dim, k, probe_blocks, probing
+        stored, queries, id_col, vec_col, dim, k,
+        p_c * min(n_probe_fine, k_f), probe_blocks, probing,
     )
 
 

@@ -14,17 +14,18 @@ index once per corpus version and amortizes it over every query batch:
   dataset is repartitioned on ``cell`` so query-time cell groups read
   co-located.
 - :func:`ann_query_indexed`: read the manifest + centroids (k×dim
-  floats — the whole model fits on the driver), collect the query
-  batch (up to 1,024 queries at dim 64), rank each query's
-  ``n_probe`` cells on the driver, and score ONLY the probed stored
-  cells in one Arrow pass (``operators.similarity.ivf_query_topk``).
+  floats — the whole model fits on the driver, read there with
+  pyarrow), collect the query batch (up to 1,024 queries at dim 64),
+  rank each query's ``n_probe`` cells on the driver, score ONLY the
+  probed stored cells in one Arrow pass and merge the candidates on
+  the driver (``operators.similarity.ivf_query_topk``): one Spark job.
   The corpus is never re-assigned and never shuffled.
 
 Scale: index build is one corpus pass + k-means (bounded driver state:
-k×dim). Query cost is a scan of the probed cells plus a shuffle of the
-|Q|·k-per-batch candidates into the per-query merge — the stored
-vectors stay in place. A larger batch falls back to one shuffle join
-into the cell layout. n_cells ~ √N keeps
+k×dim). Query cost is a scan of the probed cells plus a driver merge
+of at most |Q|·k candidates per scan task — the stored vectors stay in
+place and nothing shuffles. A larger batch falls back to one shuffle
+join into the cell layout. n_cells ~ √N keeps
 cells bounded; growing the corpus = :func:`append_to_ann_index` (new
 assignments under the same manifest-pinned codebook, one batch-sized
 Arrow pass, per-batch ``ingest_batch`` partitions with idempotent
@@ -40,7 +41,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
@@ -48,6 +49,7 @@ from batch_process_dpla_index_spark.products.index_tombstones import (
     clear_tombstones,
     dataset_ddl,
     keyed_repartition,
+    max_ingest_batch,
     read_dataset,
     schema_key,
 )
@@ -363,17 +365,21 @@ def build_ann_index(
     return manifest
 
 
+def _read_model(index_dir: str, name: str, sort_cols: list[str]):
+    """Rows of a small model dataset (k·dim floats at most) as dicts,
+    sorted on ``sort_cols``, read on the driver with pyarrow: no Spark
+    job. pyarrow skips the ``_``/``.`` files a Spark write leaves."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(os.path.join(index_dir, name)).to_pylist()
+    return sorted(rows, key=lambda r: tuple(r[c] for c in sort_cols))
+
+
 def load_centroids(spark: SparkSession, index_dir: str) -> list[list[float]]:
     """The flat centroids in cell order. Like every model read here it
-    passes the schema its writer uses and sorts on the driver: one
-    Spark job (the collect), where an inferred schema and a distributed
-    orderBy would cost two more."""
-    rows = (
-        spark.read.schema("cell int, centroid array<double>")
-        .parquet(os.path.join(index_dir, "centroids"))
-        .collect()
-    )
-    return [list(r["centroid"]) for r in sorted(rows, key=lambda r: r["cell"])]
+    reads the parquet on the driver (:func:`_read_model`): no Spark
+    job."""
+    return [r["centroid"] for r in _read_model(index_dir, "centroids", ["cell"])]
 
 
 def load_two_level_model(
@@ -385,36 +391,22 @@ def load_two_level_model(
     centroid list."""
     manifest = read_manifest(index_dir)
     k_f = int(manifest["k_f"])
-    coarse_rows = (
-        spark.read.schema("ccell int, centroid array<double>")
-        .parquet(os.path.join(index_dir, "coarse_centroids"))
-        .collect()
-    )
     coarse = [
-        list(r["centroid"]) for r in sorted(coarse_rows, key=lambda r: r["ccell"])
+        r["centroid"] for r in _read_model(index_dir, "coarse_centroids", ["ccell"])
     ]
-    fine_rows = (
-        spark.read.schema("ccell int, fine int, centroid array<double>")
-        .parquet(os.path.join(index_dir, "fine_centroids"))
-        .collect()
-    )
     fine: dict[int, list[list[float]]] = {}
-    for r in sorted(fine_rows, key=lambda r: (r["ccell"], r["fine"])):
-        fine.setdefault(int(r["ccell"]), []).append(list(r["centroid"]))
+    for r in _read_model(index_dir, "fine_centroids", ["ccell", "fine"]):
+        fine.setdefault(int(r["ccell"]), []).append(r["centroid"])
     return coarse, fine, k_f
 
 
 def load_pq_codebooks(spark: SparkSession, index_dir: str) -> list[list[list[float]]]:
-    rows = (
-        spark.read.schema("j int, code int, centroid array<double>")
-        .parquet(os.path.join(index_dir, "pq_codebooks"))
-        .collect()
-    )
+    rows = _read_model(index_dir, "pq_codebooks", ["j", "code"])
     m = max(r["j"] for r in rows) + 1
     k = max(r["code"] for r in rows) + 1
     books: list[list[list[float]]] = [[None] * k for _ in range(m)]  # type: ignore[list-item]
     for r in rows:
-        books[r["j"]][r["code"]] = list(r["centroid"])
+        books[r["j"]][r["code"]] = r["centroid"]
     return books
 
 
@@ -558,8 +550,13 @@ def append_to_ann_index(
     (mixed partitioned/unpartitioned parquet is unreadable) — rebuild
     those once to append. Re-learn on drift remains a rebuild.
 
-    Returns the updated manifest (Record count recounted from the
-    written footers)."""
+    Returns the updated manifest. ``Record count`` is the previous
+    count plus the rows the write observed when the batch cannot be
+    hidden or replace rows: it lands above every stored
+    ``ingest_batch`` (so no tombstone's watermark covers it), the write
+    is not an idempotent replay, and the manifest count is current (no
+    ``recount=False`` delete since). Otherwise it is recounted over the
+    live cells."""
     if int(ingest_batch) == 0:
         # 0 is the BUILD partition: an idempotent "append" there would
         # dynamic-overwrite the original corpus with the batch — the
@@ -599,6 +596,15 @@ def append_to_ann_index(
         codes = pq_encode(new_vecs, books, id_col, vec_col)
         batch = batch.join(codes, "id")
     batch = batch.withColumn("ingest_batch", F.lit(int(ingest_batch)))
+    try:
+        above_all = int(ingest_batch) > max_ingest_batch(cells_path)
+    except (OSError, ValueError):
+        above_all = False
+    observed = None
+    current = "Record count" in manifest and "Record count stale" not in manifest
+    if above_all and not idempotent and current:
+        observed = Observation()
+        batch = batch.observe(observed, F.count(F.lit(1)).alias("n"))
     writer = keyed_repartition(
         batch,
         cell_partitions if cell_partitions is None else min(n_cells, cell_partitions),
@@ -612,10 +618,16 @@ def append_to_ann_index(
         writer = writer.mode("append")
     writer.partitionBy("ingest_batch").parquet(cells_path)
     manifest[schema_key("cells")] = dataset_ddl(batch)
-    # live count: tombstoned rows don't serve, so they don't count —
-    # and an appended id that was deleted under an EARLIER watermark
-    # counts again (append-after-delete resurrects by design)
-    manifest["Record count"] = str(_live_cells(spark, index_dir, manifest).count())
+    if observed is not None:
+        n_live = int(manifest["Record count"]) + observed.get["n"]
+    else:
+        # live count: tombstoned rows don't serve, so they don't count
+        # — and an appended id that was deleted under an EARLIER
+        # watermark counts again (append-after-delete resurrects by
+        # design)
+        n_live = _live_cells(spark, index_dir, manifest).count()
+        manifest.pop("Record count stale", None)
+    manifest["Record count"] = str(n_live)
     write_manifest(manifest, index_dir)
     return manifest
 
@@ -876,14 +888,17 @@ def ann_query_indexed(
     manifest, never the caller.
 
     Both layouts serve by broadcast probe
-    (`similarity._probe_serve`): a query batch of up to
-    `similarity._QUERY_BATCH_CAP_BYTES` (8·dim bytes per query, so
-    1,024 queries at dim 64) is collected, each query's probe cells
-    are ranked on the driver, and only the probed stored cells are
-    read and scored, in one Arrow pass — the stored vectors are never
-    shuffled. A larger batch (e.g. the ``ann-index query`` CLI over a
-    whole parquet file) takes the cell-grouped shuffle of
-    `_ivf_score_and_rank` instead; the rows are the same.
+    (`similarity._probe_serve`): a query batch whose vectors (8·dim
+    bytes per query, so 1,024 queries at dim 64) and candidates
+    (probes·k rows of 24 bytes per query) both fit
+    `similarity._QUERY_BATCH_CAP_BYTES` is collected, each query's
+    probe cells are ranked on the driver, only the probed stored cells
+    are read and scored, in one Arrow pass, and the candidates merge
+    on the driver into a local frame — one Spark job (two with
+    tombstones), and the stored vectors are never shuffled. A larger
+    batch (e.g. the ``ann-index query`` CLI over a whole parquet file)
+    takes the cell-grouped shuffle of `_ivf_score_and_rank` instead;
+    the rows are the same.
 
     A two-level-built index ranks cells through the IMI probe
     (`similarity._two_level_probe_blocks`): rank k_c coarse centroids,

@@ -12,7 +12,8 @@ to an index artifact:
   dataset under ``index_dir``, each id stamped with the index's max
   ``ingest_batch`` at delete time (the WATERMARK). The append is
   O(|ids|) — no cell rewrite; the default manifest recount +
-  threshold check is ONE column-pruned (id, ingest_batch) aggregate,
+  threshold check is ONE anti-join count over the stored (id,
+  ingest_batch) columns (the total comes from the parquet footers),
   skippable entirely with ``recount=False`` for the pure-O(|ids|)
   hot path.
 - **serve** = every stored-cells read anti-joins the tombstone set:
@@ -29,13 +30,15 @@ to an index artifact:
   redundant anti-join against already-removed ids — a no-op).
 
 Replay idempotence: re-running the same delete appends duplicate
-tombstone rows; the serve-time anti-join is set-semantics (the set is
-collapsed to one max-watermark row per id first), so duplicates are
-harmless, and compaction clears them.
+tombstone rows; the serve-time anti-join has "exists" semantics (a
+stored row is hidden when ANY tombstone row for its id covers its
+batch — the same rows a max-watermark-per-id collapse would hide), so
+duplicates and repeated deletes of one id are harmless, and
+compaction clears them.
 
 Scale: the tombstone set is delete-proportional, not
 corpus-proportional. The serve-time anti-join equi-matches on the id,
-so AQE broadcasts the (collapsed) tombstone side while it is small
+so AQE broadcasts the raw tombstone side while it is small
 and falls back to a shuffle join if a mass takedown ever grows it —
 either way no plan rewrite is needed, and the compaction threshold
 bounds how long a large set is carried.
@@ -66,22 +69,53 @@ def keyed_repartition(df: DataFrame, n: "int | None", *cols: str) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
+def _hidden(name: str) -> bool:
+    """A path component Spark's file reader skips (``_temporary``,
+    ``_SUCCESS``, ``.crc`` files)."""
+    return name.startswith(("_", "."))
+
+
 def parquet_rowcount(path: str) -> int:
     """Row count from the parquet FOOTERS, driver-side — no Spark job,
     no listing/scan stage (r18, guide §1.2: the count is metadata the
     writer already produced). Sums ``num_rows`` over every part file
-    under ``path`` (Hive partition dirs included); at any scale this
-    reads one footer per file, the same metadata volume the old
-    ``spark.read.parquet(path).count()`` job fetched through tasks."""
-    import glob as _glob
-
+    under ``path`` (Hive partition dirs included) that a Spark read
+    would see: components starting with ``_`` or ``.`` are skipped, so
+    a crashed write's ``_temporary/.../part-*.parquet`` is not counted.
+    At any scale this reads one footer per file, the same metadata
+    volume the old ``spark.read.parquet(path).count()`` job fetched
+    through tasks."""
     import pyarrow.parquet as pq
 
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(
-            os.path.join(path, "**", "*.parquet"), recursive=True
+    n = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        n += sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for f in files
+            if f.endswith(".parquet") and not _hidden(f)
         )
+    return n
+
+
+def max_ingest_batch(dataset_dir: str) -> int:
+    """Highest ``ingest_batch`` among the Hive partition directories of
+    ``dataset_dir`` that hold a part file, from a driver-side listing
+    (no Spark job). A directory with no part file (an aborted write)
+    holds no rows and does not count. 0 when there is none. Raises
+    ``OSError``/``ValueError`` on a layout it cannot read; callers
+    fall back to the Spark-side answer."""
+    return max(
+        (
+            int(d.split("=", 1)[1])
+            for d in os.listdir(dataset_dir)
+            if d.startswith("ingest_batch=")
+            and any(
+                f.endswith(".parquet") and not _hidden(f)
+                for f in os.listdir(os.path.join(dataset_dir, d))
+            )
+        ),
+        default=0,
     )
 
 
@@ -139,18 +173,16 @@ def clear_tombstones(index_dir: str) -> None:
 
 
 def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """(t_id, t_max_batch) — one row per deleted id, collapsed to the
-    MAX watermark (each delete event covers batches <= its own
-    watermark, so the union of events per id is exactly the max).
-    Read with the schema `delete_from_index` writes: no
-    schema-inference job on any serve, append, delete or compact."""
+    """(t_id, t_max_batch) — one row per delete event, as written: an
+    id deleted twice has two rows. Each event covers batches <= its
+    own watermark, and the anti-join hides a row when any event covers
+    it, so no max-per-id collapse (a shuffle stage) is needed. Read
+    with the schema `delete_from_index` writes: no schema-inference
+    job on any serve, append, delete or compact."""
     if not has_tombstones(index_dir):
         return None
-    return (
-        spark.read.schema("t_id bigint, t_max_batch int")
-        .parquet(_tombstones_dir(index_dir))
-        .groupBy("t_id")
-        .agg(F.max("t_max_batch").alias("t_max_batch"))
+    return spark.read.schema("t_id bigint, t_max_batch int").parquet(
+        _tombstones_dir(index_dir)
     )
 
 
@@ -231,10 +263,11 @@ def delete_from_index(
     id column ("id" for ann_index, "c_id" for embedding_index).
 
     Cost: the tombstone APPEND is O(|ids|) — no corpus pass. The
-    manifest recount + threshold check is ONE column-pruned aggregate
-    over the stored (id, ingest_batch) columns (a single job: total
-    and live counted in the same pass via a left join against the
-    delete-proportional tombstone set). For the 100 TB hot path where
+    manifest recount + threshold check is ONE column-pruned anti-join
+    count over the stored (id, ingest_batch) columns against the
+    delete-proportional tombstone set (the live count); the total
+    comes from the stored dataset's parquet footers on the driver
+    (:func:`parquet_rowcount`). For the 100 TB hot path where
     even that scan per takedown is unwanted, ``recount=False`` skips
     the count AND the threshold check entirely (pure O(|ids|)); the
     manifest then records ``Tombstone count = stale`` and compaction
@@ -262,20 +295,8 @@ def delete_from_index(
         # rows, so it must not raise the watermark: a later append of
         # a deleted id into a batch below it would stay hidden.
         # Any surprise in the layout falls back to the old aggregate.
-        primary = os.path.join(index_dir, primary_dir)
         try:
-            wm = max(
-                (
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(primary)
-                    if d.startswith("ingest_batch=")
-                    and any(
-                        f.endswith(".parquet")
-                        for f in os.listdir(os.path.join(primary, d))
-                    )
-                ),
-                default=0,
-            )
+            wm = max_ingest_batch(os.path.join(index_dir, primary_dir))
         except (OSError, ValueError):
             wm_row = stored.agg(F.max("ingest_batch").alias("m")).first()
             wm = int(wm_row["m"] or 0)
@@ -298,24 +319,8 @@ def delete_from_index(
         manifest["Record count stale"] = "true"
         write_manifest(manifest, index_dir)
         return manifest
-    tombs = read_tombstones(spark, index_dir)
-    batch = (
-        F.col("ingest_batch")
-        if "ingest_batch" in stored.columns
-        else F.lit(0)
-    )
-    cond = (stored[id_field] == tombs["t_id"]) & (
-        batch <= tombs["t_max_batch"]
-    )
-    counts = (
-        stored.join(tombs, cond, "left")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(tombs["t_id"].isNull(), 1)).alias("live"),
-        )
-        .first()
-    )
-    total, live = int(counts["total"]), int(counts["live"])
+    total = parquet_rowcount(os.path.join(index_dir, primary_dir))
+    live = apply_tombstones(spark, index_dir, stored, id_field).count()
     dead = total - live
     if total and dead and dead / total >= compact_threshold:
         return compact_index_tombstones(

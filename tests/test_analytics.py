@@ -1012,11 +1012,12 @@ def test_source_sig_from_postings_matches_per_doc_tier(spark, docs):
     tier) must be BIT-identical to the per-doc signature tier: min
     over per-doc signature mins == min over the source's distinct
     shingle union. Pins both the signature arrays and the pair
-    estimates produced through overlap_from_sig_arrays."""
+    estimates the driver pair screen (signature_pairs) produces from
+    them."""
     from batch_process_dpla_index_spark.operators.dedup import (
-        overlap_from_sig_arrays,
         overlap_from_signatures,
         shingle_sets,
+        signature_pairs,
         source_sig_from_postings,
         source_signatures,
     )
@@ -1044,10 +1045,8 @@ def test_source_sig_from_postings_matches_per_doc_tier(spark, docs):
     }
     assert got == want
     est_got = {
-        (r["source_a"], r["source_b"]): (r["n_equal"], r["est_jaccard"])
-        for r in overlap_from_sig_arrays(
-            source_sig_from_postings(ex, 64), 64
-        ).collect()
+        (a, b): (n_equal, est)
+        for a, b, n_equal, est in signature_pairs(sorted(got.items()), 64)
     }
     est_want = {
         (r["source_a"], r["source_b"]): (r["n_equal"], r["est_jaccard"])

@@ -578,9 +578,13 @@ def test_ivf_pq_topk_plan_two_arrow_passes_one_shuffle(spark):
 
 @pytest.fixture(scope="module")
 def ann_serve_plan(spark, tmp_path_factory):
-    """Executed-plan text of one ANN serve (5 queries, 4 probes)
-    against a small persisted index — ``serve_plan()`` plans it under
-    the current query-batch cap."""
+    """Plans of one ANN serve (5 queries, 4 probes) against a small
+    persisted index — ``serve_plan()`` serves under the current
+    query-batch cap and returns the served frame's executed-plan text
+    and the plan text of each frame the serve collected as Arrow (the
+    broadcast path's candidate pass), in call order."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         build_ann_index,
@@ -593,27 +597,38 @@ def ann_serve_plan(spark, tmp_path_factory):
                     idx, dim=64, n_cells=8, learned=False)
     queries = emb.orderBy(F.desc("vec_id")).limit(5)
 
-    def serve_plan() -> str:
-        df = ann_query_indexed(
-            spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
-        )
-        return df._jdf.queryExecution().executedPlan().toString()
+    def serve_plan() -> tuple[str, list[str]]:
+        collected: list[str] = []
+        to_arrow = ClassicFrame.toArrow
+
+        def spy(self):
+            collected.append(self._jdf.queryExecution().executedPlan().toString())
+            return to_arrow(self)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ClassicFrame, "toArrow", spy)
+            df = ann_query_indexed(
+                spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
+            )
+        return df._jdf.queryExecution().executedPlan().toString(), collected
 
     return serve_plan
 
 
 def test_ann_serve_broadcast_probe_plan(ann_serve_plan):
-    """The ANN serve ships the query batch to the stored side: ONE
-    Arrow pass over a scan filtered to the probed cells (``In(cell``
-    pushed into the scan), no cell-grouped Python stage (the stored
-    vectors never shuffle), and the only exchange on query_id is the
-    per-query merge window."""
-    plan = ann_serve_plan()
-    assert plan.count("MapInPandas") == 1, plan
-    assert "FlatMapGroupsInPandas" not in plan, plan
-    assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("In(cell" in p for p in pushed), plan
+    """The ANN serve ships the query batch to the stored side and
+    merges the candidates on the driver: the served frame is a local
+    table, and the one candidate pass is ONE Arrow pass over a scan
+    filtered to the probed cells (``In(cell`` pushed into the scan),
+    with no cell-grouped Python stage (the stored vectors never
+    shuffle) and no exchange at all."""
+    served, (cand,) = ann_serve_plan()
+    assert "LocalTableScan" in served and "Exchange" not in served, served
+    assert cand.count("MapInArrow") == 1, cand
+    assert "MapInPandas" not in cand and "FlatMapGroupsInPandas" not in cand, cand
+    assert "Exchange" not in cand, cand
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", cand)
+    assert any("In(cell" in p for p in pushed), cand
 
 
 def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
@@ -623,7 +638,7 @@ def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
     from batch_process_dpla_index_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 0)
-    assert "FlatMapGroupsInPandas" in ann_serve_plan()
+    assert "FlatMapGroupsInPandas" in ann_serve_plan()[0]
 
 
 def test_ann_serve_cap_counts_query_vectors(ann_serve_plan, monkeypatch):
@@ -634,9 +649,9 @@ def test_ann_serve_cap_counts_query_vectors(ann_serve_plan, monkeypatch):
     from batch_process_dpla_index_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 5 * 8 * 64)
-    assert "FlatMapGroupsInPandas" not in ann_serve_plan()
+    assert "FlatMapGroupsInPandas" not in ann_serve_plan()[0]
     monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 5 * 8 * 64 - 1)
-    assert "FlatMapGroupsInPandas" in ann_serve_plan()
+    assert "FlatMapGroupsInPandas" in ann_serve_plan()[0]
 
 
 def test_overlap_index_artifact_write_repartition_not_coalesce(spark):

@@ -785,7 +785,10 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     return identical rows on every quantizer, through the
     lifecycle edge cases — an id stored in two ingest batches, a
     tombstoned id, a query id that is also stored (self-masked), a
-    zero-norm query (NULL scores) and an empty query batch."""
+    zero-norm query (NULL scores) and an empty query batch. A large k
+    (short candidate lists from some probed cells) serves the same
+    rows too, and a batch whose vectors fit the cap but whose
+    candidates do not takes the fallback."""
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         append_to_ann_index,
@@ -824,12 +827,12 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
         .unionByName(zero)
     )
 
-    def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES):
+    def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES, k=5):
         # cap 0 puts every batch over the cap: the fallback plan
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", cap)
             return ann_query_indexed(
-                spark, q, "vec_id", "embedding", idx, k=5, n_probe=4
+                spark, q, "vec_id", "embedding", idx, k=k, n_probe=4
             )
 
     got = _serve_rows(serve(queries))
@@ -846,6 +849,19 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
         assert [(r[1], r[2]) for r in by_q[i + 900000][:2]] == [(i, 1.0)] * 2
     assert all(r[1] != doomed for r in got)
     assert all(r[2] is None for r in by_q[999999])
+
+    assert _serve_rows(serve(queries, k=40)) == _serve_rows(
+        serve(queries, cap=0, k=40)
+    )
+    # the 18 query vectors fit this cap exactly; their candidates
+    # (4 probes · k rows of 24 bytes each) fit it at k=1, not at k=40
+    vec_cap = 18 * 8 * 64
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "FlatMapGroupsInPandas" in plan(serve(queries, cap=vec_cap, k=40))
+    assert "FlatMapGroupsInPandas" not in plan(serve(queries, cap=vec_cap, k=1))
 
     empty = serve(emb.limit(0))
     empty_off = serve(emb.limit(0), cap=0)
@@ -887,13 +903,155 @@ def test_delete_watermark_skips_empty_batch_dir(spark, tmp_path):
     assert [r["neighbor_id"] for r in hit] == [vid]
 
 
+def test_tombstones_twice_deleted_id_hides_collapsed_rows(spark, tmp_path):
+    """The tombstone set is read raw: an id deleted twice, under two
+    watermarks, has two rows. The anti-join must hide exactly the rows
+    a set collapsed to one max-watermark row per id hides: here the id
+    is stored in batches 0, 1 and 2, deleted at watermarks 0 and 1, so
+    only its batch-2 copy serves. A replayed delete (the same id at the
+    same watermark) changes nothing either."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        _live_cells,
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.products.index_tombstones import (
+        apply_tombstones,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    corpus = emb.orderBy("vec_id").limit(40)
+    ids = [r["vec_id"] for r in corpus.select("vec_id").collect()]
+    a, b, c = ids[:3]
+    idx = str(tmp_path / "ann_twice")
+    build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=4,
+                    learned=False)
+
+    def rows_of(*keep):
+        return corpus.filter(F.col("vec_id").isin(list(keep)))
+
+    delete_from_ann_index(spark, idx, [a, c], compact_threshold=2.0)
+    delete_from_ann_index(spark, idx, [c], compact_threshold=2.0)  # replay
+    append_to_ann_index(spark, rows_of(a, b), "vec_id", "embedding", idx,
+                        ingest_batch=1)
+    m = delete_from_ann_index(spark, idx, [a, b], compact_threshold=2.0)
+    append_to_ann_index(spark, rows_of(a), "vec_id", "embedding", idx,
+                        ingest_batch=2)
+
+    stored = spark.read.parquet(os.path.join(idx, "cells"))
+    collapsed = (
+        spark.read.parquet(os.path.join(idx, "tombstones"))
+        .groupBy("t_id").agg(F.max("t_max_batch").alias("t_max_batch"))
+    )
+    want = stored.join(
+        collapsed,
+        (stored["id"] == collapsed["t_id"])
+        & (stored["ingest_batch"] <= collapsed["t_max_batch"]),
+        "left_anti",
+    )
+
+    def keys(df):
+        return sorted((r["id"], r["ingest_batch"]) for r in df.collect())
+
+    got = keys(apply_tombstones(spark, idx, stored, "id"))
+    assert got == keys(want)
+    assert [k for k in got if k[0] in (a, b, c)] == [(a, 2)]
+    assert int(m["Record count"]) == 40 - 3
+    assert keys(_live_cells(spark, idx, read_manifest(idx))) == got
+
+
+def test_append_record_count_equals_recount(spark, tmp_path):
+    """An append that lands above every stored ingest_batch, is not an
+    idempotent replay and follows a counted manifest adds the rows its
+    write observed to ``Record count``; every other append recounts.
+    Either way the count equals a full recount of the live cells:
+    above-all batch (with a resurrected id), idempotent replay of it,
+    an out-of-order batch holding an id deleted at a later watermark
+    (hidden), and an above-all batch after a ``recount=False``
+    delete."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        _live_cells,
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    ids = [r["vec_id"] for r in emb.orderBy("vec_id").limit(70).collect()]
+    idx = str(tmp_path / "ann_count")
+
+    def rows_of(keep):
+        return emb.filter(F.col("vec_id").isin(list(keep)))
+
+    def assert_recounted(m):
+        assert read_manifest(idx)["Record count"] == m["Record count"]
+        live = _live_cells(spark, idx, m).count()
+        assert int(m["Record count"]) == live, (m["Record count"], live)
+        return live
+
+    build_ann_index(rows_of(ids[:40]), "vec_id", "embedding", idx, dim=64,
+                    n_cells=4, learned=False)
+    delete_from_ann_index(spark, idx, ids[:3], compact_threshold=2.0)
+    # above every batch; ids[0] was deleted at watermark 0 and serves again
+    m = append_to_ann_index(spark, rows_of(ids[40:50] + ids[:1]), "vec_id",
+                            "embedding", idx, ingest_batch=2)
+    assert assert_recounted(m) == 37 + 11
+    # idempotent replay of the same batch replaces it
+    m = append_to_ann_index(spark, rows_of(ids[40:50] + ids[:1]), "vec_id",
+                            "embedding", idx, ingest_batch=2, idempotent=True)
+    assert assert_recounted(m) == 37 + 11
+    # ids[45] deleted at watermark 2, then re-appended in batch 1: hidden
+    delete_from_ann_index(spark, idx, ids[45:46], compact_threshold=2.0)
+    m = append_to_ann_index(spark, rows_of(ids[50:60] + ids[45:46]), "vec_id",
+                            "embedding", idx, ingest_batch=1)
+    assert assert_recounted(m) == 47 + 10
+    delete_from_ann_index(spark, idx, ids[50:52], compact_threshold=2.0,
+                          recount=False)
+    m = append_to_ann_index(spark, rows_of(ids[60:70]), "vec_id",
+                            "embedding", idx, ingest_batch=3)
+    assert assert_recounted(m) == 57 - 2 + 10
+    assert "Record count stale" not in m
+
+
+def test_parquet_rowcount_skips_hidden_paths(tmp_path):
+    """A crashed write leaves ``_temporary/.../part-*.parquet`` under
+    the dataset; Spark's reader never sees it, so the footer count must
+    not count it either (nor ``.``-prefixed files)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from batch_process_dpla_index_spark.products.index_tombstones import (
+        parquet_rowcount,
+    )
+
+    ds = tmp_path / "cells"
+    part = ds / "ingest_batch=0"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), str(part / "part-0.parquet"))
+    assert parquet_rowcount(str(ds)) == 3
+    crashed = ds / "_temporary" / "0" / "_temporary" / "attempt_0"
+    crashed.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [4, 5]}), str(crashed / "part-1.parquet"))
+    pq.write_table(pa.table({"id": [6]}), str(part / ".part-2.parquet"))
+    assert parquet_rowcount(str(ds)) == 3
+
+
 def test_ann_serve_job_count(spark, tmp_path):
-    """A warm serve of a client-built query batch runs at most three
-    jobs: the centroid read and the scoring pass's two waves. The cells
-    read takes the manifest's schema, so no schema-inference job."""
+    """A warm serve of a client-built query batch runs ONE job: the
+    candidate pass. The centroids are read on the driver, the cells
+    read takes the manifest's schema (no schema-inference job), the
+    candidates merge on the driver, and the served local frame's
+    collect runs nothing. With tombstones the anti-join adds only the
+    broadcast of the raw tombstone set: at most two jobs."""
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         build_ann_index,
+        delete_from_ann_index,
     )
     from batch_process_dpla_index_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
@@ -910,16 +1068,22 @@ def test_ann_serve_job_count(spark, tmp_path):
             spark, queries, "vec_id", "embedding", idx, k=5, n_probe=4
         ).collect()
 
-    assert len(serve()) == 25 * 5  # warm
-    sc = spark.sparkContext
-    sc.setJobGroup("test-ann-serve", "ann serve job count")
-    try:
-        serve()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("test-ann-serve"))
-    assert n_jobs <= 3, n_jobs
+    def serve_jobs(group):
+        assert len(serve()) == 25 * 5  # warm
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "ann serve job count")
+        try:
+            serve()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert serve_jobs("test-ann-serve") == 1
+    # takedowns of ids the batch does not hold, twice: a repeated id
+    delete_from_ann_index(spark, idx, [10**9, 10**9 + 1], compact_threshold=2.0)
+    delete_from_ann_index(spark, idx, [10**9], compact_threshold=2.0)
+    assert serve_jobs("test-ann-serve-tombstoned") <= 2
 
 
 def test_ann_cells_schema_tracks_every_write(spark, tmp_path):

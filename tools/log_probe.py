@@ -23,12 +23,14 @@ Prints a markdown table for SCALE.md.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from batch_process_dpla_index_spark.products.snapshots import (  # noqa: E402
     _commit,

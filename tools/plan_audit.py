@@ -15,10 +15,12 @@ Usage::
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MARKERS = {
     "shuffles": r"Exchange hashpartitioning|Exchange rangepartitioning|Exchange RoundRobin",
@@ -136,7 +138,7 @@ def fingerprint(plan: str) -> dict[str, int]:
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    out_md = args[1] if len(args) > 1 else "/root/repo/PLANS.md"
+    out_md = args[1] if len(args) > 1 else os.path.join(ROOT, "PLANS.md")
 
     from batch_process_dpla_index_spark.queries import QUERIES
     from batch_process_dpla_index_spark.session import get_spark

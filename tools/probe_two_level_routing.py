@@ -35,10 +35,11 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 DIM = 64
-WORK = "/root/repo/.scale/two_level_probe"
+WORK = os.path.join(ROOT, ".scale", "two_level_probe")
 
 
 def _gen_vectors(spark, n: int, path: str, id_offset: int = 0) -> None:

@@ -1,5 +1,6 @@
 import os, sys
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 from batch_process_dpla_index_spark.session import get_spark
 spark = get_spark(shuffle_partitions=8)

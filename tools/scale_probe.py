@@ -34,10 +34,11 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BASE = "/root/testdata/sf0.1"
-OUT = "/root/repo/.scale/sf1x"
+OUT = os.path.join(ROOT, ".scale", "sf1x")
 REPLICAS = 10
 OFF = 1_000_000
 

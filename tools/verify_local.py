@@ -13,12 +13,14 @@ Defaults to /root/testdata/sf0.01 and all queries.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",

@@ -710,12 +710,15 @@ def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst")
     # all-integer (exact in any order); the clustering ratio is
     # computed by the SAME when/round expression over the local frame,
     # so the emitted double is bit-identical to the distributed plan's.
-    from batch_process_dpla_index_spark.operators.graph import (
-        _driver_edge_probe,
+    from batch_process_dpla_index_spark.operators import graph
+    from batch_process_dpla_index_spark.operators.relational import (
+        _arrow_local_frame,
+        bounded_collect,
     )
 
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        graph._GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         canon_s, deg_s, _tri_node, n_tri = _triangle_core_driver(
@@ -723,9 +726,6 @@ def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst")
         )
         from batch_process_dpla_index_spark.operators.dedup import (
             _with_cached_deps,
-        )
-        from batch_process_dpla_index_spark.operators.relational import (
-            _arrow_local_frame,
         )
 
         stats = _arrow_local_frame(
@@ -807,22 +807,21 @@ def clustering_coefficients(
     # Driver tier (r17, the triangle_count pattern): integer core
     # driver-side, the lcc divide/round through the same Spark
     # expression over the local frame.
-    from batch_process_dpla_index_spark.operators.graph import (
-        _driver_edge_probe,
+    from batch_process_dpla_index_spark.operators import graph
+    from batch_process_dpla_index_spark.operators.relational import (
+        _arrow_local_frame,
+        bounded_collect,
     )
 
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        graph._GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         _canon_s, deg_s, tri_node, _n_tri = _triangle_core_driver(
             [(r["s"], r["d"]) for r in probe]
         )
         from pyspark.sql.types import LongType, StructField, StructType
-
-        from batch_process_dpla_index_spark.operators.relational import (
-            _arrow_local_frame,
-        )
 
         base = _arrow_local_frame(
             edges.sparkSession,

@@ -25,12 +25,11 @@ see :func:`_maximin_seeds` — engine-reproducible, no RNG.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.functions.text import h60
+from batch_process_dpla_index_spark.operators.relational import bounded_collect
 
 # Cell count at which assign passes route through the two-level path
 # (O(N·√k·dim) instead of O(N·k·dim)) — the ONE routing point shared
@@ -88,18 +87,16 @@ def _assign_cells(df: DataFrame, id_col: str, vec_col: str, centroids) -> DataFr
     )
 
 
-#: Corpora at or under this many rows run maximin seeding driver-side
-#: (one bounded collect instead of k sequential Spark jobs). The k−1
-#: farthest-point passes are inherently sequential global reductions;
-#: at small N each pass is almost pure job-scheduling + Python-boundary
-#: overhead (measured ~0.3 s flat per pass on local[32] — worse on a
-#: real cluster), so below the threshold the identical per-row
-#: arithmetic runs on one collected matrix. 65536 rows × dim 64 × 8 B
-#: ≈ 32 MB against the driver heap; size to the deployment's driver
-#: memory via $SPARK_GRAFT_SEED_DRIVER_ROWS (0 disables the tier).
-_SEED_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SEED_DRIVER_ROWS", "65536")
-)
+#: Corpora at or under this many rows run maximin seeding and the
+#: k-means fits driver-side (one bounded collect,
+#: :func:`relational.bounded_collect`, instead of k sequential Spark
+#: jobs). The k−1 farthest-point passes are inherently sequential
+#: global reductions; at small N each pass is almost pure
+#: job-scheduling + Python-boundary overhead (measured ~0.3 s flat per
+#: pass on local[32] — worse on a real cluster), so below the bound the
+#: identical per-row arithmetic runs on one collected matrix. 65536
+#: rows × dim 64 × 8 B ≈ 32 MB against the driver heap.
+_SEED_DRIVER_MAX_ROWS = 65536
 
 
 def _maximin_seeds_driver(rows, k: int) -> list[list[float]]:
@@ -130,26 +127,21 @@ def _maximin_seeds_driver(rows, k: int) -> list[list[float]]:
 
 
 def _corpus_probe(df: DataFrame, id_col: str, vec_col: str):
-    """LIMIT-bounded (id, vec, __h) probe under ``_SEED_DRIVER_MAX_ROWS``
-    — the collected rows when the corpus fits, else None. Raises on an
-    empty corpus (every consumer refuses one). Shared by the seeding,
+    """The (id, vec, __h) corpus under ``_SEED_DRIVER_MAX_ROWS``
+    (:func:`relational.bounded_collect`), else None. Raises on an empty
+    corpus (every consumer refuses one). Shared by the seeding,
     flat-fit, and two-level-fit driver tiers so they collect at most
     once."""
-    if _SEED_DRIVER_MAX_ROWS <= 0:
-        return None
-    probe = (
+    probe = bounded_collect(
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("vec"),
             h60(F.col(id_col).cast("string")).alias("__h"),
-        )
-        .limit(_SEED_DRIVER_MAX_ROWS + 1)
-        .collect()
+        ),
+        _SEED_DRIVER_MAX_ROWS,
     )
-    if not probe:
+    if probe == []:
         raise ValueError("empty corpus")
-    if len(probe) > _SEED_DRIVER_MAX_ROWS:
-        return None
     return probe
 
 

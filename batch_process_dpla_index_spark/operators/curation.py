@@ -1174,8 +1174,8 @@ def contamination_screened(
     signatures from it with ONE partial fold instead of a second
     MinHash pass over every per-doc shingle array. That also deletes
     the ``num_perm``-min-column aggregate and the ``num_perm``-term
-    comparison chain from the plan (replaced by the driver pair screen
-    :func:`dedup.signature_pairs`): the old
+    comparison chain from the plan (replaced by the pair screen
+    :func:`dedup.overlap_from_signatures`): the old
     sketch tier codegen'd into 4.1 MiB task binaries whose first-run
     JIT dominated the bench cold time (23.6 s cold vs 4.7 s warm,
     sf0.1). Values are unchanged on both tiers; the pair tier reuses
@@ -1185,8 +1185,8 @@ def contamination_screened(
     rows could never survive the semi-join anyway."""
     from batch_process_dpla_index_spark.operators.dedup import (
         _with_cached_deps,
+        overlap_from_signatures,
         shingle_sets,
-        signature_pairs,
         source_sig_from_postings,
     )
 
@@ -1202,28 +1202,25 @@ def contamination_screened(
         .distinct()
         .persist()
     )
-    # ---- tier 1, driver-side (r18, guide §1.2/§5): the signature
-    # frame is |sources| × (num_perm+1) ints — the SAME bounded-
-    # metadata contract products/overlap_index.py already collects
-    # through the driver on every refresh — so the pairwise screen is
-    # integer equality counts over collected rows, not a broadcast
-    # self-join + zip_with + union + two persists' worth of codegen
-    # stages (this query sits at the bench head and paid first-run JIT
-    # for every one of them). Values are bit-identical: n_eq is an
-    # integer, est = round(n_eq/num_perm, 6) replayed exactly by
-    # dedup.signature_pairs (the driver pair-count kernel
-    # overlap_from_signatures uses too).
+    # ---- tier 1: the source-pair screen. The signature frame is
+    # |sources| × (num_perm+1) ints, screened by
+    # dedup.overlap_from_signatures: on the driver when it fits that
+    # tier's bound (integer equality counts; est = round(n_eq/num_perm,
+    # 6) replayed exactly, so values are bit-identical), else by its
+    # broadcast self-join. Either way the flagged pairs are collected:
+    # tier 2 builds its broadcast frames from them.
     from batch_process_dpla_index_spark.operators.relational import (
         _arrow_local_frame,
     )
 
-    sig_rows = sorted(
-        (r["source"], r["sig"])
-        for r in source_sig_from_postings(ex, num_perm).collect()
+    sig = source_sig_from_postings(ex, num_perm).select(
+        "source", *[F.col("sig")[i].alias(f"__p{i}") for i in range(num_perm)]
     )
     flagged_ab = [
-        (a, b, est)
-        for a, b, _, est in signature_pairs(sig_rows, num_perm, est_threshold)
+        tuple(r)
+        for r in overlap_from_signatures(sig, num_perm, est_threshold)
+        .select("source_a", "source_b", "est_jaccard")
+        .collect()
     ]
     flagged_sources = sorted(
         {s for a, b, _ in flagged_ab for s in (a, b)}
@@ -1233,11 +1230,21 @@ def contamination_screened(
         flagged_ab,
         "source_a string, source_b string, est_jaccard double",
     )
-    if len(flagged_sources) == len(sig_rows):
-        # every source flagged (knowable driver-side from the collected
-        # signatures): the semi-join is the identity — reuse the cached
-        # posting frame instead of materializing a second full copy of
-        # it (r18; one less cache pass both cold and warm)
+    # per-source distinct-shingle counts, collected once (the same
+    # bounded |sources| metadata as the signatures): the containment
+    # denominators and the pair estimate then ride ONE post-aggregate
+    # broadcast join below instead of an est column through the
+    # fan-out shuffle plus two size-aggregate broadcast joins
+    size_map = {
+        r["src"]: r["n_sh"]
+        for r in ex.groupBy("src")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
+        .collect()
+    }
+    if len(flagged_sources) == len(size_map):
+        # every source flagged: the semi-join is the identity — reuse
+        # the cached posting frame instead of materializing a second
+        # full copy of it (r18; one less cache pass both cold and warm)
         posts = ex
     else:
         posts = (
@@ -1256,17 +1263,6 @@ def contamination_screened(
                 "left_semi",
             ).persist()
         )
-    # per-source distinct-shingle counts, collected once (the same
-    # bounded |sources| metadata as the signatures): the containment
-    # denominators and the pair estimate then ride ONE post-aggregate
-    # broadcast join below instead of an est column through the
-    # fan-out shuffle plus two size-aggregate broadcast joins
-    size_map = {
-        r["src"]: r["n_sh"]
-        for r in posts.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
-        .collect()
-    }
     pair_meta = _arrow_local_frame(
         df.sparkSession,
         [

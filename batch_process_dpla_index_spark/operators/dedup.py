@@ -29,12 +29,15 @@ the JVM-tokenized array (:func:`shingle_sets`,
 
 from __future__ import annotations
 
-import os
 import pandas as pd  # noqa: F401 — needed at module scope so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.functions.text import h60, tokens
+from batch_process_dpla_index_spark.operators.relational import (
+    _arrow_local_frame,
+    bounded_collect,
+)
 
 # 2^31-1, Mersenne prime: keeps a*h+b < 2^62 (int64-safe with headroom;
 # ANSI mode never overflows).
@@ -850,18 +853,14 @@ def simhash_pairs(
     return _with_cached_deps(out, [sh])
 
 
-#: Driver-tier bound for :func:`connected_components` (r17, the
-#: maximin-seeding pattern): when the pair frame fits this many rows,
-#: the min-label fixpoint runs as ONE bounded collect + a driver-side
-#: union-find instead of k sequential join+agg+checkpoint Spark jobs
-#: (each ~0.5-0.8 s of flat scheduling/AQE overhead at ANY data size,
-#: worse on a real cluster). 262144 edges ≈ a few MB collected — size
-#: to driver memory via $SPARK_GRAFT_CC_DRIVER_EDGES (0 disables the
-#: tier). Above the bound the distributed loop is untouched; the
-#: 100 TB path pays one bounded LIMIT-probe job extra.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "262144")
-)
+#: Driver-tier bound for :func:`connected_components`: when the pair
+#: frame fits this many rows, the min-label fixpoint runs as ONE
+#: bounded collect (:func:`relational.bounded_collect`, which holds the
+#: tier policy) plus a driver-side union-find, instead of k sequential
+#: join+agg+checkpoint Spark jobs (each ~0.5-0.8 s of flat
+#: scheduling/AQE overhead at ANY data size, worse on a real cluster).
+#: 262144 edges ≈ a few MB collected.
+_CC_DRIVER_MAX_EDGES = 262144
 
 
 def _cc_driver_labels(edge_rows: list) -> list:
@@ -933,43 +932,30 @@ def connected_components(
     """
     import warnings
 
-    # Driver tier (r17, the _maximin_seeds pattern — guide §1.2 "fix
-    # the algorithm", §5 driver discipline deliberately inverted with
-    # a bounded collect): a LIMIT-bounded probe fetches the projected
-    # pair list once; when it fits, the label fixpoint is a driver
-    # union-find — identical labels (min reachable id is a unique
-    # fixpoint; the driver tier computes the EXACT closure, which is
-    # what the fixture-converged distributed loop returns too), zero
-    # iterative Spark jobs. NULL endpoints (no pair operator emits
-    # them) fall through to the distributed loop, whose join/aggregate
-    # NULL semantics stay authoritative.
-    if _CC_DRIVER_MAX_EDGES > 0:
-        probe = (
-            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-            .limit(_CC_DRIVER_MAX_EDGES + 1)
-            .collect()
+    # Driver tier (r17): when the projected pair list fits, the label
+    # fixpoint is a driver union-find — identical labels (min
+    # reachable id is a unique fixpoint; the driver computes the EXACT
+    # closure, which is what the converged distributed loop returns
+    # too), zero iterative Spark jobs.
+    probe = bounded_collect(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        _CC_DRIVER_MAX_EDGES,
+    )
+    if probe is not None:
+        from pyspark.sql.types import StructField, StructType
+
+        dtype = pairs.schema[id_a].dataType
+        labels = _arrow_local_frame(
+            pairs.sparkSession,
+            _cc_driver_labels([(r[0], r[1]) for r in probe]),
+            StructType(
+                [
+                    StructField("node", dtype, True),
+                    StructField("cluster", dtype, True),
+                ]
+            ),
         )
-        if len(probe) <= _CC_DRIVER_MAX_EDGES and all(
-            r[0] is not None and r[1] is not None for r in probe
-        ):
-            from pyspark.sql.types import StructField, StructType
-
-            from batch_process_dpla_index_spark.operators.relational import (
-                _arrow_local_frame,
-            )
-
-            dtype = pairs.schema[id_a].dataType
-            labels = _arrow_local_frame(
-                pairs.sparkSession,
-                _cc_driver_labels([(r[0], r[1]) for r in probe]),
-                StructType(
-                    [
-                        StructField("node", dtype, True),
-                        StructField("cluster", dtype, True),
-                    ]
-                ),
-            )
-            return _with_cached_deps(labels, [])
+        return _with_cached_deps(labels, [])
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint() if reliable_checkpoint else df.localCheckpoint()
@@ -1425,10 +1411,6 @@ def semantic_dedup(
         # Python-pickled RDD scan and pay a Python-worker round trip on
         # every execution (the cost class measured at ~3.5 s on the
         # overlap-index refresh)
-        from batch_process_dpla_index_spark.operators.relational import (
-            _arrow_local_frame,
-        )
-
         cent_df = _arrow_local_frame(
             spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -1667,9 +1649,8 @@ def signature_pairs(
     sig)]``: (source_a, source_b, n_equal, est_jaccard) for every pair
     i < j in row order whose est_jaccard >= ``est_threshold`` (the
     default keeps every pair), est_jaccard = round(n_equal/num_perm, 6)
-    as Spark rounds it. The one driver pair-count kernel behind
-    :func:`overlap_from_signatures` and
-    ``curation.contamination_screened``.
+    as Spark rounds it. The driver pair-count kernel of
+    :func:`overlap_from_signatures`.
 
     Blockwise numpy equality counts (256 rows against every later row,
     one comparison per perm) replace an O(|rows|²·num_perm)
@@ -1701,60 +1682,51 @@ def signature_pairs(
     return out
 
 
-_SIG_DRIVER_SOURCES_ENV = "SPARK_GRAFT_SIG_DRIVER_SOURCES"
+#: Driver-tier bound for :func:`overlap_from_signatures`, in sources.
+#: The driver screen emits up to |sources|²/2 Python tuples, so the
+#: bound is set by CPU, not memory: the largest power of two whose
+#: emit-all :func:`signature_pairs` run (64 perms, every pair kept)
+#: stays within 5 s. Timed on the driver alone, one fresh process per
+#: run, 4-vCPU host, loadavg ~1: 2,048 sources 0.9 s (2.1M pairs),
+#: 4,096 sources 4.3-5.0 s (8.4M pairs); 8,192 would be ~4× that.
+#: Turning the emitted pairs into the local frame costs more again: the
+#: whole call took 3.6 s at 2,048 sources and 12.2 s at 4,096.
+_SIG_DRIVER_MAX_SOURCES = 4096
 
 
-def _sig_driver_cap() -> int:
-    import os
+def overlap_from_signatures(
+    sig: DataFrame, num_perm: int = 64, est_threshold: float = 0.0
+) -> DataFrame:
+    """Pair table from a signature frame (source, __p0..__p{num_perm-1})
+    → (source_a, source_b, n_equal, est_jaccard) for every unordered
+    source pair whose est_jaccard = round(matching perms / num_perm, 6)
+    is >= ``est_threshold`` (the default 0 keeps every pair). The one
+    pair-screen entry point: the source-overlap operators keep every
+    pair, ``curation.contamination_screened`` screens at its threshold.
 
-    try:
-        return int(os.environ.get(_SIG_DRIVER_SOURCES_ENV, "65536"))
-    except ValueError:
-        return 65536
-
-
-def overlap_from_signatures(sig: DataFrame, num_perm: int = 64) -> DataFrame:
-    """|sources|² pair table from a signature frame →
-    (source_a, source_b, n_equal, est_jaccard) for every unordered
-    source pair, est_jaccard = matching perms / num_perm.
-
-    Driver tier (r18, the bounded-collect pattern of the r17 CC/graph
-    tiers): the signature frame is |sources| × (num_perm+1) ints —
-    snapshot-log-sized metadata, the SAME contract under which
-    products/overlap_index.py collects it on every refresh — so when
-    it fits ``$SPARK_GRAFT_SIG_DRIVER_SOURCES`` (default 65536, 0
-    disables) it is collected ONCE and the pair counts are integer
-    equality counts on the driver (bit-exact; the estimate replays
-    Spark's round via :func:`spark_round6`). This also halves the
-    upstream work: the distributed self-join's two legs each re-ran
-    the whole signature pipeline (the legs sit behind different
-    exchange types, so exchange reuse never fires — and persisting the
-    65-column frame measured SLOWER than the recompute in r17).
-    A NULL source or NULL perm value, or an over-cap frame, falls back
-    to the distributed join unchanged. The driver pair counts are
-    :func:`signature_pairs`."""
-    cap = _sig_driver_cap()
-    if cap:
-        probe = sig.limit(cap + 1).collect()
-        if len(probe) <= cap and all(
-            r["source"] is not None
-            and all(r[f"__p{i}"] is not None for i in range(num_perm))
-            for r in probe
-        ):
-            from batch_process_dpla_index_spark.operators.relational import (
-                _arrow_local_frame,
-            )
-
-            rows = sorted(
-                (r["source"], tuple(r[f"__p{i}"] for i in range(num_perm)))
-                for r in probe
-            )
-            return _arrow_local_frame(
-                sig.sparkSession,
-                signature_pairs(rows, num_perm),
-                "source_a string, source_b string, n_equal bigint, "
-                "est_jaccard double",
-            )
+    Driver tier (r18): the signature frame is |sources| × (num_perm+1)
+    ints, so when it fits :data:`_SIG_DRIVER_MAX_SOURCES` it is
+    collected ONCE and the pair counts are integer equality counts on
+    the driver (:func:`signature_pairs`; bit-exact, and the estimate
+    replays Spark's round via :func:`spark_round6`, so the threshold
+    is the same rounded-value rule as the distributed ``where``). This
+    also halves the upstream work: the distributed self-join's two
+    legs each re-run the whole signature pipeline (the legs sit behind
+    different exchange types, so exchange reuse never fires — and
+    persisting the 65-column frame measured SLOWER than the recompute
+    in r17)."""
+    perms = [f"__p{i}" for i in range(num_perm)]
+    probe = bounded_collect(
+        sig.select("source", *perms), _SIG_DRIVER_MAX_SOURCES
+    )
+    if probe is not None:
+        rows = sorted((r[0], tuple(r[1:])) for r in probe)
+        return _arrow_local_frame(
+            sig.sparkSession,
+            signature_pairs(rows, num_perm, est_threshold),
+            "source_a string, source_b string, n_equal bigint, "
+            "est_jaccard double",
+        )
     left = sig.select(
         F.col("source").alias("source_a"),
         *[F.col(f"__p{i}").alias(f"__l{i}") for i in range(num_perm)],
@@ -1769,7 +1741,7 @@ def overlap_from_signatures(sig: DataFrame, num_perm: int = 64) -> DataFrame:
     n_eq = F.lit(0)
     for i in range(num_perm):
         n_eq = n_eq + (F.col(f"__l{i}") == F.col(f"__r{i}")).cast("int")
-    return pairs.select(
+    out = pairs.select(
         "source_a",
         "source_b",
         n_eq.cast("bigint").alias("n_equal"),
@@ -1777,6 +1749,9 @@ def overlap_from_signatures(sig: DataFrame, num_perm: int = 64) -> DataFrame:
             n_eq.cast("double") / F.lit(float(num_perm)), 6
         ).alias("est_jaccard"),
     )
+    if est_threshold > 0:
+        out = out.where(F.col("est_jaccard") >= est_threshold)
+    return out
 
 def source_minhash_overlap(
     docs: DataFrame,

@@ -26,8 +26,6 @@ Scale design (100 TB of edges):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,35 +33,16 @@ from batch_process_dpla_index_spark.operators.dedup import (
     _CheckpointHandle,
     _with_cached_deps,
 )
+from batch_process_dpla_index_spark.operators.relational import bounded_collect
 
-#: Driver-tier bound for the fixed-iteration operators below (r17 —
-#: the connected_components / maximin-seeding pattern): when the edge
-#: frame fits this many rows, the k-iteration dataflow runs as ONE
-#: bounded collect + the identical arithmetic driver-side instead of
-#: k sequential join+aggregate Spark jobs (each ~0.4-0.8 s of flat
-#: scheduling/AQE overhead at ANY data size). 131072 edges ≈ a few MB
-#: collected; size via $SPARK_GRAFT_GRAPH_DRIVER_EDGES (0 disables).
-#: Above the bound the distributed loops are untouched — the 100 TB
-#: path pays one bounded LIMIT-probe job extra. NULL endpoints fall
-#: through to the distributed path, whose join/filter NULL semantics
-#: stay authoritative.
-_GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES", "131072")
-)
-
-
-def _driver_edge_probe(edges: DataFrame, cols: list) -> "list | None":
-    """LIMIT-bounded probe of an edge frame projected to ``cols``:
-    the collected rows when they fit the driver bound and carry no
-    NULLs, else None (→ caller runs the distributed path)."""
-    if _GRAPH_DRIVER_MAX_EDGES <= 0:
-        return None
-    rows = edges.select(*cols).limit(_GRAPH_DRIVER_MAX_EDGES + 1).collect()
-    if len(rows) > _GRAPH_DRIVER_MAX_EDGES:
-        return None
-    if any(v is None for r in rows for v in r):
-        return None
-    return rows
+#: Driver-tier bound for the fixed-iteration operators below and the
+#: triangle operators in ``analytics``: when the edge frame fits this
+#: many rows, the k-iteration dataflow runs as ONE bounded collect
+#: (:func:`relational.bounded_collect`, which holds the tier policy)
+#: plus the identical arithmetic driver-side, instead of k sequential
+#: join+aggregate Spark jobs (each ~0.4-0.8 s of flat scheduling/AQE
+#: overhead at ANY data size). 131072 edges ≈ a few MB collected.
+_GRAPH_DRIVER_MAX_EDGES = 131072
 
 
 def pagerank(
@@ -99,15 +78,15 @@ def pagerank(
     # differ by final-ulp rounding, the same cross-engine envelope the
     # 6dp-rounding oracle contract already absorbs (hits_scores
     # docstring) — fixture-verified value-exact at every SF.
-    probe = _driver_edge_probe(
-        edges,
-        [
+    probe = bounded_collect(
+        edges.select(
             F.col(src_col).alias("s"),
             F.col(dst_col).alias("d"),
             (F.col(weight_col) if weight_col else F.lit(1.0))
             .cast("double")
             .alias("w"),
-        ],
+        ),
+        _GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         rows = sorted((r["s"], r["d"], r["w"]) for r in probe)
@@ -286,8 +265,9 @@ def label_propagation(
     # edge set, same synchronous mode-label update with (count desc,
     # label asc) winner — all-integer, so the labels are bit-identical
     # to the distributed loop by construction.
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        _GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         sym = set()
@@ -399,8 +379,9 @@ def hits_scores(
     # Driver tier (r17, the pagerank pattern): identical update rule —
     # distinct edge set, per-node sums in sorted-edge order, the SAME
     # order-free MAX normalizer, missing side scored 0.0.
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        _GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         edge_set = sorted({(r["s"], r["d"]) for r in probe})
@@ -553,8 +534,9 @@ def common_neighbors(
     # the ranking are bit-equal to the distributed plan's. Guarded by
     # the edge bound AND a wedge-work bound (Σ deg² over capped
     # centers) so a hub-heavy capped graph can't stall the driver.
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        _GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         canon_s = set()
@@ -738,8 +720,9 @@ def kcore_decomposition(
     # drop-degree-below-k rounds), so the driver result is bit-exact;
     # the only liberty is stopping early once a round drops nothing —
     # the remaining rounds are no-ops by monotonicity.
-    probe = _driver_edge_probe(
-        edges, [F.col(src_col).alias("s"), F.col(dst_col).alias("d")]
+    probe = bounded_collect(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        _GRAPH_DRIVER_MAX_EDGES,
     )
     if probe is not None:
         sym = set()

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_process_dpla_index_spark.functions.text import h60
+from batch_process_dpla_index_spark.operators.relational import bounded_collect
 
 
 def _subvector_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int):
@@ -82,31 +83,23 @@ def pq_train(
     dsub = dim // m
     import numpy as np
 
-    # Driver tier (r17, the kmeans_fit pattern): when the corpus fits
-    # the seeding bound, the whole train loop is driver arithmetic —
-    # no two-window seeding pipeline and no per-iteration Arrow pass +
-    # aggregate + collect round trip. Same seeding total order
-    # (h60(id|j), id), same per-row assign expression; the double mean
-    # sums accumulate in numpy order instead of partial-aggregate
+    # Driver tier (r17, the kmeans_fit pattern, under its corpus
+    # bound): when the corpus fits, the whole train loop is driver
+    # arithmetic — no two-window seeding pipeline and no per-iteration
+    # Arrow pass + aggregate + collect round trip. Same seeding total
+    # order (h60(id|j), id), same per-row assign expression; the double
+    # mean sums accumulate in numpy order instead of partial-aggregate
     # order — the documented final-ulp envelope of a path with no hash
     # oracle (pq_train feeds only the ann-index product; the
     # oracle-backed PQ queries use pinned codebooks).
     from batch_process_dpla_index_spark.operators import clustering as _cl
 
-    if _cl._SEED_DRIVER_MAX_ROWS > 0:
-        probe = (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-            .limit(_cl._SEED_DRIVER_MAX_ROWS + 1)
-            .collect()
-        )
-        # NULL guard (r17 ADVICE): a NULL id would seed via
-        # _h60_py('None|j') while the distributed concat_ws SKIPS
-        # NULLs, and a NULL vec would raise — mirror _driver_edge_probe
-        # and fall through to the distributed loop instead.
-        if len(probe) <= _cl._SEED_DRIVER_MAX_ROWS and all(
-            r["id"] is not None and r["vec"] is not None for r in probe
-        ):
-            return _pq_train_driver(probe, dim, m, k, n_iter)
+    probe = bounded_collect(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        _cl._SEED_DRIVER_MAX_ROWS,
+    )
+    if probe is not None:
+        return _pq_train_driver(probe, dim, m, k, n_iter)
 
     sub = _subvector_rows(df, id_col, vec_col, dim, m)
 

@@ -46,6 +46,38 @@ def _arrow_local_frame(spark, tuples, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
+def bounded_collect(df: DataFrame, cap: int) -> "list | None":
+    """The probe of every driver tier: ``df``'s rows when it has at
+    most ``cap`` rows and no top-level NULL, else None — the caller
+    then runs its distributed plan. An empty frame returns ``[]``.
+
+    Tier policy, shared by every caller:
+
+    - the probe is ``df.limit(cap + 1).collect()``: Spark's
+      ``executeTake`` scans partitions incrementally, so on a 100 TB
+      input it stops after the first partitions (``toArrow()`` or
+      ``toPandas()`` over a limit would plan a full-scan
+      single-partition shuffle instead). Over the cap, the distributed
+      path pays this one probe job extra;
+    - any NULL falls through to the distributed plan, whose join,
+      filter and aggregate NULL semantics stay authoritative — driver
+      arithmetic is only written for NULL-free rows;
+    - ``cap <= 0`` disables the tier and runs no job. Each cap is a
+      module constant at its call site, sized to driver memory and
+      CPU; tests set one to 0 to pin the distributed plan.
+
+    Callers project ``df`` to exactly the columns their driver
+    arithmetic reads, so the NULL rule covers those and nothing else.
+    The other half of a driver tier is :func:`_arrow_local_frame`,
+    which turns the driver result back into a frame."""
+    if cap <= 0:
+        return None
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap or any(v is None for r in rows for v in r):
+        return None
+    return rows
+
+
 def join_dim(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
     """Equi-join a fact table against a dimension, broadcasting the dim.
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_process_dpla_index_spark.functions.vectors import cosine, dot
+from batch_process_dpla_index_spark.operators.relational import bounded_collect
 
 
 def cosine_topk(
@@ -767,9 +768,9 @@ def _probe_serve(
     place, send the small query set to it and merge the results on the
     coordinator):
 
-    1. collect the batch with a LIMIT cap+1 probe; cap = the most
-       queries whose vectors (8·dim bytes each) and candidates
-       (probes·k rows of 24 bytes each) both fit in
+    1. collect the batch (:func:`relational.bounded_collect`); cap =
+       the most queries whose vectors (8·dim bytes each) and
+       candidates (probes·k rows of 24 bytes each) both fit in
        :data:`_QUERY_BATCH_CAP_BYTES`;
     2. rank each query's probe cells on the driver —
        ``probe_blocks(q_mat)`` yields `_two_level_probe_blocks`-shaped
@@ -788,30 +789,31 @@ def _probe_serve(
     The result is a local frame whose ``round(score, 6)`` Spark folds
     on the driver, so a consumer's action runs no further job. Stored
     vectors never cross an exchange, and nothing shuffles. Over the
-    cap the batch takes the distributed plan instead: ``probing()``
-    assigns it in an Arrow pass and :func:`_ivf_score_and_rank`
-    shuffles stored and probe rows on the cell id. Same rows either
-    way (pinned in tests)."""
+    cap the batch takes the distributed plan instead:
+    ``probing(queries)`` assigns it in an Arrow pass and
+    :func:`_ivf_score_and_rank` shuffles stored and probe rows on the
+    cell id. Same rows either way (pinned in tests): both paths serve
+    the batch without its rows whose id or vector is NULL, which have
+    no neighbors to rank."""
     import numpy as np
     import pyarrow as pa
 
+    queries = queries.select(F.col(id_col), F.col(vec_col)).where(
+        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
+    )
     cap = min(
         _QUERY_BATCH_CAP_BYTES // (8 * dim),
         _QUERY_BATCH_CAP_BYTES // (24 * max(1, probes) * max(1, k)),
     )
-    rows = (
-        queries.select(F.col(id_col), F.col(vec_col)).limit(cap + 1).collect()
-        if cap
-        else []
-    )
-    if not cap or len(rows) > cap:
+    rows = bounded_collect(queries, cap)
+    if rows is None:
         stored_side = stored.select(
             F.col("cell").cast("int").alias("cell"),
             F.lit(0).alias("role"),
             F.col("id"),
             F.col("vec"),
         )
-        return _ivf_score_and_rank(stored_side, probing(), k)
+        return _ivf_score_and_rank(stored_side, probing(queries), k)
     if not rows:
         return stored.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r[0] for r in rows], dtype="int64")
@@ -905,7 +907,8 @@ def ivf_query_topk(
     (:func:`_probe_serve`). A larger batch takes the cell-grouped
     shuffle of :func:`ivf_topk` instead. With ``queries == corpus`` and
     the same quantizer this reproduces ``ivf_topk`` exactly (pinned in
-    tests).
+    tests). Query rows with a NULL id or a NULL vector are dropped on
+    both paths: they return no rows.
     """
     import numpy as np
 
@@ -913,9 +916,9 @@ def ivf_query_topk(
         order = _cell_order(mat @ _coarse_matrix(dim, n_cells, centroids))
         return [(0, np.arange(len(mat)), order[:, :n_probe])]
 
-    def probing():
+    def probing(batch):
         return ivf_cells_pandas(
-            queries, id_col, vec_col, dim, n_cells, n_probe, centroids
+            batch, id_col, vec_col, dim, n_cells, n_probe, centroids
         ).select(
             F.explode("cells").alias("cell"),
             F.lit(1).alias("role"),
@@ -956,9 +959,9 @@ def _imi_query_topk(
     def probe_blocks(mat):
         return _two_level_probe_blocks(mat, model, k_f, p_c, n_probe_fine, "l2")
 
-    def probing():
+    def probing(batch):
         return _imi_probe_cells(
-            queries, coarse, fine, k_f, n_probe_coarse, n_probe_fine,
+            batch, coarse, fine, k_f, n_probe_coarse, n_probe_fine,
             id_col, vec_col,
         )
 

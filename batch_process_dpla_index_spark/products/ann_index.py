@@ -898,7 +898,8 @@ def ann_query_indexed(
     tombstones), and the stored vectors are never shuffled. A larger
     batch (e.g. the ``ann-index query`` CLI over a whole parquet file)
     takes the cell-grouped shuffle of `_ivf_score_and_rank` instead;
-    the rows are the same.
+    the rows are the same. Both paths drop query rows whose id or
+    vector is NULL: such a query returns no rows.
 
     A two-level-built index ranks cells through the IMI probe
     (`similarity._two_level_probe_blocks`): rank k_c coarse centroids,

@@ -1090,7 +1090,7 @@ def test_overlap_driver_tier_matches_distributed(spark, docs, monkeypatch):
         key(r): (r["n_equal"], r["est_jaccard"])
         for r in dd.overlap_from_signatures(sig, 64).collect()
     }
-    monkeypatch.setenv(dd._SIG_DRIVER_SOURCES_ENV, "0")
+    monkeypatch.setattr(dd, "_SIG_DRIVER_MAX_SOURCES", 0)
     dist = {
         key(r): (r["n_equal"], r["est_jaccard"])
         for r in dd.overlap_from_signatures(sig, 64).collect()

@@ -534,10 +534,10 @@ def test_common_neighbors_wedge_plan_is_truncated_topk(spark, monkeypatch):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_source_overlap_single_aggregate_broadcast_selfjoin(spark):
+def test_source_overlap_single_aggregate_broadcast_selfjoin(spark, monkeypatch):
     """r18: the pair table is the driver tier's LocalTableScan by
     default (the signature frame is bounded metadata, collected once
-    under $SPARK_GRAFT_SIG_DRIVER_SOURCES); the distributed shape —
+    under ``dedup._SIG_DRIVER_MAX_SOURCES``); the distributed shape —
     ONE hash aggregate over the shingle stream (min is
     duplicate-idempotent so there is NO distinct) feeding a
     BroadcastNestedLoopJoin — is pinned with the tier disabled, so the
@@ -548,21 +548,11 @@ def test_source_overlap_single_aggregate_broadcast_selfjoin(spark):
 
     import batch_process_dpla_index_spark.operators.dedup as dd
 
-    env = dd._SIG_DRIVER_SOURCES_ENV
-    import os
-
-    old = os.environ.get(env)
-    os.environ[env] = "0"
-    try:
-        plan = _plan(spark, "source_overlap")
-        assert plan.count("Exchange hashpartitioning") <= 2, plan
-        assert "BroadcastNestedLoopJoin" in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-    finally:
-        if old is None:
-            del os.environ[env]
-        else:
-            os.environ[env] = old
+    monkeypatch.setattr(dd, "_SIG_DRIVER_MAX_SOURCES", 0)
+    plan = _plan(spark, "source_overlap")
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_ivf_pq_topk_plan_two_arrow_passes_one_shuffle(spark):

@@ -788,7 +788,8 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     zero-norm query (NULL scores) and an empty query batch. A large k
     (short candidate lists from some probed cells) serves the same
     rows too, and a batch whose vectors fit the cap but whose
-    candidates do not takes the fallback."""
+    candidates do not takes the fallback. Query rows with a NULL id or
+    a NULL vector are served by neither path."""
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         append_to_ann_index,
@@ -820,11 +821,17 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     zero = spark.createDataFrame(
         [(999999, [0.0] * 64)], "vec_id bigint, embedding array<float>"
     )
+    # a NULL id and a NULL vector: both paths drop these rows
+    nulls = spark.createDataFrame(
+        [(None, [0.5] * 64), (999998, None)],
+        "vec_id bigint, embedding array<float>",
+    )
     queries = (
         emb.filter(F.col("vec_id") % 7 == 3).limit(10)
         .unionByName(corpus.filter(F.col("vec_id").isin(dup_ids)))
         .unionByName(twins)
         .unionByName(zero)
+        .unionByName(nulls)
     )
 
     def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES, k=5):
@@ -838,6 +845,7 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     got = _serve_rows(serve(queries))
     assert _serve_rows(serve(queries, cap=0)) == got
     assert len(got) == 5 * 18
+    assert not {None, 999998, -(2**63)} & {r[0] for r in got}
 
     by_q: dict = {}
     for r in got:

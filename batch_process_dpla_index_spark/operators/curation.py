@@ -36,7 +36,10 @@ from typing import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_process_dpla_index_spark.operators.dedup import _with_cached_deps
+from batch_process_dpla_index_spark.operators.dedup import (
+    _with_cached_deps,
+    shingle_sets,
+)
 from batch_process_dpla_index_spark.functions.text import (
     h60,
     mean_token_len_tok,
@@ -68,21 +71,18 @@ def decontaminate(
     is left to AQE (hit counts are usually tiny, but a poisoned
     benchmark shouldn't force-broadcast a big frame).
 
+    Both sides shingle through :func:`dedup.shingle_sets`, so
+    ``benchmark`` carries ``id_col`` and ``text_col`` like the corpus.
+
     Returns every corpus row with ``n_hits`` (distinct contaminated
     shingles) and a ``contaminated`` flag.
     """
-    doc_sh = docs.select(
-        id_col,
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
-        ).alias("__shingle"),
+    doc_sh = shingle_sets(docs, text_col, id_col, n).select(
+        id_col, F.explode("shingles").alias("__shingle")
     )
     bench_sh = (
-        benchmark.select(
-            F.explode(
-                F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
-            ).alias("__shingle")
-        )
+        shingle_sets(benchmark, text_col, id_col, n)
+        .select(F.explode("shingles").alias("__shingle"))
         .where(F.col("__shingle") != "")
         .distinct()
     )
@@ -794,25 +794,16 @@ def ngram_novelty(
     Plan: both sides shuffle on the shingle key (the reference side
     pre-shrunk by DISTINCT, with map-side partial dedup), one
     per-doc count aggregate, then a left join restores shingle-less
-    docs (empty/NULL text) with n_shingles 0 and NULL novelty.
+    docs (empty/NULL text) with n_shingles 0 and NULL novelty. Both
+    sides shingle through :func:`dedup.shingle_sets`, so ``reference``
+    carries ``id_col`` and ``text_col`` like ``docs``.
     """
-    from batch_process_dpla_index_spark.functions.text import (
-        tokens,
-        word_shingles,
-    )
-
-    doc_sh = docs.select(
-        id_col,
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
-        ).alias("__shingle"),
+    doc_sh = shingle_sets(docs, text_col, id_col, n).select(
+        id_col, F.explode("shingles").alias("__shingle")
     )
     ref_sh = (
-        reference.select(
-            F.explode(
-                F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
-            ).alias("__shingle")
-        )
+        shingle_sets(reference, text_col, id_col, n)
+        .select(F.explode("shingles").alias("__shingle"))
         .where(F.col("__shingle") != "")
         .distinct()
         .withColumn("__hit", F.lit(1))

@@ -336,8 +336,8 @@ def adc_tables(Q, books):
 def adc_score_topk(T, qids, C, ids, k):
     """Gather code distances for every (query, stored) pair and emit
     exact local top-k lists with the engine's deterministic tie-break
-    (dist asc, then neighbor_id asc — ``np.lexsort``, the
-    `_ivf_score_and_rank` convention; a bare argpartition drops tied
+    (dist asc, then neighbor_id asc — ``np.lexsort``, the order every
+    top-k merge in the engine keeps; a bare argpartition drops tied
     candidates arbitrarily and breaks run-to-run determinism).
     Returns (query_ids, neighbor_ids, dists) lists."""
     import numpy as np
@@ -355,6 +355,35 @@ def adc_score_topk(T, qids, C, ids, k):
         out_id.extend(ids_i[order])
         out_d.extend(d_i[order])
     return out_q, out_id, out_d
+
+
+def _adc_scorer(books):
+    """The ADC block scorer of the IVF serve
+    (`similarity._probe_serve`): per probed cell, the ADC tables of
+    the queries probing it (:func:`adc_tables`) gathered over the
+    cell's stored ``codes`` (:func:`adc_score_topk`), so the scan
+    never reads the float ``vec``. The serve merges best-first by
+    raw_score DESC, so the block emits ``-dist2``: dist2 ASC, then
+    neighbor_id ASC. The output negates it back before rounding, so a
+    zero distance reads +0.0."""
+    import numpy as np
+
+    from batch_process_dpla_index_spark.operators.similarity import (
+        _BlockScorer,
+    )
+
+    books = np.asarray(books, dtype="float64")
+
+    def block(q_ids, q_mat, c_ids, codes, k):
+        out_q, out_n, out_d = adc_score_topk(
+            adc_tables(q_mat, books), q_ids, codes, c_ids, k
+        )
+        return out_q, out_n, [-d for d in out_d]
+
+    return _BlockScorer(
+        "codes", block,
+        ("query_id", "neighbor_id", "round(-score, 6) AS dist2", "rank AS rnk"),
+    )
 
 
 def pq_topk(
@@ -434,23 +463,19 @@ def ivf_pq_topk(
     every probed cell and the pinned-codebook oracle replay stays
     exact.
 
-    Physical shape — two Arrow passes and one shuffle-free reduce:
-
-    1. ONE `mapInPandas` pass over the corpus assigns the storage cell
-       (N×cells matmul + the `ivf_cells_pandas` lexsort tie-break:
-       dot desc, cell desc) AND the m PQ codes (the `pq_encode` math)
-       in the same batch — the corpus is scanned once.
-    2. Driver side (bounded, the `cosine_topk` broadcast contract):
-       the first ``n_queries`` vectors, their ADC tables
-       (`adc_tables`), their ``n_probe`` nearest cells, and the
-       cell → query-subset routing map — ≤ |Q|·n_probe entries.
-    3. A second Arrow pass over the (cell, codes) rows scores each
-       batch's rows grouped by cell against ONLY the queries probing
-       that cell (`adc_score_topk` per cell-group — same gather, same
-       lexsort (dist, id) local top-k), so the gather cost is
-       |probed pairs|, not |Q|×|corpus|. A global window
-       (dist2 asc, neighbor_id asc) merges per-batch lists; a stored
-       row lives in exactly one cell, so no pair ever duplicates.
+    Physical shape: ONE `mapInPandas` pass over the corpus assigns the
+    storage cell (N×cells matmul + the `ivf_cells_pandas` lexsort
+    tie-break: dot desc, cell desc) AND the m PQ codes (the
+    `pq_encode` math) in the same batch, so the corpus is scanned
+    once. The (cell, id, codes) rows it emits are served as an index
+    by the IVF probe serve (`similarity._probe_serve`) with the ADC
+    block scorer (:func:`_adc_scorer`), the queries being the first
+    ``n_queries`` ids (all rows when None). A batch under the serve's
+    query cap is collected, probes its ``n_probe`` nearest cells on the
+    driver, and is ADC-scored against only the probed cells' codes in
+    one Arrow pass chained onto the encode pass, merged per query on
+    the driver; a larger batch takes the cell shuffle. A stored row
+    lives in exactly one cell, so no pair ever duplicates.
 
     Float/tie parity with the oracle replay: cell dots are BLAS rows
     against `_h60_unit` centroid literals (the proven `ivf_topk`
@@ -460,13 +485,15 @@ def ivf_pq_topk(
 
     At 100 TB: n_cells scales ~√N so each cell's candidate list stays
     bounded; the per-executor state is the codebook tensor + the
-    |Q|·m·k_sub tables; only per-batch top-k rows cross from Python.
+    probing queries' ADC tables; only per-task top-k rows cross from
+    Python.
     """
     import numpy as np
 
     from batch_process_dpla_index_spark.operators.similarity import (
         _cell_order,
-        _centroid_matrix,
+        _coarse_matrix,
+        _flat_query_topk,
     )
 
     books = np.asarray(codebooks, dtype="float64")
@@ -477,30 +504,12 @@ def ivf_pq_topk(
             "by_residual=False quantizes the raw vectors, so the codebooks "
             "must cover the full dimension"
         )
-    cents = (
-        np.asarray(centroids, dtype="float64")
-        if centroids is not None
-        else _centroid_matrix(dim, n_cells)
-    ).T  # dim × cells
+    cents = _coarse_matrix(dim, n_cells, centroids)  # dim × cells
     if cents.shape[0] != dim:
         raise ValueError(
             f"ivf_pq_topk: centroids are {cents.shape[0]}-dim, vectors are "
             f"{dim}-dim"
         )
-
-    qdf = df.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    if n_queries is not None:
-        qdf = qdf.orderBy("qid").limit(n_queries)
-    qrows = qdf.collect()
-    qids = np.asarray([r["qid"] for r in qrows], dtype="int64")
-    Q = np.asarray([list(r["qvec"]) for r in qrows], dtype="float64")
-    T = adc_tables(Q, books)
-    probe_order = _cell_order(Q @ cents)[:, :n_probe]
-    cell2q: dict[int, list[int]] = {}
-    for qi, cells in enumerate(probe_order):
-        for c in cells:
-            cell2q.setdefault(int(c), []).append(qi)
-    routing = {c: np.asarray(v, dtype="int64") for c, v in cell2q.items()}
 
     def encode_assign(batches):
         import pandas as pd
@@ -528,48 +537,10 @@ def ivf_pq_topk(
     encoded = df.select(id_col, vec_col).mapInPandas(
         encode_assign, "id bigint, cell int, codes array<int>"
     )
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cells = pdf["cell"].to_numpy()
-            ids_all = pdf["id"].to_numpy(dtype="int64")
-            C_all = np.asarray(list(pdf["codes"]), dtype="int64")
-            frames = []
-            for c in np.unique(cells):
-                qsel = routing.get(int(c))
-                if qsel is None:
-                    continue
-                mask = cells == c
-                out_q, out_id, out_d = adc_score_topk(
-                    T[qsel], qids[qsel], C_all[mask], ids_all[mask], k
-                )
-                if out_q:
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": out_q,
-                                "neighbor_id": out_id,
-                                "dist2": out_d,
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = encoded.mapInPandas(
-        score, "query_id bigint, neighbor_id bigint, dist2 double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rnk"
-        )
+    queries = df.select(id_col, vec_col)
+    if n_queries is not None:
+        queries = queries.orderBy(F.asc_nulls_last(id_col)).limit(n_queries)
+    return _flat_query_topk(
+        encoded, queries, id_col, vec_col, dim, k, n_cells, n_probe,
+        centroids, _adc_scorer(books),
     )

@@ -36,6 +36,9 @@ follow-up if a fixture ever trips it.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -171,13 +174,15 @@ _CAND_SCHEMA = "query_id bigint, neighbor_id bigint, raw_score double"
 _TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, score double, rank int"
 
 
-def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
+def _rank_candidates(cand: DataFrame, k: int, scorer=None) -> DataFrame:
     """Shared final merge of the BLAS tiers: candidate rows
     (:data:`_CAND_SCHEMA`) → global per-query top-k by (score DESC
     NULLS LAST, neighbor_id ASC) in one window on ``query_id``. NaN
     marks a zero-norm pair and surfaces as NULL (try_divide parity).
-    Written as SQL text: a few py4j calls to plan, where the Column
-    form paid one per expression node."""
+    The ranked rows take ``scorer``'s output projection (the cosine
+    one, :data:`_COSINE`, by default). Written as SQL text: a few py4j
+    calls to plan, where the Column form paid one per expression
+    node."""
     return (
         cand.selectExpr(
             "query_id",
@@ -192,12 +197,7 @@ def _rank_candidates(cand: DataFrame, k: int) -> DataFrame:
             " ORDER BY score DESC NULLS LAST, neighbor_id ASC) AS rank",
         )
         .where(f"rank <= {int(k)}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "round(score, 6) AS score",
-            "CAST(rank AS INT) AS rank",
-        )
+        .selectExpr(*(scorer or _COSINE).output)
     )
 
 
@@ -667,14 +667,16 @@ def ivf_topk(
 
 def _topk_block(q_ids, q_mat, c_ids, c_mat, k: int):
     """Score one (queries × stored) block with ONE BLAS matmul and keep
-    each query row's local top-k — the kernel of both IVF scoring
-    shapes (the cell-grouped `_ivf_score_and_rank` and the
-    broadcast-probe `_probe_serve`). Cosine with NaN for a zero-norm
-    pair (surfaced as NULL by the per-query merge); a stored row never
-    scores against its own id; order (score DESC, NaN last, id ASC).
-    Returns the (query_id, neighbor_id, raw_score) columns as lists."""
+    each query row's local top-k — the cosine block scorer
+    (:data:`_COSINE`) of both IVF scoring shapes (the cell-grouped
+    `_ivf_score_and_rank` and the broadcast-probe `_probe_serve`).
+    Cosine with NaN for a zero-norm pair (surfaced as NULL by the
+    per-query merge); a stored row never scores against its own id;
+    order (score DESC, NaN last, id ASC). Returns the (query_id,
+    neighbor_id, raw_score) columns as lists."""
     import numpy as np
 
+    c_mat = c_mat.astype("float64", copy=False)
     c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     denom = np.outer(q_norm, c_norm)
@@ -694,6 +696,32 @@ def _topk_block(q_ids, q_mat, c_ids, c_mat, k: int):
     return out_q, out_n, out_s
 
 
+class _BlockScorer(NamedTuple):
+    """How an IVF serve scores one probed cell and names its output.
+
+    ``block(q_ids, q_mat, c_ids, c_block, k)`` scores the float64
+    query rows probing a cell against the cell's stored ``payload``
+    column (a row-per-stored-id matrix of the column's own element
+    type) and returns each query's local top-k
+    as (query_id, neighbor_id, raw_score) lists, best first by
+    (raw_score DESC, NaN last, neighbor_id ASC); a stored row never
+    scores against its own id. ``output`` projects the merged
+    (query_id, neighbor_id, score, rank) rows onto the caller's output
+    columns."""
+
+    payload: str
+    block: Callable
+    output: tuple[str, ...]
+
+
+#: cosine over the stored float vectors: (query_id, neighbor_id, score,
+#: rank), the output contract of every similarity tier
+_COSINE = _BlockScorer(
+    "vec", _topk_block,
+    ("query_id", "neighbor_id", "round(score, 6) AS score", "rank"),
+)
+
+
 def _cand_frame(out_q, out_n, out_s):
     import pandas as pd
 
@@ -704,34 +732,40 @@ def _cand_frame(out_q, out_n, out_s):
     )
 
 
-def _ivf_score_and_rank(stored: DataFrame, probing: DataFrame, k: int) -> DataFrame:
-    """Shared IVF scoring tail: union the (cell, role, id, vec) sides,
-    one applyInPandas BLAS matmul per cell, global per-query top-k.
-    ``stored`` rows carry role=0, ``probing`` rows role=1; a stored row
-    never scores against itself (neighbor_id == query_id is masked).
-    The all-pairs operators (:func:`ivf_topk`, :func:`imi_topk`) and
-    the over-cap query serve (:func:`_probe_serve`) run it."""
+def _ivf_score_and_rank(
+    stored: DataFrame, probing: DataFrame, k: int, scorer: _BlockScorer = _COSINE
+) -> DataFrame:
+    """Shared IVF scoring tail: union the (cell, role, id, ...) sides,
+    one applyInPandas ``scorer`` block per cell, global per-query
+    top-k. ``stored`` rows carry role=0 and the scorer's payload
+    column, ``probing`` rows role=1 and the query ``vec``; a stored
+    row never scores against itself (neighbor_id == query_id is
+    masked). The all-pairs operators (:func:`ivf_topk`,
+    :func:`imi_topk`) and the over-cap query serve (:func:`_probe_serve`)
+    run it."""
     import numpy as np
+
+    pay = scorer.payload
 
     def score_cell(pdf):
         st = pdf[pdf["role"] == 0]
         pr = pdf[pdf["role"] == 1]
         if not len(st) or not len(pr):
             return _cand_frame([], [], [])
-        return _cand_frame(*_topk_block(
+        return _cand_frame(*scorer.block(
             pr["id"].to_numpy(dtype="int64"),
             np.array(list(pr["vec"]), dtype="float64"),
             st["id"].to_numpy(dtype="int64"),
-            np.array(list(st["vec"]), dtype="float64"),
+            np.array(list(st[pay])),
             k,
         ))
 
     cand = (
-        stored.unionByName(probing)
+        stored.unionByName(probing, allowMissingColumns=True)
         .groupBy("cell")
         .applyInPandas(score_cell, _CAND_SCHEMA)
     )
-    return _rank_candidates(cand, k)
+    return _rank_candidates(cand, k, scorer)
 
 
 #: Most bytes the broadcast-probe serve moves through the driver, per
@@ -758,11 +792,16 @@ def _probe_serve(
     probes: int,
     probe_blocks,
     probing,
+    scorer: _BlockScorer = _COSINE,
 ) -> DataFrame:
     """Serve a query batch against PRE-ASSIGNED stored cells — the one
-    serve of :func:`ivf_query_topk` (flat) and :func:`_imi_query_topk`
-    (two-level), which differ only in how a query ranks its cells
-    (``probes`` is the most cells one query probes).
+    IVF top-k serve: flat (:func:`_flat_query_topk`) and two-level
+    (:func:`_imi_query_topk`) cells, scored by cosine over the stored
+    vectors (:data:`_COSINE`) or by ADC over the stored PQ codes
+    (`quantization._adc_scorer`). The layouts differ only in how a
+    query ranks its cells (``probes`` is the most cells one query
+    probes); the scorers only in the stored column they read and the
+    output columns they name.
 
     Broadcast-probe plan (Odyssey's choice: leave the stored data in
     place, send the small query set to it and merge the results on the
@@ -777,24 +816,23 @@ def _probe_serve(
        ``(slot, rows, gcells)`` blocks (batch row indices × their
        probed cell ids) from the shared numpy kernels;
     3. filter the stored cells to the probed set (``cell IN (...)``,
-       pushed into the scan);
-    4. ONE mapInArrow pass: per cell an Arrow batch holds, one BLAS
-       matmul against the queries probing it (:func:`_topk_block`),
-       and one per-query top-k over everything the task read
+       pushed into the scan) and read only (cell, id, payload);
+    4. ONE mapInArrow pass: per cell an Arrow batch holds, one
+       ``scorer.block`` against the queries probing it, and one
+       per-query top-k over everything the task read
        (:func:`_merge_topk`);
     5. collect those candidates (the serve's one Spark job, plus the
        tombstone broadcast when the index has deletes) and merge them
        per query on the driver (:func:`_merge_topk` again).
 
-    The result is a local frame whose ``round(score, 6)`` Spark folds
+    The result is a local frame whose output projection Spark folds
     on the driver, so a consumer's action runs no further job. Stored
-    vectors never cross an exchange, and nothing shuffles. Over the
-    cap the batch takes the distributed plan instead:
-    ``probing(queries)`` assigns it in an Arrow pass and
-    :func:`_ivf_score_and_rank` shuffles stored and probe rows on the
-    cell id. Same rows either way (pinned in tests): both paths serve
-    the batch without its rows whose id or vector is NULL, which have
-    no neighbors to rank."""
+    rows never cross an exchange, and nothing shuffles. Over the cap
+    the batch takes the distributed plan instead: ``probing(queries)``
+    assigns it in an Arrow pass and :func:`_ivf_score_and_rank`
+    shuffles stored and probe rows on the cell id. Same rows either
+    way (pinned in tests): both paths serve the batch without its rows
+    whose id or vector is NULL, which have no neighbors to rank."""
     import numpy as np
     import pyarrow as pa
 
@@ -806,16 +844,19 @@ def _probe_serve(
         _QUERY_BATCH_CAP_BYTES // (24 * max(1, probes) * max(1, k)),
     )
     rows = bounded_collect(queries, cap)
+    pay = scorer.payload
     if rows is None:
         stored_side = stored.select(
             F.col("cell").cast("int").alias("cell"),
             F.lit(0).alias("role"),
             F.col("id"),
-            F.col("vec"),
+            F.col(pay),
         )
-        return _ivf_score_and_rank(stored_side, probing(queries), k)
+        return _ivf_score_and_rank(stored_side, probing(queries), k, scorer)
     if not rows:
-        return stored.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return stored.sparkSession.createDataFrame([], _TOPK_SCHEMA).selectExpr(
+            *scorer.output
+        )
     q_ids = np.array([r[0] for r in rows], dtype="int64")
     q_mat = np.array([r[1] for r in rows], dtype="float64")
     blocks = list(probe_blocks(q_mat))
@@ -834,13 +875,15 @@ def _probe_serve(
             cell = rb.column("cell").to_numpy()
             ids = rb.column("id").to_numpy()
             mat = (
-                rb.column("vec").flatten().to_numpy(zero_copy_only=False)
-                .astype("float64").reshape(rb.num_rows, -1)
+                rb.column(pay).flatten().to_numpy(zero_copy_only=False)
+                .reshape(rb.num_rows, -1)
             )
             for c in np.unique(cell):
                 qi = probers[int(c)]
                 sel = cell == c
-                bq, bn, bs = _topk_block(q_ids[qi], q_mat[qi], ids[sel], mat[sel], k)
+                bq, bn, bs = scorer.block(
+                    q_ids[qi], q_mat[qi], ids[sel], mat[sel], k
+                )
                 out_q += bq
                 out_n += bn
                 out_s += bs
@@ -859,7 +902,7 @@ def _probe_serve(
     probed = ", ".join(map(str, cells.tolist()))
     cand = (
         stored.where(f"cell IN ({probed})")
-        .selectExpr("CAST(cell AS INT) AS cell", "id", "vec")
+        .selectExpr("CAST(cell AS INT) AS cell", "id", pay)
         .mapInArrow(score, _CAND_SCHEMA)
         .toArrow()
     )
@@ -879,7 +922,7 @@ def _probe_serve(
         }
     )
     return stored.sparkSession.createDataFrame(merged, _TOPK_SCHEMA).selectExpr(
-        "query_id", "neighbor_id", "round(score, 6) AS score", "rank"
+        *scorer.output
     )
 
 
@@ -910,6 +953,26 @@ def ivf_query_topk(
     tests). Query rows with a NULL id or a NULL vector are dropped on
     both paths: they return no rows.
     """
+    return _flat_query_topk(
+        stored, queries, id_col, vec_col, dim, k, n_cells, n_probe, centroids
+    )
+
+
+def _flat_query_topk(
+    stored: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    k: int,
+    n_cells: int,
+    n_probe: int,
+    centroids=None,
+    scorer: _BlockScorer = _COSINE,
+) -> DataFrame:
+    """:func:`ivf_query_topk` under any block scorer: each query probes
+    its ``n_probe`` flat cells by `_cell_order` (on the driver, or in
+    the fallback's :func:`ivf_cells_pandas` pass)."""
     import numpy as np
 
     def probe_blocks(mat):
@@ -928,7 +991,7 @@ def ivf_query_topk(
 
     return _probe_serve(
         stored, queries, id_col, vec_col, dim, k, min(n_probe, n_cells),
-        probe_blocks, probing,
+        probe_blocks, probing, scorer,
     )
 
 
@@ -944,8 +1007,9 @@ def _imi_query_topk(
     vec_col: str,
     dim: int,
     k: int,
+    scorer: _BlockScorer = _COSINE,
 ) -> DataFrame:
-    """:func:`ivf_query_topk` for a two-level (IMI) index: each query's
+    """:func:`_flat_query_topk` for a two-level (IMI) index: each query's
     p_c·p_f probed global cells come from `_two_level_probe_blocks`
     (l2, the storage-assignment ranking); the fallback probe side is
     :func:`_imi_probe_cells`. Same serve, same rows either way."""
@@ -967,7 +1031,7 @@ def _imi_query_topk(
 
     return _probe_serve(
         stored, queries, id_col, vec_col, dim, k,
-        p_c * min(n_probe_fine, k_f), probe_blocks, probing,
+        p_c * min(n_probe_fine, k_f), probe_blocks, probing, scorer,
     )
 
 

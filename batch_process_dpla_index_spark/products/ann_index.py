@@ -13,13 +13,16 @@ index once per corpus version and amortizes it over every query batch:
   ``_MANIFEST`` pinning (dim, n_cells, quantizer, metric). The cells
   dataset is repartitioned on ``cell`` so query-time cell groups read
   co-located.
-- :func:`ann_query_indexed`: read the manifest + centroids (k×dim
-  floats — the whole model fits on the driver, read there with
-  pyarrow), collect the query batch (up to 1,024 queries at dim 64),
-  rank each query's ``n_probe`` cells on the driver, score ONLY the
-  probed stored cells in one Arrow pass and merge the candidates on
-  the driver (``operators.similarity.ivf_query_topk``): one Spark job.
-  The corpus is never re-assigned and never shuffled.
+- :func:`ann_query_indexed` (cosine over the stored vectors) and
+  :func:`pq_query_indexed` (ADC over the stored PQ codes) share one
+  serve: read the manifest + the coarse model (k×dim floats — the
+  whole model fits on the driver, read there with pyarrow), collect
+  the query batch (up to 1,024 queries at dim 64), rank each query's
+  probe cells on the driver (flat, or the IMI probe of a two-level
+  index), score ONLY the probed stored cells in one Arrow pass with
+  the serve's block scorer and merge the candidates on the driver
+  (``operators.similarity._probe_serve``): one Spark job. The corpus
+  is never re-assigned and never shuffled.
 
 Scale: index build is one corpus pass + k-means (bounded driver state:
 k×dim). Query cost is a scan of the probed cells plus a driver merge
@@ -54,9 +57,11 @@ from batch_process_dpla_index_spark.products.index_tombstones import (
     schema_key,
 )
 from batch_process_dpla_index_spark.operators.similarity import (
+    _COSINE,
+    _flat_query_topk,
     _imi_probe_split,
+    _imi_query_topk,
     ivf_cells_pandas,
-    ivf_query_topk,
 )
 
 
@@ -400,6 +405,24 @@ def load_two_level_model(
     return coarse, fine, k_f
 
 
+def _load_quantizer(
+    spark: SparkSession, index_dir: str, manifest: dict[str, str]
+) -> tuple[tuple | None, list[list[float]] | None]:
+    """(two_level_model, centroids): the quantizer every serve and
+    append of the index routes through — the (coarse, fine, k_f)
+    model of a two-level index, else the flat centroid list (the
+    pseudo-random grid is stored as one too). "k_f" gates the IMI
+    route: indexes built by the pre-round-12 two-level format
+    flattened the model to the FLAT layout (flat centroids dataset +
+    flat cell assignments, no persisted stride), so they must keep
+    serving and appending flat — branching on the quantizer name alone
+    would send them into load_two_level_model and crash on artifacts
+    they never wrote."""
+    if manifest["quantizer"] == "kmeans-two-level" and "k_f" in manifest:
+        return load_two_level_model(spark, index_dir), None
+    return None, load_centroids(spark, index_dir)
+
+
 def load_pq_codebooks(spark: SparkSession, index_dir: str) -> list[list[list[float]]]:
     rows = _read_model(index_dir, "pq_codebooks", ["j", "code"])
     m = max(r["j"] for r in rows) + 1
@@ -419,110 +442,24 @@ def pq_query_indexed(
     k: int = 5,
     n_probe: int = 4,
 ) -> DataFrame:
-    """IVF-PQ serving: route each query to its ``n_probe`` nearest
-    cells, ADC-score the PROBED cells' stored codes (the float vectors
-    are never read), emit exact top-k per query over the probed set.
+    """IVF-PQ serving: (query_id, neighbor_id, dist2, rnk), each
+    query's exact top-k over its ``n_probe`` probed cells by ADC
+    distance (dist2 ASC, then neighbor_id ASC), scored from the stored
+    codes alone — the float vectors are never read.
 
-    Plan shape — the `_ivf_score_and_rank` union-with-role contract:
-    stored rows shuffle ONCE carrying only (cell, id, m codes); query
-    rows shuffle once per probe carrying their float vector (|Q|·
-    n_probe rows — the small side). Each cell group then scores with
-    one ADC gather. No stored×query cross product is ever
-    materialized, which is what makes the m-bytes-per-stored-row
-    motion claim true."""
-    from pyspark.sql.window import Window
-
-    import numpy as np
-
+    The serve is :func:`ann_query_indexed`'s, with the ADC block
+    scorer (`quantization._adc_scorer`) in place of cosine: the same
+    cell routing (flat, or the IMI probe of a two-level index), the
+    same one-job broadcast probe under the query-batch cap, which
+    scans only (cell, id, codes) of the probed cells, and the same
+    cell-shuffle fallback over it. Query rows whose id or vector is
+    NULL return no rows."""
     from batch_process_dpla_index_spark.operators.quantization import (
-        adc_score_topk,
-        adc_tables,
+        _adc_scorer,
     )
 
-    manifest = read_manifest(index_dir)
-    dim = int(manifest["dim"])
-    n_cells = int(manifest["n_cells"])
-    books = np.asarray(load_pq_codebooks(spark, index_dir), dtype="float64")
-
-    if manifest["quantizer"] == "kmeans-two-level" and "k_f" in manifest:
-        # IMI probe routing — same O(√k·dim) cell ranking as
-        # ann_query_indexed (and the same "k_f" gate: pre-round-12
-        # two-level builds stored the flat layout and serve flat); the
-        # ADC scoring tail below is unchanged
-        from batch_process_dpla_index_spark.operators.similarity import (
-            _imi_probe_cells,
-        )
-
-        coarse, fine, k_f = load_two_level_model(spark, index_dir)
-        p_c, p_f = _imi_probe_split(
-            n_probe, n_cells, k_f, len(fine), None, None
-        )
-        probe_side = _imi_probe_cells(
-            queries, coarse, fine, k_f, p_c, p_f, id_col, vec_col
-        ).select(
-            "cell",
-            "role",
-            "id",
-            F.lit(None).cast("array<int>").alias("codes"),
-            F.col("vec").alias("qvec"),
-        )
-    else:
-        centroids = load_centroids(spark, index_dir)
-        q_assigned = ivf_cells_pandas(
-            queries, id_col, vec_col, dim, n_cells, n_probe, centroids
-        )
-        probe_side = q_assigned.select(
-            F.explode("cells").alias("cell"),
-            F.lit(1).alias("role"),
-            F.col("id"),
-            F.lit(None).cast("array<int>").alias("codes"),
-            F.col("vec").alias("qvec"),
-        ).withColumn("cell", F.col("cell").cast("int"))
-    stored_side = (
-        _live_cells(spark, index_dir, manifest)
-        .select(
-            "cell",
-            F.lit(0).alias("role"),
-            "id",
-            "codes",
-            F.lit(None).cast("array<double>").alias("qvec"),
-        )
-    )
-
-    def score_cell(pdf):
-        import pandas as pd
-
-        st = pdf[pdf["role"] == 0]
-        pr = pdf[pdf["role"] == 1]
-        if not len(st) or not len(pr):
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "dist2": pd.Series(dtype="float64")}
-            )
-        qids = pr["id"].to_numpy(dtype="int64")
-        Q = np.asarray(list(pr["qvec"]), dtype="float64")
-        ids = st["id"].to_numpy(dtype="int64")
-        C = np.asarray(list(st["codes"]), dtype="int64")
-        T = adc_tables(Q, books)
-        out_q, out_id, out_d = adc_score_topk(T, qids, C, ids, k)
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_id, "dist2": out_d}
-        )
-
-    scored = (
-        stored_side.unionByName(probe_side)
-        .groupBy("cell")
-        .applyInPandas(score_cell, "query_id bigint, neighbor_id bigint, dist2 double")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rnk")
-    )
+    return _serve(spark, queries, id_col, vec_col, index_dir, k, n_probe,
+                  scorer=_adc_scorer(load_pq_codebooks(spark, index_dir)))
 
 
 def append_to_ann_index(
@@ -574,16 +511,7 @@ def append_to_ann_index(
         )
     dim = int(manifest["dim"])
     n_cells = int(manifest["n_cells"])
-    if manifest["quantizer"] == "kmeans-two-level" and "k_f" in manifest:
-        two_level_model = load_two_level_model(spark, index_dir)
-        centroids = None
-    else:
-        two_level_model = None
-        centroids = (
-            load_centroids(spark, index_dir)
-            if manifest["quantizer"] != "pseudo-random"
-            else None
-        )
+    two_level_model, centroids = _load_quantizer(spark, index_dir, manifest)
     batch = _assign_storage_cells(
         new_vecs, id_col, vec_col, dim, n_cells, two_level_model, centroids
     )
@@ -909,27 +837,39 @@ def ann_query_indexed(
     caller passes only the flat ``n_probe`` budget,
     :func:`_imi_probe_split` factors it (full budget ⇒ exact search,
     same calibration contract as the flat path)."""
+    return _serve(spark, queries, id_col, vec_col, index_dir, k, n_probe,
+                  probe_coarse, probe_fine)
+
+
+def _serve(
+    spark: SparkSession,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    index_dir: str,
+    k: int,
+    n_probe: int,
+    probe_coarse: int | None = None,
+    probe_fine: int | None = None,
+    scorer=_COSINE,
+) -> DataFrame:
+    """The one index serve of :func:`ann_query_indexed` (cosine) and
+    :func:`pq_query_indexed` (ADC): route the batch through the
+    manifest's layout to `similarity._probe_serve` over the live
+    cells."""
     manifest = read_manifest(index_dir)
     stored = _live_cells(spark, index_dir, manifest)
-    # "k_f" gates the IMI route: indexes built by the pre-round-12
-    # two-level format flattened the model to the FLAT layout (flat
-    # centroids dataset + flat cell assignments, no persisted stride),
-    # so they must keep serving flat — branching on the quantizer name
-    # alone would send them into load_two_level_model and crash on
-    # artifacts they never wrote
-    if manifest["quantizer"] == "kmeans-two-level" and "k_f" in manifest:
-        from batch_process_dpla_index_spark.operators.similarity import (
-            _imi_query_topk,
-        )
-
-        coarse, fine, k_f = load_two_level_model(spark, index_dir)
+    dim = int(manifest["dim"])
+    n_cells = int(manifest["n_cells"])
+    two_level_model, centroids = _load_quantizer(spark, index_dir, manifest)
+    if two_level_model is not None:
+        coarse, fine, k_f = two_level_model
         p_c, p_f = _imi_probe_split(
-            n_probe, int(manifest["n_cells"]), k_f, len(fine),
-            probe_coarse, probe_fine,
+            n_probe, n_cells, k_f, len(fine), probe_coarse, probe_fine
         )
         return _imi_query_topk(
             stored, queries, coarse, fine, k_f, p_c, p_f, id_col, vec_col,
-            dim=int(manifest["dim"]), k=k,
+            dim, k, scorer,
         )
     if probe_coarse is not None or probe_fine is not None:
         # silently ignoring the IMI widths on a flat-served index would
@@ -939,19 +879,9 @@ def ann_query_indexed(
             f"(this one serves flat: quantizer={manifest['quantizer']!r}"
             f"{', pre-round-12 flattened layout' if manifest['quantizer'] == 'kmeans-two-level' else ''})"
         )
-    dim = int(manifest["dim"])
-    n_cells = int(manifest["n_cells"])
-    centroids = load_centroids(spark, index_dir)
-    return ivf_query_topk(
-        stored,
-        queries,
-        id_col,
-        vec_col,
-        dim=dim,
-        k=k,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        centroids=centroids,
+    return _flat_query_topk(
+        stored, queries, id_col, vec_col, dim, k, n_cells, n_probe,
+        centroids, scorer,
     )
 
 

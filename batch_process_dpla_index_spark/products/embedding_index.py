@@ -63,6 +63,9 @@ from pyspark.sql import functions as F
 from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
 from batch_process_dpla_index_spark.products.index_tombstones import (
     clear_tombstones,
+    dataset_ddl,
+    read_dataset,
+    schema_key,
 )
 from batch_process_dpla_index_spark.operators.similarity import (
     ivf_cells_pandas,
@@ -70,16 +73,20 @@ from batch_process_dpla_index_spark.operators.similarity import (
 )
 
 
-def _live_stored(spark: SparkSession, index_dir: str) -> DataFrame:
+def _live_stored(
+    spark: SparkSession, index_dir: str, manifest: dict[str, str]
+) -> DataFrame:
     """Stored cell rows minus the tombstone set — THE read every
     consumer (dedup probe, occupancy, rebuild, recounts) goes through,
     so a takedown (`delete_from_embedding_index`) is invisible to no
-    consumer. No tombstones dir → plain scan, zero plan overhead."""
+    consumer. No tombstones dir → plain scan, zero plan overhead. The
+    cells are read with the manifest's ``cells_schema``: no
+    schema-inference job."""
     from batch_process_dpla_index_spark.products.index_tombstones import (
         apply_tombstones,
     )
 
-    stored = spark.read.parquet(os.path.join(index_dir, "cells"))
+    stored = read_dataset(spark, index_dir, "cells", manifest)
     return apply_tombstones(spark, index_dir, stored, "c_id")
 
 
@@ -195,7 +202,9 @@ def build_embedding_index(
     Returns the manifest dict (also written to ``index_dir/_MANIFEST``).
     """
     assign = _assign_mode(n_cells)
-    cells = _cell_rows(vecs, id_col, vec_col, dim, n_cells, assign)
+    cells = _cell_rows(vecs, id_col, vec_col, dim, n_cells, assign).withColumn(
+        "ingest_batch", F.lit(0)
+    )
     from batch_process_dpla_index_spark.products.index_tombstones import (
         keyed_repartition,
     )
@@ -208,9 +217,7 @@ def build_embedding_index(
         # parquet read-back carries no hash-partitioning metadata, so
         # the join plans its own shuffle/broadcast either way; the
         # repartition is file-layout hygiene only
-        keyed_repartition(
-            cells.withColumn("ingest_batch", F.lit(0)), None, "cell"
-        )
+        keyed_repartition(cells, None, "cell")
         .write.mode("overwrite")
         .partitionBy("ingest_batch")
         .parquet(os.path.join(index_dir, "cells"))
@@ -233,18 +240,18 @@ def build_embedding_index(
         "id_col": id_col,
         "vec_col": vec_col,
         "Record count": str(n_vecs),
+        schema_key("cells"): dataset_ddl(cells),
     }
     write_manifest(manifest, index_dir)
     return manifest
 
 
 def _read_pinned(
-    index_dir: str, id_col: str, vec_col: str
+    manifest: dict[str, str], index_dir: str, id_col: str, vec_col: str
 ) -> tuple[int, int, str]:
     """Manifest structural params, with loud drift rejection.
     ``assign`` defaults to "flat" for indexes built before the
     convention was pinned (all of which used the flat quantizer)."""
-    manifest = read_manifest(index_dir)
     for key, got in (("id_col", id_col), ("vec_col", vec_col)):
         if manifest[key] != got:
             raise ValueError(
@@ -286,8 +293,9 @@ def incremental_embedding_dedup_indexed(
     """
     from batch_process_dpla_index_spark.operators.dedup import _with_cached_deps
 
-    dim, n_cells, assign = _read_pinned(index_dir, id_col, vec_col)
-    stored = _live_stored(spark, index_dir)
+    manifest = read_manifest(index_dir)
+    dim, n_cells, assign = _read_pinned(manifest, index_dir, id_col, vec_col)
+    stored = _live_stored(spark, index_dir, manifest)
     if max_ingest_batch is not None:
         stored = stored.where(F.col("ingest_batch") <= int(max_ingest_batch))
     stored = stored.select("cell", "c_id", "c_vec")
@@ -312,7 +320,7 @@ def embedding_index_occupancy(
     manifest = read_manifest(index_dir)
     n_cells = int(manifest["n_cells"])
     per_cell = (
-        _live_stored(spark, index_dir)
+        _live_stored(spark, index_dir, manifest)
         .groupBy("cell")
         .count()
         .agg(
@@ -376,7 +384,7 @@ def rebuild_embedding_index(
     # _live_stored: a rebuild physically drops tombstoned rows (the
     # takedown set is spent once the survivors are rewritten)
     keyed = (
-        _live_stored(spark, index_dir)
+        _live_stored(spark, index_dir, manifest)
         .select("c_id", "c_vec", "ingest_batch")
         .withColumn("__rk", F.monotonically_increasing_id())
         .persist()
@@ -440,6 +448,7 @@ def rebuild_embedding_index(
     manifest["assign"] = assign
     manifest["Record count"] = str(n_vecs)
     manifest["Tombstone count"] = "0"
+    manifest[schema_key("cells")] = dataset_ddl(reassigned)
     write_manifest(manifest, index_dir)
     os.rename(tmp_dir, cells_dir)
     shutil.rmtree(old_dir)
@@ -473,7 +482,8 @@ def append_to_embedding_index(
     probe pass already paid. Caller contract: the assignment must come
     from THIS index's geometry (reading it through this module's query
     path guarantees that via the manifest)."""
-    dim, n_cells, assign = _read_pinned(index_dir, id_col, vec_col)
+    manifest = read_manifest(index_dir)
+    dim, n_cells, assign = _read_pinned(manifest, index_dir, id_col, vec_col)
     if assigned_cells is not None:
         cells = batch_vecs.join(
             assigned_cells.select(
@@ -487,7 +497,8 @@ def append_to_embedding_index(
         )
     else:
         cells = _cell_rows(batch_vecs, id_col, vec_col, dim, n_cells, assign)
-    writer = cells.withColumn("ingest_batch", F.lit(int(ingest_batch))).write
+    cells = cells.withColumn("ingest_batch", F.lit(int(ingest_batch)))
+    writer = cells.write
     if idempotent:
         writer = writer.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
@@ -495,3 +506,5 @@ def append_to_embedding_index(
     else:
         writer = writer.mode("append")
     writer.partitionBy("ingest_batch").parquet(os.path.join(index_dir, "cells"))
+    manifest[schema_key("cells")] = dataset_ddl(cells)
+    write_manifest(manifest, index_dir)

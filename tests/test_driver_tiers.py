@@ -110,13 +110,10 @@ def _contamination(spark, docs, tmp_path):
     return rows
 
 
-def _ann_serve(spark, docs, tmp_path):
+def _index_serve(spark, tmp_path, serve):
     import os
 
-    from batch_process_dpla_index_spark.products.ann_index import (
-        ann_query_indexed,
-        build_ann_index,
-    )
+    from batch_process_dpla_index_spark.products.ann_index import build_ann_index
     from batch_process_dpla_index_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
@@ -124,9 +121,38 @@ def _ann_serve(spark, docs, tmp_path):
     idx = str(tmp_path / "ann")
     if not os.path.exists(idx):
         build_ann_index(emb.orderBy("vec_id").limit(80), "vec_id", "embedding",
-                        idx, dim=64, n_cells=8, learned=False)
+                        idx, dim=64, n_cells=8, learned=False, pq_m=8)
     queries = emb.orderBy(F.desc("vec_id")).limit(5)
-    out = ann_query_indexed(spark, queries, "vec_id", "embedding", idx, k=3)
+    out = serve(spark, queries, "vec_id", "embedding", idx, k=3)
+    return sorted(map(tuple, out.collect()), key=lambda r: (r[0], r[3]))
+
+
+def _ann_serve(spark, docs, tmp_path):
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+    )
+
+    return _index_serve(spark, tmp_path, ann_query_indexed)
+
+
+def _pq_serve(spark, docs, tmp_path):
+    from batch_process_dpla_index_spark.products.ann_index import (
+        pq_query_indexed,
+    )
+
+    return _index_serve(spark, tmp_path, pq_query_indexed)
+
+
+def _ivf_pq_topk(spark, docs, tmp_path):
+    from batch_process_dpla_index_spark.operators.quantization import (
+        ivf_pq_topk,
+        pq_pinned_codebooks,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    out = ivf_pq_topk(emb, pq_pinned_codebooks(), k=5, n_queries=25)
     return sorted(map(tuple, out.collect()), key=lambda r: (r[0], r[3]))
 
 
@@ -139,7 +165,38 @@ TIERS = {
     "overlap_from_signatures": (dedup, "_SIG_DRIVER_MAX_SOURCES", _sig_overlap),
     "contamination_screened": (dedup, "_SIG_DRIVER_MAX_SOURCES", _contamination),
     "ann_serve": (similarity, "_QUERY_BATCH_CAP_BYTES", _ann_serve),
+    "pq_serve": (similarity, "_QUERY_BATCH_CAP_BYTES", _pq_serve),
+    "ivf_pq_topk": (similarity, "_QUERY_BATCH_CAP_BYTES", _ivf_pq_topk),
 }
+
+
+def test_pq_serve_runs_one_job(spark, tmp_path):
+    """A warm PQ serve of a client-built query batch runs ONE job, as
+    the cosine serve does: the candidate pass of the shared probe
+    serve, ADC-scored over the probed cells' codes. The codebooks and
+    centroids are read on the driver and the candidates merge there."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        build_ann_index,
+        pq_query_indexed,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "pq_jobs")
+    build_ann_index(emb, "vec_id", "embedding", idx, dim=64, n_cells=16,
+                    kmeans_iters=2, pq_m=8, pq_iters=2)
+    # a local (Arrow) frame, as a serving client builds its batch
+    queries = spark.createDataFrame(emb.orderBy("vec_id").limit(25).toPandas())
+
+    def serve():
+        return pq_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=5, n_probe=4
+        ).collect()
+
+    assert len(serve()) == 25 * 5  # warm
+    rows, jobs = _jobs_in_group(spark, "pq-serve-jobs", serve)
+    assert len(rows) == 25 * 5 and jobs == 1
 
 
 @pytest.mark.parametrize("site", list(TIERS))

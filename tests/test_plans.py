@@ -555,39 +555,40 @@ def test_source_overlap_single_aggregate_broadcast_selfjoin(spark, monkeypatch):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_ivf_pq_topk_plan_two_arrow_passes_one_shuffle(spark):
-    """The IVF-PQ composite is two narrow Arrow passes (assign+encode,
-    routed ADC gather) and ONE exchange (the per-query merge window) —
-    no broadcast join, no |Q|x|corpus| expression materialization,
-    same physical family as pq_topk."""
-    plan = _plan(spark, "ivf_pq_topk")
-    assert plan.count("MapInPandas") == 2, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 @pytest.fixture(scope="module")
 def ann_serve_plan(spark, tmp_path_factory):
-    """Plans of one ANN serve (5 queries, 4 probes) against a small
-    persisted index — ``serve_plan()`` serves under the current
-    query-batch cap and returns the served frame's executed-plan text
-    and the plan text of each frame the serve collected as Arrow (the
-    broadcast path's candidate pass), in call order."""
+    """Plans of one index serve (5 queries, 4 probes) against a small
+    persisted IVF-PQ index — ``serve_plan(kind)`` serves under the
+    current query-batch cap (``kind`` "ann" = the cosine serve, "pq" =
+    the ADC serve over the codes, "ivf_pq_topk" = the registry query)
+    and returns the served frame's executed-plan text and the plan
+    text of each frame the serve collected as Arrow (the broadcast
+    path's candidate pass), in call order."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
 
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         build_ann_index,
+        pq_query_indexed,
     )
     from batch_process_dpla_index_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     idx = str(tmp_path_factory.mktemp("ann_plan") / "ann")
     build_ann_index(emb.orderBy("vec_id").limit(80), "vec_id", "embedding",
-                    idx, dim=64, n_cells=8, learned=False)
+                    idx, dim=64, n_cells=8, learned=False, pq_m=8)
     queries = emb.orderBy(F.desc("vec_id")).limit(5)
+    serves = {
+        "ann": lambda: ann_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
+        ),
+        "pq": lambda: pq_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
+        ),
+        "ivf_pq_topk": lambda: QUERIES["ivf_pq_topk"](spark, SF_DIR),
+    }
 
-    def serve_plan() -> tuple[str, list[str]]:
+    def serve_plan(kind: str = "ann") -> tuple[str, list[str]]:
         collected: list[str] = []
         to_arrow = ClassicFrame.toArrow
 
@@ -597,28 +598,43 @@ def ann_serve_plan(spark, tmp_path_factory):
 
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(ClassicFrame, "toArrow", spy)
-            df = ann_query_indexed(
-                spark, queries, "vec_id", "embedding", idx, k=3, n_probe=4
-            )
+            df = serves[kind]()
         return df._jdf.queryExecution().executedPlan().toString(), collected
 
     return serve_plan
 
 
-def test_ann_serve_broadcast_probe_plan(ann_serve_plan):
-    """The ANN serve ships the query batch to the stored side and
-    merges the candidates on the driver: the served frame is a local
-    table, and the one candidate pass is ONE Arrow pass over a scan
+def _assert_probe_pass(served: str, cand: str, kind: str) -> None:
+    """The broadcast-probe shape every IVF top-k serve shares: the
+    served frame is a local table, and the one candidate pass is ONE
+    Arrow pass with no cell-grouped Python stage (the stored rows never
+    shuffle), no window, no exchange at all and no broadcast
+    nested-loop join. Over a persisted index the pass reads a scan
     filtered to the probed cells (``In(cell`` pushed into the scan),
-    with no cell-grouped Python stage (the stored vectors never
-    shuffle) and no exchange at all."""
-    served, (cand,) = ann_serve_plan()
+    and only the scorer's payload: the vectors for cosine, the codes
+    for ADC."""
     assert "LocalTableScan" in served and "Exchange" not in served, served
     assert cand.count("MapInArrow") == 1, cand
-    assert "MapInPandas" not in cand and "FlatMapGroupsInPandas" not in cand, cand
-    assert "Exchange" not in cand, cand
+    for node in ("FlatMapGroupsInPandas", "Exchange", "Window",
+                 "BroadcastNestedLoopJoin"):
+        assert node not in cand, cand
+    if kind == "ivf_pq_topk":
+        # the stored side is the one encode pass over the corpus
+        assert cand.count("MapInPandas") == 1, cand
+        return
+    assert "MapInPandas" not in cand, cand
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", cand)
     assert any("In(cell" in p for p in pushed), cand
+    (read,) = re.findall(r"ReadSchema: struct<([^>]*)>", cand)
+    assert ("codes:" in read) == (kind == "pq"), read
+    assert ("vec:" in read) == (kind == "ann"), read
+
+
+def test_ann_serve_broadcast_probe_plan(ann_serve_plan):
+    """The ANN serve ships the query batch to the stored side and
+    merges the candidates on the driver (:func:`_assert_probe_pass`)."""
+    served, (cand,) = ann_serve_plan()
+    _assert_probe_pass(served, cand, "ann")
 
 
 def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
@@ -629,6 +645,22 @@ def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
 
     monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 0)
     assert "FlatMapGroupsInPandas" in ann_serve_plan()[0]
+
+
+@pytest.mark.parametrize("kind", ["pq", "ivf_pq_topk"])
+def test_pq_serve_broadcast_probe_plan(ann_serve_plan, monkeypatch, kind):
+    """The PQ index serve and ``ivf_pq_topk`` take the ANN serve's
+    plan with the ADC scorer (:func:`_assert_probe_pass`): the PQ
+    scan reads (cell, id, codes), never ``vec``. Over the cap both
+    take the cell shuffle, still with no broadcast nested-loop join."""
+    from batch_process_dpla_index_spark.operators import similarity
+
+    served, (cand,) = ann_serve_plan(kind)
+    _assert_probe_pass(served, cand, kind)
+    monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 0)
+    plan = ann_serve_plan(kind)[0]
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_ann_serve_cap_counts_query_vectors(ann_serve_plan, monkeypatch):

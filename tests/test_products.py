@@ -769,32 +769,47 @@ def test_ann_index_pre_stride_two_level_format_serves_flat(spark, tmp_path):
     assert got_rows == baseline_rows and len(got_rows) == 30
 
 
+def _recorded_cells_schema(spark, idx):
+    """The index manifest's ``cells_schema``, checked equal to what a
+    read of the cells dataset would infer."""
+    ddl = read_manifest(idx)["cells_schema"]
+    cells = os.path.join(idx, "cells")
+    inferred = spark.read.parquet(cells).schema.simpleString()
+    assert spark.read.schema(ddl).parquet(cells).schema.simpleString() == inferred
+    return ddl
+
+
 def _serve_rows(df):
     # (query_id, rank) is unique per served row; scores may be NULL
     return sorted(map(tuple, df.collect()), key=lambda r: (r[0], r[3]))
 
 
 @pytest.mark.parametrize(
-    "learned", [True, False, "two-level"],
-    ids=["kmeans", "pseudo-random", "two-level"],
+    "learned,pq_m",
+    [(True, None), (False, None), ("two-level", None), (True, 8),
+     ("two-level", 8)],
+    ids=["kmeans", "pseudo-random", "two-level", "kmeans-pq", "two-level-pq"],
 )
-def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
-    """Tier equivalence of the ANN serve: the broadcast-probe plan
+def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
+    """Tier equivalence of the index serve: the broadcast-probe plan
     (query batch collected, probed cells scored in one Arrow pass) and
     the fallback an over-cap batch takes (the cell-grouped shuffle)
-    return identical rows on every quantizer, through the
-    lifecycle edge cases — an id stored in two ingest batches, a
-    tombstoned id, a query id that is also stored (self-masked), a
-    zero-norm query (NULL scores) and an empty query batch. A large k
-    (short candidate lists from some probed cells) serves the same
-    rows too, and a batch whose vectors fit the cap but whose
-    candidates do not takes the fallback. Query rows with a NULL id or
-    a NULL vector are served by neither path."""
+    return identical rows on every quantizer and both scorers (cosine
+    through ``ann_query_indexed``, ADC over the PQ codes through
+    ``pq_query_indexed``), through the lifecycle edge cases — an id
+    stored in two ingest batches, a tombstoned id, a query id that is
+    also stored (self-masked), a zero-norm query (NULL cosine scores)
+    and an empty query batch. A large k (short candidate lists from
+    some probed cells) serves the same rows too, and a batch whose
+    vectors fit the cap but whose candidates do not takes the
+    fallback. Query rows with a NULL id or a NULL vector are served by
+    neither path."""
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         append_to_ann_index,
         build_ann_index,
         delete_from_ann_index,
+        pq_query_indexed,
     )
     from batch_process_dpla_index_spark.operators import similarity
     from batch_process_dpla_index_spark.sources.tables import load_table
@@ -804,7 +819,7 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     corpus = emb.filter(F.col("vec_id") % 7 != 3)
     idx = str(tmp_path / "ann")
     build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=16,
-                    learned=learned, kmeans_iters=2)
+                    learned=learned, kmeans_iters=2, pq_m=pq_m)
     head = corpus.orderBy("vec_id").limit(4).collect()
     dup_ids = [r["vec_id"] for r in head[:3]]
     doomed = head[3]["vec_id"]
@@ -838,7 +853,7 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
         # cap 0 puts every batch over the cap: the fallback plan
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", cap)
-            return ann_query_indexed(
+            return (pq_query_indexed if pq_m else ann_query_indexed)(
                 spark, q, "vec_id", "embedding", idx, k=k, n_probe=4
             )
 
@@ -853,10 +868,15 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
     for i in dup_ids:
         # self-masked: neither stored copy answers its own id
         assert all(r[1] != i for r in by_q[i])
-        # both copies serve its exact twin, at score 1.0
-        assert [(r[1], r[2]) for r in by_q[i + 900000][:2]] == [(i, 1.0)] * 2
+        # both copies serve its exact twin first: at cosine 1.0, or at
+        # the ADC distance of the twin's own codes (the least any
+        # stored codes can score)
+        first = [(r[1], r[2]) for r in by_q[i + 900000][:2]]
+        assert first[0] == first[1] and first[0][0] == i
+        assert pq_m or first[0][1] == 1.0
     assert all(r[1] != doomed for r in got)
-    assert all(r[2] is None for r in by_q[999999])
+    # a zero vector has no cosine (NULL), but an ADC distance
+    assert all((r[2] is None) == (pq_m is None) for r in by_q[999999])
 
     assert _serve_rows(serve(queries, k=40)) == _serve_rows(
         serve(queries, cap=0, k=40)
@@ -873,7 +893,11 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned):
 
     empty = serve(emb.limit(0))
     empty_off = serve(emb.limit(0), cap=0)
-    schema = "struct<query_id:bigint,neighbor_id:bigint,score:double,rank:int>"
+    schema = (
+        "struct<query_id:bigint,neighbor_id:bigint,dist2:double,rnk:int>"
+        if pq_m
+        else "struct<query_id:bigint,neighbor_id:bigint,score:double,rank:int>"
+    )
     for df in (empty, empty_off):
         assert df.schema.simpleString() == schema and df.count() == 0
 
@@ -1116,11 +1140,7 @@ def test_ann_cells_schema_tracks_every_write(spark, tmp_path):
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
 
     def assert_recorded(idx):
-        ddl = read_manifest(idx)["cells_schema"]
-        cells = os.path.join(idx, "cells")
-        inferred = spark.read.parquet(cells).schema.simpleString()
-        assert spark.read.schema(ddl).parquet(cells).schema.simpleString() == inferred
-        return ddl
+        return _recorded_cells_schema(spark, idx)
 
     flat = str(tmp_path / "flat")
     build_ann_index(corpus, "vec_id", "embedding", flat, dim=64, n_cells=8,
@@ -1194,7 +1214,10 @@ def test_embedding_index_rebuild_lifecycle(spark, tmp_path, capsys):
     idx = str(tmp_path / "embidx")
     # deliberately undersized: 2 cells for a few hundred vectors
     build_embedding_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=2)
+    # every writer records the cells schema, so reads infer nothing
+    ddl = _recorded_cells_schema(spark, idx)
     append_to_embedding_index(batch1, "vec_id", "embedding", idx, ingest_batch=1)
+    assert _recorded_cells_schema(spark, idx) == ddl
     rep = embedding_index_occupancy(spark, idx, design_point=64)
     assert rep["needs_rebuild"] == "True"
     assert int(rep["n_vecs"]) == corpus.count() + batch1.count()
@@ -1221,6 +1244,7 @@ def test_embedding_index_rebuild_lifecycle(spark, tmp_path, capsys):
     assert jobs.main(["embedding-index", "rebuild", idx]) == 0
     manifest = read_manifest(idx)
     assert manifest["rebuilt_from"] == "2"
+    assert _recorded_cells_schema(spark, idx) == ddl
     n_cells_new = int(manifest["n_cells"])
     assert n_cells_new >= 4  # resized toward the design point
     rep2 = embedding_index_occupancy(spark, idx, design_point=64)
@@ -1584,6 +1608,7 @@ def test_embedding_index_delete_tombstone_lifecycle(spark, tmp_path, capsys):
     assert not (tmp_path / "embd" / "tombstones").exists()
     m = read_manifest(idx)
     assert int(m["Record count"]) == 95 and m["Tombstone count"] == "0"
+    _recorded_cells_schema(spark, idx)
     stored = spark.read.parquet(idx + "/cells")
     assert stored.filter(F.col("c_id").isin(doomed)).count() == 0
     per_batch = {

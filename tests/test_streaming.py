@@ -411,11 +411,18 @@ def test_streaming_embedding_dedup_ingest(spark, tmp_path):
     for o in orig_ids:
         assert len({o, o + 100000} & landed_ids) == 1
     assert seen - kept >= 20
+    from batch_process_dpla_index_spark.io.manifest import read_manifest
+
+    # the appends (cells reused from the probe pass) keep the index's
+    # recorded cells schema equal to what a read would infer
+    cells = idx + "/cells"
+    inferred = spark.read.parquet(cells).schema.simpleString()
+    ddl = read_manifest(idx)["cells_schema"]
+    assert spark.read.schema(ddl).parquet(cells).schema.simpleString() == inferred
 
     # replay: nothing new, nothing duplicated, index unchanged — and
     # the REAL manifest survives (a no-op re-run must not clobber it
     # with a zero-batch record over still-landed data)
-    from batch_process_dpla_index_spark.io.manifest import read_manifest
 
     man_before = read_manifest(out)
     assert man_before["Total records kept"] == str(kept)

@@ -172,7 +172,11 @@ def main() -> int:
         "everywhere except documented contract-bounded frames.",
         "The iterative ops (dedup_clusters, kmeans) run their bounded",
         "per-iteration jobs while the registry callable builds the",
-        "result, so their *final* plan here is small by design.",
+        "result, so their *final* plan here is small by design. So does the",
+        "IVF probe serve (ivf_pq_topk): under its query cap it runs its one",
+        "candidate job (0 shuffles, 2 codegen spans, 2 Python nodes: the",
+        "encode MapInPandas and the scoring MapInArrow) and returns a local",
+        "table, whose plan counts nothing.",
         "",
         "| query | shuffles | broadcasts | codegen | python | sorts | top-k | pushed filters | cached | coalesce | 1-part windows |",
         "|---|---|---|---|---|---|---|---|---|---|---|",

@@ -62,9 +62,21 @@ class LocalFilesystem:
     methods are executor-safe (stdlib only, no Spark imports)."""
 
     def put(self, key: str, text: str) -> str:
-        os.makedirs(os.path.dirname(key) or ".", exist_ok=True)
-        with open(key, "w", encoding="utf-8") as f:
-            f.write(text)
+        """Atomic replace: write a hidden sibling, then ``os.replace`` it
+        over ``key``, so a crash mid-write leaves the old text, never a
+        truncated file (a ``_MANIFEST`` put is the commit point of index
+        compaction and rebuilds)."""
+        parent, name = os.path.split(key)
+        os.makedirs(parent or ".", exist_ok=True)
+        tmp = os.path.join(parent, f".{name}.{os.getpid()}.tmp")
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(text)
+            os.replace(tmp, key)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         return key
 
     def put_gzip(self, key: str, text: str) -> str:

@@ -7,8 +7,10 @@ actually trained.
 Dataflow shape per iteration (the only shape that survives 100 TB):
 
 - ASSIGN: one Arrow pass over the corpus — N×dim @ dim×k matmul,
-  argmin of squared L2 per row (`mapInPandas`, centroids shipped in
-  the task closure: k×dim floats, broadcast-sized by contract).
+  argmin of squared L2 per row (`mapInArrow` through
+  `relational._arrow_map`, vectors decoded by
+  `relational._vector_matrix`; centroids shipped in the task closure:
+  k×dim floats, broadcast-sized by contract).
 - UPDATE: posexplode the vectors and hash-aggregate SUM/COUNT keyed by
   (cell, dimension) — map-side partial aggregation means the shuffle
   carries k×dim rows, and no aggregation buffer ever holds more than
@@ -29,7 +31,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.functions.text import h60
-from batch_process_dpla_index_spark.operators.relational import bounded_collect
+from batch_process_dpla_index_spark.operators.relational import (
+    _arrow_map,
+    _vector_matrix,
+    bounded_collect,
+)
 
 # Cell count at which assign passes route through the two-level path
 # (O(N·√k·dim) instead of O(N·k·dim)) — the ONE routing point shared
@@ -57,33 +63,26 @@ def _full_d2(mat, cents, sq):
 
 def _assign_cells(df: DataFrame, id_col: str, vec_col: str, centroids) -> DataFrame:
     """(id, vec, cell): nearest centroid by squared L2, one Arrow pass."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     cents = np.asarray(centroids, dtype="float64")  # k × dim
     sq = (cents * cents).sum(axis=1)  # ‖c‖² per cell
     id_name, vec_name = id_col, vec_col
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            # argmin ‖x−c‖² = argmin ‖c‖² − 2·x·c  (‖x‖² constant per row)
-            cell = (sq[None, :] - 2.0 * (mat @ cents.T)).argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_name].to_numpy(),
-                    "vec": pdf[vec_name],
-                    "cell": cell.astype("int32"),
-                }
-            )
+    def assign(batch):
+        mat = _vector_matrix(batch, vec_name, dim=cents.shape[1])
+        # argmin ‖x−c‖² = argmin ‖c‖² − 2·x·c  (‖x‖² constant per row)
+        cell = (sq[None, :] - 2.0 * (mat @ cents.T)).argmin(axis=1)
+        return {
+            "id": batch.column(id_name),
+            "vec": batch.column(vec_name),
+            "cell": cell,
+        }
 
     vec_ddl = df.schema[vec_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        assign, f"id bigint, vec {vec_ddl}, cell int"
+    return _arrow_map(
+        df.select(F.col(id_col), F.col(vec_col)), assign,
+        f"id bigint, vec {vec_ddl}, cell int",
     )
 
 
@@ -229,10 +228,7 @@ def _maximin_seeds(
     bit-identical seeds). Larger corpora pay one bounded probe job and
     keep the distributed per-pass scans — the 100 TB path is
     unchanged."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     if not skip_probe:
         probe = _corpus_probe(df, id_col, vec_col)
@@ -257,49 +253,38 @@ def _maximin_seeds(
         cents = np.asarray(seeds, dtype="float64")
         sq = (cents * cents).sum(axis=1)
 
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def scan(batch):
             # r17 (guide §2.3 "shuffle fewer bytes"): emit ONE winner
-            # row per TASK instead of every (id, dist2, vec) row — the
-            # old shape returned the whole corpus (vectors included)
-            # through the Arrow channel each pass just so TakeOrdered
-            # could pick one row. Per-row d2 values are computed by
-            # the identical expression, and argmax with the
-            # (dist2 desc, id asc) tie-break is associative over any
-            # partition of the rows, so the selected seed is
+            # row per Arrow batch instead of every (id, dist2, vec)
+            # row — the old shape returned the whole corpus (vectors
+            # included) through the Arrow channel each pass just so
+            # TakeOrdered could pick one row. Per-row d2 values are
+            # computed by the identical expression, and argmax with
+            # the (dist2 desc, id asc) tie-break is associative over
+            # any partition of the rows, so the selected seed is
             # bit-identical to the global-sort formulation.
-            best_d2 = best_id = best_vec = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = np.array(list(pdf[vec_name]), dtype="float64")
-                d2 = (
-                    sq[None, :]
-                    - 2.0 * (mat @ cents.T)
-                    + (mat * mat).sum(axis=1)[:, None]
-                ).min(axis=1)
-                ids = pdf[id_name].to_numpy()
-                # batch winner under the same total order the global
-                # sort used: dist2 desc, id asc
-                i = int(np.lexsort((ids, -d2))[0])
-                if best_d2 is None or (
-                    d2[i] > best_d2
-                    or (d2[i] == best_d2 and ids[i] < best_id)
-                ):
-                    best_d2 = float(d2[i])
-                    best_id = int(ids[i])
-                    best_vec = pdf[vec_name].iloc[i]
-            if best_d2 is not None:
-                yield pd.DataFrame(
-                    {
-                        "id": [best_id],
-                        "dist2": [best_d2],
-                        "vec": [best_vec],
-                    }
-                )
+            mat = _vector_matrix(batch, vec_name, dim=cents.shape[1])
+            d2 = (
+                sq[None, :]
+                - 2.0 * (mat @ cents.T)
+                + (mat * mat).sum(axis=1)[:, None]
+            ).min(axis=1)
+            # a NULL id reads NaN (lexsort puts it last) instead of raising
+            ids = batch.column(id_name).to_numpy(zero_copy_only=False)
+            # batch winner under the same total order the global
+            # sort used: dist2 desc, id asc
+            i = int(np.lexsort((ids, -d2))[0])
+            return {
+                "id": batch.column(id_name).slice(i, 1),
+                "dist2": d2[i:i + 1],
+                "vec": batch.column(vec_name).slice(i, 1),
+            }
 
         far = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .mapInPandas(scan, f"id bigint, dist2 double, vec {vec_ddl}")
+            _arrow_map(
+                df.select(F.col(id_col), F.col(vec_col)), scan,
+                f"id bigint, dist2 double, vec {vec_ddl}",
+            )
             .orderBy(F.col("dist2").desc(), F.col("id").asc())
             .limit(1)
             .collect()[0]
@@ -418,37 +403,29 @@ def kmeans_assign(
     :func:`kmeans_assign_two_level`) so consumers that need (cell,
     vec) — the semantic-dedup pair stage — skip a corpus-wide join
     back on id."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     cents = np.asarray(centroids, dtype="float64")
     sq = (cents * cents).sum(axis=1)
     id_name, vec_name = id_col, vec_col
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            d2 = _full_d2(mat, cents, sq)
-            cell = d2.argmin(axis=1)
-            out = {
-                "id": pdf[id_name].to_numpy(),
-                "cell": cell.astype("int32"),
-                "dist2": d2[np.arange(len(cell)), cell],
-            }
-            if keep_vec:
-                out["vec"] = pdf[vec_name]
-            yield pd.DataFrame(out)
+    def assign(batch):
+        mat = _vector_matrix(batch, vec_name, dim=cents.shape[1])
+        d2 = _full_d2(mat, cents, sq)
+        cell = d2.argmin(axis=1)
+        out = {
+            "id": batch.column(id_name),
+            "cell": cell,
+            "dist2": d2[np.arange(len(cell)), cell],
+        }
+        if keep_vec:
+            out["vec"] = batch.column(vec_name)
+        return out
 
     schema = "id bigint, cell int, dist2 double"
     if keep_vec:
         schema += f", vec {df.schema[vec_col].dataType.simpleString()}"
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        assign, schema
-    )
+    return _arrow_map(df.select(F.col(id_col), F.col(vec_col)), assign, schema)
 
 
 def cluster_silhouette(
@@ -469,10 +446,7 @@ def cluster_silhouette(
     argmin as `kmeans_assign`, so the cell column here equals the
     inference pass bit-for-bit. Per-cell aggregation happens in the
     caller (one map-side-combined shuffle of k rows)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     cents = np.asarray(centroids, dtype="float64")
     if cents.shape[0] < 2:
@@ -483,32 +457,28 @@ def cluster_silhouette(
     sq = (cents * cents).sum(axis=1)
     id_name, vec_name = id_col, vec_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            d2 = _full_d2(mat, cents, sq)
-            cell = d2.argmin(axis=1)
-            rows = np.arange(len(pdf))
-            a2 = d2[rows, cell]  # fancy indexing copies — safe vs the inf write
-            d2[rows, cell] = np.inf
-            b2 = d2.min(axis=1)
-            maxab = np.maximum(a2, b2)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s = np.where(maxab > 0, (b2 - a2) / maxab, 0.0)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_name].to_numpy(),
-                    "cell": cell.astype("int32"),
-                    "a2": a2,
-                    "b2": b2,
-                    "silhouette": s,
-                }
-            )
+    def run(batch):
+        mat = _vector_matrix(batch, vec_name, dim=cents.shape[1])
+        d2 = _full_d2(mat, cents, sq)
+        cell = d2.argmin(axis=1)
+        rows = np.arange(len(mat))
+        a2 = d2[rows, cell]  # fancy indexing copies — safe vs the inf write
+        d2[rows, cell] = np.inf
+        b2 = d2.min(axis=1)
+        maxab = np.maximum(a2, b2)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            s = np.where(maxab > 0, (b2 - a2) / maxab, 0.0)
+        return {
+            "id": batch.column(id_name),
+            "cell": cell,
+            "a2": a2,
+            "b2": b2,
+            "silhouette": s,
+        }
 
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        run, "id bigint, cell int, a2 double, b2 double, silhouette double"
+    return _arrow_map(
+        df.select(F.col(id_col), F.col(vec_col)), run,
+        "id bigint, cell int, a2 double, b2 double, silhouette double",
     )
 
 
@@ -613,10 +583,8 @@ def kmeans_fit_two_level(
     this is the documented-then-built large-k lever (VERDICT r10 #6).
     """
     import math
-    from collections.abc import Iterator
 
     import numpy as np
-    import pandas as pd
 
     k_c = coarse_k if coarse_k is not None else max(2, math.isqrt(k - 1) + 1)
     k_f = -(-k // k_c)  # ceil
@@ -661,29 +629,26 @@ def kmeans_fit_two_level(
             fmats = {c: np.asarray(m, dtype="float64") for c, m in fine.items()}
             fsq = {c: (m * m).sum(axis=1) for c, m in fmats.items()}
 
-            def assign_fine(
-                batches: Iterator[pd.DataFrame],
-            ) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    mat = np.array(list(pdf["vec"]), dtype="float64")
-                    cells = pdf["cell"].to_numpy()
-                    out = np.zeros(len(pdf), dtype="int32")
-                    for c in np.unique(cells):
-                        mask = cells == c
-                        fm = fmats[int(c)]
-                        # argmin ‖x−f‖² = argmin ‖f‖² − 2·x·f per row
-                        out[mask] = (
-                            fsq[int(c)][None, :] - 2.0 * (mat[mask] @ fm.T)
-                        ).argmin(axis=1)
-                    yield pd.DataFrame(
-                        {"cell": cells, "fine": out, "vec": pdf["vec"]}
-                    )
+            def assign_fine(batch):
+                mat = _vector_matrix(batch, "vec", dim=dim)
+                cells = batch.column("cell").to_numpy()
+                out = np.zeros(len(mat), dtype="int32")
+                for c in np.unique(cells):
+                    mask = cells == c
+                    fm = fmats[int(c)]
+                    # argmin ‖x−f‖² = argmin ‖f‖² − 2·x·f per row
+                    out[mask] = (
+                        fsq[int(c)][None, :] - 2.0 * (mat[mask] @ fm.T)
+                    ).argmin(axis=1)
+                return {
+                    "cell": batch.column("cell"),
+                    "fine": out,
+                    "vec": batch.column("vec"),
+                }
 
             vec_ddl = assigned.schema["vec"].dataType.simpleString()
-            fa = assigned.mapInPandas(
-                assign_fine, f"cell int, fine int, vec {vec_ddl}"
+            fa = _arrow_map(
+                assigned, assign_fine, f"cell int, fine int, vec {vec_ddl}"
             )
             x = F.col("x").cast("double")
             s_expr = (
@@ -766,46 +731,40 @@ def kmeans_assign_two_level(
     closer fine centroid on the other side — the IVF probe-width
     tradeoff, accepted for the ~√k-fold assign speedup. One Arrow
     pass; both levels' centroid state is model-sized closure data."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     cell_of, cents, csq, fmats, fsq = _two_level_model_arrays(
         coarse, fine, k_f
     )
     id_name, vec_name = id_col, vec_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            ccell = cell_of[
-                (csq[None, :] - 2.0 * (mat @ cents.T)).argmin(axis=1)
-            ]
-            gcell = np.zeros(len(pdf), dtype="int32")
-            d2 = np.zeros(len(pdf), dtype="float64")
-            for c in np.unique(ccell):
-                mask = ccell == c
-                fm = fmats[int(c)]
-                fd2 = _full_d2(mat[mask], fm, fsq[int(c)])
-                j = fd2.argmin(axis=1)
-                gcell[mask] = int(c) * k_f + j
-                d2[mask] = fd2[np.arange(mask.sum()), j]
-            out = {
-                "id": pdf[id_name].to_numpy(),
-                "coarse_cell": ccell.astype("int32"),
-                "cell": gcell,
-                "dist2": d2,
-            }
-            if keep_vec:
-                # carried through so index builders/serving joins don't
-                # pay a second id-keyed shuffle to reattach the vector
-                out["vec"] = pdf[vec_name]
-            yield pd.DataFrame(out)
+    def run(batch):
+        mat = _vector_matrix(batch, vec_name, dim=cents.shape[1])
+        ccell = cell_of[
+            (csq[None, :] - 2.0 * (mat @ cents.T)).argmin(axis=1)
+        ]
+        gcell = np.zeros(len(mat), dtype="int32")
+        d2 = np.zeros(len(mat), dtype="float64")
+        for c in np.unique(ccell):
+            mask = ccell == c
+            fm = fmats[int(c)]
+            fd2 = _full_d2(mat[mask], fm, fsq[int(c)])
+            j = fd2.argmin(axis=1)
+            gcell[mask] = int(c) * k_f + j
+            d2[mask] = fd2[np.arange(mask.sum()), j]
+        out = {
+            "id": batch.column(id_name),
+            "coarse_cell": ccell,
+            "cell": gcell,
+            "dist2": d2,
+        }
+        if keep_vec:
+            # carried through so index builders/serving joins don't
+            # pay a second id-keyed shuffle to reattach the vector
+            out["vec"] = batch.column(vec_name)
+        return out
 
     schema = "id bigint, coarse_cell int, cell int, dist2 double"
     if keep_vec:
         schema += f", vec {df.schema[vec_col].dataType.simpleString()}"
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(run, schema)
+    return _arrow_map(df.select(F.col(id_col), F.col(vec_col)), run, schema)

@@ -21,6 +21,9 @@ Spark-first shape:
   `clustering.kmeans_fit`).
 - **Encoding** is one Arrow pass with the m×k×dsub codebook tensor in
   the closure (tiny: 8·16·8 floats), emitting ``array<int>`` codes.
+  Every pass here (code assign, encode, score) is a ``mapInArrow``
+  kernel through `relational._arrow_map`, its vectors and codes
+  decoded by `relational._vector_matrix`.
 - **Query** broadcasts the query matrix (the `cosine_topk` contract:
   queries fit in a broadcast; the corpus side is unbounded), builds
   per-query ADC tables once per batch, and gathers code distances
@@ -47,7 +50,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_process_dpla_index_spark.functions.text import h60
-from batch_process_dpla_index_spark.operators.relational import bounded_collect
+from batch_process_dpla_index_spark.operators.relational import (
+    _arrow_map,
+    _vector_matrix,
+    bounded_collect,
+)
 
 
 def _subvector_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int):
@@ -200,23 +207,23 @@ def _assign_codes_rows(sub: DataFrame, books) -> DataFrame:
 
     books = np.asarray(books, dtype="float64")
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(list(pdf["subvec"]), dtype="float64")
-            J = pdf["j"].to_numpy()
-            codes = np.empty(len(pdf), dtype="int32")
-            for j in np.unique(J):
-                mask = J == j
-                d = ((X[mask, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[mask] = d.argmin(axis=1)
-            pdf = pdf.copy()
-            pdf["code"] = codes
-            yield pdf
+    def assign(batch):
+        X = _vector_matrix(batch, "subvec", dim=books.shape[2])
+        J = batch.column("j").to_numpy()
+        codes = np.empty(len(X), dtype="int32")
+        for j in np.unique(J):
+            mask = J == j
+            d = ((X[mask, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+            codes[mask] = d.argmin(axis=1)
+        return {
+            "id": batch.column("id"),
+            "j": batch.column("j"),
+            "subvec": batch.column("subvec"),
+            "code": codes,
+        }
 
-    return sub.mapInPandas(
-        assign, "id bigint, j int, subvec array<double>, code int"
+    return _arrow_map(
+        sub, assign, "id bigint, j int, subvec array<double>, code int"
     )
 
 
@@ -260,35 +267,30 @@ def pq_encode(
 
     books = np.asarray(codebooks, dtype="float64")
     m, k, dsub = books.shape
-    def encode(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(list(pdf[vec_col]), dtype="float64")
-            # the subspace slices read exactly m*dsub components: a
-            # wider vector would be SILENTLY truncated (wrong codes,
-            # no error) and a narrower one would die in a bare numpy
-            # broadcast ValueError — fail with the actual contract
-            # instead (pq_train guards dim % m; the encode path must
-            # guard the vector/codebook pairing)
-            if X.ndim != 2 or X.shape[1] != m * dsub:
-                got = X.shape[1] if X.ndim == 2 else "ragged"
-                raise ValueError(
-                    f"pq_encode: vector dim {got} != m*dsub = "
-                    f"{m}*{dsub} = {m * dsub} of the supplied codebooks"
-                )
-            codes, errs = _encode_matrix(X, books, with_error)
-            out = {"id": pdf[id_col].to_numpy(), "codes": list(codes.tolist())}
-            if with_error:
-                out["recon_err"] = errs
-            yield pd.DataFrame(out)
+    def encode(batch):
+        X = _vector_matrix(batch, vec_col)
+        # the subspace slices read exactly m*dsub components: a wider
+        # vector would be SILENTLY truncated (wrong codes, no error)
+        # and a narrower one would die in a bare numpy broadcast
+        # ValueError — fail with the actual contract instead (pq_train
+        # guards dim % m; the encode path must guard the
+        # vector/codebook pairing)
+        if X.shape[1] != m * dsub:
+            raise ValueError(
+                f"pq_encode: {vec_col!r} vector dim {X.shape[1]} != m*dsub = "
+                f"{m}*{dsub} = {m * dsub} of the supplied codebooks"
+            )
+        codes, errs = _encode_matrix(X, books, with_error)
+        out = {"id": batch.column(id_col), "codes": codes}
+        if with_error:
+            out["recon_err"] = errs
+        return out
 
     schema = "id bigint, codes array<int>"
     if with_error:
         schema += ", recon_err double"
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return _arrow_map(df.select(id_col, vec_col), encode, schema)
 
 
 def pq_pinned_codebooks(m: int = 8, k: int = 16, dsub: int = 8):
@@ -417,20 +419,15 @@ def pq_topk(
     Q = np.asarray([list(r["qvec"]) for r in qrows], dtype="float64")
     T = adc_tables(Q, books)
 
-    def score(batches):
-        import pandas as pd
+    def score(batch):
+        C = _vector_matrix(batch, "codes", dtype="int64")  # rows × m
+        ids = batch.column("id").to_numpy(zero_copy_only=False).astype("int64")
+        out_q, out_id, out_d = adc_score_topk(T, qids, C, ids, k)
+        return {"query_id": out_q, "neighbor_id": out_id, "dist2": out_d}
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.asarray(list(pdf["codes"]), dtype="int64")  # rows × m
-            ids = pdf["id"].to_numpy(dtype="int64")
-            out_q, out_id, out_d = adc_score_topk(T, qids, C, ids, k)
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_id, "dist2": out_d}
-            )
-
-    scored = codes.mapInPandas(score, "query_id bigint, neighbor_id bigint, dist2 double")
+    scored = _arrow_map(
+        codes, score, "query_id bigint, neighbor_id bigint, dist2 double"
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist2").asc(), F.col("neighbor_id").asc()
     )
@@ -463,7 +460,7 @@ def ivf_pq_topk(
     every probed cell and the pinned-codebook oracle replay stays
     exact.
 
-    Physical shape: ONE `mapInPandas` pass over the corpus assigns the
+    Physical shape: ONE `mapInArrow` pass over the corpus assigns the
     storage cell (N×cells matmul + the `ivf_cells_pandas` lexsort
     tie-break: dot desc, cell desc) AND the m PQ codes (the
     `pq_encode` math) in the same batch, so the corpus is scanned
@@ -511,31 +508,15 @@ def ivf_pq_topk(
             f"{dim}-dim"
         )
 
-    def encode_assign(batches):
-        import pandas as pd
+    def encode_assign(batch):
+        X = _vector_matrix(batch, vec_col, dim=dim)
+        order = _cell_order(X @ cents)
+        codes, _ = _encode_matrix(X, books)
+        return {"id": batch.column(id_col), "cell": order[:, 0], "codes": codes}
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(list(pdf[vec_col]), dtype="float64")
-            if X.ndim != 2 or X.shape[1] != m * dsub:
-                got = X.shape[1] if X.ndim == 2 else "ragged"
-                raise ValueError(
-                    f"ivf_pq_topk: vector dim {got} != m*dsub = "
-                    f"{m}*{dsub} = {m * dsub} of the supplied codebooks"
-                )
-            order = _cell_order(X @ cents)
-            codes, _ = _encode_matrix(X, books)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy(),
-                    "cell": order[:, 0].astype("int32"),
-                    "codes": list(codes.tolist()),
-                }
-            )
-
-    encoded = df.select(id_col, vec_col).mapInPandas(
-        encode_assign, "id bigint, cell int, codes array<int>"
+    encoded = _arrow_map(
+        df.select(id_col, vec_col), encode_assign,
+        "id bigint, cell int, codes array<int>",
     )
     queries = df.select(id_col, vec_col)
     if n_queries is not None:

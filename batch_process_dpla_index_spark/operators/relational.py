@@ -46,6 +46,92 @@ def _arrow_local_frame(spark, tuples, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
+def _vector_matrix(batch, name: str, dtype="float64", dim: int | None = None):
+    """The (rows × dim) matrix of an Arrow record batch's list column
+    ``name`` — THE vector decode of every embedding kernel (the
+    k-means/IVF, PQ and LSH passes under :func:`_arrow_map`, and the
+    IVF probe serve). One ``flatten()`` of the values buffer, no
+    per-row Python; ``dtype=None`` keeps the element type (the PQ
+    ``codes`` payload), otherwise it casts (float32 → float64 is exact).
+
+    Raises a ValueError naming the column when a row is NULL, when the
+    row lengths differ, or when they differ from ``dim`` (a kernel's
+    model width): ``flatten()`` drops NULL rows, so a bare
+    ``reshape(n, -1)`` would silently mis-shape the matrix.
+
+    The vector kernels that stay on pandas do so for pandas semantics
+    or for their grouping mode, not for the decode: the multimodal
+    byte decoders, the Misra-Gries fold (``value_counts`` order), the
+    MinHash partial fold (``factorize``), and the two cell/bucket
+    grouped scorers (``applyInPandas``; an ``applyInArrow`` twin would
+    add an execution mode)."""
+    import pyarrow.compute as pc
+
+    arr = batch.column(name)
+    n = len(arr)
+    if arr.null_count:
+        raise ValueError(f"vector column {name!r}: {arr.null_count} NULL row(s)")
+    lens = pc.list_value_length(arr).to_numpy()
+    width = int(lens[0]) if n else (dim or 0)
+    if (lens != width).any():
+        raise ValueError(
+            f"vector column {name!r}: rows of different lengths "
+            f"({int(lens.min())}..{int(lens.max())})"
+        )
+    if dim is not None and n and width != dim:
+        raise ValueError(
+            f"vector column {name!r}: vectors have {width} components, "
+            f"expected {dim}"
+        )
+    mat = arr.flatten().to_numpy(zero_copy_only=False).reshape(n, width)
+    return mat if dtype is None else mat.astype(dtype, copy=False)
+
+
+def _arrow_map(df: DataFrame, fn, ddl: str) -> DataFrame:
+    """``df.mapInArrow`` over a per-batch kernel — THE emit of every
+    embedding kernel. ``fn(batch)`` sees each non-empty
+    ``pyarrow.RecordBatch`` and returns a dict from each ``ddl`` column
+    name to its values, or None to emit nothing. A value may be a 1-D
+    numpy array or a list, a 2-D numpy array for a list column (built
+    from offsets, no per-row Python), or a ``pyarrow.Array`` passed
+    through (``take()`` it to repeat rows).
+
+    Each column is built with the exact Arrow type ``ddl`` declares:
+    ``mapInArrow`` does not coerce (an int32 column declared
+    ``bigint`` fails in the JVM reader). NaN in a float column becomes
+    NULL, as the pandas conversion made it."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def column(v, t):
+        if isinstance(v, pa.Array):
+            return v if v.type == t else v.cast(t)
+        if isinstance(v, np.ndarray) and v.ndim == 2:
+            n, w = v.shape
+            return pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype="int32") * w),
+                pa.array(v.reshape(-1), type=t.value_type, from_pandas=True),
+                type=t,
+            )
+        return pa.array(v, type=t, from_pandas=True)
+
+    def run(batches):
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            out = fn(batch)
+            if out is not None:
+                yield pa.RecordBatch.from_arrays(
+                    [column(out[f.name], f.type) for f in schema], schema=schema
+                )
+
+    return df.mapInArrow(run, ddl)
+
+
 def bounded_collect(df: DataFrame, cap: int) -> "list | None":
     """The probe of every driver tier: ``df``'s rows when it has at
     most ``cap`` rows and no top-level NULL, else None — the caller

@@ -4,7 +4,7 @@ Three tiers, one output contract (query_id, neighbor_id, score, rank),
 each with one Arrow kernel:
 
 - cosine_topk:        exact brute-force top-k: the Arrow/BLAS
-                      mapInPandas path (per-batch matmul + local top-k —
+                      mapInArrow path (per-batch matmul + local top-k —
                       never materializes |Q|×|C|).
 - lsh_ann_topk:       random-hyperplane LSH (sign sketch) bucketing
                       (:func:`lsh_buckets_pandas`); only bucket-sharing
@@ -19,6 +19,11 @@ Plus embedding_near_dup (threshold pairs — the vector member of the
 dedup family). Hyperplanes/centroids derive from the deterministic
 h60 digest, so every tier is value-reproducible in the SQL oracle
 without RNG state.
+
+Every per-batch kernel here decodes its vectors with
+`relational._vector_matrix` and emits through `relational._arrow_map`
+(one ``mapInArrow`` seam); the cell- and bucket-grouped scorers
+(`_ivf_score_and_rank`, `_scored_bucket_pairs`) stay ``applyInPandas``.
 
 Known precision sensitivity (documented, accepted): the BLAS tiers
 rank on raw float64 scores whose summation order (blocked dgemm)
@@ -44,7 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batch_process_dpla_index_spark.functions.vectors import cosine, dot
-from batch_process_dpla_index_spark.operators.relational import bounded_collect
+from batch_process_dpla_index_spark.operators.relational import (
+    _arrow_map,
+    _vector_matrix,
+    bounded_collect,
+)
 
 
 def cosine_topk(
@@ -60,17 +69,14 @@ def cosine_topk(
 
     Physical plan: the (small, broadcastable-by-contract) query side is
     collected to a dense float64 matrix and shipped in the UDF closure;
-    the corpus streams through ``mapInPandas`` where each Arrow batch is
+    the corpus streams through ``mapInArrow`` where each Arrow batch is
     scored against ALL queries with one BLAS matmul and immediately
     reduced to a per-batch top-k per query. Only ``batches × |Q| × k``
     candidate rows reach the final window — never the |Q|×|C| scored
     rows a broadcast join + window would shuffle. No shuffle until the
     tiny candidate set.
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
     if not q_rows:
@@ -82,37 +88,28 @@ def cosine_topk(
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     id_name, vec_name = id_col, vec_col
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            c_ids = pdf[id_name].to_numpy(dtype="int64")
-            c_mat = np.array(list(pdf[vec_name]), dtype="float64")
-            if c_mat.size == 0:
+    def _score(batch):
+        c_ids = batch.column(id_name).to_numpy(zero_copy_only=False).astype("int64")
+        c_mat = _vector_matrix(batch, vec_name, dim=q_mat.shape[1])
+        c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
+        denom = np.outer(c_norm, q_norm)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scores = np.where(denom == 0, np.nan, (c_mat @ q_mat.T) / denom)
+        out_q, out_n, out_s = [], [], []
+        for j, qid in enumerate(q_ids):
+            col = scores[:, j].copy()
+            mask = c_ids != qid  # exclude self-matches
+            ids_j, col = c_ids[mask], col[mask]
+            if ids_j.size == 0:
                 continue
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            denom = np.outer(c_norm, q_norm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(denom == 0, np.nan, (c_mat @ q_mat.T) / denom)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j].copy()
-                mask = c_ids != qid  # exclude self-matches
-                ids_j, col = c_ids[mask], col[mask]
-                if ids_j.size == 0:
-                    continue
-                order = np.lexsort((ids_j, -col))[:k]  # NaN sorts last
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids_j[order])
-                out_s.extend(col[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "raw_score": pd.Series(out_s, dtype="float64"),
-                }
-            )
+            order = np.lexsort((ids_j, -col))[:k]  # NaN sorts last
+            out_q.extend([qid] * len(order))
+            out_n.extend(ids_j[order])
+            out_s.extend(col[order])
+        return {"query_id": out_q, "neighbor_id": out_n, "raw_score": out_s}
 
-    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _score, _CAND_SCHEMA
+    cand = _arrow_map(
+        corpus.select(F.col(id_col), F.col(vec_col)), _score, _CAND_SCHEMA
     )
     return _rank_candidates(cand, k)
 
@@ -437,10 +434,7 @@ def two_level_cells_pandas(
     Remaining entries follow (coarse rank, fine rank) order. One Arrow
     pass; per-row cost (k_c + p_c·k_f)·dim ≈ O(√k·dim) vs the flat
     pass's O(k·dim)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from batch_process_dpla_index_spark.operators.clustering import (
         _two_level_model_arrays,
@@ -454,47 +448,43 @@ def two_level_cells_pandas(
     # trained cell's codebook at least n_probe_fine wide, or all the
     # same narrower width): every block then lands in a fixed column
     # band of a preallocated matrix, so the probe lists assemble as
-    # numpy scatters + ONE C-level tolist, not the per-row/per-cell
-    # interpreted extend this module bans from serve paths.
+    # numpy scatters into one 2-D array the seam emits from offsets,
+    # not the per-row/per-cell interpreted extend this module bans
+    # from serve paths.
     widths = {min(n_probe_fine, m.shape[0]) for m in model[3].values()}
     p_f_u = widths.pop() if len(widths) == 1 else None
     id_name, vec_name = id_col, vec_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            if p_f_u is not None:
-                # full-grid fast path: blocks partition the rows within
-                # each slot, so the matrix is completely filled
-                out = np.empty((len(pdf), p_c * p_f_u), dtype="int64")
-                for s, rows, gids in _two_level_probe_blocks(
-                    mat, model, k_f, p_c, n_probe_fine, metric
-                ):
-                    out[rows, s * p_f_u:(s + 1) * p_f_u] = gids
-                probe_lists = out.tolist()
-            else:
-                # ragged p_f (under-full fine codebooks) keeps the
-                # per-row python assembly, still from the shared
-                # kernel's numpy blocks
-                probe_lists = [[] for _ in range(len(pdf))]
-                for _s, rows, gids in _two_level_probe_blocks(
-                    mat, model, k_f, p_c, n_probe_fine, metric
-                ):
-                    for r, row_gids in zip(rows, gids):
-                        probe_lists[int(r)].extend(int(g) for g in row_gids)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_name].to_numpy(dtype="int64"),
-                    "vec": pdf[vec_name],
-                    "cells": probe_lists,
-                }
-            )
+    def run(batch):
+        mat = _vector_matrix(batch, vec_name, dim=model[1].shape[1])
+        if p_f_u is not None:
+            # full-grid fast path: blocks partition the rows within
+            # each slot, so the matrix is completely filled
+            probe_lists = np.empty((len(mat), p_c * p_f_u), dtype="int64")
+            for s, rows, gids in _two_level_probe_blocks(
+                mat, model, k_f, p_c, n_probe_fine, metric
+            ):
+                probe_lists[rows, s * p_f_u:(s + 1) * p_f_u] = gids
+        else:
+            # ragged p_f (under-full fine codebooks) keeps the
+            # per-row python assembly, still from the shared
+            # kernel's numpy blocks
+            probe_lists = [[] for _ in range(len(mat))]
+            for _s, rows, gids in _two_level_probe_blocks(
+                mat, model, k_f, p_c, n_probe_fine, metric
+            ):
+                for r, row_gids in zip(rows, gids):
+                    probe_lists[int(r)].extend(int(g) for g in row_gids)
+        return {
+            "id": batch.column(id_name),
+            "vec": batch.column(vec_name),
+            "cells": probe_lists,
+        }
 
     vec_ddl = df.schema[vec_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        run, f"id bigint, vec {vec_ddl}, cells array<int>"
+    return _arrow_map(
+        df.select(F.col(id_col), F.col(vec_col)), run,
+        f"id bigint, vec {vec_ddl}, cells array<int>",
     )
 
 
@@ -535,30 +525,22 @@ def ivf_cells_pandas(
     quantizer instead of the deterministic pseudo-random one.
 
     ``include_vec=False`` drops the vector from the OUTPUT (the
-    assignment still reads it): Catalyst cannot prune mapInPandas
+    assignment still reads it): Catalyst cannot prune mapInArrow
     output columns, so a consumer that only wants cell ids (e.g. the
     occupancy diagnostic) would otherwise pay N×dim floats of Arrow
     transfer back to the JVM for nothing."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     cents = _coarse_matrix(dim, n_cells, centroids)
     id_name, vec_name = id_col, vec_col
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            dots = mat @ cents  # N × cells
-            order = _cell_order(dots)[:, :n_probe]
-            out = {"id": pdf[id_name].to_numpy()}
-            if include_vec:
-                out["vec"] = pdf[vec_name]
-            out["cells"] = [row.astype("int32").tolist() for row in order]
-            yield pd.DataFrame(out)
+    def assign(batch):
+        mat = _vector_matrix(batch, vec_name, dim=cents.shape[0])
+        dots = mat @ cents  # N × cells
+        order = _cell_order(dots)[:, :n_probe]
+        out = {"id": batch.column(id_name)}
+        if include_vec:
+            out["vec"] = batch.column(vec_name)
+        out["cells"] = order
+        return out
 
     vec_ddl = df.schema[vec_col].dataType.simpleString()
     schema = (
@@ -566,7 +548,7 @@ def ivf_cells_pandas(
         if include_vec
         else "id bigint, cells array<int>"
     )
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(assign, schema)
+    return _arrow_map(df.select(F.col(id_col), F.col(vec_col)), assign, schema)
 
 
 def cell_occupancy(
@@ -592,7 +574,7 @@ def cell_occupancy(
     single-partition window stages at ANY cell count, so the
     diagnostic itself can't become the skewed task it reports on."""
     # include_vec=False: only the rank-1 cell id crosses Arrow back to
-    # the JVM (mapInPandas output can't be column-pruned by Catalyst —
+    # the JVM (mapInArrow output can't be column-pruned by Catalyst —
     # the default shape would ship all N×dim floats for a 16-row
     # diagnostic)
     assigned = ivf_cells_pandas(
@@ -874,10 +856,7 @@ def _probe_serve(
                 continue
             cell = rb.column("cell").to_numpy()
             ids = rb.column("id").to_numpy()
-            mat = (
-                rb.column(pay).flatten().to_numpy(zero_copy_only=False)
-                .reshape(rb.num_rows, -1)
-            )
+            mat = _vector_matrix(rb, pay, dtype=None)
             for c in np.unique(cell):
                 qi = probers[int(c)]
                 sel = cell == c
@@ -1050,10 +1029,7 @@ def _imi_probe_cells(
     numpy stable argsort, the SQL (d2, ccell) row_number twin), keep
     p_c, then rank the fine centroids within each probed coarse cell
     and keep p_f. One Arrow pass; per-row work (k_c + p_c·k_f)·dim."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from batch_process_dpla_index_spark.operators.clustering import (
         _two_level_model_arrays,
@@ -1065,42 +1041,31 @@ def _imi_probe_cells(
     p_c = min(n_probe_coarse, len(model[0]))
     id_name, vec_name = id_col, vec_col
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            ids = pdf[id_name].to_numpy(dtype="int64")
-            vals = pdf[vec_name].to_numpy()
-            # exploded (cell, id, vec) rows assembled from the shared
-            # probe kernel's numpy blocks (l2: trained-model ranking,
-            # ties to the lower cell — the SQL (d2, ccell) twin)
-            id_parts, vec_parts, cell_parts = [], [], []
-            for _s, rows, gids in _two_level_probe_blocks(
-                mat, model, k_f, p_c, n_probe_fine, "l2"
-            ):
-                rep = np.repeat(rows, gids.shape[1])
-                id_parts.append(ids[rep])
-                vec_parts.append(vals[rep])
-                cell_parts.append(gids.reshape(-1).astype("int32"))
-            if not id_parts:
-                continue
-            yield pd.DataFrame(
-                {
-                    "cell": pd.Series(
-                        np.concatenate(cell_parts), dtype="int32"
-                    ),
-                    "id": pd.Series(np.concatenate(id_parts), dtype="int64"),
-                    "vec": np.concatenate(vec_parts),
-                }
-            )
+    def run(batch):
+        mat = _vector_matrix(batch, vec_name, dim=model[1].shape[1])
+        # exploded (cell, id, vec) rows assembled from the shared
+        # probe kernel's numpy blocks (l2: trained-model ranking,
+        # ties to the lower cell — the SQL (d2, ccell) twin)
+        rep_parts, cell_parts = [], []
+        for _s, rows, gids in _two_level_probe_blocks(
+            mat, model, k_f, p_c, n_probe_fine, "l2"
+        ):
+            rep_parts.append(np.repeat(rows, gids.shape[1]))
+            cell_parts.append(gids.reshape(-1))
+        if not rep_parts:
+            return None
+        rep = np.concatenate(rep_parts)
+        return {
+            "cell": np.concatenate(cell_parts),
+            "id": batch.column(id_name).take(rep),
+            "vec": batch.column(vec_name).take(rep),
+        }
 
     vec_ddl = df.schema[vec_col].dataType.simpleString()
-    return (
-        df.select(F.col(id_col), F.col(vec_col))
-        .mapInPandas(run, f"cell int, id bigint, vec {vec_ddl}")
-        .select("cell", F.lit(1).alias("role"), "id", "vec")
-    )
+    return _arrow_map(
+        df.select(F.col(id_col), F.col(vec_col)), run,
+        f"cell int, id bigint, vec {vec_ddl}",
+    ).select("cell", F.lit(1).alias("role"), "id", "vec")
 
 
 def imi_topk(
@@ -1193,41 +1158,31 @@ def lsh_buckets_pandas(
     bucket bit j = sign(v·p_j), set when v·p_j ≥ 0. One
     N×dim @ dim×planes matmul per table replaces tables×planes
     interpreted dot folds per row."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     planes = _hyperplane_matrix(dim, n_planes, n_tables)
     weights = (1 << np.arange(n_planes)).astype("int64")
     id_name, vec_name = id_col, vec_col
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec_name]), dtype="float64")
-            ids = pdf[id_name].to_numpy(dtype="int64")
-            out_id, out_vec, out_t, out_b = [], [], [], []
-            for t in range(n_tables):
-                proj = mat @ planes[t]  # N × planes
-                buckets = ((proj >= 0) @ weights).astype("int64")
-                out_id.extend(ids)
-                out_vec.extend(pdf[vec_name])
-                out_t.extend([t] * len(ids))
-                out_b.extend(buckets)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out_id, dtype="int64"),
-                    "vec": out_vec,
-                    "table": pd.Series(out_t, dtype="int32"),
-                    "bucket": pd.Series(out_b, dtype="int64"),
-                }
-            )
+    def assign(batch):
+        mat = _vector_matrix(batch, vec_name, dim=dim)
+        buckets = []
+        for t in range(n_tables):
+            proj = mat @ planes[t]  # N × planes
+            buckets.append(((proj >= 0) @ weights).astype("int64"))
+        # table-major rows: every row once per table
+        rep = np.tile(np.arange(len(mat)), n_tables)
+        return {
+            "id": batch.column(id_name).take(rep),
+            "vec": batch.column(vec_name).take(rep),
+            "table": np.repeat(np.arange(n_tables), len(mat)),
+            "bucket": np.concatenate(buckets),
+        }
 
     vec_ddl = df.schema[vec_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        assign, f"id bigint, vec {vec_ddl}, table int, bucket bigint"
+    return _arrow_map(
+        df.select(F.col(id_col), F.col(vec_col)), assign,
+        f"id bigint, vec {vec_ddl}, table int, bucket bigint",
     )
 
 

@@ -44,15 +44,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
 from batch_process_dpla_index_spark.products.index_tombstones import (
+    append_cells,
     clear_tombstones,
     dataset_ddl,
     keyed_repartition,
-    max_ingest_batch,
     read_dataset,
     schema_key,
 )
@@ -487,13 +487,8 @@ def append_to_ann_index(
     (mixed partitioned/unpartitioned parquet is unreadable) — rebuild
     those once to append. Re-learn on drift remains a rebuild.
 
-    Returns the updated manifest. ``Record count`` is the previous
-    count plus the rows the write observed when the batch cannot be
-    hidden or replace rows: it lands above every stored
-    ``ingest_batch`` (so no tombstone's watermark covers it), the write
-    is not an idempotent replay, and the manifest count is current (no
-    ``recount=False`` delete since). Otherwise it is recounted over the
-    live cells."""
+    Returns the updated manifest, its ``Record count`` kept by
+    :func:`index_tombstones.append_cells`."""
     if int(ingest_batch) == 0:
         # 0 is the BUILD partition: an idempotent "append" there would
         # dynamic-overwrite the original corpus with the batch — the
@@ -502,7 +497,6 @@ def append_to_ann_index(
             "ingest_batch=0 is the build partition; appends start at 1"
         )
     manifest = read_manifest(index_dir)
-    cells_path = os.path.join(index_dir, "cells")
     stored_schema = read_dataset(spark, index_dir, "cells", manifest).schema
     if "ingest_batch" not in stored_schema.names:
         raise ValueError(
@@ -524,40 +518,15 @@ def append_to_ann_index(
         codes = pq_encode(new_vecs, books, id_col, vec_col)
         batch = batch.join(codes, "id")
     batch = batch.withColumn("ingest_batch", F.lit(int(ingest_batch)))
-    try:
-        above_all = int(ingest_batch) > max_ingest_batch(cells_path)
-    except (OSError, ValueError):
-        above_all = False
-    observed = None
-    current = "Record count" in manifest and "Record count stale" not in manifest
-    if above_all and not idempotent and current:
-        observed = Observation()
-        batch = batch.observe(observed, F.count(F.lit(1)).alias("n"))
-    writer = keyed_repartition(
-        batch,
-        cell_partitions if cell_partitions is None else min(n_cells, cell_partitions),
-        "cell",
-    ).write
-    if idempotent:
-        writer = writer.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    else:
-        writer = writer.mode("append")
-    writer.partitionBy("ingest_batch").parquet(cells_path)
-    manifest[schema_key("cells")] = dataset_ddl(batch)
-    if observed is not None:
-        n_live = int(manifest["Record count"]) + observed.get["n"]
-    else:
-        # live count: tombstoned rows don't serve, so they don't count
-        # — and an appended id that was deleted under an EARLIER
-        # watermark counts again (append-after-delete resurrects by
-        # design)
-        n_live = _live_cells(spark, index_dir, manifest).count()
-        manifest.pop("Record count stale", None)
-    manifest["Record count"] = str(n_live)
-    write_manifest(manifest, index_dir)
-    return manifest
+    return append_cells(
+        spark, index_dir, manifest,
+        keyed_repartition(
+            batch,
+            cell_partitions if cell_partitions is None else min(n_cells, cell_partitions),
+            "cell",
+        ),
+        "id", ingest_batch, idempotent,
+    )
 
 
 def ann_index_occupancy(

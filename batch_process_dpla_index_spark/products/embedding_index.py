@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
 from batch_process_dpla_index_spark.products.index_tombstones import (
+    append_cells,
     clear_tombstones,
     dataset_ddl,
     read_dataset,
@@ -467,13 +468,14 @@ def append_to_embedding_index(
     ingest_batch: int = 1,
     idempotent: bool = False,
     assigned_cells: DataFrame | None = None,
-) -> None:
+) -> dict[str, str]:
     """Append an accepted batch's cell rows under its ``ingest_batch``
     partition (cell geometry comes from the manifest so drift is
     impossible). ``idempotent=True`` switches to dynamic partition
     overwrite — a streaming checkpoint replay then REPLACES its own
     partition instead of appending a second copy; leave it off for
-    ad-hoc batch appends.
+    ad-hoc batch appends. Returns the updated manifest, its ``Record
+    count`` kept by :func:`index_tombstones.append_cells`.
 
     ``assigned_cells`` — optional (``id``, ``cell``) frame carrying
     each batch vector's rank-1 storage cell, e.g. the output of
@@ -498,13 +500,7 @@ def append_to_embedding_index(
     else:
         cells = _cell_rows(batch_vecs, id_col, vec_col, dim, n_cells, assign)
     cells = cells.withColumn("ingest_batch", F.lit(int(ingest_batch)))
-    writer = cells.write
-    if idempotent:
-        writer = writer.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    else:
-        writer = writer.mode("append")
-    writer.partitionBy("ingest_batch").parquet(os.path.join(index_dir, "cells"))
-    manifest[schema_key("cells")] = dataset_ddl(cells)
-    write_manifest(manifest, index_dir)
+    return append_cells(
+        batch_vecs.sparkSession, index_dir, manifest, cells, "c_id",
+        ingest_batch, idempotent,
+    )

@@ -208,6 +208,64 @@ def apply_tombstones(
     return stored.join(tombs, cond, "left_anti")
 
 
+def append_cells(
+    spark: SparkSession,
+    index_dir: str,
+    manifest: dict[str, str],
+    cells: DataFrame,
+    id_field: str,
+    ingest_batch: int,
+    idempotent: bool,
+) -> dict[str, str]:
+    """Land ``cells`` (the stored rows, ``ingest_batch`` column
+    included) as the ``ingest_batch`` partition of the index's
+    ``cells`` dataset and commit ``manifest`` — the append tail of
+    both vector indexes (`ann_index`, `embedding_index`).
+    ``idempotent=True`` switches to dynamic partition overwrite so a
+    replayed batch REPLACES its own partition instead of appending a
+    second copy.
+
+    ``Record count`` is the previous count plus the rows the write
+    observed when the batch cannot be hidden or replace rows: it lands
+    above every stored ``ingest_batch`` (so no tombstone's watermark
+    covers it), the write is not an idempotent replay, and the
+    manifest count is current (no ``recount=False`` delete since).
+    Otherwise it is recounted over the live cells (``id_field`` names
+    their id column): tombstoned rows don't serve, so they don't count
+    — and an appended id that was deleted under an EARLIER watermark
+    counts again (append-after-delete resurrects by design)."""
+    from pyspark.sql import Observation
+
+    cells_path = os.path.join(index_dir, "cells")
+    try:
+        above_all = int(ingest_batch) > max_ingest_batch(cells_path)
+    except (OSError, ValueError):
+        above_all = False
+    observed = None
+    current = "Record count" in manifest and "Record count stale" not in manifest
+    if above_all and not idempotent and current:
+        observed = Observation()
+        cells = cells.observe(observed, F.count(F.lit(1)).alias("n"))
+    writer = cells.write
+    if idempotent:
+        writer = writer.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+    else:
+        writer = writer.mode("append")
+    writer.partitionBy("ingest_batch").parquet(cells_path)
+    manifest[schema_key("cells")] = dataset_ddl(cells)
+    if observed is not None:
+        n_live = int(manifest["Record count"]) + observed.get["n"]
+    else:
+        stored = read_dataset(spark, index_dir, "cells", manifest)
+        n_live = apply_tombstones(spark, index_dir, stored, id_field).count()
+        manifest.pop("Record count stale", None)
+    manifest["Record count"] = str(n_live)
+    write_manifest(manifest, index_dir)
+    return manifest
+
+
 def _ids_frame(spark: SparkSession, ids, id_col: str | None) -> DataFrame:
     """Normalize the caller's delete set to a one-column (t_id) frame.
     A DataFrame passes through (``id_col`` or its first column); a

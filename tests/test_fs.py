@@ -294,3 +294,40 @@ def test_purge_keys_groups_by_scheme(tmp_path):
         assert not local.exists() and mem.objects == {}
     finally:
         fs_mod._REGISTRY.pop("mem2", None)
+
+
+def test_local_put_is_atomic(tmp_path, monkeypatch):
+    """A put that dies part-way through its write leaves the old text
+    and no temp file: the ``_MANIFEST`` put is the commit point of index
+    compaction and rebuilds, and a truncated manifest reads back with
+    its keys missing."""
+    import builtins
+
+    from batch_process_dpla_index_spark.io import fs as fs_mod
+    from batch_process_dpla_index_spark.io.manifest import (
+        read_manifest,
+        write_manifest,
+    )
+
+    write_manifest({"dim": "64"}, str(tmp_path))
+
+    class TornWrite:
+        def __init__(self, *args, **kwargs):
+            self.f = builtins.open(*args, **kwargs)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, text):
+            self.f.write(text[: len(text) // 2])
+            raise OSError("device gone mid-write")
+
+    monkeypatch.setattr(fs_mod, "open", TornWrite, raising=False)
+    with pytest.raises(OSError, match="mid-write"):
+        write_manifest({"dim": "128"}, str(tmp_path))
+    monkeypatch.undo()
+    assert read_manifest(str(tmp_path))["dim"] == "64"
+    assert os.listdir(tmp_path) == ["_MANIFEST"]

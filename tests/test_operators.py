@@ -467,12 +467,151 @@ def test_connected_components_driver_tier_matches_distributed(spark, monkeypatch
     assert got_a[:4] == [(1, 1), (2, 1), (3, 1), (4, 1)]
 
 
-def test_cosine_topk_default_plan_is_map_in_pandas(spark):
+def test_cosine_topk_default_plan_is_map_in_arrow(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     df = cosine_topk(emb, q, "vec_id", "embedding", k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
+
+def test_vector_matrix_guard():
+    """``flatten()`` drops NULL rows, so a bare reshape would mis-shape
+    the matrix (two rows at dim 4 with one NULL reshape to (2, 2)):
+    the decode refuses NULL, ragged and wrong-width rows by name."""
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from batch_process_dpla_index_spark.operators.relational import _vector_matrix
+
+    def batch(rows):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(rows, pa.list_(pa.float32()))], ["embedding"]
+        )
+
+    for rows, dim, msg in (
+        ([[1, 2, 3, 4], None], 4, "NULL"),
+        ([[1, 2, 3, 4], [1, 2]], None, "different lengths"),
+        ([[1, 2], [3, 4]], 4, "expected 4"),
+    ):
+        with pytest.raises(ValueError, match=f"'embedding'.*{msg}"):
+            _vector_matrix(batch(rows), "embedding", dim=dim)
+    # a sliced batch decodes its own rows; dtype=None keeps float32
+    got = _vector_matrix(batch([[1, 2], [3, 4], [5, 6]]).slice(1), "embedding")
+    assert got.dtype == np.float64 and got.tolist() == [[3, 4], [5, 6]]
+    assert _vector_matrix(batch([[1, 2]]), "embedding", None).dtype == np.float32
+
+
+def test_vector_kernels_name_a_bad_vector_column(spark):
+    """A NULL vector, a ragged row, and a row of the wrong length fail
+    the kernel with a ValueError naming the column (not a bare numpy
+    matmul error from inside the worker); ``pq_encode`` keeps its
+    m*dsub contract message for the wrong width."""
+    import pytest
+
+    from batch_process_dpla_index_spark.operators.clustering import kmeans_assign
+    from batch_process_dpla_index_spark.operators.quantization import (
+        pq_encode,
+        pq_pinned_codebooks,
+    )
+    from batch_process_dpla_index_spark.operators.similarity import ivf_cells_pandas
+
+    v64 = [0.5] * 64
+    cases = {
+        "NULL": [(1, v64), (2, None)],
+        "different lengths": [(1, v64), (2, [0.5] * 63)],
+        "expected 64": [(1, [0.5] * 32), (2, [0.25] * 32)],
+    }
+    kernels = {
+        "ivf_cells_pandas": lambda df: ivf_cells_pandas(
+            df, "vec_id", "embedding", 64, 4, 2
+        ),
+        "kmeans_assign": lambda df: kmeans_assign(df, [v64, [0.0] * 64]),
+        "pq_encode": lambda df: pq_encode(df, pq_pinned_codebooks()),
+    }
+    for name, kernel in kernels.items():
+        for msg, rows in cases.items():
+            df = spark.createDataFrame(
+                rows, "vec_id bigint, embedding array<float>"
+            ).repartition(1)
+            if name == "pq_encode" and msg == "expected 64":
+                msg = "vector dim 32 != m\\*dsub"
+            with pytest.raises(Exception, match=f"ValueError: .*'embedding'.*{msg}"):
+                kernel(df).collect()
+
+
+def test_arrow_map_builds_declared_types(spark):
+    """``mapInArrow`` does not coerce, so the seam builds each column
+    with the DDL's Arrow type: an int32 numpy column declared bigint, a
+    2-D int array declared array<int>, a passed-through (and taken)
+    Arrow column, NaN as NULL; empty input emits nothing, and the
+    kernel never sees an empty batch."""
+    import numpy as np
+
+    from batch_process_dpla_index_spark.operators.relational import (
+        _arrow_map,
+        _vector_matrix,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [3.0, 0.0])], "id int, vec array<float>"
+    ).repartition(1)
+    ddl = "id bigint, cells array<int>, vec array<float>, ratio double"
+
+    def fn(batch):
+        assert batch.num_rows
+        mat = _vector_matrix(batch, "vec")
+        return {
+            "id": batch.column("id").to_numpy().astype("int32"),
+            "cells": (mat * 2).astype("int64"),
+            "vec": batch.column("vec").take(np.arange(batch.num_rows)[::-1]),
+            "ratio": np.where(mat[:, 1] == 0, np.nan, 0.0),
+        }
+
+    got = sorted(tuple(r) for r in _arrow_map(df, fn, ddl).collect())
+    assert got == [(1, [2, 4], [3.0, 0.0], 0.0), (2, [6, 0], [1.0, 2.0], None)]
+    assert _arrow_map(df.where("id > 5"), fn, ddl).collect() == []
+    assert _arrow_map(df, lambda batch: None, ddl).collect() == []
+
+
+def test_map_in_pandas_sites_are_the_pandas_kernels():
+    """Every embedding kernel goes through the one ``mapInArrow`` seam
+    (`relational._arrow_map`). ``mapInPandas`` stays only where pandas
+    semantics are the point: the multimodal byte decoders, the
+    Misra-Gries fold (``value_counts`` order) and the MinHash partial
+    fold (``factorize``). A new site fails here with file:line."""
+    import ast
+    import pathlib
+
+    allowed = {
+        ("multimodal.py", "decode_images"),
+        ("multimodal.py", "resize_images"),
+        ("multimodal.py", "phash_images"),
+        ("multimodal.py", "frame_phash"),
+        ("multimodal.py", "audio_pcm_stats"),
+        ("multimodal.py", "sample_frames"),
+        ("multimodal.py", "audio_phash"),
+        ("sketches.py", "mg_summaries"),
+        ("dedup.py", "source_sig_from_postings"),
+    }
+    root = pathlib.Path(__file__).resolve().parents[1] / "batch_process_dpla_index_spark"
+    found, stray = set(), []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text(encoding="utf-8")).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"
+                ):
+                    site = (path.name, getattr(top, "name", "<module>"))
+                    if site in allowed:
+                        found.add(site)
+                    else:
+                        stray.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    assert not stray, "mapInPandas outside the pandas kernels: " + ", ".join(stray)
+    assert found == allowed
 
 
 def test_chunk_structs_edges(spark):

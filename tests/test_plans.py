@@ -154,11 +154,11 @@ def test_fingerprint_folded_is_shuffle_free(spark):
 
 
 def test_cosine_topk_registered_plan_uses_arrow(spark):
-    """The registered cosine_topk must execute the BLAS mapInPandas
+    """The registered cosine_topk must execute the BLAS mapInArrow
     plan (the |Q|x|C| expression materialization was the round-2
     scale-killer)."""
     plan = _plan(spark, "cosine_topk")
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_changeset_anti_join_broadcasts_delta(spark):
@@ -183,7 +183,7 @@ def test_user_cumsum_is_jvm_window(spark):
     plan = _plan(spark, "user_cumsum")
     assert "Window" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    for marker in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for marker in ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan, plan
 
 
@@ -200,7 +200,7 @@ def test_sentence_dedup_keep_first_avoids_window(spark):
     sentence would serialize a window partition at scale."""
     plan = _plan(spark, "sentence_dedup")
     assert "Window" not in plan, plan
-    for marker in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
+    for marker in ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "BatchEvalPython"):
         assert marker not in plan, plan
 
 
@@ -209,7 +209,7 @@ def test_lm_scores_is_jvm_only_with_broadcast_stats(spark):
     stats ride a broadcast join, never a shuffled one."""
     plan = _plan(spark, "lm_scores")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
-    for marker in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for marker in ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan, plan
 
 
@@ -226,7 +226,7 @@ def test_gap_fill_two_shuffles(spark):
     agg reuse, window), never one per stage."""
     plan = _plan(spark, "gap_fill")
     assert plan.count("Exchange hashpartitioning") <= 3, plan
-    for marker in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
+    for marker in ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "BatchEvalPython"):
         assert marker not in plan, plan
 
 
@@ -245,7 +245,7 @@ def test_classifier_is_shuffle_free_jvm(spark):
     stage: no Exchange, no join, no Python."""
     plan = _plan(spark, "quality_classifier")
     assert "Exchange" not in plan, plan
-    for marker in ("Join", "MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
+    for marker in ("Join", "MapInPandas", "MapInArrow", "BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan, plan
 
 
@@ -271,7 +271,7 @@ def test_funnel_is_one_fold_pass(spark):
     self-joins (would show len(steps) SortMergeJoins), no Python."""
     plan = _plan(spark, "funnel_stages")
     assert "SortMergeJoin" not in plan, plan
-    for marker in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
+    for marker in ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "BatchEvalPython"):
         assert marker not in plan, plan
 
 
@@ -612,17 +612,19 @@ def _assert_probe_pass(served: str, cand: str, kind: str) -> None:
     nested-loop join. Over a persisted index the pass reads a scan
     filtered to the probed cells (``In(cell`` pushed into the scan),
     and only the scorer's payload: the vectors for cosine, the codes
-    for ADC."""
+    for ADC. No Python pass is a pandas one (``ivf_pq_topk``'s
+    stored side is its encode pass, a second ``MapInArrow``)."""
     assert "LocalTableScan" in served and "Exchange" not in served, served
-    assert cand.count("MapInArrow") == 1, cand
+    assert "MapInPandas" not in cand, cand
     for node in ("FlatMapGroupsInPandas", "Exchange", "Window",
                  "BroadcastNestedLoopJoin"):
         assert node not in cand, cand
     if kind == "ivf_pq_topk":
-        # the stored side is the one encode pass over the corpus
-        assert cand.count("MapInPandas") == 1, cand
+        # the candidate pass chained onto the one encode pass over
+        # the corpus
+        assert cand.count("MapInArrow") == 2, cand
         return
-    assert "MapInPandas" not in cand, cand
+    assert cand.count("MapInArrow") == 1, cand
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", cand)
     assert any("In(cell" in p for p in pushed), cand
     (read,) = re.findall(r"ReadSchema: struct<([^>]*)>", cand)

@@ -1003,51 +1003,66 @@ def test_append_record_count_equals_recount(spark, tmp_path):
     above-all batch (with a resurrected id), idempotent replay of it,
     an out-of-order batch holding an id deleted at a later watermark
     (hidden), and an above-all batch after a ``recount=False``
-    delete."""
-    from batch_process_dpla_index_spark.products.ann_index import (
-        _live_cells,
-        append_to_ann_index,
-        build_ann_index,
-        delete_from_ann_index,
-    )
+    delete. Both vector indexes append through the same rule."""
+    from batch_process_dpla_index_spark.products import ann_index, embedding_index
     from batch_process_dpla_index_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     ids = [r["vec_id"] for r in emb.orderBy("vec_id").limit(70).collect()]
-    idx = str(tmp_path / "ann_count")
 
     def rows_of(keep):
         return emb.filter(F.col("vec_id").isin(list(keep)))
 
-    def assert_recounted(m):
-        assert read_manifest(idx)["Record count"] == m["Record count"]
-        live = _live_cells(spark, idx, m).count()
-        assert int(m["Record count"]) == live, (m["Record count"], live)
-        return live
+    kinds = {
+        "ann": (
+            lambda rows, idx: ann_index.build_ann_index(
+                rows, "vec_id", "embedding", idx, dim=64, n_cells=4,
+                learned=False,
+            ),
+            lambda rows, idx, **kw: ann_index.append_to_ann_index(
+                spark, rows, "vec_id", "embedding", idx, **kw
+            ),
+            ann_index.delete_from_ann_index,
+            ann_index._live_cells,
+        ),
+        "embedding": (
+            lambda rows, idx: embedding_index.build_embedding_index(
+                rows, "vec_id", "embedding", idx, dim=64, n_cells=4
+            ),
+            lambda rows, idx, **kw: embedding_index.append_to_embedding_index(
+                rows, "vec_id", "embedding", idx, **kw
+            ),
+            embedding_index.delete_from_embedding_index,
+            embedding_index._live_stored,
+        ),
+    }
+    for kind, (build, append, delete, live_rows) in kinds.items():
+        idx = str(tmp_path / f"{kind}_count")
 
-    build_ann_index(rows_of(ids[:40]), "vec_id", "embedding", idx, dim=64,
-                    n_cells=4, learned=False)
-    delete_from_ann_index(spark, idx, ids[:3], compact_threshold=2.0)
-    # above every batch; ids[0] was deleted at watermark 0 and serves again
-    m = append_to_ann_index(spark, rows_of(ids[40:50] + ids[:1]), "vec_id",
-                            "embedding", idx, ingest_batch=2)
-    assert assert_recounted(m) == 37 + 11
-    # idempotent replay of the same batch replaces it
-    m = append_to_ann_index(spark, rows_of(ids[40:50] + ids[:1]), "vec_id",
-                            "embedding", idx, ingest_batch=2, idempotent=True)
-    assert assert_recounted(m) == 37 + 11
-    # ids[45] deleted at watermark 2, then re-appended in batch 1: hidden
-    delete_from_ann_index(spark, idx, ids[45:46], compact_threshold=2.0)
-    m = append_to_ann_index(spark, rows_of(ids[50:60] + ids[45:46]), "vec_id",
-                            "embedding", idx, ingest_batch=1)
-    assert assert_recounted(m) == 47 + 10
-    delete_from_ann_index(spark, idx, ids[50:52], compact_threshold=2.0,
-                          recount=False)
-    m = append_to_ann_index(spark, rows_of(ids[60:70]), "vec_id",
-                            "embedding", idx, ingest_batch=3)
-    assert assert_recounted(m) == 57 - 2 + 10
-    assert "Record count stale" not in m
+        def assert_recounted(m):
+            assert read_manifest(idx)["Record count"] == m["Record count"]
+            live = live_rows(spark, idx, m).count()
+            assert int(m["Record count"]) == live, (kind, m["Record count"], live)
+            return live
+
+        build(rows_of(ids[:40]), idx)
+        delete(spark, idx, ids[:3], compact_threshold=2.0)
+        # above every batch; ids[0] was deleted at watermark 0 and serves again
+        m = append(rows_of(ids[40:50] + ids[:1]), idx, ingest_batch=2)
+        assert assert_recounted(m) == 37 + 11
+        # idempotent replay of the same batch replaces it
+        m = append(rows_of(ids[40:50] + ids[:1]), idx, ingest_batch=2,
+                   idempotent=True)
+        assert assert_recounted(m) == 37 + 11
+        # ids[45] deleted at watermark 2, then re-appended in batch 1: hidden
+        delete(spark, idx, ids[45:46], compact_threshold=2.0)
+        m = append(rows_of(ids[50:60] + ids[45:46]), idx, ingest_batch=1)
+        assert assert_recounted(m) == 47 + 10
+        delete(spark, idx, ids[50:52], compact_threshold=2.0, recount=False)
+        m = append(rows_of(ids[60:70]), idx, ingest_batch=3)
+        assert assert_recounted(m) == 57 - 2 + 10
+        assert "Record count stale" not in m
 
 
 def test_parquet_rowcount_skips_hidden_paths(tmp_path):

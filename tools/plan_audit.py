@@ -175,8 +175,8 @@ def main() -> int:
         "result, so their *final* plan here is small by design. So does the",
         "IVF probe serve (ivf_pq_topk): under its query cap it runs its one",
         "candidate job (0 shuffles, 2 codegen spans, 2 Python nodes: the",
-        "encode MapInPandas and the scoring MapInArrow) and returns a local",
-        "table, whose plan counts nothing.",
+        "encode and the scoring MapInArrow) and returns a local table,",
+        "whose plan counts nothing.",
         "",
         "| query | shuffles | broadcasts | codegen | python | sorts | top-k | pushed filters | cached | coalesce | 1-part windows |",
         "|---|---|---|---|---|---|---|---|---|---|---|",

@@ -405,9 +405,11 @@ def pq_topk(
     in a broadcast — the `cosine_topk` contract. Per Arrow batch the
     work is table build O(|Q|·m·k_sub) + gather O(|Q|·rows·m); only
     per-batch top-k rows leave Python, and the global top-k compiles
-    to one TakeOrdered."""
+    to one TakeOrdered. Rows with a NULL id are dropped on both sides
+    (as the IVF serves drop them); a NULL vector still raises."""
     import numpy as np
 
+    df = df.where(F.col(id_col).isNotNull())
     books = np.asarray(codebooks, dtype="float64")
     codes = pq_encode(df, codebooks, id_col, vec_col)
 

@@ -75,10 +75,15 @@ def cosine_topk(
     candidate rows reach the final window — never the |Q|×|C| scored
     rows a broadcast join + window would shuffle. No shuffle until the
     tiny candidate set.
+
+    Rows with a NULL id are dropped on both sides (as the IVF serves
+    drop them): such a row can be neither a query nor a neighbor. A
+    NULL vector still raises.
     """
     import numpy as np
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    has_id = F.col(id_col).isNotNull()
+    q_rows = queries.select(F.col(id_col), F.col(vec_col)).where(has_id).collect()
     if not q_rows:
         # np.array([]) is 1-D and the axis-1 reductions below would
         # raise; an empty query side is an empty result
@@ -109,7 +114,9 @@ def cosine_topk(
         return {"query_id": out_q, "neighbor_id": out_n, "raw_score": out_s}
 
     cand = _arrow_map(
-        corpus.select(F.col(id_col), F.col(vec_col)), _score, _CAND_SCHEMA
+        corpus.select(F.col(id_col), F.col(vec_col)).where(has_id),
+        _score,
+        _CAND_SCHEMA,
     )
     return _rank_candidates(cand, k)
 

@@ -34,15 +34,17 @@ assignments under the same manifest-pinned codebook, one batch-sized
 Arrow pass, per-batch ``ingest_batch`` partitions with idempotent
 replay overwrite); re-learn on drift = :func:`rebuild_ann_index`
 (re-fit the pinned quantizer on the live rows, surrogate-key
-re-attach, failure-safe swap — :func:`ann_index_occupancy` is the
-trigger's observable); takedown = :func:`delete_from_ann_index`
-(manifest-logged tombstones anti-joined at serve time, compacted past
-a threshold — `products.index_tombstones`).
+re-attach, one `index_tombstones.commit_staged` —
+:func:`ann_index_occupancy` is the trigger's observable); takedown =
+:func:`delete_from_ann_index` (manifest-logged tombstones anti-joined
+at serve time, compacted past a threshold —
+`products.index_tombstones`).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,10 +53,13 @@ from batch_process_dpla_index_spark.io.manifest import read_manifest, write_mani
 from batch_process_dpla_index_spark.products.index_tombstones import (
     append_cells,
     clear_tombstones,
+    commit_staged,
     dataset_ddl,
     keyed_repartition,
     read_dataset,
+    refuse_empty,
     schema_key,
+    write_parquet_file,
 )
 from batch_process_dpla_index_spark.operators.similarity import (
     _COSINE,
@@ -198,7 +203,6 @@ def build_ann_index(
     under ``pq_codebooks`` — :func:`pq_query_indexed` then serves
     queries from codes alone (32× less data motion at the defaults),
     with the float vectors still in place for exact re-ranking."""
-    spark = corpus.sparkSession
     if isinstance(learned, str) and learned != "two-level":
         # a typo ("two_level", "kmeans", ...) must fail loudly, not
         # silently train the flat-maximin branch (ADVICE round-11)
@@ -274,67 +278,19 @@ def build_ann_index(
     # a rebuild into a dir that carried tombstones must not inherit
     # them — build overwrites the corpus, so the delete set is spent
     clear_tombstones(index_dir)
-    # metadata artifacts go through the ARROW createDataFrame path
-    # (relational._arrow_local_frame → JVM LocalRelation): a
-    # list-of-tuples frame plans its write over a Python-pickled RDD
-    # and pays a Python-worker round trip per write (~3.5 s each,
-    # measured on the overlap-index refresh — the same class of cost,
-    # twice, hid inside this product's bench time)
-    from batch_process_dpla_index_spark.operators.relational import (
-        _arrow_local_frame,
-    )
-
+    # the model files are k·dim floats: written on the driver, no job
     if codebooks is not None:
-        _arrow_local_frame(
-            spark,
-            [
-                (j, c, [float(x) for x in vec])
-                for j, book in enumerate(codebooks)
-                for c, vec in enumerate(book)
-            ],
-            "j int, code int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "pq_codebooks")
-        )
-
-    if two_level_model is not None:
-        # persist the MODEL, not a flattened list: global cell ids are
-        # strided with gaps, so a positional flat centroid list cannot
-        # represent them — serving loads (coarse, fine, k_f) and probes
-        # through the IMI path
-        coarse, fine, k_f = two_level_model
-        _arrow_local_frame(
-            spark,
-            [(c, [float(x) for x in v]) for c, v in enumerate(coarse)],
-            "ccell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "coarse_centroids")
-        )
-        _arrow_local_frame(
-            spark,
-            [
-                (c, j, [float(x) for x in v])
-                for c in sorted(fine)
-                for j, v in enumerate(fine[c])
-            ],
-            "ccell int, fine int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "fine_centroids")
-        )
-    else:
-        if centroids is None:
-            from batch_process_dpla_index_spark.operators.similarity import (
-                _centroid_matrix,
-            )
-
-            centroids = _centroid_matrix(dim, n_cells).tolist()
-        _arrow_local_frame(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "centroids")
-        )
+        _write_model(os.path.join(index_dir, "pq_codebooks"), _centroid_table(
+            {
+                "j": [j for j, book in enumerate(codebooks) for _ in book],
+                "code": [c for book in codebooks for c in range(len(book))],
+            },
+            [vec for book in codebooks for vec in book],
+        ))
+    for name, table in _quantizer_tables(
+        dim, n_cells, two_level_model, centroids
+    ).items():
+        _write_model(os.path.join(index_dir, name), table)
 
     # count from the freshly written parquet footers — recounting the
     # unpersisted `stored` frame would re-run the whole encode DAG;
@@ -370,10 +326,65 @@ def build_ann_index(
     return manifest
 
 
+def _centroid_table(keys: dict[str, list[int]], vecs):
+    """A model dataset: int32 key columns ``keys`` plus one
+    ``centroid`` array<double> column, one row per vector."""
+    import pyarrow as pa
+
+    cols = {name: pa.array(vals, pa.int32()) for name, vals in keys.items()}
+    cols["centroid"] = pa.array(
+        [[float(x) for x in v] for v in vecs], pa.list_(pa.float64())
+    )
+    return pa.table(cols)
+
+
+def _quantizer_tables(
+    dim: int, n_cells: int, two_level_model=None, centroids=None
+) -> dict:
+    """The quantizer's model datasets by name, as build and rebuild
+    persist them: ``coarse_centroids`` + ``fine_centroids`` for a
+    two-level model (the MODEL, not a flattened list: global cell ids
+    are strided with gaps, so a positional flat list cannot represent
+    them), else the flat ``centroids`` (the pseudo-random grid when no
+    centroids were learned)."""
+    if two_level_model is not None:
+        coarse, fine, _k_f = two_level_model
+        return {
+            "coarse_centroids": _centroid_table(
+                {"ccell": list(range(len(coarse)))}, coarse
+            ),
+            "fine_centroids": _centroid_table(
+                {
+                    "ccell": [c for c in sorted(fine) for _ in fine[c]],
+                    "fine": [j for c in sorted(fine) for j in range(len(fine[c]))],
+                },
+                [v for c in sorted(fine) for v in fine[c]],
+            ),
+        }
+    if centroids is None:
+        from batch_process_dpla_index_spark.operators.similarity import (
+            _centroid_matrix,
+        )
+
+        centroids = _centroid_matrix(dim, n_cells).tolist()
+    return {
+        "centroids": _centroid_table(
+            {"cell": list(range(len(centroids)))}, centroids
+        )
+    }
+
+
+def _write_model(path: str, table) -> None:
+    """Replace the model dataset at ``path`` with ``table``, written on
+    the driver (`index_tombstones.write_parquet_file`)."""
+    shutil.rmtree(path, ignore_errors=True)
+    write_parquet_file(table, path)
+
+
 def _read_model(index_dir: str, name: str, sort_cols: list[str]):
     """Rows of a small model dataset (k·dim floats at most) as dicts,
     sorted on ``sort_cols``, read on the driver with pyarrow: no Spark
-    job. pyarrow skips the ``_``/``.`` files a Spark write leaves."""
+    job. pyarrow skips the ``_``/``.`` files a writer leaves."""
     import pyarrow.parquet as pq
 
     rows = pq.read_table(os.path.join(index_dir, name)).to_pylist()
@@ -601,14 +612,8 @@ def rebuild_ann_index(
       re-fits the true two-level model — rebuilding upgrades it to the
       IMI-served layout.
 
-    Failure-safe swap (the family convention): new cells + new model
-    artifacts land in sibling dirs, the live cells move aside FIRST
-    (every read in the crash window fails loudly — never a probe under
-    mismatched geometry), the manifest flips while cells is absent,
-    then the new data takes the live names; old copies and the
-    tombstone set are deleted LAST."""
-    import shutil
-
+    The new cells and model files land in ``<name>__rebuild``
+    siblings and go live in one `index_tombstones.commit_staged`."""
     manifest = read_manifest(index_dir)
     dim = int(manifest["dim"])
     quantizer = manifest["quantizer"]
@@ -624,16 +629,8 @@ def rebuild_ann_index(
     ).persist()
     n_vecs = keyed.count()
     if n_vecs == 0:
-        # a rebuild of a fully-tombstoned index would swap in an
-        # UNREADABLE empty cells dataset and then delete the only
-        # remaining copy — the same refusal compact_index_tombstones
-        # makes, on the exact path its error message recommends
         keyed.unpersist()
-        raise ValueError(
-            "rebuild would produce an empty index (every stored row is "
-            "tombstoned); an empty cells dataset is unreadable — delete "
-            "the index directory instead"
-        )
+    refuse_empty(n_vecs)
     new_cells = (
         int(n_cells) if n_cells is not None
         else max(16, n_vecs // design_point)
@@ -685,61 +682,13 @@ def rebuild_ann_index(
         .parquet(tmp_cells)
     )
     keyed.unpersist()
-
-    # new quantizer artifacts into sibling dirs
-    from batch_process_dpla_index_spark.operators.relational import (
-        _arrow_local_frame,
-    )
-
-    swaps: list[tuple[str, str]] = [(tmp_cells, cells_dir)]
-    if two_level_model is not None:
-        coarse, fine, k_f = two_level_model
-        for name, rows, schema in (
-            (
-                "coarse_centroids",
-                [(c, [float(x) for x in v]) for c, v in enumerate(coarse)],
-                "ccell int, centroid array<double>",
-            ),
-            (
-                "fine_centroids",
-                [
-                    (c, j, [float(x) for x in v])
-                    for c in sorted(fine)
-                    for j, v in enumerate(fine[c])
-                ],
-                "ccell int, fine int, centroid array<double>",
-            ),
-        ):
-            tmp = os.path.join(index_dir, name + "__rebuild")
-            _arrow_local_frame(spark, rows, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            swaps.append((tmp, os.path.join(index_dir, name)))
-    else:
-        if centroids is None:
-            from batch_process_dpla_index_spark.operators.similarity import (
-                _centroid_matrix,
-            )
-
-            centroids = _centroid_matrix(dim, new_cells).tolist()
-        tmp = os.path.join(index_dir, "centroids__rebuild")
-        _arrow_local_frame(
-            spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        swaps.append((tmp, os.path.join(index_dir, "centroids")))
-
-    # swap: live cells aside first (index loudly unreadable from here),
-    # manifest flips while cells is absent, new data takes the live
-    # names, old copies + tombstones deleted LAST
-    olds: list[str] = []
-    for _tmp, dst in swaps:
-        if os.path.isdir(dst):
-            old = dst + "__old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(dst, old)
-            olds.append(old)
+    swaps = [(tmp_cells, cells_dir)]
+    for name, table in _quantizer_tables(
+        dim, new_cells, two_level_model, centroids
+    ).items():
+        staged = os.path.join(index_dir, name + "__rebuild")
+        _write_model(staged, table)
+        swaps.append((staged, os.path.join(index_dir, name)))
     manifest["rebuilt_from"] = manifest["n_cells"]
     manifest["n_cells"] = str(new_cells)
     manifest["Record count"] = str(n_vecs)
@@ -749,23 +698,16 @@ def rebuild_ann_index(
         manifest["k_f"] = str(two_level_model[2])
         manifest["coarse_k"] = str(len(two_level_model[0]))
     else:
-        # a pre-r12 two-level index rebuilt as... never happens: the
-        # quantizer pin routes two-level through the branch above; flat
-        # pins never carry k_f
+        # flat pins never carry the two-level stride
         manifest.pop("k_f", None)
         manifest.pop("coarse_k", None)
-    write_manifest(manifest, index_dir)
-    for tmp, dst in swaps:
-        os.rename(tmp, dst)
-    for old in olds:
-        shutil.rmtree(old)
+    commit_staged(index_dir, manifest, swaps)
     if two_level_model is not None:
         # a pre-r12 two-level index carried a FLAT centroids dataset
         # (the flattened layout); the rebuilt index serves through
         # coarse/fine via the k_f gate, so the stale flat artifact is
         # dead weight — drop it
         shutil.rmtree(os.path.join(index_dir, "centroids"), ignore_errors=True)
-    clear_tombstones(index_dir)
     return manifest
 
 

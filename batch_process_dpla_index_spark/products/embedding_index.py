@@ -56,6 +56,7 @@ its first attempt, so it can never match its own earlier output (see
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,8 +65,11 @@ from batch_process_dpla_index_spark.io.manifest import read_manifest, write_mani
 from batch_process_dpla_index_spark.products.index_tombstones import (
     append_cells,
     clear_tombstones,
+    commit_staged,
     dataset_ddl,
+    keyed_repartition,
     read_dataset,
+    refuse_empty,
     schema_key,
 )
 from batch_process_dpla_index_spark.operators.similarity import (
@@ -206,10 +210,6 @@ def build_embedding_index(
     cells = _cell_rows(vecs, id_col, vec_col, dim, n_cells, assign).withColumn(
         "ingest_batch", F.lit(0)
     )
-    from batch_process_dpla_index_spark.products.index_tombstones import (
-        keyed_repartition,
-    )
-
     (
         # cluster rows by cell (row-group min/max stats on `cell` then
         # serve any future cell-pruned read), file count AQE-sized by
@@ -368,12 +368,9 @@ def rebuild_embedding_index(
     n² rows while the manifest count was stamped from the pre-join
     n_vecs, silently inflating AND miscounting the rebuilt dataset.
     One partitioned write — all distributed, no driver-side data.
-    The new dataset lands in a sibling directory and is swapped in
-    (rename-rename-delete), because Spark cannot overwrite a dataset
-    it is reading; on an object store the same step is a
-    copy-then-pointer-swap."""
-    import shutil
-
+    The new dataset lands in a ``cells__rebuild`` sibling, because
+    Spark cannot overwrite a dataset it is reading, and goes live in
+    one `index_tombstones.commit_staged`."""
     manifest = read_manifest(index_dir)
     dim = int(manifest["dim"])
     id_col, vec_col = manifest["id_col"], manifest["vec_col"]
@@ -392,16 +389,8 @@ def rebuild_embedding_index(
     )
     n_vecs = keyed.count()
     if n_vecs == 0:
-        # a rebuild of a fully-tombstoned index would swap in an
-        # UNREADABLE empty cells dataset and then delete the only
-        # remaining copy — the same refusal compact_index_tombstones
-        # makes, on the exact path its error message recommends
         keyed.unpersist()
-        raise ValueError(
-            "rebuild would produce an empty index (every stored row is "
-            "tombstoned); an empty cells dataset is unreadable — delete "
-            "the index directory instead"
-        )
+    refuse_empty(n_vecs)
     new_cells = (
         int(n_cells) if n_cells is not None
         else max(16, n_vecs // design_point)
@@ -422,12 +411,7 @@ def rebuild_embedding_index(
         .select("cell", "c_id", "c_vec", "ingest_batch")
     )
     tmp_dir = os.path.join(index_dir, "cells__rebuild")
-    old_dir = os.path.join(index_dir, "cells__old")
     shutil.rmtree(tmp_dir, ignore_errors=True)
-    from batch_process_dpla_index_spark.products.index_tombstones import (
-        keyed_repartition,
-    )
-
     (
         keyed_repartition(reassigned, None, "cell")
         .write.mode("overwrite")
@@ -435,28 +419,13 @@ def rebuild_embedding_index(
         .parquet(tmp_dir)
     )
     keyed.unpersist()
-    # Failure-safe ordering: every crash window is LOUD, never silent
-    # geometry drift. After cells→old the index has no cells dataset
-    # (reads fail, old data recoverable under cells__old); the manifest
-    # flips to the new geometry while cells is still absent (reads
-    # still fail loudly); only then does the new data take the live
-    # name — at no point can a probe read cell data under a manifest
-    # describing a different geometry. The old copy is deleted LAST.
-    shutil.rmtree(old_dir, ignore_errors=True)
-    os.rename(cells_dir, old_dir)
     manifest["rebuilt_from"] = manifest["n_cells"]
     manifest["n_cells"] = str(new_cells)
     manifest["assign"] = assign
     manifest["Record count"] = str(n_vecs)
     manifest["Tombstone count"] = "0"
     manifest[schema_key("cells")] = dataset_ddl(reassigned)
-    write_manifest(manifest, index_dir)
-    os.rename(tmp_dir, cells_dir)
-    shutil.rmtree(old_dir)
-    # the rebuilt dataset holds only survivors — the delete set is
-    # spent (cleared LAST: a crash before this line leaves a redundant
-    # anti-join against already-removed ids, a no-op)
-    clear_tombstones(index_dir)
+    commit_staged(index_dir, manifest, [(tmp_dir, cells_dir)])
     return manifest
 
 

@@ -24,10 +24,9 @@ to an index artifact:
   takedown-then-re-opt-in flow), with no append-path bookkeeping.
 - **compact** = physically rewrite the cells minus tombstoned rows
   once the tombstone fraction crosses a threshold, then clear the
-  set — the vacuum step, using the rebuild products' failure-safe
-  swap ordering (every crash window is loud, never silent drift;
-  worst case after a crash between swap and tombstone-clear is a
-  redundant anti-join against already-removed ids — a no-op).
+  set — the vacuum step, committed by :func:`commit_staged` (the one
+  commit every index rewrite goes through; its docstring states the
+  ordering and the crash windows).
 
 Replay idempotence: re-running the same delete appends duplicate
 tombstone rows; the serve-time anti-join has "exists" semantics (a
@@ -47,6 +46,7 @@ bounds how long a large set is carried.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,9 +167,87 @@ def clear_tombstones(index_dir: str) -> None:
     inherits a stale delete set. THE one place that knows the layout:
     the products must not hand-roll the path (a layout change would
     silently miss their copies)."""
-    import shutil
-
     shutil.rmtree(_tombstones_dir(index_dir), ignore_errors=True)
+
+
+def write_parquet_file(table, dataset_dir: str) -> None:
+    """Add a small driver-side ``pa.Table`` (model files, a tombstone
+    append) to the parquet dataset ``dataset_dir`` as one new, uniquely
+    named part file, with no Spark job. The file is written under a
+    hidden name, which Spark and pyarrow readers skip, then
+    ``os.replace``d to its part name: no reader sees it half-written."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(dataset_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(dataset_dir, f".{name}.tmp")
+    # plain encoding and no embedded Arrow schema: a dictionary of
+    # distinct floats (centroids) outweighs the values it replaces,
+    # and the Spark writer this replaced fell back to plain the same way
+    pq.write_table(table, tmp, use_dictionary=False, store_schema=False)
+    os.replace(tmp, os.path.join(dataset_dir, name))
+
+
+def refuse_empty(n_rows: int, *staged: str) -> None:
+    """The one empty-result refusal of every index rewrite, made before
+    :func:`commit_staged` moves anything: an empty dataset has no part
+    files and no schema, so every later serve would fail obscurely.
+    Removes the ``staged`` dirs already written, then raises."""
+    if n_rows:
+        return
+    for d in staged:
+        shutil.rmtree(d, ignore_errors=True)
+    raise ValueError(
+        "the rewrite would leave an empty index (every stored source or "
+        "row is tombstoned), and an empty dataset is unreadable — "
+        "delete the index directory instead"
+    )
+
+
+def commit_staged(
+    index_dir: str, manifest: dict[str, str], swaps: "list[tuple[str, str]]"
+) -> None:
+    """Commit an index rewrite whose new datasets are fully written to
+    sibling ``staged`` dirs: ``swaps`` lists ``(staged_dir, live_dir)``
+    pairs, ``manifest`` describes the new data. The one commit of
+    compaction (`compact_index_tombstones`, `overlap_index`) and of
+    both rebuilds (`ann_index`, `embedding_index`), in this order:
+
+    1. move each existing live dir aside to ``<live>__old``;
+    2. write ``manifest``;
+    3. rename each staged dir to its live name;
+    4. delete the ``__old`` copies;
+    5. clear the tombstone set.
+
+    Every crash window is loud or clean, never silent drift:
+
+    - before step 2, the old manifest still describes the old data,
+      which is whole under the live names or ``__old``; a missing live
+      dir makes every read fail (recover by renaming ``__old`` back);
+    - between steps 2 and 3, the new manifest is on disk while a live
+      dir is missing: reads fail loudly, never a serve of old data
+      under new geometry; the new data is whole in the staged dirs;
+    - after step 3, reads serve the new data; a leftover ``__old`` is
+      dead weight, and leftover tombstones are a redundant anti-join
+      against ids the rewrite already dropped.
+
+    There is no automatic recovery. Renames are not atomic on object
+    stores, so this commit is POSIX-only."""
+    olds = []
+    for _staged, live in swaps:
+        if os.path.isdir(live):
+            old = live + "__old"
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(live, old)
+            olds.append(old)
+    write_manifest(manifest, index_dir)
+    for staged, live in swaps:
+        os.rename(staged, live)
+    for old in olds:
+        shutil.rmtree(old)
+    clear_tombstones(index_dir)
 
 
 def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -266,23 +344,6 @@ def append_cells(
     return manifest
 
 
-def _ids_frame(spark: SparkSession, ids, id_col: str | None) -> DataFrame:
-    """Normalize the caller's delete set to a one-column (t_id) frame.
-    A DataFrame passes through (``id_col`` or its first column); a
-    plain iterable of ints goes through the Arrow local-frame path
-    (JVM LocalRelation — never a Python-pickled RDD)."""
-    if isinstance(ids, DataFrame):
-        col = id_col if id_col is not None else ids.columns[0]
-        return ids.select(F.col(col).cast("bigint").alias("t_id"))
-    from batch_process_dpla_index_spark.operators.relational import (
-        _arrow_local_frame,
-    )
-
-    return _arrow_local_frame(
-        spark, [(int(i),) for i in ids], "t_id bigint"
-    )
-
-
 #: dataset spec: (subdir, id_field, repartition_cols). ``None``
 #: repartition_cols = auto (repartition on "cell" when the column is
 #: present, else write as-is). The FIRST spec is authoritative: it is
@@ -358,15 +419,32 @@ def delete_from_index(
         except (OSError, ValueError):
             wm_row = stored.agg(F.max("ingest_batch").alias("m")).first()
             wm = int(wm_row["m"] or 0)
-    # repartition(1), never coalesce(1): coalesce would collapse any
-    # upstream computation of a derived ids frame onto one task
-    (
-        _ids_frame(spark, ids, id_col)
-        .select("t_id", F.lit(wm).cast("int").alias("t_max_batch"))
-        .repartition(1)
-        .write.mode("append")
-        .parquet(_tombstones_dir(index_dir))
-    )
+    if isinstance(ids, DataFrame):
+        # repartition(1), never coalesce(1): coalesce would collapse any
+        # upstream computation of a derived ids frame onto one task
+        (
+            ids.select(
+                F.col(id_col or ids.columns[0]).cast("bigint").alias("t_id"),
+                F.lit(wm).cast("int").alias("t_max_batch"),
+            )
+            .repartition(1)
+            .write.mode("append")
+            .parquet(_tombstones_dir(index_dir))
+        )
+    else:
+        # a plain id list is a few KB: one part file written on the
+        # driver, no Spark job
+        import pyarrow as pa
+
+        t_ids = [int(i) for i in ids]
+        if t_ids:
+            write_parquet_file(
+                pa.table({
+                    "t_id": pa.array(t_ids, pa.int64()),
+                    "t_max_batch": pa.array([wm] * len(t_ids), pa.int32()),
+                }),
+                _tombstones_dir(index_dir),
+            )
 
     if not recount:
         manifest["Tombstone count"] = "stale"
@@ -402,30 +480,18 @@ def compact_index_tombstones(
     """Physically rewrite each stored dataset minus the tombstone set,
     then clear the set — the vacuum step. ``ingest_batch`` partitions
     are preserved row-for-row on the survivors, so replay pruning
-    stays valid across the compaction.
-
-    Failure-safe swap ordering (the rebuild products' convention):
-    write ALL survivor datasets to sibling dirs first → move each live
-    dataset aside → flip the manifest → move the new data to the live
-    names → delete the old copies and the tombstone set LAST. A crash
-    between the swap and the tombstone clear leaves a redundant
-    anti-join against already-removed ids — a no-op, never data loss
-    or resurrection; a crash mid-swap leaves a missing live dir, which
-    is LOUD (unreadable) and recoverable from the ``__old`` copy.
+    stays valid across the compaction. Every survivor dataset is
+    written to a ``<subdir>__compact`` sibling first, then all of them
+    go live in one :func:`commit_staged`.
 
     The record count comes from the FIRST dataset spec (one row per
     id); later datasets (band buckets) are rewritten with the same
     anti-join but never counted."""
-    import shutil
-
     specs = _dataset_specs(id_field, datasets)
     manifest = read_manifest(index_dir)
-    n_live = 0
-    staged: list[tuple[str, str, str]] = []  # (live, tmp, old)
+    swaps: list[tuple[str, str]] = []
     for i, (subdir, ds_id, part_cols) in enumerate(specs):
-        live_dir = os.path.join(index_dir, subdir)
         tmp_dir = os.path.join(index_dir, subdir + "__compact")
-        old_dir = os.path.join(index_dir, subdir + "__old")
         stored = read_dataset(spark, index_dir, subdir, manifest)
         live = apply_tombstones(spark, index_dir, stored, ds_id)
         if schema_key(subdir) in manifest:
@@ -445,46 +511,22 @@ def compact_index_tombstones(
         # their signatures survive via other batches' keys being
         # capped) — the i==0 refusal below covers only the per-id
         # dataset, and a zero-row partitionBy write would install an
-        # unreadable live dir at the swap
+        # unreadable live dir at the commit
         overwrite_dataset_readable(
             writer,
             tmp_dir,
             "ingest_batch" if "ingest_batch" in stored.columns else None,
         )
         if i == 0:
-            # survivor count from the freshly WRITTEN footers — the
-            # anti-join now runs ONCE, in the write; the old
-            # persist+count+write shape paid a second materialization
-            # of the survivor frame per dataset (guide §1.2: don't
-            # compute things twice). r18: the footer read happens on
-            # the driver (parquet_rowcount), not as a Spark job. The
-            # empty refusal happens before any swap, so state is
-            # unchanged: only the staging dir is written/removed here.
+            # survivor count from the freshly WRITTEN footers, on the
+            # driver: the anti-join runs once, in the write
             n_live = parquet_rowcount(tmp_dir)
-            if n_live == 0:
-                # an empty dataset is unreadable (no part files, no
-                # schema) — every later serve would crash obscurely;
-                # refuse loudly instead
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                raise ValueError(
-                    "compaction would remove every stored row; an "
-                    "empty index is unreadable (rebuild refuses the "
-                    "same way) — delete the index directory instead"
-                )
-        staged.append((live_dir, tmp_dir, old_dir))
-
-    for live_dir, _tmp, old_dir in staged:
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(live_dir, old_dir)
-    manifest["Record count"] = str(n_live)
+            refuse_empty(n_live, tmp_dir)
+            manifest["Record count"] = str(n_live)
+        swaps.append((tmp_dir, os.path.join(index_dir, subdir)))
     manifest["Tombstone count"] = "0"
     manifest.pop("Record count stale", None)
-    write_manifest(manifest, index_dir)
-    for live_dir, tmp_dir, _old in staged:
-        os.rename(tmp_dir, live_dir)
-    for _live, _tmp, old_dir in staged:
-        shutil.rmtree(old_dir)
-    shutil.rmtree(_tombstones_dir(index_dir), ignore_errors=True)
+    commit_staged(index_dir, manifest, swaps)
     return manifest
 
 

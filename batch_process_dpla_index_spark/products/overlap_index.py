@@ -313,21 +313,21 @@ def delete_from_overlap_index(
     are physically compacted in the same call (>1 defers; like the
     other index products, a delete matching nothing never compacts).
     Returns the updated manifest."""
-    from batch_process_dpla_index_spark.operators.relational import (
-        _arrow_local_frame,
+    import pyarrow as pa
+
+    from batch_process_dpla_index_spark.products.index_tombstones import (
+        write_parquet_file,
     )
 
     if isinstance(sources, str):
         # a bare string would iterate CHARACTERS and tombstone each
         # one-char "source" — a silent mass-delete footgun
         sources = [sources]
-    rows = [(str(s),) for s in sources]
+    rows = [str(s) for s in sources]
     if rows:
-        (
-            _arrow_local_frame(spark, rows, "t_source string")
-            .repartition(1)
-            .write.mode("append")
-            .parquet(_source_tombstones_dir(index_dir))
+        write_parquet_file(
+            pa.table({"t_source": pa.array(rows, pa.string())}),
+            _source_tombstones_dir(index_dir),
         )
     manifest = read_manifest(index_dir)
     sig = spark.read.parquet(_sig_path(index_dir))
@@ -346,29 +346,26 @@ def compact_overlap_index(
     spark: SparkSession, index_dir: str
 ) -> dict[str, str]:
     """Physically rewrite the signature artifact minus the tombstoned
-    sources, then clear the tombstone set — the vacuum step, through
-    the same bounded-metadata driver hop as refresh (|sources| × 65
-    ints, Arrow both ways), which also makes the self-overwrite safe.
-    Clear-last ordering: a crash before the clear leaves a redundant
-    anti-join (a no-op), never resurrection. Refuses to compact away
+    sources, then clear the tombstone set — the vacuum step. The
+    survivors are written to a ``signatures__compact`` sibling and go
+    live in one `index_tombstones.commit_staged`; ``Record count``
+    comes from the staged parquet footers. Refuses to compact away
     every source (an empty index is unreadable — the rebuild/compact
     convention of the other index products)."""
     from batch_process_dpla_index_spark.products.index_tombstones import (
-        clear_tombstones,
+        commit_staged,
+        parquet_rowcount,
+        refuse_empty,
     )
 
-    live = _live_signatures(spark, index_dir)
-    pdf = live.toPandas()
-    if len(pdf) == 0:
-        raise ValueError(
-            "compaction would remove every stored source; an empty "
-            "index is unreadable — delete the index directory instead"
-        )
-    out = spark.createDataFrame(pdf, live.schema)
-    out.coalesce(1).write.mode("overwrite").parquet(_sig_path(index_dir))
-    clear_tombstones(index_dir)
+    staged = _sig_path(index_dir) + "__compact"
+    _artifact_frame(_live_signatures(spark, index_dir)).write.mode(
+        "overwrite"
+    ).parquet(staged)
+    n_live = parquet_rowcount(staged)
+    refuse_empty(n_live, staged)
     manifest = read_manifest(index_dir)
-    manifest["Record count"] = str(len(pdf))
+    manifest["Record count"] = str(n_live)
     manifest["Tombstone count"] = "0"
-    write_manifest(manifest, index_dir)
+    commit_staged(index_dir, manifest, [(staged, _sig_path(index_dir))])
     return manifest

@@ -467,6 +467,31 @@ def test_connected_components_driver_tier_matches_distributed(spark, monkeypatch
     assert got_a[:4] == [(1, 1), (2, 1), (3, 1), (4, 1)]
 
 
+def test_cosine_and_pq_topk_drop_null_ids(spark):
+    """A row with a NULL id is neither a query nor a neighbor of the
+    exact cosine and ADC top-k (it used to serve as neighbor -2^63, and
+    a NULL query id raised a TypeError); a NULL vector still raises."""
+    import pytest
+
+    from batch_process_dpla_index_spark.operators.quantization import pq_topk
+
+    ddl = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (None, [1.0, 0.1]), (3, [0.0, 1.0])], ddl
+    )
+    got = sorted(map(tuple, cosine_topk(corpus, corpus, k=2).collect()))
+    assert [(q, n) for q, n, _s, _r in got] == [(1, 3), (3, 1)]
+
+    books = [[[1.0, 0.0], [0.0, 1.0]]]  # one 2-centroid sub-codebook
+    got = pq_topk(corpus, books, k=2, n_queries=None).collect()
+    assert {r["query_id"] for r in got} == {1, 3}
+    assert {r["neighbor_id"] for r in got} <= {1, 3}
+
+    null_vec = spark.createDataFrame([(1, [1.0, 0.0]), (2, None)], ddl)
+    with pytest.raises(Exception, match="NULL row"):
+        cosine_topk(null_vec, corpus.limit(1), k=2).collect()
+
+
 def test_cosine_topk_default_plan_is_map_in_arrow(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)

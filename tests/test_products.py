@@ -1117,20 +1117,112 @@ def test_ann_serve_job_count(spark, tmp_path):
 
     def serve_jobs(group):
         assert len(serve()) == 25 * 5  # warm
-        sc = spark.sparkContext
-        sc.setJobGroup(group, "ann serve job count")
-        try:
-            serve()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _count_jobs(spark, group, serve)
 
     assert serve_jobs("test-ann-serve") == 1
-    # takedowns of ids the batch does not hold, twice: a repeated id
-    delete_from_ann_index(spark, idx, [10**9, 10**9 + 1], compact_threshold=2.0)
+    # takedowns of ids the batch does not hold, twice: a repeated id.
+    # A plain id list lands as one part file written on the driver, so
+    # the delete runs only the recount: 3 jobs
+    assert _count_jobs(spark, "test-ann-delete", lambda: delete_from_ann_index(
+        spark, idx, [10**9, 10**9 + 1], compact_threshold=2.0
+    )) == 3
     delete_from_ann_index(spark, idx, [10**9], compact_threshold=2.0)
     assert serve_jobs("test-ann-serve-tombstoned") <= 2
+
+
+def test_plain_list_delete_empty_and_repeated_ids(spark, tmp_path):
+    """A plain id list is appended as one driver-written part file:
+    an empty list changes neither the counts nor the serve, and a
+    repeated id tombstones once, as the Spark-written append did."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = spark.createDataFrame(
+        load_table(spark, SF_DIR, "embeddings")
+        .select("vec_id", "embedding").orderBy("vec_id").limit(40).toPandas()
+    )
+    ids = [r["vec_id"] for r in emb.collect()]
+    idx = str(tmp_path / "plain_delete")
+    build_ann_index(emb, "vec_id", "embedding", idx, dim=64, n_cells=4,
+                    learned=False)
+
+    def serve():
+        return sorted(map(tuple, ann_query_indexed(
+            spark, emb.limit(5), "vec_id", "embedding", idx, k=5, n_probe=4
+        ).collect()))
+
+    def counts(m):
+        return m["Record count"], m["Tombstone count"]
+
+    before = serve()
+    assert counts(delete_from_ann_index(spark, idx, [], compact_threshold=2.0)) == ("40", "0")
+    assert serve() == before
+    victim = ids[-1]
+    m = delete_from_ann_index(spark, idx, [victim, victim], compact_threshold=2.0)
+    assert counts(m) == ("39", "1")
+    assert not any(victim == r[1] for r in serve())
+    assert counts(read_manifest(idx)) == ("39", "1")
+
+
+def _count_jobs(spark, group, action):
+    """Run ``action`` under job group ``group``; the jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ann_index_action_job_counts(spark, tmp_path):
+    """Traced jobs per ANN index action on 500 vectors. The model files
+    (centroids, the two-level model) are written on the driver, so a
+    build runs no job for them, and a rebuild none for its staged
+    copies; compaction is the staged write and its anti-join."""
+    from batch_process_dpla_index_spark.products.ann_index import (
+        build_ann_index,
+        compact_ann_index,
+        delete_from_ann_index,
+        rebuild_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = (
+        load_table(spark, SF_DIR, "embeddings")
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(500)
+    )
+    counts = {}
+    for learned, name in ((True, "flat"), ("two-level", "two-level")):
+        idx = str(tmp_path / name)
+        counts[f"build {name}"] = _count_jobs(
+            spark, f"test-build-{name}", lambda: build_ann_index(
+                emb, "vec_id", "embedding", idx, dim=64, n_cells=16,
+                learned=learned, kmeans_iters=2,
+            )
+        )
+        counts[f"rebuild {name}"] = _count_jobs(
+            spark, f"test-rebuild-{name}",
+            lambda: rebuild_ann_index(spark, idx, n_cells=16, kmeans_iters=2),
+        )
+        delete_from_ann_index(spark, idx, list(range(1, 41)),
+                              compact_threshold=2.0)
+        counts[f"compact {name}"] = _count_jobs(
+            spark, f"test-compact-{name}", lambda: compact_ann_index(spark, idx)
+        )
+    assert counts == {
+        "build flat": 3, "rebuild flat": 7, "compact flat": 3,
+        "build two-level": 3, "rebuild two-level": 7, "compact two-level": 3,
+    }
 
 
 def test_ann_cells_schema_tracks_every_write(spark, tmp_path):

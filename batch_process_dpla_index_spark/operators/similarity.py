@@ -772,7 +772,7 @@ _QUERY_BATCH_CAP_BYTES = 512 << 10
 
 
 def _probe_serve(
-    stored: DataFrame,
+    stored: "DataFrame | Callable[[], DataFrame]",
     queries: DataFrame,
     id_col: str,
     vec_col: str,
@@ -782,6 +782,7 @@ def _probe_serve(
     probe_blocks,
     probing,
     scorer: _BlockScorer = _COSINE,
+    read_cells=None,
 ) -> DataFrame:
     """Serve a query batch against PRE-ASSIGNED stored cells — the one
     IVF top-k serve: flat (:func:`_flat_query_topk`) and two-level
@@ -804,23 +805,35 @@ def _probe_serve(
        ``probe_blocks(q_mat)`` yields `_two_level_probe_blocks`-shaped
        ``(slot, rows, gcells)`` blocks (batch row indices × their
        probed cell ids) from the shared numpy kernels;
-    3. filter the stored cells to the probed set (``cell IN (...)``,
-       pushed into the scan) and read only (cell, id, payload);
-    4. ONE mapInArrow pass: per cell an Arrow batch holds, one
+    3. read only (cell, id, payload) of the probed cells;
+    4. score them with ``score``: per cell an Arrow batch holds, one
        ``scorer.block`` against the queries probing it, and one
-       per-query top-k over everything the task read
+       per-query top-k over everything the batches held
        (:func:`_merge_topk`);
-    5. collect those candidates (the serve's one Spark job, plus the
-       tombstone broadcast when the index has deletes) and merge them
-       per query on the driver (:func:`_merge_topk` again).
+    5. merge the candidates per query on the driver (:func:`_merge_topk`
+       again).
+
+    Steps 3-4 take one of two routes. ``read_cells(cells, columns)``,
+    when the caller has one (a persisted index:
+    `index_tombstones.live_table`), reads the probed live cells on the
+    driver as a ``pa.Table``, and ``score`` runs there over its
+    batches: the serve runs no Spark job (a batch that is not a local
+    frame costs its own collect). When there is no reader, or it
+    declines (None: over its row cap, or a NULL), the stored frame is
+    filtered to the probed set (``cell IN (...)``, pushed into the
+    scan) and ``score`` runs as ONE mapInArrow pass whose candidates
+    are collected: one Spark job, plus the tombstone broadcast when
+    the index has deletes. ``stored`` is that frame, or a
+    zero-argument function that builds it, so a serve the reader
+    answers plans no Spark read.
 
     The result is a local frame whose output projection Spark folds
     on the driver, so a consumer's action runs no further job. Stored
     rows never cross an exchange, and nothing shuffles. Over the cap
     the batch takes the distributed plan instead: ``probing(queries)``
     assigns it in an Arrow pass and :func:`_ivf_score_and_rank`
-    shuffles stored and probe rows on the cell id. Same rows either
-    way (pinned in tests): both paths serve the batch without its rows
+    shuffles stored and probe rows on the cell id. Same rows on every
+    route (pinned in tests): each serves the batch without its rows
     whose id or vector is NULL, which have no neighbors to rank."""
     import numpy as np
     import pyarrow as pa
@@ -835,6 +848,7 @@ def _probe_serve(
     rows = bounded_collect(queries, cap)
     pay = scorer.payload
     if rows is None:
+        stored = stored() if callable(stored) else stored
         stored_side = stored.select(
             F.col("cell").cast("int").alias("cell"),
             F.lit(0).alias("role"),
@@ -842,10 +856,9 @@ def _probe_serve(
             F.col(pay),
         )
         return _ivf_score_and_rank(stored_side, probing(queries), k, scorer)
+    spark = queries.sparkSession
     if not rows:
-        return stored.sparkSession.createDataFrame([], _TOPK_SCHEMA).selectExpr(
-            *scorer.output
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA).selectExpr(*scorer.output)
     q_ids = np.array([r[0] for r in rows], dtype="int64")
     q_mat = np.array([r[1] for r in rows], dtype="float64")
     blocks = list(probe_blocks(q_mat))
@@ -855,6 +868,11 @@ def _probe_serve(
     cells, starts = np.unique(q_cells[by_cell], return_index=True)
     # cell → the query rows probing it: the closure the scan side needs
     probers = dict(zip(cells.tolist(), np.split(q_rows[by_cell], starts[1:])))
+    cand_schema = pa.schema([
+        ("query_id", pa.int64()),
+        ("neighbor_id", pa.int64()),
+        ("raw_score", pa.float64()),
+    ])
 
     def score(batches):
         out_q, out_n, out_s = [], [], []
@@ -881,17 +899,23 @@ def _probe_serve(
                 k,
             )
             yield pa.RecordBatch.from_arrays(
-                [pa.array(tq), pa.array(tn), pa.array(ts)],
-                ["query_id", "neighbor_id", "raw_score"],
+                [pa.array(tq), pa.array(tn), pa.array(ts)], schema=cand_schema
             )
 
-    probed = ", ".join(map(str, cells.tolist()))
-    cand = (
-        stored.where(f"cell IN ({probed})")
-        .selectExpr("CAST(cell AS INT) AS cell", "id", pay)
-        .mapInArrow(score, _CAND_SCHEMA)
-        .toArrow()
-    )
+    local = read_cells(cells.tolist(), ["cell", "id", pay]) if read_cells else None
+    if local is not None:
+        cand = pa.Table.from_batches(
+            list(score(local.to_batches())), schema=cand_schema
+        )
+    else:
+        stored = stored() if callable(stored) else stored
+        probed = ", ".join(map(str, cells.tolist()))
+        cand = (
+            stored.where(f"cell IN ({probed})")
+            .selectExpr("CAST(cell AS INT) AS cell", "id", pay)
+            .mapInArrow(score, _CAND_SCHEMA)
+            .toArrow()
+        )
     tq, tn, ts, rank = _merge_topk(
         cand.column("query_id").to_numpy(),
         cand.column("neighbor_id").to_numpy(),
@@ -907,9 +931,7 @@ def _probe_serve(
             "rank": pa.array(rank, pa.int32()),
         }
     )
-    return stored.sparkSession.createDataFrame(merged, _TOPK_SCHEMA).selectExpr(
-        *scorer.output
-    )
+    return spark.createDataFrame(merged, _TOPK_SCHEMA).selectExpr(*scorer.output)
 
 
 def ivf_query_topk(
@@ -955,10 +977,12 @@ def _flat_query_topk(
     n_probe: int,
     centroids=None,
     scorer: _BlockScorer = _COSINE,
+    read_cells=None,
 ) -> DataFrame:
-    """:func:`ivf_query_topk` under any block scorer: each query probes
-    its ``n_probe`` flat cells by `_cell_order` (on the driver, or in
-    the fallback's :func:`ivf_cells_pandas` pass)."""
+    """:func:`ivf_query_topk` under any block scorer and cell reader
+    (:func:`_probe_serve`): each query probes its ``n_probe`` flat
+    cells by `_cell_order` (on the driver, or in the fallback's
+    :func:`ivf_cells_pandas` pass)."""
     import numpy as np
 
     def probe_blocks(mat):
@@ -977,7 +1001,7 @@ def _flat_query_topk(
 
     return _probe_serve(
         stored, queries, id_col, vec_col, dim, k, min(n_probe, n_cells),
-        probe_blocks, probing, scorer,
+        probe_blocks, probing, scorer, read_cells,
     )
 
 
@@ -994,6 +1018,7 @@ def _imi_query_topk(
     dim: int,
     k: int,
     scorer: _BlockScorer = _COSINE,
+    read_cells=None,
 ) -> DataFrame:
     """:func:`_flat_query_topk` for a two-level (IMI) index: each query's
     p_c·p_f probed global cells come from `_two_level_probe_blocks`
@@ -1018,6 +1043,7 @@ def _imi_query_topk(
     return _probe_serve(
         stored, queries, id_col, vec_col, dim, k,
         p_c * min(n_probe_fine, k_f), probe_blocks, probing, scorer,
+        read_cells,
     )
 
 

@@ -19,10 +19,12 @@ index once per corpus version and amortizes it over every query batch:
   whole model fits on the driver, read there with pyarrow), collect
   the query batch (up to 1,024 queries at dim 64), rank each query's
   probe cells on the driver (flat, or the IMI probe of a two-level
-  index), score ONLY the probed stored cells in one Arrow pass with
-  the serve's block scorer and merge the candidates on the driver
-  (``operators.similarity._probe_serve``): one Spark job. The corpus
-  is never re-assigned and never shuffled.
+  index), score ONLY the probed stored cells with the serve's block
+  scorer and merge the candidates on the driver
+  (``operators.similarity._probe_serve``). Probed cells of up to
+  ``index_tombstones._SCAN_DRIVER_MAX_ROWS`` rows are read and scored
+  on the driver (no Spark job); larger ones in one Arrow pass (one
+  job). The corpus is never re-assigned and never shuffled.
 
 Scale: index build is one corpus pass + k-means (bounded driver state:
 k×dim). Query cost is a scan of the probed cells plus a driver merge
@@ -56,6 +58,7 @@ from batch_process_dpla_index_spark.products.index_tombstones import (
     commit_staged,
     dataset_ddl,
     keyed_repartition,
+    live_table,
     read_dataset,
     refuse_empty,
     schema_key,
@@ -461,9 +464,10 @@ def pq_query_indexed(
     The serve is :func:`ann_query_indexed`'s, with the ADC block
     scorer (`quantization._adc_scorer`) in place of cosine: the same
     cell routing (flat, or the IMI probe of a two-level index), the
-    same one-job broadcast probe under the query-batch cap, which
-    scans only (cell, id, codes) of the probed cells, and the same
-    cell-shuffle fallback over it. Query rows whose id or vector is
+    same broadcast probe under the query-batch cap, which reads only
+    (cell, id, codes) of the probed cells (on the driver under the scan
+    cap, else in one Arrow pass), and the same cell-shuffle fallback
+    over it. Query rows whose id or vector is
     NULL return no rows."""
     from batch_process_dpla_index_spark.operators.quantization import (
         _adc_scorer,
@@ -732,13 +736,17 @@ def ann_query_indexed(
     (probes·k rows of 24 bytes per query) both fit
     `similarity._QUERY_BATCH_CAP_BYTES` is collected, each query's
     probe cells are ranked on the driver, only the probed stored cells
-    are read and scored, in one Arrow pass, and the candidates merge
-    on the driver into a local frame — one Spark job (two with
-    tombstones), and the stored vectors are never shuffled. A larger
-    batch (e.g. the ``ann-index query`` CLI over a whole parquet file)
-    takes the cell-grouped shuffle of `_ivf_score_and_rank` instead;
-    the rows are the same. Both paths drop query rows whose id or
-    vector is NULL: such a query returns no rows.
+    are read and scored, and the candidates merge on the driver into a
+    local frame. The probed live cells are read and scored on the
+    driver (`index_tombstones.live_table`) when they hold at most
+    `index_tombstones._SCAN_DRIVER_MAX_ROWS` rows: no Spark job, for a
+    client-built batch. Over that cap they are scored in one Arrow
+    pass: one Spark job (two with tombstones). The stored vectors are
+    never shuffled. A larger batch (e.g. the ``ann-index query`` CLI
+    over a whole parquet file) takes the cell-grouped shuffle of
+    `_ivf_score_and_rank` instead; the rows are the same on all three
+    routes. Each drops query rows whose id or vector is NULL: such a
+    query returns no rows.
 
     A two-level-built index ranks cells through the IMI probe
     (`similarity._two_level_probe_blocks`): rank k_c coarse centroids,
@@ -767,9 +775,17 @@ def _serve(
     """The one index serve of :func:`ann_query_indexed` (cosine) and
     :func:`pq_query_indexed` (ADC): route the batch through the
     manifest's layout to `similarity._probe_serve` over the live
-    cells."""
+    cells, read on the driver (`index_tombstones.live_table`) under its
+    row cap. Only the Spark routes build the :func:`_live_cells`
+    plan."""
     manifest = read_manifest(index_dir)
-    stored = _live_cells(spark, index_dir, manifest)
+
+    def stored():
+        return _live_cells(spark, index_dir, manifest)
+
+    def read_cells(cells, columns):
+        return live_table(index_dir, "cells", "id", columns, cells)
+
     dim = int(manifest["dim"])
     n_cells = int(manifest["n_cells"])
     two_level_model, centroids = _load_quantizer(spark, index_dir, manifest)
@@ -780,7 +796,7 @@ def _serve(
         )
         return _imi_query_topk(
             stored, queries, coarse, fine, k_f, p_c, p_f, id_col, vec_col,
-            dim, k, scorer,
+            dim, k, scorer, read_cells,
         )
     if probe_coarse is not None or probe_fine is not None:
         # silently ignoring the IMI widths on a flat-served index would
@@ -792,7 +808,7 @@ def _serve(
         )
     return _flat_query_topk(
         stored, queries, id_col, vec_col, dim, k, n_cells, n_probe,
-        centroids, scorer,
+        centroids, scorer, read_cells,
     )
 
 

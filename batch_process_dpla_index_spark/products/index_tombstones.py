@@ -12,12 +12,14 @@ to an index artifact:
   dataset under ``index_dir``, each id stamped with the index's max
   ``ingest_batch`` at delete time (the WATERMARK). The append is
   O(|ids|) — no cell rewrite; the default manifest recount +
-  threshold check is ONE anti-join count over the stored (id,
-  ingest_batch) columns (the total comes from the parquet footers),
-  skippable entirely with ``recount=False`` for the pure-O(|ids|)
-  hot path.
+  threshold check counts the live stored (id, ingest_batch) rows, on
+  the driver under :data:`_SCAN_DRIVER_MAX_ROWS` (:func:`live_table`),
+  else with ONE anti-join count (the total comes from the parquet
+  footers), skippable entirely with ``recount=False`` for the
+  pure-O(|ids|) hot path.
 - **serve** = every stored-cells read anti-joins the tombstone set:
-  ``stored.id == t_id AND stored.ingest_batch <= t_max_batch``.
+  ``stored.id == t_id AND stored.ingest_batch <= t_max_batch``
+  (:func:`apply_tombstones`; :func:`live_table` is its driver twin).
   The watermark makes append-after-delete well defined: a delete
   removes every copy of the id PRESENT at delete time; a later
   re-ingest of the same id is new data and serves normally (the
@@ -264,6 +266,133 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     )
 
 
+#: Most stored rows a driver read (:func:`live_table`) scans before it
+#: declines and the caller runs its Spark pass instead: the probed
+#: cells of a serve, the (id, ingest_batch) columns of a delete
+#: recount. Set from ``tools/serve_scan_crossover.py`` (local[4] on 4
+#: cores at loadavg 2-3, 16 cells, k 5, 4 probes, dim 64 float32,
+#: median of 3 warm serves, in s; driver = read, score and merge on
+#: the driver, spark = the ``mapInArrow`` pass and its collect):
+#:
+#:   index      vectors files | 25 q: rows read driver spark | 1,024 q: driver spark
+#:   flat         8,000     1 |          8,000  0.130  0.278 |          0.365  0.524
+#:   flat        16,000     3 |         16,000  0.215  0.505 |          0.577  0.619
+#:   flat        24,000     4 |         24,000  0.098  0.251 |          0.693  0.471
+#:   flat        50,000     4 |         50,000  0.188  0.343 |          1.283  0.914
+#:   two-level    8,000     1 |          6,982  0.091  0.264 |          0.457  0.662
+#:   two-level   16,000     3 |         12,087  0.138  0.270 |          0.672  0.740
+#:   two-level   24,000     3 |         20,412  0.131  0.291 |          0.966  0.750
+#:   two-level   50,000     3 |         41,664  0.219  0.315 |          3.377  2.191
+#:
+#: (A 1,024-query batch reads every stored row but a few hundred.) A
+#: 25-query batch is faster on the driver at every size; a 1,024-query
+#: batch crosses over at about 16k rows read on both layouts, so the
+#: cap sits there. Worst case under it (16k rows, 1,024 queries): 0.6-
+#: 0.7 s wall and 1.6-2.1 s of driver CPU (numpy's BLAS threads), 4.5
+#: MB of Arrow cells, plus one cell's score block, probers × cell rows
+#: doubles held a few times over (8 MB each for a 1k-row cell, 134 MB
+#: if one cell held all 16k rows) — what one task of the Arrow pass
+#: holds for the same cell.
+_SCAN_DRIVER_MAX_ROWS = 16_384
+
+
+def _bounded_scan(dataset, columns, filter, cap: int):
+    """``dataset``'s ``columns`` under ``filter`` as one table, read
+    batch by batch on the driver, or None as soon as more than ``cap``
+    rows have come back — the :func:`relational.bounded_collect`
+    policy for a pyarrow dataset."""
+    import pyarrow as pa
+
+    batches, n = [], 0
+    for rb in dataset.to_batches(columns=columns, filter=filter):
+        n += rb.num_rows
+        if n > cap:
+            return None
+        batches.append(rb)
+    if batches:
+        return pa.Table.from_batches(batches)
+    return dataset.schema.empty_table().select(columns)
+
+
+def live_table(
+    index_dir: str,
+    subdir: str,
+    id_field: str,
+    columns: "list[str]",
+    cells: "list[int] | None" = None,
+):
+    """The live rows of the index dataset ``subdir`` — what
+    :func:`apply_tombstones` keeps of a Spark read — as a ``pa.Table``
+    of ``columns``, read on the driver with no Spark job; or None, and
+    the caller runs its Spark plan, when:
+
+    - the scan passes :data:`_SCAN_DRIVER_MAX_ROWS` stored rows or
+      tombstone rows (0 disables the read);
+    - a requested column other than ``ingest_batch`` holds a NULL
+      (the Spark plan's NULL semantics stay authoritative);
+    - the layout is not one pyarrow reads as Spark does.
+
+    ``cells`` keeps only those ``cell`` values (pushed into the scan).
+    The scan reads the Hive ``ingest_batch`` partitions and skips
+    ``_``/``.`` files and dirs, as Spark's reader does; a row without
+    ``ingest_batch`` counts as batch 0. A row is hidden when some
+    tombstone has ``t_id = id AND ingest_batch <= t_max_batch``, i.e.
+    when its batch is at most its id's highest watermark, matched with
+    ``index_in`` (an Acero join rejects the ``list`` payload)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    cap = _SCAN_DRIVER_MAX_ROWS
+    if cap <= 0:
+        return None
+    want = list(dict.fromkeys([*columns, id_field, "ingest_batch"]))
+    try:
+        table = _bounded_scan(
+            ds.dataset(
+                os.path.join(index_dir, subdir), format="parquet",
+                partitioning=ds.partitioning(
+                    pa.schema([("ingest_batch", pa.int32())]), flavor="hive"
+                ),
+                ignore_prefixes=["_", "."],
+            ),
+            want, None if cells is None else pc.field("cell").isin(cells), cap,
+        )
+        if table is None or any(
+            table[c].null_count for c in want if c != "ingest_batch"
+        ):
+            return None
+        if has_tombstones(index_dir):
+            # read as read_tombstones does; a NULL t_id or t_max_batch
+            # covers no row, as in the anti-join
+            tombs = _bounded_scan(
+                ds.dataset(
+                    _tombstones_dir(index_dir), format="parquet",
+                    schema=pa.schema(
+                        [("t_id", pa.int64()), ("t_max_batch", pa.int32())]
+                    ),
+                    ignore_prefixes=["_", "."],
+                ),
+                ["t_id", "t_max_batch"],
+                pc.field("t_id").is_valid() & pc.field("t_max_batch").is_valid(),
+                cap,
+            )
+            if tombs is None:
+                return None
+            wm = tombs.group_by("t_id").aggregate([("t_max_batch", "max")])
+            t_ids = wm["t_id"].combine_chunks()
+            covering = pc.take(
+                wm["t_max_batch_max"], pc.index_in(table[id_field], value_set=t_ids)
+            )
+            hidden = pc.less_equal(
+                pc.fill_null(table["ingest_batch"], 0), covering
+            )
+            table = table.filter(pc.invert(pc.fill_null(hidden, False)))
+    except (OSError, pa.ArrowException):
+        return None
+    return table.select(columns)
+
+
 def apply_tombstones(
     spark: SparkSession, index_dir: str, stored: DataFrame, id_field: str
 ) -> DataFrame:
@@ -382,11 +511,12 @@ def delete_from_index(
     id column ("id" for ann_index, "c_id" for embedding_index).
 
     Cost: the tombstone APPEND is O(|ids|) — no corpus pass. The
-    manifest recount + threshold check is ONE column-pruned anti-join
-    count over the stored (id, ingest_batch) columns against the
-    delete-proportional tombstone set (the live count); the total
-    comes from the stored dataset's parquet footers on the driver
-    (:func:`parquet_rowcount`). For the 100 TB hot path where
+    manifest recount + threshold check counts the stored (id,
+    ingest_batch) rows the delete-proportional tombstone set leaves
+    live: a driver read (:func:`live_table`, no Spark job) up to
+    :data:`_SCAN_DRIVER_MAX_ROWS` stored rows, else ONE column-pruned
+    anti-join count; the total comes from the stored dataset's parquet
+    footers on the driver (:func:`parquet_rowcount`). For the 100 TB hot path where
     even that scan per takedown is unwanted, ``recount=False`` skips
     the count AND the threshold check entirely (pure O(|ids|)); the
     manifest then records ``Tombstone count = stale`` and compaction
@@ -456,7 +586,15 @@ def delete_from_index(
         write_manifest(manifest, index_dir)
         return manifest
     total = parquet_rowcount(os.path.join(index_dir, primary_dir))
-    live = apply_tombstones(spark, index_dir, stored, id_field).count()
+    # the live count from a driver read of (id, ingest_batch) under the
+    # scan cap; over it, the anti-join count job
+    live_ids = live_table(
+        index_dir, primary_dir, id_field, [id_field, "ingest_batch"]
+    )
+    if live_ids is not None:
+        live = live_ids.num_rows
+    else:
+        live = apply_tombstones(spark, index_dir, stored, id_field).count()
     dead = total - live
     if total and dead and dead / total >= compact_threshold:
         return compact_index_tombstones(

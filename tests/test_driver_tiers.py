@@ -16,6 +16,7 @@ from batch_process_dpla_index_spark.operators import (
     similarity,
 )
 from batch_process_dpla_index_spark.operators.relational import bounded_collect
+from batch_process_dpla_index_spark.products import index_tombstones
 
 
 def _jobs_in_group(spark, group, fn):
@@ -156,6 +157,34 @@ def _ivf_pq_topk(spark, docs, tmp_path):
     return sorted(map(tuple, out.collect()), key=lambda r: (r[0], r[3]))
 
 
+def _delete_recount(spark, docs, tmp_path):
+    """The manifest counts of a plain-list delete (recounted on the
+    driver, or by the anti-join count) on a fresh index holding an id
+    in two ingest batches, one of them above an earlier watermark."""
+    import tempfile
+
+    from batch_process_dpla_index_spark.products.ann_index import (
+        append_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from batch_process_dpla_index_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    corpus = emb.orderBy("vec_id").limit(40)
+    ids = [r["vec_id"] for r in corpus.collect()]
+    idx = tempfile.mkdtemp(dir=tmp_path)
+    build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=4,
+                    learned=False)
+    delete_from_ann_index(spark, idx, ids[:2], compact_threshold=2.0)
+    append_to_ann_index(spark, corpus.where(F.col("vec_id") == ids[0]),
+                        "vec_id", "embedding", idx, ingest_batch=1)
+    m = delete_from_ann_index(spark, idx, [ids[2], ids[2], 10**9],
+                              compact_threshold=2.0)
+    return m["Record count"], m["Tombstone count"]
+
+
 #: site → (module holding its cap, the cap's name, one run of the site)
 TIERS = {
     "graph": (graph, "_GRAPH_DRIVER_MAX_EDGES", _graph),
@@ -167,14 +196,18 @@ TIERS = {
     "ann_serve": (similarity, "_QUERY_BATCH_CAP_BYTES", _ann_serve),
     "pq_serve": (similarity, "_QUERY_BATCH_CAP_BYTES", _pq_serve),
     "ivf_pq_topk": (similarity, "_QUERY_BATCH_CAP_BYTES", _ivf_pq_topk),
+    "ann_serve_scan": (index_tombstones, "_SCAN_DRIVER_MAX_ROWS", _ann_serve),
+    "pq_serve_scan": (index_tombstones, "_SCAN_DRIVER_MAX_ROWS", _pq_serve),
+    "delete_recount": (index_tombstones, "_SCAN_DRIVER_MAX_ROWS", _delete_recount),
 }
 
 
-def test_pq_serve_runs_one_job(spark, tmp_path):
-    """A warm PQ serve of a client-built query batch runs ONE job, as
-    the cosine serve does: the candidate pass of the shared probe
-    serve, ADC-scored over the probed cells' codes. The codebooks and
-    centroids are read on the driver and the candidates merge there."""
+def test_pq_serve_runs_one_job(spark, tmp_path, monkeypatch):
+    """A warm PQ serve of a client-built query batch runs no job, as
+    the cosine serve does: the codebooks, the centroids and the probed
+    cells' codes are read on the driver, ADC-scored and merged there.
+    At scan cap 0 it runs ONE job: the candidate pass of the shared
+    probe serve over the probed cells' codes."""
     from batch_process_dpla_index_spark.products.ann_index import (
         build_ann_index,
         pq_query_indexed,
@@ -196,6 +229,10 @@ def test_pq_serve_runs_one_job(spark, tmp_path):
 
     assert len(serve()) == 25 * 5  # warm
     rows, jobs = _jobs_in_group(spark, "pq-serve-jobs", serve)
+    assert len(rows) == 25 * 5 and jobs == 0
+    monkeypatch.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 0)
+    assert len(serve()) == 25 * 5  # warm
+    rows, jobs = _jobs_in_group(spark, "pq-serve-jobs-scan-off", serve)
     assert len(rows) == 25 * 5 and jobs == 1
 
 

@@ -632,9 +632,23 @@ def _assert_probe_pass(served: str, cand: str, kind: str) -> None:
     assert ("vec:" in read) == (kind == "ann"), read
 
 
-def test_ann_serve_broadcast_probe_plan(ann_serve_plan):
-    """The ANN serve ships the query batch to the stored side and
-    merges the candidates on the driver (:func:`_assert_probe_pass`)."""
+def _scan_off(monkeypatch):
+    """Decline the driver read of the probed cells (scan cap 0): an
+    index serve takes its Spark pass."""
+    from batch_process_dpla_index_spark.products import index_tombstones
+
+    monkeypatch.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 0)
+
+
+def test_ann_serve_broadcast_probe_plan(ann_serve_plan, monkeypatch):
+    """Under the default caps the ANN serve reads and scores the
+    probed cells on the driver: nothing is collected as Arrow, and the
+    served frame is a local table. At scan cap 0 it ships the query
+    batch to the stored side and merges the candidates on the driver
+    (:func:`_assert_probe_pass`)."""
+    served, collected = ann_serve_plan()
+    assert "LocalTableScan" in served and collected == [], collected
+    _scan_off(monkeypatch)
     served, (cand,) = ann_serve_plan()
     _assert_probe_pass(served, cand, "ann")
 
@@ -653,10 +667,17 @@ def test_ann_serve_tier_off_plan_is_cell_shuffle(ann_serve_plan, monkeypatch):
 def test_pq_serve_broadcast_probe_plan(ann_serve_plan, monkeypatch, kind):
     """The PQ index serve and ``ivf_pq_topk`` take the ANN serve's
     plan with the ADC scorer (:func:`_assert_probe_pass`): the PQ
-    scan reads (cell, id, codes), never ``vec``. Over the cap both
-    take the cell shuffle, still with no broadcast nested-loop join."""
+    scan reads (cell, id, codes), never ``vec``. The PQ index serve
+    reads its cells on the driver under the default caps and collects
+    nothing as Arrow; ``ivf_pq_topk`` has no index dir and always takes
+    the Arrow pass. Over the query cap both take the cell shuffle,
+    still with no broadcast nested-loop join."""
     from batch_process_dpla_index_spark.operators import similarity
 
+    if kind == "pq":
+        served, collected = ann_serve_plan(kind)
+        assert "LocalTableScan" in served and collected == [], collected
+        _scan_off(monkeypatch)
     served, (cand,) = ann_serve_plan(kind)
     _assert_probe_pass(served, cand, kind)
     monkeypatch.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", 0)

@@ -791,19 +791,28 @@ def _serve_rows(df):
     ids=["kmeans", "pseudo-random", "two-level", "kmeans-pq", "two-level-pq"],
 )
 def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
-    """Tier equivalence of the index serve: the broadcast-probe plan
-    (query batch collected, probed cells scored in one Arrow pass) and
-    the fallback an over-cap batch takes (the cell-grouped shuffle)
-    return identical rows on every quantizer and both scorers (cosine
-    through ``ann_query_indexed``, ADC over the PQ codes through
+    """Tier equivalence of the index serve: the driver read (probed
+    live cells read and scored on the driver), the broadcast-probe
+    plan it falls back to over its scan cap (query batch collected,
+    probed cells scored in one Arrow pass) and the fallback an
+    over-cap batch takes (the cell-grouped shuffle) return identical
+    rows on every quantizer and both scorers (cosine through
+    ``ann_query_indexed``, ADC over the PQ codes through
     ``pq_query_indexed``), through the lifecycle edge cases — an id
-    stored in two ingest batches, a tombstoned id, a query id that is
-    also stored (self-masked), a zero-norm query (NULL cosine scores)
-    and an empty query batch. A large k (short candidate lists from
-    some probed cells) serves the same rows too, and a batch whose
-    vectors fit the cap but whose candidates do not takes the
-    fallback. Query rows with a NULL id or a NULL vector are served by
-    neither path."""
+    stored in two ingest batches, a tombstoned id, an id deleted
+    twice, an id re-appended above its delete watermark (it serves
+    again), a query id that is also stored (self-masked), a zero-norm
+    query (NULL cosine scores) and an empty query batch. A large k
+    (short candidate lists from some probed cells) serves the same
+    rows too, and a batch whose vectors fit the cap but whose
+    candidates do not takes the fallback. Query rows with a NULL id or
+    a NULL vector are served by no route, and a NULL stored payload
+    sends the serve to the Spark pass."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PythonException
+
+    from batch_process_dpla_index_spark.products import index_tombstones
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         append_to_ann_index,
@@ -820,23 +829,31 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
     idx = str(tmp_path / "ann")
     build_ann_index(corpus, "vec_id", "embedding", idx, dim=64, n_cells=16,
                     learned=learned, kmeans_iters=2, pq_m=pq_m)
-    head = corpus.orderBy("vec_id").limit(4).collect()
+    head = corpus.orderBy("vec_id").limit(5).collect()
     dup_ids = [r["vec_id"] for r in head[:3]]
     doomed = head[3]["vec_id"]
-    # the same ids and vectors again, in ingest batch 1
+    revived = head[4]["vec_id"]
+    # the same ids and vectors again, in ingest batch 1; doomed's copy
+    # there sits exactly at its delete watermark (1), so it is hidden
     append_to_ann_index(
-        spark, corpus.filter(F.col("vec_id").isin(dup_ids)),
+        spark, corpus.filter(F.col("vec_id").isin(dup_ids + [doomed])),
         "vec_id", "embedding", idx, ingest_batch=1,
     )
+    delete_from_ann_index(spark, idx, [doomed, revived], compact_threshold=2.0)
     delete_from_ann_index(spark, idx, [doomed], compact_threshold=2.0)
-
-    twins = corpus.filter(F.col("vec_id").isin(dup_ids + [doomed])).select(
-        (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
+    # re-ingested above its watermark (1): the batch-2 copy serves
+    append_to_ann_index(
+        spark, corpus.filter(F.col("vec_id") == revived),
+        "vec_id", "embedding", idx, ingest_batch=2,
     )
+
+    twins = corpus.filter(
+        F.col("vec_id").isin(dup_ids + [doomed, revived])
+    ).select((F.col("vec_id") + 900000).alias("vec_id"), "embedding")
     zero = spark.createDataFrame(
         [(999999, [0.0] * 64)], "vec_id bigint, embedding array<float>"
     )
-    # a NULL id and a NULL vector: both paths drop these rows
+    # a NULL id and a NULL vector: no route serves these rows
     nulls = spark.createDataFrame(
         [(None, [0.5] * 64), (999998, None)],
         "vec_id bigint, embedding array<float>",
@@ -849,17 +866,25 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
         .unionByName(nulls)
     )
 
-    def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES, k=5):
-        # cap 0 puts every batch over the cap: the fallback plan
+    def serve(q, cap=similarity._QUERY_BATCH_CAP_BYTES, k=5,
+              scan=index_tombstones._SCAN_DRIVER_MAX_ROWS):
+        # scan 0 declines the driver read: the Arrow pass; cap 0 puts
+        # every batch over the query cap: the cell shuffle
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(similarity, "_QUERY_BATCH_CAP_BYTES", cap)
+            mp.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", scan)
             return (pq_query_indexed if pq_m else ann_query_indexed)(
                 spark, q, "vec_id", "embedding", idx, k=k, n_probe=4
             )
 
-    got = _serve_rows(serve(queries))
-    assert _serve_rows(serve(queries, cap=0)) == got
-    assert len(got) == 5 * 18
+    def every_route(k):
+        rows = _serve_rows(serve(queries, k=k))
+        assert _serve_rows(serve(queries, k=k, scan=0)) == rows
+        assert _serve_rows(serve(queries, k=k, cap=0)) == rows
+        return rows
+
+    got = every_route(5)
+    assert len(got) == 5 * 19
     assert not {None, 999998, -(2**63)} & {r[0] for r in got}
 
     by_q: dict = {}
@@ -875,15 +900,16 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
         assert first[0] == first[1] and first[0][0] == i
         assert pq_m or first[0][1] == 1.0
     assert all(r[1] != doomed for r in got)
+    # only the re-ingested copy serves: its batch-0 copy stays hidden
+    assert [r[1] for r in by_q[revived + 900000]].count(revived) == 1
+    assert by_q[revived + 900000][0][1] == revived
     # a zero vector has no cosine (NULL), but an ADC distance
     assert all((r[2] is None) == (pq_m is None) for r in by_q[999999])
 
-    assert _serve_rows(serve(queries, k=40)) == _serve_rows(
-        serve(queries, cap=0, k=40)
-    )
-    # the 18 query vectors fit this cap exactly; their candidates
+    every_route(40)
+    # the 19 query vectors fit this cap exactly; their candidates
     # (4 probes · k rows of 24 bytes each) fit it at k=1, not at k=40
-    vec_cap = 18 * 8 * 64
+    vec_cap = 19 * 8 * 64
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -900,6 +926,32 @@ def test_ann_serve_broadcast_matches_fallback(spark, tmp_path, learned, pq_m):
     )
     for df in (empty, empty_off):
         assert df.schema.simpleString() == schema and df.count() == 0
+
+    # a stored row with a NULL payload in every cell: the driver read
+    # declines, and the serve fails in the Spark pass as at scan cap 0
+    pay = "codes" if pq_m else "vec"
+    cells = sorted(set(pq.read_table(
+        os.path.join(idx, "cells"), columns=["cell"]
+    ).column("cell").to_pylist()))
+    stored_schema = pq.read_schema(glob.glob(
+        os.path.join(idx, "cells", "ingest_batch=0", "*.parquet")
+    )[0])
+    null_rows = pa.table(
+        {"cell": pa.array(cells, pa.int32()),
+         "id": pa.array([10**9 + c for c in cells], pa.int64())}
+        | {f.name: pa.nulls(len(cells), f.type)
+           for f in stored_schema if f.name not in ("cell", "id")}
+    )
+    os.makedirs(os.path.join(idx, "cells", "ingest_batch=3"))
+    pq.write_table(
+        null_rows, os.path.join(idx, "cells", "ingest_batch=3", "part-n.parquet")
+    )
+    assert index_tombstones.live_table(
+        idx, "cells", "id", ["cell", "id", pay], cells
+    ) is None
+    for scan in (index_tombstones._SCAN_DRIVER_MAX_ROWS, 0):
+        with pytest.raises(PythonException, match="NULL row"):
+            serve(queries, scan=scan)
 
 
 def test_delete_watermark_skips_empty_batch_dir(spark, tmp_path):
@@ -1089,12 +1141,19 @@ def test_parquet_rowcount_skips_hidden_paths(tmp_path):
 
 
 def test_ann_serve_job_count(spark, tmp_path):
-    """A warm serve of a client-built query batch runs ONE job: the
-    candidate pass. The centroids are read on the driver, the cells
-    read takes the manifest's schema (no schema-inference job), the
-    candidates merge on the driver, and the served local frame's
-    collect runs nothing. With tombstones the anti-join adds only the
-    broadcast of the raw tombstone set: at most two jobs."""
+    """A warm serve of a client-built query batch runs NO job: the
+    centroids and the probed live cells are read on the driver
+    (`index_tombstones.live_table`), scored there and merged there, and
+    the served local frame's collect runs nothing. A plain-list delete
+    writes its tombstones and recounts on the driver too, and a
+    tombstoned serve hides the deleted rows on the driver.
+
+    At scan cap 0 the cells take the Spark pass: a serve runs ONE job,
+    the candidate pass (the cells read takes the manifest's schema, so
+    no schema-inference job); with tombstones the anti-join adds only
+    the broadcast of the raw tombstone set, so at most two; and the
+    delete's recount is the anti-join count, 3 jobs."""
+    from batch_process_dpla_index_spark.products import index_tombstones
     from batch_process_dpla_index_spark.products.ann_index import (
         ann_query_indexed,
         build_ann_index,
@@ -1119,15 +1178,26 @@ def test_ann_serve_job_count(spark, tmp_path):
         assert len(serve()) == 25 * 5  # warm
         return _count_jobs(spark, group, serve)
 
-    assert serve_jobs("test-ann-serve") == 1
-    # takedowns of ids the batch does not hold, twice: a repeated id.
-    # A plain id list lands as one part file written on the driver, so
-    # the delete runs only the recount: 3 jobs
-    assert _count_jobs(spark, "test-ann-delete", lambda: delete_from_ann_index(
-        spark, idx, [10**9, 10**9 + 1], compact_threshold=2.0
-    )) == 3
+    def delete_jobs(group, ids):
+        return _count_jobs(spark, group, lambda: delete_from_ann_index(
+            spark, idx, ids, compact_threshold=2.0
+        ))
+
+    def scan_off(jobs, *args):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 0)
+            return jobs(*args)
+
+    assert serve_jobs("test-ann-serve") == 0
+    assert scan_off(serve_jobs, "test-ann-serve-scan-off") == 1
+    # takedowns of ids the batch does not hold, then one of them again:
+    # a repeated id. A plain id list lands as one part file written on
+    # the driver, so at scan cap 0 the delete runs only the recount
+    assert delete_jobs("test-ann-delete", [10**9, 10**9 + 1]) == 0
+    assert scan_off(delete_jobs, "test-ann-delete-scan-off", [10**9 + 2]) == 3
     delete_from_ann_index(spark, idx, [10**9], compact_threshold=2.0)
-    assert serve_jobs("test-ann-serve-tombstoned") <= 2
+    assert serve_jobs("test-ann-serve-tombstoned") == 0
+    assert scan_off(serve_jobs, "test-ann-serve-tombstoned-scan-off") <= 2
 
 
 def test_plain_list_delete_empty_and_repeated_ids(spark, tmp_path):

@@ -524,6 +524,6 @@ def ivf_pq_topk(
     if n_queries is not None:
         queries = queries.orderBy(F.asc_nulls_last(id_col)).limit(n_queries)
     return _flat_query_topk(
-        encoded, queries, id_col, vec_col, dim, k, n_cells, n_probe,
+        lambda: encoded, queries, id_col, vec_col, dim, k, n_cells, n_probe,
         centroids, _adc_scorer(books),
     )

@@ -772,7 +772,7 @@ _QUERY_BATCH_CAP_BYTES = 512 << 10
 
 
 def _probe_serve(
-    stored: "DataFrame | Callable[[], DataFrame]",
+    stored: "Callable[[], DataFrame]",
     queries: DataFrame,
     id_col: str,
     vec_col: str,
@@ -823,9 +823,9 @@ def _probe_serve(
     filtered to the probed set (``cell IN (...)``, pushed into the
     scan) and ``score`` runs as ONE mapInArrow pass whose candidates
     are collected: one Spark job, plus the tombstone broadcast when
-    the index has deletes. ``stored`` is that frame, or a
-    zero-argument function that builds it, so a serve the reader
-    answers plans no Spark read.
+    the index has deletes. ``stored`` is a zero-argument function that
+    builds that frame, so a serve the reader answers plans no Spark
+    read.
 
     The result is a local frame whose output projection Spark folds
     on the driver, so a consumer's action runs no further job. Stored
@@ -848,8 +848,7 @@ def _probe_serve(
     rows = bounded_collect(queries, cap)
     pay = scorer.payload
     if rows is None:
-        stored = stored() if callable(stored) else stored
-        stored_side = stored.select(
+        stored_side = stored().select(
             F.col("cell").cast("int").alias("cell"),
             F.lit(0).alias("role"),
             F.col("id"),
@@ -908,10 +907,10 @@ def _probe_serve(
             list(score(local.to_batches())), schema=cand_schema
         )
     else:
-        stored = stored() if callable(stored) else stored
         probed = ", ".join(map(str, cells.tolist()))
         cand = (
-            stored.where(f"cell IN ({probed})")
+            stored()
+            .where(f"cell IN ({probed})")
             .selectExpr("CAST(cell AS INT) AS cell", "id", pay)
             .mapInArrow(score, _CAND_SCHEMA)
             .toArrow()
@@ -962,12 +961,13 @@ def ivf_query_topk(
     both paths: they return no rows.
     """
     return _flat_query_topk(
-        stored, queries, id_col, vec_col, dim, k, n_cells, n_probe, centroids
+        lambda: stored, queries, id_col, vec_col, dim, k, n_cells, n_probe,
+        centroids,
     )
 
 
 def _flat_query_topk(
-    stored: DataFrame,
+    stored: "Callable[[], DataFrame]",
     queries: DataFrame,
     id_col: str,
     vec_col: str,
@@ -1006,7 +1006,7 @@ def _flat_query_topk(
 
 
 def _imi_query_topk(
-    stored: DataFrame,
+    stored: "Callable[[], DataFrame]",
     queries: DataFrame,
     coarse,
     fine: dict[int, list[list[float]]],

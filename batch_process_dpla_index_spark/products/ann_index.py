@@ -21,10 +21,11 @@ index once per corpus version and amortizes it over every query batch:
   probe cells on the driver (flat, or the IMI probe of a two-level
   index), score ONLY the probed stored cells with the serve's block
   scorer and merge the candidates on the driver
-  (``operators.similarity._probe_serve``). Probed cells of up to
-  ``index_tombstones._SCAN_DRIVER_MAX_ROWS`` rows are read and scored
-  on the driver (no Spark job); larger ones in one Arrow pass (one
-  job). The corpus is never re-assigned and never shuffled.
+  (``operators.similarity._probe_serve``). Probed cells whose row
+  groups hold up to ``index_tombstones._SCAN_DRIVER_MAX_ROWS`` stored
+  rows (in practice: an index of up to that many rows, since a row
+  group spans most cells) are read and scored on the driver (no Spark
+  job); larger ones in one Arrow pass (one job). The corpus is never re-assigned and never shuffled.
 
 Scale: index build is one corpus pass + k-means (bounded driver state:
 k×dim). Query cost is a scan of the probed cells plus a driver merge
@@ -738,9 +739,9 @@ def ann_query_indexed(
     probe cells are ranked on the driver, only the probed stored cells
     are read and scored, and the candidates merge on the driver into a
     local frame. The probed live cells are read and scored on the
-    driver (`index_tombstones.live_table`) when they hold at most
-    `index_tombstones._SCAN_DRIVER_MAX_ROWS` rows: no Spark job, for a
-    client-built batch. Over that cap they are scored in one Arrow
+    driver (`index_tombstones.live_table`) when the row groups holding
+    them store at most `index_tombstones._SCAN_DRIVER_MAX_ROWS` rows:
+    no Spark job, for a client-built batch. Over that cap they are scored in one Arrow
     pass: one Spark job (two with tombstones). The stored vectors are
     never shuffled. A larger batch (e.g. the ``ann-index query`` CLI
     over a whole parquet file) takes the cell-grouped shuffle of

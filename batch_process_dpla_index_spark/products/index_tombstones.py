@@ -267,28 +267,35 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 
 
 #: Most stored rows a driver read (:func:`live_table`) scans before it
-#: declines and the caller runs its Spark pass instead: the probed
-#: cells of a serve, the (id, ingest_batch) columns of a delete
-#: recount. Set from ``tools/serve_scan_crossover.py`` (local[4] on 4
-#: cores at loadavg 2-3, 16 cells, k 5, 4 probes, dim 64 float32,
-#: median of 3 warm serves, in s; driver = read, score and merge on
-#: the driver, spark = the ``mapInArrow`` pass and its collect):
+#: declines and the caller runs its Spark pass instead: the row groups
+#: holding the probed cells of a serve, the (id, ingest_batch) columns
+#: of a delete recount (:func:`_scan_groups` counts them from the
+#: footers, before any data page is read). Cells are written
+#: hash-clustered, so a row group spans most cells and the rows scanned
+#: are in effect every stored row. Set from
+#: ``tools/serve_scan_crossover.py`` (local[4] on 4 cores at loadavg
+#: 2-3, 16 cells, k 5, 4 probes, dim 64 float32, median of 3 warm
+#: serves, in s; rows scanned = every stored row on each line; kept =
+#: the probed live rows; driver = read, score and merge on the driver,
+#: spark = the ``mapInArrow`` pass and its collect):
 #:
-#:   index      vectors files | 25 q: rows read driver spark | 1,024 q: driver spark
-#:   flat         8,000     1 |          8,000  0.130  0.278 |          0.365  0.524
-#:   flat        16,000     3 |         16,000  0.215  0.505 |          0.577  0.619
-#:   flat        24,000     4 |         24,000  0.098  0.251 |          0.693  0.471
-#:   flat        50,000     4 |         50,000  0.188  0.343 |          1.283  0.914
-#:   two-level    8,000     1 |          6,982  0.091  0.264 |          0.457  0.662
-#:   two-level   16,000     3 |         12,087  0.138  0.270 |          0.672  0.740
-#:   two-level   24,000     3 |         20,412  0.131  0.291 |          0.966  0.750
-#:   two-level   50,000     3 |         41,664  0.219  0.315 |          3.377  2.191
+#:   index      scanned files | 25 q: kept driver spark | 1,024 q: kept driver spark
+#:   flat         8,000     1 |       8,000  0.185  0.460 |       8,000  0.463  0.736
+#:   flat        16,000     3 |      16,000  0.148  0.360 |      16,000  0.671  0.574
+#:   flat        24,000     4 |      24,000  0.142  0.323 |      24,000  0.918  0.602
+#:   flat        50,000     4 |      50,000  0.155  0.301 |      50,000  1.411  0.793
+#:   two-level    8,000     1 |       6,982  0.103  0.346 |       7,495  0.619  0.715
+#:   two-level   16,000     3 |      12,087  0.125  0.297 |      16,000  0.922  0.784
+#:   two-level   24,000     3 |      20,412  0.147  0.283 |      24,000  1.294  0.895
+#:   two-level   50,000     3 |      41,664  0.208  0.294 |      47,365  3.817  2.432
 #:
-#: (A 1,024-query batch reads every stored row but a few hundred.) A
-#: 25-query batch is faster on the driver at every size; a 1,024-query
-#: batch crosses over at about 16k rows read on both layouts, so the
-#: cap sits there. Worst case under it (16k rows, 1,024 queries): 0.6-
-#: 0.7 s wall and 1.6-2.1 s of driver CPU (numpy's BLAS threads), 4.5
+#: A 25-query batch is faster on the driver at every size; a
+#: 1,024-query batch crosses over between 8k and 16k rows scanned on
+#: both layouts (an earlier run of the same script put 16k flat at
+#: 0.58 s driver against 0.62 s spark). The cap sits at 16k: there a
+#: 1,024-query batch loses 0.1-0.14 s on the driver while a 25-query
+#: batch gains 0.2 s. Worst case under it (16k rows, 1,024 queries):
+#: 0.7-0.9 s wall and 2.4 s of driver CPU (numpy's BLAS threads), 4.5
 #: MB of Arrow cells, plus one cell's score block, probers × cell rows
 #: doubles held a few times over (8 MB each for a 1k-row cell, 134 MB
 #: if one cell held all 16k rows) — what one task of the Arrow pass
@@ -296,22 +303,54 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 _SCAN_DRIVER_MAX_ROWS = 16_384
 
 
-def _bounded_scan(dataset, columns, filter, cap: int):
-    """``dataset``'s ``columns`` under ``filter`` as one table, read
-    batch by batch on the driver, or None as soon as more than ``cap``
-    rows have come back — the :func:`relational.bounded_collect`
-    policy for a pyarrow dataset."""
-    import pyarrow as pa
+def _scan_groups(dataset, cap: int, cells=None):
+    """The row groups of ``dataset`` a driver read of ``cells`` (every
+    cell when None) must scan, or None, before any data page is read,
+    once they hold more than ``cap`` stored rows. Every row group is
+    scanned but those whose ``cell`` footer statistics rule out all of
+    ``cells``. Cells are written hash-clustered, not sorted, so a row
+    group spans most cells and a few probed cells of an index over
+    ``cap`` rows decline. Footers are read file by file until the
+    count passes ``cap``, so a large dataset declines after its first
+    few files."""
+    import numpy as np
 
-    batches, n = [], 0
-    for rb in dataset.to_batches(columns=columns, filter=filter):
-        n += rb.num_rows
-        if n > cap:
-            return None
-        batches.append(rb)
-    if batches:
-        return pa.Table.from_batches(batches)
-    return dataset.schema.empty_table().select(columns)
+    probed = None if cells is None else np.unique(np.asarray(cells))
+    groups, n = [], 0
+    for frag in dataset.get_fragments():
+        for group in frag.split_by_row_group():
+            info = group.row_groups[0]
+            stats = (info.statistics or {}).get("cell", {})
+            if probed is not None and "min" in stats and "max" in stats:
+                first = np.searchsorted(probed, stats["min"])
+                if first == len(probed) or probed[first] > stats["max"]:
+                    continue  # no probed cell in [min, max]
+            n += info.num_rows
+            if n > cap:
+                return None
+            groups.append(group)
+    return groups
+
+
+def _bounded_scan(dataset, columns, cap: int, cells=None):
+    """``dataset``'s ``columns`` as one table read on the driver,
+    keeping only the rows whose ``cell`` is in ``cells`` (every row
+    when None); or None when the row groups it must scan hold more
+    than ``cap`` stored rows (:func:`_scan_groups`) — the
+    :func:`relational.bounded_collect` policy for a pyarrow dataset,
+    bounded by the rows scanned, not the rows kept."""
+    import pyarrow.dataset as ds
+
+    groups = _scan_groups(dataset, cap, cells)
+    if groups is None:
+        return None
+    scan = ds.FileSystemDataset(
+        groups, dataset.schema, dataset.format, dataset.filesystem
+    )
+    return scan.to_table(
+        columns=columns,
+        filter=None if cells is None else ds.field("cell").isin(cells),
+    )
 
 
 def live_table(
@@ -326,13 +365,15 @@ def live_table(
     of ``columns``, read on the driver with no Spark job; or None, and
     the caller runs its Spark plan, when:
 
-    - the scan passes :data:`_SCAN_DRIVER_MAX_ROWS` stored rows or
-      tombstone rows (0 disables the read);
+    - the row groups it must scan hold more than
+      :data:`_SCAN_DRIVER_MAX_ROWS` stored rows or tombstone rows
+      (:func:`_bounded_scan`; 0 disables the read);
     - a requested column other than ``ingest_batch`` holds a NULL
       (the Spark plan's NULL semantics stay authoritative);
     - the layout is not one pyarrow reads as Spark does.
 
-    ``cells`` keeps only those ``cell`` values (pushed into the scan).
+    ``cells`` keeps only those ``cell`` values (row groups whose
+    statistics rule them all out are not scanned).
     The scan reads the Hive ``ingest_batch`` partitions and skips
     ``_``/``.`` files and dirs, as Spark's reader does; a row without
     ``ingest_batch`` counts as batch 0. A row is hidden when some
@@ -356,7 +397,7 @@ def live_table(
                 ),
                 ignore_prefixes=["_", "."],
             ),
-            want, None if cells is None else pc.field("cell").isin(cells), cap,
+            want, cap, cells,
         )
         if table is None or any(
             table[c].null_count for c in want if c != "ingest_batch"
@@ -364,7 +405,8 @@ def live_table(
             return None
         if has_tombstones(index_dir):
             # read as read_tombstones does; a NULL t_id or t_max_batch
-            # covers no row, as in the anti-join
+            # covers no row, as in the anti-join: stored ids are never
+            # NULL here, and the max skips a NULL watermark
             tombs = _bounded_scan(
                 ds.dataset(
                     _tombstones_dir(index_dir), format="parquet",
@@ -374,7 +416,6 @@ def live_table(
                     ignore_prefixes=["_", "."],
                 ),
                 ["t_id", "t_max_batch"],
-                pc.field("t_id").is_valid() & pc.field("t_max_batch").is_valid(),
                 cap,
             )
             if tombs is None:
@@ -586,11 +627,13 @@ def delete_from_index(
         write_manifest(manifest, index_dir)
         return manifest
     total = parquet_rowcount(os.path.join(index_dir, primary_dir))
-    # the live count from a driver read of (id, ingest_batch) under the
-    # scan cap; over it, the anti-join count job
-    live_ids = live_table(
-        index_dir, primary_dir, id_field, [id_field, "ingest_batch"]
-    )
+    # the live count from a driver read of (id, ingest_batch) when the
+    # stored rows fit the scan cap; over it, the anti-join count job
+    live_ids = None
+    if total <= _SCAN_DRIVER_MAX_ROWS:
+        live_ids = live_table(
+            index_dir, primary_dir, id_field, [id_field, "ingest_batch"]
+        )
     if live_ids is not None:
         live = live_ids.num_rows
     else:

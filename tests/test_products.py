@@ -1200,6 +1200,106 @@ def test_ann_serve_job_count(spark, tmp_path):
     assert scan_off(serve_jobs, "test-ann-serve-tombstoned-scan-off") <= 2
 
 
+def test_driver_read_bounds_rows_scanned(spark, tmp_path, monkeypatch):
+    """The driver read's cap bounds the stored rows it SCANS, not the
+    rows the probed cells keep. Cells are written hash-clustered, so
+    every row group spans most cells: with 64 cells and one probe per
+    query, the probed rows fit the cap while the index does not, and
+    the read declines from the footers, before any data page is read;
+    the serve then takes the ``mapInArrow`` pass, with the same rows."""
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from batch_process_dpla_index_spark.products import index_tombstones
+    from batch_process_dpla_index_spark.products.ann_index import (
+        ann_query_indexed,
+        build_ann_index,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = spark.createDataFrame(
+        [(i, rng.standard_normal(8).tolist()) for i in range(640)],
+        "vec_id bigint, embedding array<double>",
+    )
+    idx = str(tmp_path / "ann_many_cells")
+    build_ann_index(vecs, "vec_id", "embedding", idx, dim=8, n_cells=64,
+                    learned=False)
+    cells_df = spark.read.parquet(os.path.join(idx, "cells"))
+    probed = sorted(r[0] for r in cells_df.select("cell").distinct().limit(3).collect())
+    n_probed = cells_df.where(F.col("cell").isin(probed)).count()
+    assert n_probed < 320 < 640
+
+    opened = []
+    real_dataset = pads.FileSystemDataset
+
+    def recording_dataset(*args, **kwargs):
+        opened.append(args)
+        return real_dataset(*args, **kwargs)
+
+    monkeypatch.setattr(pads, "FileSystemDataset", recording_dataset)
+    monkeypatch.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 320)
+    assert index_tombstones.live_table(
+        idx, "cells", "id", ["cell", "id", "vec"], probed
+    ) is None
+    assert opened == []  # declined on footer counts alone
+    monkeypatch.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 640)
+    table = index_tombstones.live_table(
+        idx, "cells", "id", ["cell", "id", "vec"], probed
+    )
+    assert table.num_rows == n_probed and opened
+
+    queries = spark.createDataFrame(vecs.limit(3).toPandas())
+
+    def serve():
+        return _serve_rows(ann_query_indexed(
+            spark, queries, "vec_id", "embedding", idx, k=5, n_probe=1
+        ))
+
+    driver = serve()
+    monkeypatch.setattr(index_tombstones, "_SCAN_DRIVER_MAX_ROWS", 320)
+    assert serve() == driver
+    assert _count_jobs(spark, "test-ann-serve-over-scan-cap", serve) == 1
+
+
+def test_scan_groups_skips_row_groups_by_cell_statistics(tmp_path):
+    """A row group whose ``cell`` min/max holds no probed cell is not
+    scanned and not counted against the cap; one with no statistics
+    is."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from batch_process_dpla_index_spark.products.index_tombstones import (
+        _bounded_scan,
+        _scan_groups,
+    )
+
+    # cells 0..63, ten rows each, sorted: row groups of 100 rows hold
+    # cells 10g..10g+9
+    cell = pa.array([c for c in range(64) for _ in range(10)], pa.int32())
+    table = pa.table({"cell": cell, "id": pa.array(range(640), pa.int64())})
+    pq.write_table(table, str(tmp_path / "sorted.parquet"), row_group_size=100)
+    pq.write_table(table.slice(0, 100), str(tmp_path / "nostats.parquet"),
+                   write_statistics=False)
+    sorted_only = pads.dataset(str(tmp_path / "sorted.parquet"))
+
+    def scanned(dataset, cap, cells):
+        groups = _scan_groups(dataset, cap, cells)
+        return None if groups is None else sum(
+            g.row_groups[0].num_rows for g in groups
+        )
+
+    assert scanned(sorted_only, 10**6, None) == 640
+    assert scanned(sorted_only, 10**6, [5, 40]) == 200
+    assert scanned(sorted_only, 10**6, [9, 10]) == 200
+    assert scanned(sorted_only, 10**6, [63]) == 40
+    assert scanned(sorted_only, 10**6, [64, 99]) == 0
+    assert scanned(sorted_only, 199, [5, 40]) is None
+    assert _bounded_scan(sorted_only, ["id"], 200, [5, 40]).num_rows == 20
+    both = pads.dataset(str(tmp_path), format="parquet")
+    assert scanned(both, 10**6, [63]) == 140
+
+
 def test_plain_list_delete_empty_and_repeated_ids(spark, tmp_path):
     """A plain id list is appended as one driver-written part file:
     an empty list changes neither the counts nor the serve, and a

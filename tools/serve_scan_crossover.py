@@ -10,8 +10,8 @@ serve (`products.ann_index`, `operators.similarity._probe_serve`):
 For each index size (synthetic float32 vectors, dim 64, 16 cells), each
 layout (flat k-means, two-level) and each query batch size, it times a
 warm serve on both routes (k 5, 4 probes; median of ``--reps`` after
-one warm-up) and records the stored rows the driver read scanned, the
-driver CPU time of the driver route (``time.process_time`` of this
+one warm-up) and records the stored rows the driver read scanned and
+kept, the driver CPU time of the driver route (``time.process_time`` of this
 process: the read, the scoring and the merge) and the Arrow bytes of
 the cells it held. ``_SCAN_DRIVER_MAX_ROWS`` is set from this table.
 
@@ -95,12 +95,21 @@ def main() -> None:
             read_stats["bytes"] = t.nbytes
         return t
 
+    scan_groups = index_tombstones._scan_groups
+
+    def recording_scan_groups(dataset, cap, cells=None):
+        groups = scan_groups(dataset, cap, cells)
+        if groups is not None and cells is not None:
+            read_stats["scanned"] = sum(g.row_groups[0].num_rows for g in groups)
+        return groups
+
     ann_index.live_table = recording_live_table
+    index_tombstones._scan_groups = recording_scan_groups
     print(f"local[{spark.sparkContext.defaultParallelism}], k {K}, "
           f"{N_PROBE} probes, dim {DIM} float32, median of {args.reps}")
-    print("| index | vectors | files | queries | rows read | driver s "
-          "| driver CPU s | cells MB | spark s |")
-    print("|---|---|---|---|---|---|---|---|---|")
+    print("| index | vectors | files | queries | rows scanned | rows kept "
+          "| driver s | driver CPU s | cells MB | spark s |")
+    print("|---|---|---|---|---|---|---|---|---|---|")
     try:
         for n in args.sizes:
             corpus_path = os.path.join(WORK, f"corpus{n}.parquet")
@@ -139,6 +148,7 @@ def main() -> None:
                     layout = "two-level" if learned == "two-level" else "flat"
                     print(
                         f"| {layout} | {n:,} | {files} | {n_q:,} "
+                        f"| {read_stats['scanned']:,} "
                         f"| {read_stats['rows']:,} | {driver_s:.3f} "
                         f"| {driver_cpu:.3f} | {read_stats['bytes'] / 1e6:.1f} "
                         f"| {spark_s:.3f} |",

@@ -55,6 +55,18 @@ from batch_process_dpla_index_spark.operators.relational import (
     _vector_matrix,
     bounded_collect,
 )
+from batch_process_dpla_index_spark.operators.similarity import (
+    _CAND_SCHEMA,
+    _TOPK_SCHEMA,
+    _block_topk,
+    _BlockScorer,
+    _cell_order,
+    _coarse_matrix,
+    _flat_query_topk,
+    _h60_py,
+    _h60_unit,
+    _rank_candidates,
+)
 
 
 def _subvector_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int):
@@ -169,8 +181,6 @@ def _pq_train_driver(rows, dim, m, k, n_iter):
     ((x − c)²).sum assign expression, means per (subspace, code), and
     the same 1e-12 max-shift early stop."""
     import numpy as np
-
-    from batch_process_dpla_index_spark.operators.similarity import _h60_py
 
     dsub = dim // m
     if len(rows) < k:
@@ -301,8 +311,6 @@ def pq_pinned_codebooks(m: int = 8, k: int = 16, dsub: int = 8):
     same doubles), which is what makes the ENCODE step and the ADC
     distance math SQL-verifiable independently of float k-means
     training."""
-    from batch_process_dpla_index_spark.operators.similarity import _h60_unit
-
     return [
         [
             [
@@ -335,55 +343,25 @@ def adc_tables(Q, books):
     )
 
 
-def adc_score_topk(T, qids, C, ids, k):
-    """Gather code distances for every (query, stored) pair and emit
-    exact local top-k lists with the engine's deterministic tie-break
-    (dist asc, then neighbor_id asc — ``np.lexsort``, the order every
-    top-k merge in the engine keeps; a bare argpartition drops tied
-    candidates arbitrarily and breaks run-to-run determinism).
-    Returns (query_ids, neighbor_ids, dists) lists."""
-    import numpy as np
-
-    m = T.shape[1]
-    dist = T[:, np.arange(m)[None, :], C].sum(axis=2)
-    out_q, out_id, out_d = [], [], []
-    for qi in range(len(qids)):
-        mask = ids != qids[qi]
-        ids_i, d_i = ids[mask], dist[qi][mask]
-        if not ids_i.size:
-            continue
-        order = np.lexsort((ids_i, d_i))[:k]
-        out_q.extend([qids[qi]] * len(order))
-        out_id.extend(ids_i[order])
-        out_d.extend(d_i[order])
-    return out_q, out_id, out_d
-
-
 def _adc_scorer(books):
     """The ADC block scorer of the IVF serve
-    (`similarity._probe_serve`): per probed cell, the ADC tables of
-    the queries probing it (:func:`adc_tables`) gathered over the
-    cell's stored ``codes`` (:func:`adc_score_topk`), so the scan
-    never reads the float ``vec``. The serve merges best-first by
-    raw_score DESC, so the block emits ``-dist2``: dist2 ASC, then
-    neighbor_id ASC. The output negates it back before rounding, so a
-    zero distance reads +0.0."""
+    (`similarity._probe_serve`) and of :func:`pq_topk`: the ADC tables
+    of the scored queries (:func:`adc_tables`) gathered over the
+    stored ``codes``, so the scan never reads the float ``vec``. Every
+    top-k ranks best-first by score DESC, so the block is ``-dist2``:
+    dist2 ASC, then neighbor_id ASC. The output negates it back before
+    rounding, so a zero distance reads +0.0."""
     import numpy as np
 
-    from batch_process_dpla_index_spark.operators.similarity import (
-        _BlockScorer,
-    )
-
     books = np.asarray(books, dtype="float64")
+    m = books.shape[0]
 
-    def block(q_ids, q_mat, c_ids, codes, k):
-        out_q, out_n, out_d = adc_score_topk(
-            adc_tables(q_mat, books), q_ids, codes, c_ids, k
-        )
-        return out_q, out_n, [-d for d in out_d]
+    def scores(q_mat, codes):
+        T = adc_tables(q_mat, books)
+        return -T[:, np.arange(m)[None, :], codes].sum(axis=2)
 
     return _BlockScorer(
-        "codes", block,
+        "codes", scores,
         ("query_id", "neighbor_id", "round(-score, 6) AS dist2", "rank AS rnk"),
     )
 
@@ -404,40 +382,37 @@ def pq_topk(
     The query set (first ``n_queries`` ids, or all when None) must fit
     in a broadcast — the `cosine_topk` contract. Per Arrow batch the
     work is table build O(|Q|·m·k_sub) + gather O(|Q|·rows·m); only
-    per-batch top-k rows leave Python, and the global top-k compiles
-    to one TakeOrdered. Rows with a NULL id are dropped on both sides
-    (as the IVF serves drop them); a NULL vector still raises."""
+    per-batch top-k rows (:func:`similarity._block_topk`) leave Python,
+    and they merge in the shared per-query window
+    (:func:`similarity._rank_candidates`) under the ADC projection
+    (:func:`_adc_scorer`). Rows with a NULL id are dropped on both
+    sides (as the IVF serves drop them), so an empty or all-NULL-id
+    input is an empty result; a NULL vector still raises."""
     import numpy as np
 
     df = df.where(F.col(id_col).isNotNull())
-    books = np.asarray(codebooks, dtype="float64")
+    scorer = _adc_scorer(codebooks)
     codes = pq_encode(df, codebooks, id_col, vec_col)
 
     qdf = df.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     if n_queries is not None:
         qdf = qdf.orderBy("qid").limit(n_queries)
     qrows = qdf.collect()
+    if not qrows:
+        # np.asarray([]) is 1-D and adc_tables indexes Q[:, …]
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA).selectExpr(
+            *scorer.output
+        )
     qids = np.asarray([r["qid"] for r in qrows], dtype="int64")
     Q = np.asarray([list(r["qvec"]) for r in qrows], dtype="float64")
-    T = adc_tables(Q, books)
 
     def score(batch):
         C = _vector_matrix(batch, "codes", dtype="int64")  # rows × m
         ids = batch.column("id").to_numpy(zero_copy_only=False).astype("int64")
-        out_q, out_id, out_d = adc_score_topk(T, qids, C, ids, k)
-        return {"query_id": out_q, "neighbor_id": out_id, "dist2": out_d}
+        out = _block_topk(qids, scorer.scores(Q, C), ids, k)
+        return dict(zip(("query_id", "neighbor_id", "raw_score"), out))
 
-    scored = _arrow_map(
-        codes, score, "query_id bigint, neighbor_id bigint, dist2 double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rnk")
-    )
+    return _rank_candidates(_arrow_map(codes, score, _CAND_SCHEMA), k, scorer)
 
 
 def ivf_pq_topk(
@@ -488,12 +463,6 @@ def ivf_pq_topk(
     Python.
     """
     import numpy as np
-
-    from batch_process_dpla_index_spark.operators.similarity import (
-        _cell_order,
-        _coarse_matrix,
-        _flat_query_topk,
-    )
 
     books = np.asarray(codebooks, dtype="float64")
     m, _, dsub = books.shape

@@ -24,6 +24,10 @@ Every per-batch kernel here decodes its vectors with
 `relational._vector_matrix` and emits through `relational._arrow_map`
 (one ``mapInArrow`` seam); the cell- and bucket-grouped scorers
 (`_ivf_score_and_rank`, `_scored_bucket_pairs`) stay ``applyInPandas``.
+Every scorer, cosine and ADC (`quantization`), picks each query's k
+best rows of a scored block with ONE kernel (`_block_topk`), and the
+candidates merge one way: the `_rank_candidates` window, or its numpy
+twin `_merge_topk` on the driver.
 
 Known precision sensitivity (documented, accepted): the BLAS tiers
 rank on raw float64 scores whose summation order (blocked dgemm)
@@ -90,28 +94,15 @@ def cosine_topk(
         return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r[0] for r in q_rows], dtype="int64")
     q_mat = np.array([r[1] for r in q_rows], dtype="float64")
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     id_name, vec_name = id_col, vec_col
 
     def _score(batch):
         c_ids = batch.column(id_name).to_numpy(zero_copy_only=False).astype("int64")
         c_mat = _vector_matrix(batch, vec_name, dim=q_mat.shape[1])
-        c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-        denom = np.outer(c_norm, q_norm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0, np.nan, (c_mat @ q_mat.T) / denom)
-        out_q, out_n, out_s = [], [], []
-        for j, qid in enumerate(q_ids):
-            col = scores[:, j].copy()
-            mask = c_ids != qid  # exclude self-matches
-            ids_j, col = c_ids[mask], col[mask]
-            if ids_j.size == 0:
-                continue
-            order = np.lexsort((ids_j, -col))[:k]  # NaN sorts last
-            out_q.extend([qid] * len(order))
-            out_n.extend(ids_j[order])
-            out_s.extend(col[order])
-        return {"query_id": out_q, "neighbor_id": out_n, "raw_score": out_s}
+        # corpus × queries, then transposed: the matmul's own operand
+        # order, so raw scores keep their last bits
+        out = _block_topk(q_ids, _cosine_scores(c_mat, q_mat).T, c_ids, k)
+        return dict(zip(("query_id", "neighbor_id", "raw_score"), out))
 
     cand = _arrow_map(
         corpus.select(F.col(id_col), F.col(vec_col)).where(has_id),
@@ -205,21 +196,56 @@ def _rank_candidates(cand: DataFrame, k: int, scorer=None) -> DataFrame:
     )
 
 
+def _run_rank(groups):
+    """1-based position of each element of a sorted array within its
+    run of equal values."""
+    import numpy as np
+
+    starts = np.flatnonzero(np.r_[True, groups[1:] != groups[:-1]])
+    group_start = np.repeat(starts, np.diff(np.r_[starts, len(groups)]))
+    return np.arange(len(groups)) - group_start + 1
+
+
 def _merge_topk(q_ids, n_ids, scores, k: int):
     """numpy twin of :func:`_rank_candidates`' window over candidate
     arrays: keep each query's k best by (score DESC, NaN last,
-    neighbor_id ASC), the order of :func:`_topk_block`. Returns
+    neighbor_id ASC), the order of :func:`_block_topk`. Returns
     ``(query_id, neighbor_id, raw_score, rank)`` arrays ordered by
     query, then rank."""
     import numpy as np
 
     order = np.lexsort((n_ids, -scores, q_ids))  # NaN sorts last
     q_ids, n_ids, scores = q_ids[order], n_ids[order], scores[order]
-    starts = np.flatnonzero(np.r_[True, q_ids[1:] != q_ids[:-1]])
-    group_start = np.repeat(starts, np.diff(np.r_[starts, len(q_ids)]))
-    rank = np.arange(len(q_ids)) - group_start + 1
+    rank = _run_rank(q_ids)
     keep = rank <= k
     return q_ids[keep], n_ids[keep], scores[keep], rank[keep]
+
+
+def _block_topk(q_ids, scores, row_ids, k: int):
+    """THE block top-k of every similarity scorer: each query's k best
+    stored rows of a (queries × rows) ``scores`` block, by (score DESC,
+    NaN after every real score, neighbor_id ASC). A row whose id is the
+    query's own is never emitted; a duplicate stored id is emitted once
+    per row. One ``np.partition`` to each query's k-th key keeps every
+    key up to it (ties at the boundary survive), then one ``lexsort``
+    of the survivors by (query, key, id) and the first k per query.
+    Returns ``(query_id, neighbor_id, raw_score)`` arrays in query-row
+    order, best first."""
+    import numpy as np
+
+    key = -np.asarray(scores, dtype="float64")  # ascending; NaN sorts last
+    own = q_ids[:, None] == row_ids[None, :]
+    key[own] = np.nan
+    keep = ~own
+    if 0 < k < key.shape[1]:
+        kth = np.partition(key, k - 1, axis=1)[:, k - 1 : k]
+        keep &= (key <= kth) | np.isnan(kth)
+    r, c = np.nonzero(keep)
+    order = np.lexsort((row_ids[c], key[r, c], r))
+    r, c = r[order], c[order]
+    first = _run_rank(r) <= k
+    r, c = r[first], c[first]
+    return q_ids[r], row_ids[c], scores[r, c]
 
 
 def embedding_near_dup(
@@ -654,59 +680,41 @@ def ivf_topk(
     return _with_cached_deps(_ivf_score_and_rank(stored, probing, k), [assigned])
 
 
-def _topk_block(q_ids, q_mat, c_ids, c_mat, k: int):
-    """Score one (queries × stored) block with ONE BLAS matmul and keep
-    each query row's local top-k — the cosine block scorer
-    (:data:`_COSINE`) of both IVF scoring shapes (the cell-grouped
-    `_ivf_score_and_rank` and the broadcast-probe `_probe_serve`).
-    Cosine with NaN for a zero-norm pair (surfaced as NULL by the
-    per-query merge); a stored row never scores against its own id;
-    order (score DESC, NaN last, id ASC). Returns the (query_id,
-    neighbor_id, raw_score) columns as lists."""
+def _cosine_scores(a, b):
+    """(rows of ``a`` × rows of ``b``) cosine matrix in float64 from ONE
+    BLAS matmul — the cosine block of every similarity tier. NaN marks a
+    zero-norm pair (surfaced as NULL by the per-query merge)."""
     import numpy as np
 
-    c_mat = c_mat.astype("float64", copy=False)
-    c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    denom = np.outer(q_norm, c_norm)
+    a = a.astype("float64", copy=False)
+    b = b.astype("float64", copy=False)
+    a_norm = np.sqrt((a * a).sum(axis=1))
+    b_norm = np.sqrt((b * b).sum(axis=1))
+    denom = np.outer(a_norm, b_norm)
     with np.errstate(divide="ignore", invalid="ignore"):
-        scores = np.where(denom == 0, np.nan, (q_mat @ c_mat.T) / denom)
-    out_q, out_n, out_s = [], [], []
-    for i, qid in enumerate(q_ids):
-        col = scores[i]
-        mask = c_ids != qid
-        ids_i, col = c_ids[mask], col[mask]
-        if not ids_i.size:
-            continue
-        order = np.lexsort((ids_i, -col))[:k]
-        out_q.extend([qid] * len(order))
-        out_n.extend(ids_i[order])
-        out_s.extend(col[order])
-    return out_q, out_n, out_s
+        return np.where(denom == 0, np.nan, (a @ b.T) / denom)
 
 
 class _BlockScorer(NamedTuple):
     """How an IVF serve scores one probed cell and names its output.
 
-    ``block(q_ids, q_mat, c_ids, c_block, k)`` scores the float64
-    query rows probing a cell against the cell's stored ``payload``
-    column (a row-per-stored-id matrix of the column's own element
-    type) and returns each query's local top-k
-    as (query_id, neighbor_id, raw_score) lists, best first by
-    (raw_score DESC, NaN last, neighbor_id ASC); a stored row never
-    scores against its own id. ``output`` projects the merged
+    ``scores(q_mat, c_block)`` scores the float64 query rows probing a
+    cell against the cell's stored ``payload`` column (a
+    row-per-stored-id matrix of the column's own element type) and
+    returns the (queries × rows) float64 block, higher is better, that
+    :func:`_block_topk` reduces. ``output`` projects the merged
     (query_id, neighbor_id, score, rank) rows onto the caller's output
     columns."""
 
     payload: str
-    block: Callable
+    scores: Callable
     output: tuple[str, ...]
 
 
 #: cosine over the stored float vectors: (query_id, neighbor_id, score,
 #: rank), the output contract of every similarity tier
 _COSINE = _BlockScorer(
-    "vec", _topk_block,
+    "vec", _cosine_scores,
     ("query_id", "neighbor_id", "round(score, 6) AS score", "rank"),
 )
 
@@ -741,11 +749,13 @@ def _ivf_score_and_rank(
         pr = pdf[pdf["role"] == 1]
         if not len(st) or not len(pr):
             return _cand_frame([], [], [])
-        return _cand_frame(*scorer.block(
+        return _cand_frame(*_block_topk(
             pr["id"].to_numpy(dtype="int64"),
-            np.array(list(pr["vec"]), dtype="float64"),
+            scorer.scores(
+                np.array(list(pr["vec"]), dtype="float64"),
+                np.array(list(st[pay])),
+            ),
             st["id"].to_numpy(dtype="int64"),
-            np.array(list(st[pay])),
             k,
         ))
 
@@ -807,9 +817,9 @@ def _probe_serve(
        probed cell ids) from the shared numpy kernels;
     3. read only (cell, id, payload) of the probed cells;
     4. score them with ``score``: per cell an Arrow batch holds, one
-       ``scorer.block`` against the queries probing it, and one
-       per-query top-k over everything the batches held
-       (:func:`_merge_topk`);
+       ``scorer.scores`` block against the queries probing it reduced
+       by :func:`_block_topk`, and one per-query top-k over everything
+       the batches held (:func:`_merge_topk`);
     5. merge the candidates per query on the driver (:func:`_merge_topk`
        again).
 
@@ -874,7 +884,7 @@ def _probe_serve(
     ])
 
     def score(batches):
-        out_q, out_n, out_s = [], [], []
+        blocks = []
         for rb in batches:
             if not rb.num_rows:
                 continue
@@ -884,18 +894,12 @@ def _probe_serve(
             for c in np.unique(cell):
                 qi = probers[int(c)]
                 sel = cell == c
-                bq, bn, bs = scorer.block(
-                    q_ids[qi], q_mat[qi], ids[sel], mat[sel], k
-                )
-                out_q += bq
-                out_n += bn
-                out_s += bs
-        if out_q:
+                blocks.append(_block_topk(
+                    q_ids[qi], scorer.scores(q_mat[qi], mat[sel]), ids[sel], k
+                ))
+        if blocks:
             tq, tn, ts, _rank = _merge_topk(
-                np.asarray(out_q, dtype="int64"),
-                np.asarray(out_n, dtype="int64"),
-                np.asarray(out_s, dtype="float64"),
-                k,
+                *(np.concatenate(col) for col in zip(*blocks)), k
             )
             yield pa.RecordBatch.from_arrays(
                 [pa.array(tq), pa.array(tn), pa.array(ts)], schema=cand_schema
@@ -1248,43 +1252,31 @@ def _scored_bucket_pairs(
 
     n_shards = 8
 
-    def score_bucket(ids: "np.ndarray", mat: "np.ndarray", out):
-        norm = np.sqrt((mat * mat).sum(axis=1))
-        denom = np.outer(norm, norm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0, np.nan, (mat @ mat.T) / denom)
+    def score_bucket(ids: "np.ndarray", mat: "np.ndarray"):
+        scores = _cosine_scores(mat, mat)
         if k is not None:
-            for i, qid in enumerate(ids):
-                col = scores[i]
-                mask = ids != qid
-                ids_i, col_i = ids[mask], col[mask]
-                order = np.lexsort((ids_i, -col_i))[:k]
-                out[0].extend([qid] * len(order))
-                out[1].extend(ids_i[order])
-                out[2].extend(col_i[order])
-            return
+            return _block_topk(ids, scores, ids, k)
         ii, jj = np.meshgrid(np.arange(len(ids)), np.arange(len(ids)), indexing="ij")
         keep = ids[ii] < ids[jj] if ordered else ids[ii] != ids[jj]
         if threshold is not None:
             with np.errstate(invalid="ignore"):
                 keep = keep & (scores >= threshold)  # NaN fails → dropped
-        out[0].extend(ids[ii[keep]])
-        out[1].extend(ids[jj[keep]])
-        out[2].extend(scores[keep])
+        return ids[ii[keep]], ids[jj[keep]], scores[keep]
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = ([], [], [])
-        for _, grp in pdf.groupby("bucket", sort=False):
-            if len(grp) >= 2:
-                score_bucket(
-                    grp["id"].to_numpy(dtype="int64"),
-                    np.array(list(grp["vec"]), dtype="float64"),
-                    out,
-                )
+        out = [
+            score_bucket(
+                grp["id"].to_numpy(dtype="int64"),
+                np.array(list(grp["vec"]), dtype="float64"),
+            )
+            for _, grp in pdf.groupby("bucket", sort=False)
+            if len(grp) >= 2
+        ]
+        cols = [np.concatenate(c) for c in zip(*out)] if out else [[], [], []]
         return pd.DataFrame(
-            {"id_a": pd.Series(out[0], dtype="int64"),
-             "id_b": pd.Series(out[1], dtype="int64"),
-             "raw_score": pd.Series(out[2], dtype="float64")}
+            {"id_a": pd.Series(cols[0], dtype="int64"),
+             "id_b": pd.Series(cols[1], dtype="int64"),
+             "raw_score": pd.Series(cols[2], dtype="float64")}
         )
 
     sharded = buckets.withColumn("shard", F.pmod("bucket", F.lit(n_shards)))

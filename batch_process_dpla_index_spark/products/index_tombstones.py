@@ -274,32 +274,34 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 #: hash-clustered, so a row group spans most cells and the rows scanned
 #: are in effect every stored row. Set from
 #: ``tools/serve_scan_crossover.py`` (local[4] on 4 cores at loadavg
-#: 2-3, 16 cells, k 5, 4 probes, dim 64 float32, median of 3 warm
+#: 3-3.6, 16 cells, k 5, 4 probes, dim 64 float32, median of 3 warm
 #: serves, in s; rows scanned = every stored row on each line; kept =
 #: the probed live rows; driver = read, score and merge on the driver,
 #: spark = the ``mapInArrow`` pass and its collect):
 #:
 #:   index      scanned files | 25 q: kept driver spark | 1,024 q: kept driver spark
-#:   flat         8,000     1 |       8,000  0.185  0.460 |       8,000  0.463  0.736
-#:   flat        16,000     3 |      16,000  0.148  0.360 |      16,000  0.671  0.574
-#:   flat        24,000     4 |      24,000  0.142  0.323 |      24,000  0.918  0.602
-#:   flat        50,000     4 |      50,000  0.155  0.301 |      50,000  1.411  0.793
-#:   two-level    8,000     1 |       6,982  0.103  0.346 |       7,495  0.619  0.715
-#:   two-level   16,000     3 |      12,087  0.125  0.297 |      16,000  0.922  0.784
-#:   two-level   24,000     3 |      20,412  0.147  0.283 |      24,000  1.294  0.895
-#:   two-level   50,000     3 |      41,664  0.208  0.294 |      47,365  3.817  2.432
+#:   flat         8,000     1 |       8,000  0.099  0.284 |       8,000  0.209  0.402
+#:   flat        16,000     3 |      16,000  0.080  0.211 |      16,000  0.193  0.261
+#:   flat        24,000     4 |      24,000  0.066  0.175 |      24,000  0.242  0.300
+#:   flat        50,000     4 |      50,000  0.090  0.166 |      50,000  0.402  0.420
+#:   two-level    8,000     1 |       6,982  0.091  0.195 |       7,495  0.228  0.328
+#:   two-level   16,000     3 |      12,087  0.069  0.209 |      16,000  0.349  0.358
+#:   two-level   24,000     3 |      20,412  0.069  0.148 |      24,000  0.367  0.353
+#:   two-level   50,000     3 |      41,664  0.098  0.176 |      47,365  0.953  0.927
 #:
-#: A 25-query batch is faster on the driver at every size; a
-#: 1,024-query batch crosses over between 8k and 16k rows scanned on
-#: both layouts (an earlier run of the same script put 16k flat at
-#: 0.58 s driver against 0.62 s spark). The cap sits at 16k: there a
-#: 1,024-query batch loses 0.1-0.14 s on the driver while a 25-query
-#: batch gains 0.2 s. Worst case under it (16k rows, 1,024 queries):
-#: 0.7-0.9 s wall and 2.4 s of driver CPU (numpy's BLAS threads), 4.5
-#: MB of Arrow cells, plus one cell's score block, probers × cell rows
-#: doubles held a few times over (8 MB each for a 1k-row cell, 134 MB
-#: if one cell held all 16k rows) — what one task of the Arrow pass
-#: holds for the same cell.
+#: A 25-query batch is faster on the driver at every size. With the
+#: vectorised block top-k (`similarity._block_topk`) a 1,024-query
+#: batch is too, or level with the Spark pass, up to 50k rows scanned
+#: on both layouts (before it, the same run on the per-query lexsort
+#: loop was level at 16k rows and lost from 24k: 0.65 vs 0.53 s flat,
+#: 0.92 vs 0.65 s two-level; 1.15 vs 0.73 s flat at 50k). So the cap
+#: could rise; it stays at 16k until a re-measure on more sizes picks
+#: the new value. Worst case under it
+#: (16k rows, 1,024 queries): 0.2-0.35 s wall and 0.7-1.0 s of driver
+#: CPU (numpy's BLAS threads), 4.5 MB of Arrow cells, plus one cell's
+#: score block, probers × cell rows doubles held a few times over (8
+#: MB each for a 1k-row cell, 134 MB if one cell held all 16k rows) —
+#: what one task of the Arrow pass holds for the same cell.
 _SCAN_DRIVER_MAX_ROWS = 16_384
 
 

@@ -487,6 +487,14 @@ def test_cosine_and_pq_topk_drop_null_ids(spark):
     assert {r["query_id"] for r in got} == {1, 3}
     assert {r["neighbor_id"] for r in got} <= {1, 3}
 
+    # an empty or all-NULL-id input is an empty result on both (pq_topk
+    # used to raise IndexError building the ADC tables of no queries)
+    for no_ids in (corpus.limit(0), corpus.where("vec_id IS NULL")):
+        assert cosine_topk(no_ids, no_ids, k=2).collect() == []
+        empty = pq_topk(no_ids, books, k=2, n_queries=None)
+        assert empty.columns == ["query_id", "neighbor_id", "dist2", "rnk"]
+        assert empty.collect() == []
+
     null_vec = spark.createDataFrame([(1, [1.0, 0.0]), (2, None)], ddl)
     with pytest.raises(Exception, match="NULL row"):
         cosine_topk(null_vec, corpus.limit(1), k=2).collect()
